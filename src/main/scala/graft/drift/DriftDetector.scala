@@ -3,7 +3,7 @@ package graft.drift
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.NumericType
 
@@ -13,9 +13,12 @@ import org.apache.spark.sql.types.NumericType
   * baseline profile, guarded against zero baselines.
   *
   * The reference loops per column (`drift_detector.py:16-26`, N scans);
-  * here the whole profile is ONE fused aggregate. `stddev_samp` of a
-  * single row is null in Spark but 0.0 in the reference
-  * (`drift_detector.py:24`) — coalesce pins the reference semantics.
+  * here the whole profile is ONE fused aggregate, [[aggregates]], which
+  * a pipeline run observes on its warehouse write (`graft.etl.Etl.run`)
+  * instead of scanning again; [[profile]] runs the same expressions as
+  * a standalone 1-row aggregate. `stddev_samp` of a single row is null
+  * in Spark but 0.0 in the reference (`drift_detector.py:24`) —
+  * coalesce pins the reference semantics.
   * The profile JSON shape matches `data/metadata/reference_profile.json`:
   * {"columns": {col: {"mean": m, "std": s}}}.
   */
@@ -37,19 +40,28 @@ object DriftDetector {
       case f if f.dataType.isInstanceOf[NumericType] => f.name
     }.toSeq
 
-  /** One-pass profile: mean + sample std (null-ignoring, n=1 → 0.0). */
-  def profile(df: DataFrame): Seq[ColumnProfile] = {
+  /** The profile's aggregate: mean + sample std per numeric column
+    * (null-ignoring, n=1 → 0.0). */
+  def aggregates(df: DataFrame): Seq[Column] = {
     val cols = numericColumns(df)
-    if (cols.isEmpty) return Seq.empty
-    val row = df.agg(
-      avg(col(cols.head)).as(s"m_${cols.head}"),
-      cols.tail.map(c => avg(col(c)).as(s"m_$c")) ++
-      cols.map(c => coalesce(stddev_samp(col(c)), lit(0.0)).as(s"s_$c")): _*
-    ).collect()(0)
-    cols.map(c => ColumnProfile(c,
-      Option(row.getAs[java.lang.Double](s"m_$c")).map(_.doubleValue).getOrElse(Double.NaN),
-      row.getAs[Double](s"s_$c")))
+    cols.map(c => avg(col(c)).as(s"m_$c")) ++
+      cols.map(c => coalesce(stddev_samp(col(c)), lit(0.0)).as(s"s_$c"))
   }
+
+  /** One-pass profile of `df` — the reference the profile observed on
+    * the pipeline write is checked against. */
+  def profile(df: DataFrame): Seq[ColumnProfile] = aggregates(df) match {
+    case Seq() => Seq.empty
+    case aggs => fromMetrics(df.agg(aggs.head, aggs.tail: _*).collect()(0))
+  }
+
+  /** The profile from a row holding [[aggregates]] (other fields are
+    * ignored). A column with no non-null value has mean NaN. */
+  def fromMetrics(row: Row): Seq[ColumnProfile] =
+    row.schema.fieldNames.toSeq.collect { case f if f.startsWith("m_") => f.drop(2) }.map(c =>
+      ColumnProfile(c,
+        Option(row.getAs[java.lang.Double](s"m_$c")).map(_.doubleValue).getOrElse(Double.NaN),
+        row.getAs[Double](s"s_$c")))
 
   def saveProfile(profiles: Seq[ColumnProfile], path: String): Unit = {
     val cols = new java.util.LinkedHashMap[String, Object]()
@@ -82,8 +94,8 @@ object DriftDetector {
     * runs: inner-join current vs baseline on column name and flag
     * |curr-base|/|base| > tolerance, skipping zero baselines
     * (`drift_detector.py:49-87`, F5-F7). */
-  def detectAndUpdate(df: DataFrame, profilePath: String, tolerance: Double): DriftOutcome = {
-    val current = profile(df)
+  def detectAndUpdate(current: Seq[ColumnProfile], profilePath: String,
+      tolerance: Double): DriftOutcome = {
     if (!Files.exists(Paths.get(profilePath))) {
       saveProfile(current, profilePath)
       BaselineCreated

@@ -1,8 +1,12 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.concurrent.Await
+import scala.concurrent.duration._
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.config.PipelineConfig
+import graft.drift.DriftDetector
+import graft.quality.DataQuality
 
 /** The data-plane ETL query (reference `etl_job.py:25-83`): CSV scan →
   * header trim → schema-diff warning → projection to declared columns →
@@ -21,7 +25,8 @@ import graft.config.PipelineConfig
   */
 object Etl {
 
-  final case class EtlResult(data: DataFrame, missingColumns: Seq[String], rowCount: Long)
+  /** Bound on the wait for the observed metrics after the write. */
+  private val MetricsTimeout = 60.seconds
 
   /** Build the cleaned DataFrame (lazy; no sink). */
   def transform(spark: SparkSession, cfg: PipelineConfig, sourcePath: String): (DataFrame, Seq[String]) = {
@@ -43,15 +48,20 @@ object Etl {
     (casted, missing)
   }
 
-  /** Full ETL: transform + overwrite warehouse sink + count. The
-    * returned DataFrame is cached — the runner feeds it to both the DQ
-    * aggregate and the drift profile (mirrors the in-memory reuse at
-    * `pipeline_runner.py:53-59`) without re-scanning the CSV. */
+  /** Full ETL: transform + overwrite warehouse sink, the only data pass
+    * of a pipeline run. The DQ and drift aggregates ride the write as
+    * one `Observation`, so the reference's write-then-check order
+    * (`pipeline_runner.py:53-59`) costs no second scan. Returns the
+    * observed metrics row (read by [[graft.quality.DataQuality.fromMetrics]]
+    * and [[graft.drift.DriftDetector.fromMetrics]]) and the missing
+    * declared columns. */
   def run(spark: SparkSession, cfg: PipelineConfig, sourcePath: String,
-      warehouseDir: String): EtlResult = {
+      warehouseDir: String): (Row, Seq[String]) = {
     val (casted, missing) = transform(spark, cfg, sourcePath)
-    val cached = casted.cache()
-    cached.write.mode("overwrite").parquet(s"$warehouseDir/${cfg.tableName}")
-    EtlResult(cached, missing, cached.count())
+    val metrics = DataQuality.aggregates(casted, cfg) ++ DriftDetector.aggregates(casted)
+    val obs = Observation()
+    casted.observe(obs, metrics.head, metrics.tail: _*)
+      .write.mode("overwrite").parquet(s"$warehouseDir/${cfg.tableName}")
+    (Await.result(obs.future, MetricsTimeout), missing)
   }
 }

@@ -401,7 +401,7 @@ object DupRunStore {
     * ≤ watermark into ONE net base generation (rows with net ≤ 0 drop
     * — a retracted site costs nothing forever after) and collapse the
     * postings AND doc-array partitions to a single `gen = watermark`.
-    * Semantics-preserving for every later [[runIvmStep]] by
+    * Semantics-preserving for every later [[runIvmDeltas]] by
     * construction: the delta derivation reads state only through
     * `gen <= g` / `gen < g` / `gen === g` predicates and compacted
     * gen = watermark < any future g; df is a plain row count that

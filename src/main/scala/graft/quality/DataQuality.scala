@@ -1,10 +1,7 @@
 package graft.quality
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
 import graft.config.PipelineConfig
 
 /** Data-quality rule engine (reference `data_quality_checks.py:16-89`):
@@ -13,9 +10,10 @@ import graft.config.PipelineConfig
   *
   * The reference runs one full pass per column
   * (`data_quality_checks.py:41-49`); here ALL statistics come from a
-  * single fused aggregate — one scan, one partial+final
-  * HashAggregate, a 1-row result. At 100 TB that is the difference
-  * between N scans and 1.
+  * single fused aggregate, [[aggregates]]. A pipeline run observes it
+  * on the warehouse write (`graft.etl.Etl.run`), so DQ costs no scan
+  * of its own; [[check]] runs the same expressions as a standalone
+  * 1-row aggregate.
   */
 object DataQuality {
 
@@ -37,67 +35,25 @@ object DataQuality {
     extends RuntimeException(
       s"Data quality checks failed: ${report.failedChecks.map(_.message).mkString("; ")}")
 
-  /** Compute the report in one aggregate pass over `df`. `missing` =
-    * declared columns absent from the source (schema-level check A4 —
-    * no data pass needed). */
+  /** The report's aggregate: row count + null fraction per declared
+    * column present in `df` (A1 + A2 fused). */
+  def aggregates(df: DataFrame, cfg: PipelineConfig): Seq[Column] =
+    count(lit(1)).as("row_count") +: cfg.columns.filter(c => df.columns.contains(c.name))
+      .map(c => avg(col(c.name).isNull.cast("double")).as(s"nf_${c.name}"))
+
+  /** The report in one aggregate pass over `df` — the reference the
+    * observed pipeline write is checked against. `missing` = declared
+    * columns absent from the source (schema-level check A4 — no data
+    * pass needed). */
   def check(df: DataFrame, cfg: PipelineConfig, missing: Seq[String]): DqReport = {
-    val present = cfg.columns.filter(c => df.columns.contains(c.name))
-    // A1 + A2 fused: count + null fraction per declared column, one pass
-    val aggRow = df.agg(
-      count(lit(1)).as("row_count"),
-      present.map(c => avg(col(c.name).isNull.cast("double")).as(s"nf_${c.name}")): _*
-    ).collect()(0)
-    val rowCount = aggRow.getAs[Long]("row_count")
-    val nullFractions = present.map(c =>
-      c.name -> (if (rowCount == 0) 0.0 else aggRow.getAs[Double](s"nf_${c.name}"))).toMap
-
-    DqReport(rowCount, nullFractions,
-      evalRules(cfg, present, missing, rowCount, nullFractions))
+    val aggs = aggregates(df, cfg)
+    fromMetrics(df.agg(aggs.head, aggs.tail: _*).collect()(0), cfg, missing)
   }
 
-  /** Raise on failure, mirroring `enforce_data_quality`
-    * (`data_quality_checks.py:85-89`). */
-  def enforce(df: DataFrame, cfg: PipelineConfig, missing: Seq[String]): DqReport = {
-    val report = check(df, cfg, missing)
-    if (!report.passed) throw new DataQualityException(report)
-    report
-  }
-
-  /** Sink write + DQ report from ONE scan: the metrics ride the write
-    * job via Dataset.observe instead of a second aggregate pass — at
-    * 100 TB this halves the pipeline's read volume versus
-    * write-then-check. The observed-metrics row is delivered on the
-    * listener bus after the action; we block (bounded) for it.
-    *
-    * Rule evaluation is shared with [[check]] via [[evalRules]], so the
-    * two paths can never drift. */
-  def writeWithObservedDq(df: DataFrame, cfg: PipelineConfig, missing: Seq[String],
-      sinkPath: String, timeoutSec: Long = 60): DqReport = {
-    val spark = df.sparkSession
-    val present = cfg.columns.filter(c => df.columns.contains(c.name))
-    val metricName = s"graft_dq_${java.util.UUID.randomUUID().toString.take(8)}"
-    val observed = df.observe(metricName,
-      count(lit(1)).as("row_count"),
-      present.map(c => avg(col(c.name).isNull.cast("double")).as(s"nf_${c.name}")): _*)
-
-    val latch = new CountDownLatch(1)
-    @volatile var metricsRow: Option[Row] = None
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        qe.observedMetrics.get(metricName).foreach { row =>
-          metricsRow = Some(row); latch.countDown()
-        }
-      override def onFailure(funcName: String, qe: QueryExecution, ex: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      observed.write.mode("overwrite").parquet(sinkPath)
-      if (!latch.await(timeoutSec, TimeUnit.SECONDS))
-        throw new IllegalStateException(
-          s"observed DQ metrics '$metricName' not delivered within ${timeoutSec}s")
-    } finally spark.listenerManager.unregister(listener)
-
-    val row = metricsRow.get
+  /** The report from a row holding [[aggregates]] — a `check` result or
+    * the metrics observed on the warehouse write. */
+  def fromMetrics(row: Row, cfg: PipelineConfig, missing: Seq[String]): DqReport = {
+    val present = cfg.columns.filter(c => row.schema.fieldNames.contains(s"nf_${c.name}"))
     val rowCount = row.getAs[Long]("row_count")
     // guard BEFORE getAs: avg over zero rows is null, and unboxing a
     // null Double NPEs
@@ -106,8 +62,8 @@ object DataQuality {
     DqReport(rowCount, nullFractions, evalRules(cfg, present, missing, rowCount, nullFractions))
   }
 
-  /** Shared rule evaluation (A3/A4/A5 + row-count floor) over computed
-    * statistics — used by both the aggregate and the observed paths. */
+  /** Rule evaluation (A3/A4/A5 + row-count floor) over computed
+    * statistics. */
   private def evalRules(cfg: PipelineConfig, present: Seq[graft.config.ColumnSpec],
       missing: Seq[String], rowCount: Long,
       nullFractions: Map[String, Double]): Seq[FailedCheck] = {

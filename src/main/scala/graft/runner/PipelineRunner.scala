@@ -66,21 +66,23 @@ final class PipelineRunner(
     incident
   }
 
-  /** One pipeline run: ETL → DQ enforce → drift detect/update
-    * (`pipeline_runner.py:48-61`). Throws DataQualityException with the
-    * report on DQ failure. */
+  /** One pipeline run: ETL → DQ verdict → drift detect/update
+    * (`pipeline_runner.py:48-61`). The warehouse write is the run's only
+    * data pass; the DQ report and the drift profile are read off the
+    * metrics it observed. Throws DataQualityException with the report
+    * on DQ failure, before the drift profile is touched. */
   def runSinglePipeline(sourcePath: String): (DqReport, DriftDetector.DriftOutcome) = {
     val cfg = PipelineConfig.load(configPath) // re-read per run (:50)
-    val etl = Etl.run(spark, cfg, sourcePath, warehouseDir)
-    try {
-      val report = DataQuality.enforce(etl.data, cfg, etl.missingColumns)
-      val profilePath = // config-declared (pipeline_config.yml drift.profile_path)
-        if (cfg.drift.profilePath.nonEmpty) cfg.drift.profilePath
-        else s"$warehouseDir/reference_profile.json"
-      val drift = DriftDetector.detectAndUpdate(
-        etl.data, profilePath, cfg.drift.meanRelativeTolerance)
-      (report, drift)
-    } finally etl.data.unpersist()
+    val (metrics, missing) = Etl.run(spark, cfg, sourcePath, warehouseDir)
+    val report = DataQuality.fromMetrics(metrics, cfg, missing)
+    // enforce_data_quality (data_quality_checks.py:85-89)
+    if (!report.passed) throw new DataQualityException(report)
+    val profilePath = // config-declared (pipeline_config.yml drift.profile_path)
+      if (cfg.drift.profilePath.nonEmpty) cfg.drift.profilePath
+      else s"$warehouseDir/reference_profile.json"
+    val drift = DriftDetector.detectAndUpdate(
+      DriftDetector.fromMetrics(metrics), profilePath, cfg.drift.meanRelativeTolerance)
+    (report, drift)
   }
 
   /** The full demo; returns the incident sequence. */

@@ -720,7 +720,7 @@ object EventStreams {
   }
 
   /** LIVE duplicated-run catalog maintenance — the streaming twin of
-    * q418's batch [[graft.llm.DupRunStore.runIvmStep]] (the round-14
+    * q418's batch [[graft.llm.DupRunStore.runIvmDeltas]] (the round-14
     * verdict's last store-parity gap): each micro-batch of documents
     * (doc_id, source, text) lands its doc/posting state and signed
     * run-catalog deltas replay-idempotently into `gen=<batchId>`

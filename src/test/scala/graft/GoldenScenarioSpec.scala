@@ -91,12 +91,33 @@ class GoldenScenarioSpec extends SparkSuite {
       DriftDetector.ColumnProfile("zero_col", 0.0, 1.0)), profilePath)
     import spark.implicits._
     val df = Seq((60.0, 1.0), (60.0, 2.0)).toDF("age", "zero_col")
-    DriftDetector.detectAndUpdate(df, profilePath, 0.5) match {
+    DriftDetector.detectAndUpdate(DriftDetector.profile(df), profilePath, 0.5) match {
       case DriftDetector.Compared(drifted) =>
         assert(drifted.map(_.column) == Seq("age")) // zero_col skipped by guard
         assert(math.abs(drifted.head.relChange - 1.0) < 1e-12)
       case other => fail(s"expected Compared, got $other")
     }
+
+    // an all-unparseable numeric column with no threshold: DQ passes, the
+    // baseline stores mean NaN / std 0.0, and the next run compares
+    // against it without throwing or flagging drift
+    Files.writeString(dir.resolve("na.csv"),
+      "customer_id,age\n1,n/a\n2,n/a\n3,n/a\n")
+    val cfgPath = dir.resolve("na.yml").toString
+    PipelineConfig.save(PipelineConfig("", "t", "", Seq(
+      ColumnSpec("customer_id", "int", required = true, None),
+      ColumnSpec("age", "int", required = false, None)),
+      QualityConfig(1), DriftConfig(dir.resolve("na_profile.json").toString, 0.5)), cfgPath)
+    val runner = new PipelineRunner(spark, cfgPath, dir.resolve("wh").toString,
+      dir.resolve("inc").toString, () => "t")
+    val na = dir.resolve("na.csv").toString
+    val (report, first) = runner.runSinglePipeline(na)
+    assert(report.passed && report.nullFractions("age") == 1.0)
+    assert(first == DriftDetector.BaselineCreated)
+    val baseline = DriftDetector.loadProfile(dir.resolve("na_profile.json").toString)
+      .map(p => p.column -> p).toMap
+    assert(baseline("age").mean.isNaN && baseline("age").std == 0.0)
+    assert(runner.runSinglePipeline(na)._2 == DriftDetector.Compared(Nil))
   }
 
   test("config YAML round-trip preserves the contract") {

@@ -2,10 +2,13 @@ package graft
 
 import java.nio.file.Files
 import graft.config.{ColumnSpec, DriftConfig, PipelineConfig, QualityConfig}
+import graft.drift.DriftDetector
 import graft.etl.Etl
 import graft.incidents.IncidentLog
 import graft.incidents.IncidentLog.Incident
 import graft.quality.DataQuality
+import graft.quality.DataQuality.DataQualityException
+import graft.runner.PipelineRunner
 
 /** Edge paths of the pipeline modules not covered by the golden demo:
   * missing declared columns, unknown declared types, the row-count
@@ -18,22 +21,40 @@ class PipelineEdgeSpec extends SparkSuite {
   test("observed DQ (metrics on the write job) equals the two-pass check and writes the sink") {
     import org.apache.spark.sql.functions._
     val c = cfg(Seq(
+      ColumnSpec("c_custkey", "int", required = true, None),
       ColumnSpec("c_acctbal", "float", required = false, Some(0.5)),
       ColumnSpec("c_name", "string", required = true, None)), rowMin = 10)
-    val df = Tables(spark, sf, "customer")
+    // a multi-file CSV source: observed accumulators merge in task
+    // completion order, so the moments are compared across partitions
+    val dir = Files.createTempDirectory("graft_obs")
+    val src = dir.resolve("src").toString
+    Tables(spark, sf, "customer")
       .withColumn("c_acctbal",
         when(col("c_custkey") % 5 === 0, lit(null)).otherwise(col("c_acctbal")))
-    val sink = Files.createTempDirectory("graft_obs_sink").resolve("out").toString
-    val observed = DataQuality.writeWithObservedDq(df, c, Nil, sink)
-    val twoPass = DataQuality.check(df, c, Nil)
+      .select("c_custkey", "c_acctbal", "c_name")
+      .repartition(3).write.option("header", "true").csv(src)
+    val warehouse = dir.resolve("warehouse").toString
+    val (metrics, missing) = Etl.run(spark, c, src, warehouse)
+    val (df, _) = Etl.transform(spark, c, src)
+    assert(df.rdd.getNumPartitions > 1)
+    val observed = DataQuality.fromMetrics(metrics, c, missing)
+    val twoPass = DataQuality.check(df, c, missing)
     assert(observed.rowCount == twoPass.rowCount)
     assert(observed.nullFractions.keySet == twoPass.nullFractions.keySet)
     observed.nullFractions.foreach { case (k, v) =>
       assert(math.abs(v - twoPass.nullFractions(k)) < 1e-12, s"nf($k) drifted")
     }
     assert(observed.failedChecks == twoPass.failedChecks)
+    // the drift profile rides the same write
+    val observedProfile = DriftDetector.fromMetrics(metrics)
+    val profile = DriftDetector.profile(df)
+    assert(observedProfile.map(_.column) == profile.map(_.column))
+    observedProfile.zip(profile).foreach { case (o, p) =>
+      assert(math.abs(o.mean - p.mean) <= 1e-12 * math.max(1.0, math.abs(p.mean)), s"mean(${p.column})")
+      assert(math.abs(o.std - p.std) <= 1e-12 * math.max(1.0, p.std), s"std(${p.column})")
+    }
     // the sink really contains the full dataset (metrics rode the write)
-    assert(spark.read.parquet(sink).count() == df.count())
+    assert(spark.read.parquet(s"$warehouse/t").count() == df.count())
     // ~1/5 of rows nulled -> within the 0.5 bound, so the report passes
     assert(observed.passed)
   }
@@ -73,6 +94,15 @@ class PipelineEdgeSpec extends SparkSuite {
     val report = DataQuality.check(df, c, missing)
     assert(report.rowCount == 0)
     assert(report.failedChecks.exists(_.checkType == "row_count_below_min"))
+    // the same verdict from the runner, off the metrics observed on an
+    // empty write (every avg null)
+    val cfgPath = dir.resolve("c.yml").toString
+    PipelineConfig.save(c, cfgPath)
+    val runner = new PipelineRunner(spark, cfgPath, dir.resolve("wh").toString,
+      dir.resolve("inc").toString, () => "t")
+    val e = intercept[DataQualityException](runner.runSinglePipeline(dir.resolve("d.csv").toString))
+    assert(e.report.rowCount == 0)
+    assert(e.report.failedChecks.map(_.checkType) == Seq("row_count_below_min"))
   }
 
   test("dashboard lookups: filterOptions sorted, byRunId finds and misses") {
