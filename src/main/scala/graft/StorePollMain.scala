@@ -41,7 +41,7 @@ object StorePollMain {
     // offset+1 .. offset+want to the shared store, compacting every
     // third append — while the parent process does the same against
     // the same path. The ONLY coordination is withStoreLock's
-    // FileChannel lock inside appendGeneration/compactGenerations: a
+    // FileChannel lock inside GenLog.append/compact: a
     // lost generation claim or an append swallowed by the other
     // process's compact read→swap window shows up as a missing value
     // in the parent's final multiset check.
@@ -50,11 +50,12 @@ object StorePollMain {
       import spark.implicits._
       try {
         (1L to want).foreach { i =>
-          graft.llm.StateStores.appendGeneration(spark, storePath,
+          graft.llm.StateStores.SharedLog.append(storePath,
             Seq(offset + i).toDF("x"))
           if (i == 1L) touch("started")
           if (i % 3L == 0L)
-            graft.llm.StateStores.compactGenerations(spark, storePath)
+            graft.llm.StateStores.SharedLog.compact(spark, storePath,
+              Long.MaxValue)
         }
         touch("wdone", want.toString)
       } catch {

@@ -37,34 +37,6 @@ object CorpusOps {
     .select(col("doc_id"), col("source"), sha2(col("txt"), 256).as("h"),
       length(col("txt")).cast("long").as("len"))
 
-  /** Compact a STREAMED chunk store (the `batch=<id>` layout
-    * [[graft.streaming.EventStreams.chunkIndexAppendSink]] writes):
-    * fold every batch partition into ONE `batch=<maxId>` partition
-    * through the crash-ordered temp-dir swap, so the serve read pays
-    * one partition instead of O(batches) forever (the q322 band-store
-    * move applied to the chunk family). CONTRACT: call only at a
-    * COMMITTED log head (stream stopped, or every folded batch's
-    * streaming commit confirmed) — a replay of an UNcommitted batch b
-    * would Overwrite `batch=b`, which after compaction may hold the
-    * folded store (the same committed-head rule PairGraph.compact's
-    * watermark guard enforces for the pair log). */
-  private[graft] def chunkStoreCompact(s: SparkSession, path: String): Unit = {
-    val maxB = {
-      val p = java.nio.file.Paths.get(path)
-      val st = java.nio.file.Files.list(p)
-      try {
-        import scala.jdk.CollectionConverters._
-        st.iterator().asScala.map(_.getFileName.toString)
-          .filter(_.startsWith("batch=")).map(_.stripPrefix("batch=").toLong)
-          .foldLeft(-1L)(math.max)
-      } finally st.close()
-    }
-    require(maxB >= 0L, s"no batch=<id> partitions under $path to compact")
-    StateStores.rewriteSwap(
-      s.read.parquet(path).withColumn("batch", lit(maxB)),
-      path, Some("batch"))
-  }
-
   /** The q388 serve read over a LIVE chunk store, routed through
     * [[StateStores.readCommitted]] (round-12 ADVICE: naked
     * read.parquet serve reads race the sink's auto-compaction swap).

@@ -92,6 +92,26 @@ object DupRunStore {
 
   private val RunKey = Seq("doc_id", "source", "start_tok", "run_tokens", "run_fp")
 
+  /** EXPLICIT delta-log read schema: a generation with ZERO
+    * qualifying runs leaves an empty partition set (bare _SUCCESS, or
+    * a part-less gen= dir from the stream sink) — schema inference
+    * would fail on it, while nothing-to-retract is the correct
+    * reading; the declared schema reads the empty log as an empty
+    * frame (DupRunStoreSpec pins the empty-seed lifecycle). */
+  private val DeltaSchema = "doc_id BIGINT, source STRING, start_tok INT, " +
+    "run_tokens BIGINT, run_fp STRING, delta BIGINT, gen INT"
+
+  /** The run-IVM generation log: signed `deltas` (compaction nets
+    * them per run site), positional shingle `postings` and the stored
+    * token arrays (`docs`), all `gen=`-partitioned. Compaction is
+    * semantics-preserving for [[runIvmDeltas]]: it reads state only
+    * through `gen <= g` / `gen < g` / `gen === g`, df is a plain row
+    * count relabeling cannot change, and the affected-doc recompute
+    * reads token arrays by doc_id, not by generation. */
+  private[graft] val RunLog = GenLog("gen",
+    GenLog.Sub("deltas", Some(DeltaSchema), GenLog.net(RunKey)),
+    GenLog.Sub("postings"), GenLog.Sub("docs"))
+
   /** Signed run-catalog deltas for generation `gen`, derived from the
     * persisted STATE alone (positional postings + the stored token
     * arrays of affected docs — the spec pins that no document text
@@ -122,24 +142,15 @@ object DupRunStore {
     * lifetime, so un-released cached relations accumulate until LRU
     * pressure). */
   private[graft] def runIvmDeltas(s: SparkSession, statePath: String,
-      gen: Int): (DataFrame, () => Unit) = {
+      gen: Long): (DataFrame, () => Unit) = {
     val post = s.read.parquet(s"$statePath/postings")
     // BOTH df states (before/after this generation) from ONE pass
     // (the q283 round-11 lesson: a second df groupBy re-scans state)
     val dfs = post.filter(col("gen") <= gen)
       .groupBy(col("sh")).agg(count(lit(1)).as("dfA"),
         count_if(col("gen") < gen).as("dfB")).cache()
-    // EXPLICIT read schema: a prior generation with ZERO qualifying
-    // runs leaves an empty partition set (bare _SUCCESS, or a
-    // part-less gen= dir from the stream sink) — schema inference
-    // would fail on it, while nothing-to-retract is the correct
-    // reading; the declared schema makes the empty log read as an
-    // empty frame instead of an error (DupRunStoreSpec pins the
-    // empty-seed lifecycle)
-    val prior = if (gen == 0) None else Some(s.read.schema(
-        "doc_id BIGINT, source STRING, start_tok INT, " +
-          "run_tokens BIGINT, run_fp STRING, delta BIGINT, gen INT")
-      .parquet(s"$statePath/deltas"))
+    val prior = if (gen == 0) None
+      else Some(s.read.schema(DeltaSchema).parquet(s"$statePath/deltas"))
     val (deltas, done) = runIvmDeltasFrom(
       post, s.read.parquet(s"$statePath/docs"), prior, dfs, gen)
     (deltas, () => { dfs.unpersist(); done() })
@@ -157,7 +168,7 @@ object DupRunStore {
     * all-generations count pass. */
   private[graft] def runIvmDeltasFrom(post: DataFrame, docsAll: DataFrame,
       prior: Option[DataFrame], dfs: DataFrame,
-      gen: Int): (DataFrame, () => Unit) = {
+      gen: Long): (DataFrame, () => Unit) = {
     val crossers = dfs.filter(col("dfB") < 2 && col("dfA") >= 2)
       .select(col("sh"))
     val affectedOld = post.filter(col("gen") < gen)
@@ -208,7 +219,7 @@ object DupRunStore {
     * postings, the inputs [[runIvmDeltas]] maintains from. Postings
     * positions are the 0-based posexplode index (runs convert to
     * 1-based start_tok, matching [[TextDedup.dupRunSitesOf]]). */
-  private def genState(genDocs: DataFrame): (DataFrame, DataFrame) = {
+  private[graft] def genState(genDocs: DataFrame): (DataFrame, DataFrame) = {
     graft.functions.ShingleHashes.register(genDocs.sparkSession)
     val docsArr = genDocs.filter(col("text").isNotNull)
       .select(col("doc_id"), col("source"),
@@ -249,8 +260,7 @@ object DupRunStore {
     * the cached corpus frames.
     *
     * `write(lo, hi)` persists generations lo..hi (docs ‖ postings ‖
-    * deltas, three overlapped write actions, §2.6 — no coalesce; AQE
-    * right-sizes output files, the round-9 lesson); `log()` is the
+    * deltas through [[GenLog.writeRange]]); `log()` is the
     * union of the written delta frames (identical rows to the on-disk
     * log by construction). */
   private final case class DemoLifecycle(write: (Int, Int) => Unit,
@@ -351,17 +361,11 @@ object DupRunStore {
     }
     val written = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val write = (lo: Int, hi: Int) => {
-      val mode = if (lo == 0) "overwrite" else "append"
       val dAll = (lo to hi).map(g => deltasFor(g).withColumn("gen", lit(g)))
         .reduce(_.union(_)).cache()
       written += dAll
-      StateStores.inParallel(
-        () => arrAll.filter(col("gen").between(lo, hi))
-          .write.mode(mode).partitionBy("gen").parquet(s"$statePath/docs"),
-        () => posAll.filter(col("gen").between(lo, hi))
-          .write.mode(mode).partitionBy("gen").parquet(s"$statePath/postings"),
-        () => dAll
-          .write.mode(mode).partitionBy("gen").parquet(s"$statePath/deltas"))
+      RunLog.writeRange(statePath, lo, hi)(
+        "docs" -> arrAll, "postings" -> posAll, "deltas" -> dAll)
     }
     val done = () => { arrAll.unpersist(); posAll.unpersist()
       dfAll.unpersist(); affAll.unpersist(); runsFp.unpersist()
@@ -369,97 +373,6 @@ object DupRunStore {
     DemoLifecycle(write, done, arrAll, posAll,
       () => written.reduce(_.union(_)), runsAt)
   }
-
-  /** STREAMING twin of the batch maintenance step (the live
-    * maintenance path every
-    * persisted store in this repo carries): one micro-batch's doc
-    * state, postings, and signed deltas, written REPLAY-IDEMPOTENTLY —
-    * each batch Overwrites its OWN `gen=<batchId>` partition dirs (the
-    * bandIndexAppendSink stance), so an at-least-once foreachBatch
-    * replay rewrites identical deterministic bytes instead of
-    * double-appending. The delta derivation is [[runIvmDeltas]]
-    * UNCHANGED — it reads the postings state including this batch's
-    * just-written generation, so retroactive run creation in old docs
-    * fires from the stream exactly as in batch maintenance
-    * (DupRunStreamSpec pins maintained ≡ rebuilt across batches and
-    * across a kill/restart between the sink write and the streaming
-    * commit). */
-  private[graft] def runIvmStreamStep(s: SparkSession, batchDocs: DataFrame,
-      statePath: String, gen: Int): Unit = {
-    val (docsArr, postings) = genState(batchDocs)
-    StateStores.inParallel( // independent paths, §2.6 overlap
-      () => docsArr.write.mode("overwrite").parquet(s"$statePath/docs/gen=$gen"),
-      () => postings.write.mode("overwrite")
-        .parquet(s"$statePath/postings/gen=$gen"))
-    val (deltas, done) = runIvmDeltas(s, statePath, gen)
-    try deltas.write.mode("overwrite").parquet(s"$statePath/deltas/gen=$gen")
-    finally done()
-  }
-
-  /** Compact the run-IVM state at `watermark` (the q321/q322
-    * lifecycle step, run-store flavor): fold every delta generation
-    * ≤ watermark into ONE net base generation (rows with net ≤ 0 drop
-    * — a retracted site costs nothing forever after) and collapse the
-    * postings AND doc-array partitions to a single `gen = watermark`.
-    * Semantics-preserving for every later [[runIvmDeltas]] by
-    * construction: the delta derivation reads state only through
-    * `gen <= g` / `gen < g` / `gen === g` predicates and compacted
-    * gen = watermark < any future g; df is a plain row count that
-    * re-labeling cannot change; and the affected-doc recompute reads
-    * token arrays by doc_id, not by generation. Same head-only guard
-    * as the pair store: a watermark below the newest generation would
-    * silently destroy later generations. */
-  private[graft] def runStoreCompact(s: SparkSession, statePath: String,
-      watermark: Int): Unit =
-    runStoreCompactFrom(s, statePath, watermark, None, None, None)
-
-  /** [[runStoreCompact]] with the fold/collapse INPUTS optionally
-    * supplied from the caller's cached frames (the q421 demo: the
-    * postings/docs/delta content being folded was derived and written
-    * by this same invocation moments earlier, so re-reading it from
-    * parquet is a redundant corpus-sized scan). The REWRITES are
-    * unchanged — every swap still lands real bytes under the store
-    * lock — and the auto-compact / stream path passes None and reads
-    * persisted state. Netting the raw delta frames equals netting the
-    * on-disk log by construction (same rows). */
-  private[graft] def runStoreCompactFrom(s: SparkSession, statePath: String,
-      watermark: Int, memDeltas: Option[DataFrame],
-      memPost: Option[DataFrame], memDocs: Option[DataFrame]): Unit = {
-    StateStores.headGuard(StateStores.genDirs(s"$statePath/deltas"), watermark, "deltas")
-    val folded = memDeltas.getOrElse(s.read.parquet(s"$statePath/deltas"))
-      .filter(col("gen") <= watermark)
-      .groupBy(RunKey.map(col): _*)
-      .agg(sum(col("delta")).as("delta"))
-      .filter(col("delta") > 0)
-      .withColumn("gen", lit(watermark))
-    // the three rewrites read and swap DISJOINT subdirs (deltas fold,
-    // postings collapse, docs collapse) — overlap them (§2.6); each
-    // swap still runs under its own per-path store lock
-    StateStores.inParallel(
-      (() => StateStores.rewriteSwap(folded, s"$statePath/deltas",
-        Some("gen"))) +:
-      Seq("postings" -> memPost, "docs" -> memDocs).map { case (sub, mem) =>
-        () => StateStores.rewriteSwap(
-          mem.getOrElse(s.read.parquet(s"$statePath/$sub"))
-            .filter(col("gen") <= watermark)
-            .withColumn("gen", lit(watermark)),
-          s"$statePath/$sub", Some("gen"))
-      }: _*)
-  }
-
-  /** Auto-compaction hook for the LIVE sink — the PairGraph
-    * autoCompactIfFragmented rule verbatim: fold at the committed
-    * head (every generation < `currentGen` is streaming-committed),
-    * but only when no generation dir ≥ `currentGen` exists (such a
-    * dir is a crashed uncommitted attempt of this very batch — the
-    * replay is about to Overwrite it, and folding it would read torn
-    * parquet). Skipping is safe: the next clean batch compacts. */
-  private[graft] def autoCompactIfFragmented(s: SparkSession,
-      statePath: String, currentGen: Int, every: Int = 10): Boolean =
-    StateStores.foldAtCommittedHead(
-      Seq("deltas", "postings", "docs")
-        .flatMap(sub => StateStores.genDirs(s"$statePath/$sub")),
-      currentGen, every)(runStoreCompact(s, statePath, _))
 
   /** Direct DATA-TERM volumes for the q421 compact (the
     * graft.VolumeCheck q218/q413 treatment, round-15 verdict Next #3):
@@ -609,67 +522,41 @@ object DupRunStore {
       : DataFrame = {
     val path = StateStores.servePath(dir, "eval_shingle_v1", "documents")
     StateStores.seedOnce(path) {
-      benchShinglesOf(
-        Tables(s, dir, "documents").filter(col("doc_id") % 50 === 0))
+      evalSliceShingles(Tables(s, dir, "documents"))
         .write.mode("overwrite").parquet(path)
     }
     s.read.parquet(path)
   }
 
+  /** The distinct shingle hashes of `docs`' q82 eval slice
+    * (doc_id % 50 == 0) — the seed's content and each live
+    * generation's contribution. */
+  private[graft] def evalSliceShingles(docs: DataFrame): DataFrame =
+    benchShinglesOf(docs.filter(col("doc_id") % 50 === 0))
+
   // ---------------------------------------------------------------
   // eval-shingle LOG maintenance (the store's live-twin path)
   // ---------------------------------------------------------------
 
-  /** One maintenance step of the generation-partitioned eval-shingle
-    * LOG under snapshot appends — the live-twin counterpart of the
-    * seed-once [[evalShingleStore]] (the q82 eval slice GROWS with
-    * the corpus: every appended snapshot lands new doc_id % 50 == 0
-    * benchmark docs, so a long-running screen's probe set must be
-    * maintained, not just seeded). Each batch Overwrites its OWN
-    * `gen=<id>` dir with the batch slice's distinct shingle hashes —
-    * deterministic bytes, so an at-least-once replay converges (the
-    * bandIndexAppendSink stance). SET semantics make this the
-    * simplest store in the repo: shingles are never retracted from an
-    * append-only eval set, so no signed deltas, no affected-set
-    * recompute — just per-gen distinct contributions. */
-  private[graft] def evalShingleStep(batchDocs: DataFrame,
-      statePath: String, gen: Int): Unit =
-    benchShinglesOf(batchDocs.filter(col("doc_id") % 50 === 0))
-      .write.mode("overwrite").parquet(s"$statePath/gen=$gen")
+  /** The generation-partitioned eval-shingle LOG — the live-twin
+    * counterpart of the seed-once [[evalShingleStore]] (the q82 eval
+    * slice GROWS with the corpus: every appended snapshot lands new
+    * doc_id % 50 == 0 benchmark docs, so a long-running screen's probe
+    * set must be maintained, not just seeded). Each generation holds
+    * its batch slice's distinct shingle hashes; SET semantics make
+    * this the simplest log in the repo — shingles are never retracted
+    * from an append-only eval set, so no signed deltas, and the fold
+    * is a distinct. Declared schema: a batch with NO eval-slice docs
+    * writes a part-less generation dir, which must read as empty
+    * instead of failing inference. */
+  private[graft] val EvalLog = GenLog("gen",
+    GenLog.Sub("", Some("sh BIGINT, gen INT"), _.select(col("sh")).distinct()))
 
   /** Serve the maintained eval-shingle set: distinct over generations
-    * (the same shingle can arrive in several snapshots' eval docs).
-    * Declared schema so a part-less generation dir (a batch with NO
-    * eval-slice docs writes an empty commit) reads as empty instead
-    * of failing inference. */
+    * (the same shingle can arrive in several snapshots' eval docs). */
   private[graft] def evalShinglesServe(s: SparkSession, statePath: String)
       : DataFrame =
-    s.read.schema("sh BIGINT, gen INT").parquet(statePath)
-      .select(col("sh")).distinct()
-
-  /** Compact the eval-shingle log at `watermark`: fold every
-    * generation ≤ watermark into ONE distinct base generation, under
-    * the shared [[StateStores.headGuard]]. Semantics-preserving because the serve
-    * is a distinct over `gen` partitions and folded gen = watermark <
-    * any future generation id. */
-  private[graft] def evalShingleCompact(s: SparkSession, statePath: String,
-      watermark: Int): Unit = {
-    StateStores.headGuard(StateStores.genDirs(statePath), watermark, "shingles")
-    StateStores.rewriteSwap(
-      s.read.schema("sh BIGINT, gen INT").parquet(statePath)
-        .filter(col("gen") <= watermark)
-        .select(col("sh")).distinct()
-        .withColumn("gen", lit(watermark)),
-      statePath, Some("gen"))
-  }
-
-  /** The shared [[StateStores.foldAtCommittedHead]] cadence rule applied to the
-    * single-log eval-shingle store. */
-  private[graft] def evalShingleAutoCompact(s: SparkSession,
-      statePath: String, currentGen: Int, every: Int = 10): Boolean =
-    StateStores.foldAtCommittedHead(StateStores.genDirs(statePath),
-      currentGen, every)(
-      evalShingleCompact(s, statePath, _))
+    EvalLog.subs.head.read(s, statePath).select(col("sh")).distinct()
 
   /** Cross-set span DECONTAMINATION — the q414/q422 screen turned
     * into removal predicates (round-14 verdict Next #8): every
@@ -821,8 +708,8 @@ object DupRunStore {
       // fold/collapse inputs from the lifecycle's cached frames (this
       // invocation wrote them moments ago); the swaps still rewrite
       // the store on disk
-      runStoreCompactFrom(s, path, watermark = 1,
-        Some(lc.log()), Some(lc.posGen), Some(lc.arrGen))
+      RunLog.compact(s, path, watermark = 1, Map("deltas" -> lc.log(),
+        "postings" -> lc.posGen, "docs" -> lc.arrGen))
       // temporal by necessity: the folded-base size must be read
       // BETWEEN the compact and the gen-2 append — its own tiny action
       val baseSites = s.read.parquet(s"$path/deltas").count()

@@ -148,7 +148,7 @@ object PairGraph {
     *    ≤ C(cap, 2) debit rows each.
     */
   private[graft] def ivmDeltas(s: SparkSession, statePath: String,
-      gen: Int, cap: Int): DataFrame = {
+      gen: Long, cap: Int): DataFrame = {
     val post = s.read.parquet(s"$statePath/postings")
     // cumulative df derives from the postings state itself (postings
     // are per-doc-distinct, so count ≡ df) — a separate df-increment
@@ -172,7 +172,7 @@ object PairGraph {
     * just wrote; content identical by construction, and the stream /
     * spec wrapper above still reads persisted state only. */
   private[graft] def ivmDeltasFrom(post: DataFrame, dfs: DataFrame,
-      gen: Int, cap: Int): DataFrame = {
+      gen: Long, cap: Int): DataFrame = {
     val live = dfs.filter(col("dfA") <= cap).select(col("sh"))
     val pg = post.filter(col("gen") === gen)
       .join(live.hint("shuffle_hash"), Seq("sh"), "left_semi")
@@ -197,42 +197,40 @@ object PairGraph {
     credits.union(retracts)
   }
 
-  /** The demo lifecycles' shared write phase: persist generations
-    * lo..hi of the cached postings mirror plus their signed deltas —
-    * postings ‖ deltas as TWO overlapped actions (§2.6), each one
-    * `partitionBy("gen")` write of every generation in the range
-    * (round-17: the per-generation action chain was the queries' cost
-    * — job count, not data — and pair-graph deltas derive from
-    * postings state alone, so every generation's deltas are
-    * independent given the fused df table). Generation 0 overwrites,
-    * truncating any stale state — idempotent across reruns, the q229
-    * stance. NO coalesce on either write: a generation's postings at
-    * production cadence are snapshot-sized, and funneling them
-    * through one task is a scale-killer in the one code path whose
-    * purpose is the 100 TB maintenance story (round-9 verdict #1);
-    * AQE right-sizes the output files on both writes. `dfAll` carries
+  /** The pair-IVM generation log: signed `deltas` (compaction nets
+    * them per pair) and per-doc-distinct shingle `postings`, both
+    * `gen=`-partitioned. Compaction is semantics-preserving because
+    * maintenance reads postings only through `gen <= g` / `gen < g`
+    * (the within-generation tie-break never sees folded rows) and df
+    * is a plain row count that relabeling cannot change; without it
+    * the serve read pays one partition per generation forever (the
+    * round-9 verdict's Missing #2). */
+  private[graft] val IvmLog = GenLog("gen",
+    GenLog.Sub("deltas", fold = GenLog.net(Seq("d1", "d2"))),
+    GenLog.Sub("postings"))
+
+  /** The demo lifecycles' signed deltas for generations lo..hi, each
+    * tagged with its `gen` — every generation's deltas derive from the
+    * cached postings mirror alone, so the whole range is independent
+    * given the fused df table and lands in ONE write
+    * ([[GenLog.writeRange]], round-17: the per-generation action chain
+    * was the queries' cost — job count, not data). `dfAll` carries
     * (sh, c0, c1, c2) cumulative counts; watermark g's df slice is
     * (c_g, c_{g-1}). */
-  private def ivmWriteRange(pgAll: DataFrame, dfAll: DataFrame,
-      statePath: String, lo: Int, hi: Int, cap: Int): Unit = {
-    val mode = if (lo == 0) "overwrite" else "append"
+  private def ivmDeltaRange(pgAll: DataFrame, dfAll: DataFrame,
+      lo: Int, hi: Int, cap: Int): DataFrame = {
     def dfsAt(g: Int) = dfAll.select(col("sh"), col(s"c$g").as("dfA"),
       (if (g == 0) lit(0L) else col(s"c${g - 1}")).as("dfB"))
-    val deltas = (lo to hi).map(g =>
+    (lo to hi).map(g =>
         ivmDeltasFrom(pgAll, dfsAt(g), g, cap).withColumn("gen", lit(g)))
       .reduce(_.union(_))
-    StateStores.inParallel(
-      () => pgAll.filter(col("gen").between(lo, hi))
-        .write.mode(mode).partitionBy("gen").parquet(s"$statePath/postings"),
-      () => deltas
-        .write.mode(mode).partitionBy("gen").parquet(s"$statePath/deltas"))
   }
 
   /** The demo lifecycles' cached corpus derivation: per-doc-distinct
     * shingle postings with the generation column, plus the fused
     * all-watermarks df table — both cached and MATERIALIZED (the two
-    * parallel writes above would otherwise race the unpopulated cache
-    * and each re-run the corpus scan). */
+    * parallel [[GenLog.writeRange]] writes would otherwise race the
+    * unpopulated cache and each re-run the corpus scan). */
   private def demoState(docs: DataFrame, genCol: org.apache.spark.sql.Column)
       : (DataFrame, DataFrame) = {
     val pgAll = TextDedup.explodeShingles(TextDedup.shingleArrays(docs))
@@ -245,31 +243,9 @@ object PairGraph {
     (pgAll, dfAll)
   }
 
-  /** STREAMING twin of the batch maintenance step (round-11 verdict Missing #1 — the
-    * delta log with cap-crossing retractions was the one store with no
-    * live maintenance path): one micro-batch's postings and signed
-    * deltas, written REPLAY-IDEMPOTENTLY. Each batch writes into its
-    * OWN `gen=<batchId>` partition directory with mode Overwrite (the
-    * bandIndexAppendSink stance) — an at-least-once foreachBatch
-    * replay rewrites identical deterministic bytes instead of
-    * double-appending, and readers see the same partitioned layout
-    * [[ivmStep]]'s partitionBy produces. The delta derivation is
-    * [[ivmDeltas]] UNCHANGED: it reads the postings STATE (including
-    * this batch's just-written generation), never earlier batches'
-    * text, so cap-crossing RETRACTIONS fire from the stream exactly
-    * as in batch maintenance (PairIvmStreamSpec pins maintained ≡
-    * rebuilt across batches AND across a kill/restart in the window
-    * between the sink write and the streaming commit). */
-  private[graft] def ivmStreamStep(s: SparkSession, batchDocs: DataFrame,
-      statePath: String, gen: Int, cap: Int): Unit = {
-    TextDedup.explodeShingles(TextDedup.shingleArrays(batchDocs))
-      .write.mode("overwrite").parquet(s"$statePath/postings/gen=$gen")
-    ivmDeltas(s, statePath, gen, cap)
-      .write.mode("overwrite").parquet(s"$statePath/deltas/gen=$gen")
-  }
-
   /** q361's sensitivity curve from the STREAM-maintained IVM store —
-    * the serve-side read of [[ivmStreamStep]]'s state: pair
+    * the serve-side read of the state
+    * [[graft.streaming.EventStreams.pairGraphIvmSink]] maintains: pair
     * intersections are the netted delta log (credits minus
     * retractions), per-doc capped sizes derive from the postings under
     * the same df cap, and the jaccard arithmetic + curve body are the
@@ -331,79 +307,6 @@ object PairGraph {
       .orderBy(col("threshold"))
   }
 
-  // ---------------------------------------------------------------
-  // round 10: checkpoint/compact — the store lifecycle beyond append
-  // ---------------------------------------------------------------
-
-  /** Compact the pair-IVM state at `watermark`: fold every delta
-    * generation ≤ watermark into ONE net-count base generation
-    * (rows with net ≤ 0 drop — a fully-retracted pair costs nothing
-    * forever after) and collapse the postings partitions to a single
-    * `gen = watermark` partition. Semantics-preserving for every
-    * later [[ivmStep]] by construction: maintenance reads postings
-    * only through `gen <= g` / `gen < g` predicates (and the within-
-    * generation tie-break never sees compacted rows, since compacted
-    * gen = watermark < any future g), and df is a plain row count that
-    * re-labeling cannot change. Without this, the serve read pays one
-    * parquet partition per generation forever — the round-9 verdict's
-    * Missing #2. Both rewrites go through a temp dir + swap so a
-    * crash mid-compact leaves the original state intact. */
-  private[graft] def compact(s: SparkSession, statePath: String,
-      watermark: Int): Unit =
-    compactFrom(s, statePath, watermark, None)
-
-  /** [[compact]] with the postings-collapse INPUT optionally supplied
-    * from the caller's cached mirror (the q321 demo wrote those rows
-    * moments earlier — re-reading corpus-sized parquet was redundant
-    * within one invocation). The swaps are unchanged: real bytes land
-    * under the store lock either way; the auto-compact / stream path
-    * passes None and reads persisted state. */
-  private[graft] def compactFrom(s: SparkSession, statePath: String,
-      watermark: Int, memPosts: Option[DataFrame]): Unit = {
-    // guard against latent API misuse (round-10 advice): the rewrite
-    // keeps only gen <= watermark rows, so a watermark below the
-    // newest generation would silently DESTROY all later generations —
-    // require the caller to compact the whole log or nothing. The
-    // newest generation reads from the partition DIRECTORY names
-    // (gen=N — the write layout the demo/stream writers own), zero
-    // Spark jobs; the head-only guard is the shared
-    // [[StateStores.headGuard]]
-    StateStores.headGuard(
-      StateStores.genDirs(s"$statePath/deltas"), watermark, "deltas")
-    val folded = s.read.parquet(s"$statePath/deltas")
-      .filter(col("gen") <= watermark)
-      .groupBy(col("d1"), col("d2"))
-      .agg(sum(col("delta")).as("delta"))
-      .filter(col("delta") > 0)
-      .withColumn("gen", lit(watermark))
-    val posts = memPosts.getOrElse(s.read.parquet(s"$statePath/postings"))
-      .filter(col("gen") <= watermark)
-      .withColumn("gen", lit(watermark))
-    // disjoint subdirs, no ordering between the two rewrites —
-    // overlap them (§2.6); each swap holds its own per-path store lock
-    StateStores.inParallel(
-      () => StateStores.rewriteSwap(folded, s"$statePath/deltas", Some("gen")),
-      () => StateStores.rewriteSwap(posts, s"$statePath/postings", Some("gen")))
-  }
-
-  /** AUTO-COMPACTION hook for the LIVE IVM sink (round-12 verdict
-    * Missing #3, pair-graph flavor): called at the START of
-    * foreachBatch(`currentGen`), when every generation < `currentGen`
-    * is streaming-committed. Folds the log with [[compact]] at
-    * watermark = committed head, but ONLY when no generation dir
-    * ≥ `currentGen` exists — such a dir is a crashed uncommitted
-    * attempt of this very batch (possibly partial files), which the
-    * replay is about to Overwrite; folding it would both read torn
-    * parquet and let the replay's subdir Overwrite destroy the folded
-    * base. Skipping is safe: the NEXT clean batch compacts. Returns
-    * true when a fold ran. */
-  private[graft] def autoCompactIfFragmented(s: SparkSession,
-      statePath: String, currentGen: Int, every: Int = 10): Boolean =
-    StateStores.foldAtCommittedHead(
-      Seq("deltas", "postings")
-        .flatMap(sub => StateStores.genDirs(s"$statePath/$sub")),
-      currentGen, every)(compact(s, statePath, _))
-
   val queries: Map[String, Q] = Map(
 
     /** Pair-graph incremental view maintenance — seed + two snapshot
@@ -425,7 +328,8 @@ object PairGraph {
       // chain collapses to ONE postings write + ONE deltas write (all
       // generations, partitionBy) — identical bytes, concurrent stages
       val (pgAll, dfAll) = demoState(docs, pmod(col("doc_id"), lit(3)))
-      ivmWriteRange(pgAll, dfAll, path, 0, 2, IvmCap)
+      IvmLog.writeRange(path, 0, 2)("postings" -> pgAll,
+        "deltas" -> ivmDeltaRange(pgAll, dfAll, 0, 2, IvmCap))
       val deltas = s.read.parquet(s"$path/deltas")
       val perGen = deltas.groupBy(col("gen").cast("long").as("gen"))
         .agg(count_if(col("delta") === 1L).as("n_credit"),
@@ -503,12 +407,14 @@ object PairGraph {
         .filter(pmod(col("doc_id"), lit(2)) === 0)
       val path = StateStores.statePath(dir, "pair_ivm_c")
       val (pgAll, dfAll) = demoState(docs, pmod(expr("doc_id DIV 2"), lit(3)))
-      ivmWriteRange(pgAll, dfAll, path, 0, 1, IvmCap)
+      IvmLog.writeRange(path, 0, 1)("postings" -> pgAll,
+        "deltas" -> ivmDeltaRange(pgAll, dfAll, 0, 1, IvmCap))
       // fold input (delta log) is runs-sized — the parquet read is the
       // cheap side; the postings collapse reads the cached mirror
       // instead of re-scanning the corpus-sized parquet just written
-      compactFrom(s, path, watermark = 1, memPosts = Some(pgAll))
-      ivmWriteRange(pgAll, dfAll, path, 2, 2, IvmCap)
+      IvmLog.compact(s, path, watermark = 1, Map("postings" -> pgAll))
+      IvmLog.writeRange(path, 2, 2)("postings" -> pgAll,
+        "deltas" -> ivmDeltaRange(pgAll, dfAll, 2, 2, IvmCap))
       val deltas = s.read.parquet(s"$path/deltas").cache()
       val maintained = deltas.groupBy(col("d1"), col("d2"))
         .agg(sum(col("delta")).as("im")).filter(col("im") > 0)

@@ -373,13 +373,9 @@ object StateStores {
     * the batch rebuild after any prefix of batches (spec-pinned).
     *
     * IDEMPOTENT against foreachBatch's at-least-once replays: each
-    * batch writes mode=Overwrite into its OWN batchId-keyed
-    * subdirectory, so a task/driver failure after the write but
-    * before the streaming commit re-runs the batch into the same
-    * subdir instead of double-appending (a plain mode("append") here
-    * silently duplicated index rows on replay — round-8 self-review;
-    * readers scan `path` recursively and see each batch exactly
-    * once).
+    * batch Overwrites its OWN `batch=<id>` subdirectory
+    * ([[GenLog.step]]), so a replay re-runs into the same subdir
+    * instead of double-appending (round-8 self-review).
     *
     * READ-SCHEMA CONTRACT: because the subdirs are named
     * `batch=<id>`, Spark's partition discovery surfaces a synthetic
@@ -391,24 +387,14 @@ object StateStores {
     * makes replay-idempotence auditable from the data alone. */
   def bandIndexAppendSink(docs: DataFrame, path: String,
       checkpoint: Option[String] = None,
-      autoCompactEvery: Int = 10)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val w = docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      // auto-compaction first (round-12 verdict Missing #3): at this
-      // point every batch id < batchId is streaming-committed, so the
-      // fragment fold runs at the committed head — ServeAmp's measured
-      // ~10-append cadence, enforced by the sink instead of trusted to
-      // an operator
-      compactLogIfFragmented(batch.sparkSession, path, batchId,
-        autoCompactEvery)
-      bandIndexRows(batch.sparkSession, batch)
-        .write.mode("overwrite").parquet(s"$path/batch=$batchId")
+      autoCompactEvery: Int = GenLog.CompactEvery)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    // the sink also enforces the compaction cadence at the committed
+    // head (round-12 verdict Missing #3); a checkpointed restart
+    // replays the crash window StreamingRecoverySpec drives end to end
+    BatchLog.sink(docs, path, checkpoint, autoCompactEvery) { (batch, id) =>
+      BatchLog.step(path, id)("" -> bandIndexRows(batch.sparkSession, batch))
     }
-    // checkpointed form: restart-from-checkpoint replays any batch
-    // whose sink write landed but whose commit marker did not — the
-    // crash window StreamingRecoverySpec drives end-to-end
-    checkpoint.fold(w)(c => w.option("checkpointLocation", c)).start()
-  }
 
   /** Maintained-centroid update frame, factored for the spec: given
     * the PERSISTED state (cent_id, pos, coord, n — full-precision
@@ -457,20 +443,17 @@ object StateStores {
     * version) — with [[writeVersion]]'s temp-dir + rename this is a
     * second belt, and it also skips any legacy partial dir. */
   private[graft] def latestVersionBelow(path: String, id: Long): Long = {
-    val p = java.nio.file.Paths.get(path)
-    val st = java.nio.file.Files.list(p)
-    try {
-      import scala.jdk.CollectionConverters._
-      val vs = st.iterator().asScala
-        .filter(d => java.nio.file.Files.exists(d.resolve("_SUCCESS")))
-        .map(_.getFileName.toString)
-        .filter(_.startsWith("v=")).map(_.stripPrefix("v=").toLong)
-        .filter(_ < id).toSeq
-      require(vs.nonEmpty,
-        s"no state version below $id under $path — seed v=-1 missing")
-      vs.max
-    } finally st.close()
+    val vs = Versions.ids(path).filter(v => v < id && committed(path, v))
+    require(vs.nonEmpty,
+      s"no state version below $id under $path — seed v=-1 missing")
+    vs.max
   }
+
+  /** A versioned store's `v=<n>` dirs (listed by [[GenLog.ids]]); a
+    * version is committed once its `_SUCCESS` marker exists. */
+  private val Versions = GenLog("v")
+  private def committed(path: String, v: Long): Boolean =
+    java.nio.file.Files.exists(java.nio.file.Paths.get(path, s"v=$v", "_SUCCESS"))
 
   /** Write state version `id` ATOMICALLY (round-12 ADVICE: the old
     * plain Overwrite of `v=<id>` deleted the dir's `_SUCCESS` first,
@@ -508,21 +491,11 @@ object StateStores {
   private[graft] def pruneVersions(path: String, keep: Int): Long = {
     require(keep >= 2, s"pruneVersions keep=$keep would break last-batch replay")
     withStoreLock(path) {
-      val p = java.nio.file.Paths.get(path)
-      if (!java.nio.file.Files.exists(p)) 0L
-      else {
-        import scala.jdk.CollectionConverters._
-        val st = java.nio.file.Files.list(p)
-        val all = try st.iterator().asScala.map(_.getFileName.toString)
-            .filter(_.startsWith("v=")).map(_.stripPrefix("v=").toLong).toVector
-          finally st.close()
-        val committed = all.filter(v => java.nio.file.Files.exists(
-          p.resolve(s"v=$v").resolve("_SUCCESS")))
-        val keepSet = committed.sorted.takeRight(keep).toSet
-        val victims = all.filterNot(keepSet.contains)
-        victims.foreach(v => rmTree(p.resolve(s"v=$v")))
-        victims.size.toLong
-      }
+      val all = Versions.ids(path)
+      val keepSet = all.filter(committed(path, _)).sorted.takeRight(keep).toSet
+      val victims = all.filterNot(keepSet.contains)
+      victims.foreach(v => rmTree(java.nio.file.Paths.get(path, s"v=$v")))
+      victims.size.toLong
     }
   }
 
@@ -595,150 +568,15 @@ object StateStores {
         col("n").as("n_before"), coalesce(col("m"), lit(0L)).as("n_added"))
   }
 
-  /** AUTO-COMPACTION for `batch=<id>` log stores (round-12 verdict
-    * Missing #3: ServeAmp measured the compact-every-~10-appends
-    * cadence, but no sink triggered it — a long-lived live store
-    * silently re-accumulated the 1.46× serve tax). Called at the START
-    * of foreachBatch(`currentBatch`), when every batch id <
-    * `currentBatch` is streaming-committed (micro-batches are
-    * sequential): folds the committed fragments into the committed
-    * HEAD partition `batch=<max id < currentBatch>` through the
-    * crash-ordered [[rewriteSwap]]. Rows of any id ≥ `currentBatch`
-    * (a crashed uncommitted attempt — necessarily `currentBatch`
-    * itself, since micro-batches are sequential) are NOT folded and
-    * not rewritten: this very foreachBatch call Overwrites that
-    * subdir next, so excluding it both sidesteps its possibly-partial
-    * files and cannot lose data (the committed-head rule
-    * [[graft.llm.CorpusOps.chunkStoreCompact]] documents, made
-    * automatic). Readers are covered by [[readCommitted]]. Returns
-    * true when a fold ran. */
-  /** List the generation ids of a `gen=N`-partitioned state dir from
-    * the directory names alone — zero Spark jobs. Shared by every
-    * gen-partitioned store (pair graph, run catalog, eval-shingle
-    * log). */
-  private[graft] def genDirs(path: String): Seq[Int] = {
-    val p = java.nio.file.Paths.get(path)
-    if (!java.nio.file.Files.isDirectory(p)) return Nil
-    val st = java.nio.file.Files.list(p)
-    try {
-      import scala.jdk.CollectionConverters._
-      st.iterator().asScala.map(_.getFileName.toString)
-        .filter(_.startsWith("gen=")).map(_.stripPrefix("gen=").toInt)
-        .toSeq
-    } finally st.close()
-  }
+  /** The `batch=<id>` append logs (the band index here, the chunk
+    * index of [[graft.streaming.EventStreams.chunkIndexAppendSink]]):
+    * rows land at the root, compaction only relabels. */
+  private[graft] val BatchLog = GenLog("batch", GenLog.Sub(""))
 
-  /** ONE head-only compaction guard for every gen-partitioned log
-    * store: a watermark below the newest generation would silently
-    * destroy later maintained state (round-16: this rule previously
-    * lived as three hand-rolled copies that a future fix would have
-    * had to chase individually). */
-  private[graft] def headGuard(all: Seq[Int], watermark: Int,
-      what: String): Unit =
-    require(all.nonEmpty && watermark >= all.max,
-      s"compact(watermark=$watermark) below newest generation " +
-        s"${all.foldLeft(-1)(math.max)} would drop maintained $what; " +
-        "compact at the log head")
-
-  /** ONE committed-head auto-compaction cadence for every live sink
-    * over a gen-partitioned log (the PairGraph replay-safety rule):
-    * fold when ≥ `every` generations are streaming-committed
-    * (< `currentGen`), but never while a dir ≥ `currentGen` exists —
-    * that is a crashed uncommitted attempt of this very batch, about
-    * to be Overwritten; folding it would both read torn parquet and
-    * let the replay's Overwrite destroy the folded base. Skipping is
-    * safe: the next clean batch compacts. Returns true when the fold
-    * ran. */
-  private[graft] def foldAtCommittedHead(all: Seq[Int], currentGen: Int,
-      every: Int)(compact: Int => Unit): Boolean = {
-    val committed = all.filter(_ < currentGen).distinct
-    if (committed.size < every || all.exists(_ >= currentGen)) false
-    else { compact(committed.max); true }
-  }
-
-  private[graft] def compactLogIfFragmented(s: SparkSession, path: String,
-      currentBatch: Long, every: Int = 10): Boolean = {
-    val p = java.nio.file.Paths.get(path)
-    if (!java.nio.file.Files.isDirectory(p)) return false
-    val committed = {
-      val st = java.nio.file.Files.list(p)
-      try {
-        import scala.jdk.CollectionConverters._
-        st.iterator().asScala.map(_.getFileName.toString)
-          .filter(_.startsWith("batch=")).map(_.stripPrefix("batch=").toLong)
-          .filter(_ < currentBatch).toSeq
-      } finally st.close()
-    }
-    if (committed.size < every) return false
-    val target = committed.max
-    rewriteSwap(
-      s.read.option("basePath", path)
-        .parquet(committed.sorted.map(b => s"$path/batch=$b"): _*)
-        .withColumn("batch", lit(target)),
-      path, Some("batch"))
-    true
-  }
-
-  /** One atomic generation APPEND under the cross-process store lock
-    * (round-13 verdict Next #7 — the reader-vs-writer race has its
-    * forked-JVM proof; this is the writer-vs-writer primitive): lists
-    * the committed generations, claims gen = max+1, and publishes the
-    * rows as `gen=<n>` by temp-dir + rename — all inside ONE
-    * [[withStoreLock]] acquisition, so two PROCESSES appending to the
-    * same store can neither claim the same generation nor land an
-    * append inside the other's compact window. Returns the claimed
-    * generation. */
-  private[graft] def appendGeneration(s: SparkSession, path: String,
-      df: DataFrame): Long = withStoreLock(path) {
-    val p = java.nio.file.Paths.get(path)
-    java.nio.file.Files.createDirectories(p)
-    val gens = {
-      val st = java.nio.file.Files.list(p)
-      try {
-        import scala.jdk.CollectionConverters._
-        st.iterator().asScala.map(_.getFileName.toString)
-          .filter(_.startsWith("gen=")).map(_.stripPrefix("gen=").toLong)
-          .toSeq
-      } finally st.close()
-    }
-    val next = if (gens.isEmpty) 0L else gens.max + 1L
-    val tmp = s"$path/.gen_tmp_$next"
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    java.nio.file.Files.move(java.nio.file.Paths.get(tmp),
-      p.resolve(s"gen=$next"))
-    next
-  }
-
-  /** Compact ALL generations of a `gen=` store into the newest one —
-    * the read job runs INSIDE the store lock (withStoreLock is
-    * per-path reentrant, so the nested [[rewriteSwap]] lock is a
-    * no-op): a cross-process [[appendGeneration]] can never land
-    * between the compactor's read and its swap, which is exactly the
-    * lost-append race the unlocked read of a concurrent-writer store
-    * would have. Single-writer sinks keep the cheaper
-    * [[compactLogIfFragmented]] (read outside the lock) — their
-    * foreachBatch serialization already excludes concurrent writers. */
-  private[graft] def compactGenerations(s: SparkSession, path: String): Unit =
-    withStoreLock(path) {
-      val p = java.nio.file.Paths.get(path)
-      val gens = {
-        val st = java.nio.file.Files.list(p)
-        try {
-          import scala.jdk.CollectionConverters._
-          st.iterator().asScala.map(_.getFileName.toString)
-            .filter(_.startsWith("gen=")).map(_.stripPrefix("gen=").toLong)
-            .toSeq
-        } finally st.close()
-      }
-      if (gens.size >= 2) {
-        val target = gens.max
-        rewriteSwap(
-          s.read.option("basePath", path)
-            .parquet(gens.sorted.map(g => s"$path/gen=$g"): _*)
-            .withColumn("gen", lit(target)),
-          path, Some("gen"))
-      }
-    }
+  /** The `gen=<n>` store written by several PROCESSES through
+    * [[GenLog.append]] — the writer-vs-writer primitive StateStoreSpec
+    * and [[graft.StorePollMain]] drive from two JVMs. */
+  private[graft] val SharedLog = GenLog("gen", GenLog.Sub(""))
 
   /** The SERVE side of the q229 story — the probe plan that reads the
     * PERSISTED band index instead of rebuilding it (q151 is the

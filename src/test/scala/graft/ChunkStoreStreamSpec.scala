@@ -88,7 +88,7 @@ class ChunkStoreStreamSpec extends SparkSuite {
     val q1 = start()
     q1.processAllAvailable(); q1.stop()
     // compact at the committed log head (stream stopped)
-    llm.CorpusOps.chunkStoreCompact(spark, statePath)
+    llm.StateStores.BatchLog.compact(spark, statePath, watermark = 1)
     def batchDirs = {
       val st = Files.list(Paths.get(statePath))
       try {
@@ -176,6 +176,64 @@ class ChunkStoreStreamSpec extends SparkSuite {
     assert(live.length == batch.length && live.nonEmpty)
     live.zip(batch).foreach { case (l, b) =>
       assert(l == b, s"auto-compacted live catalog row $l != batch row $b")
+    }
+  }
+
+  test("a crashed uncommitted batch dir defers the fold to the next clean batch") {
+    // The cadence rule on a batch= log: autoCompact never folds while a
+    // dir ≥ the current batch exists (a crashed attempt of this very
+    // batch — torn parquet the replay is about to Overwrite). Three
+    // batches land under autoCompactEvery = 3 (no fold yet: batch 2
+    // opens with only {0, 1} committed); then a torn batch=3 is
+    // planted. The fold must skip it, batch 3's replay overwrites it,
+    // and batch 4 opens by folding {0..3} → batch=3.
+    import java.nio.file.{Files, Paths}
+    val srcDir = Files.createTempDirectory("graft_chunk_crash_src").toString
+    val statePath = Files.createTempDirectory("graft_chunk_crash_state")
+      .resolve("state").toString
+    val ckpt = Files.createTempDirectory("graft_chunk_crash_ckpt").toString
+    val docs = Tables(spark, sf01, "documents")
+      .select(col("doc_id"), col("source"), col("text"))
+    def putGen(g: Int): Unit = {
+      docs.filter(pmod(col("doc_id"), lit(5)) === g)
+        .coalesce(1).write.parquet(s"$srcDir/gen$g")
+      val ft = java.nio.file.attribute.FileTime
+        .fromMillis(1700000000000L + g * 10000L)
+      val walk = Files.walk(Paths.get(s"$srcDir/gen$g"))
+      try walk.forEach(p => Files.setLastModifiedTime(p, ft))
+      finally walk.close()
+    }
+    def run(): Unit = {
+      val q = streaming.EventStreams.chunkIndexAppendSink(
+        spark.readStream
+          .schema("doc_id BIGINT, source STRING, text STRING")
+          .option("maxFilesPerTrigger", "1")
+          .parquet(s"$srcDir/gen*"),
+        statePath, checkpoint = Some(ckpt), autoCompactEvery = 3)
+      q.processAllAvailable(); q.stop()
+    }
+    def batchDirs = llm.StateStores.BatchLog.ids(statePath).toSet
+    (0 until 3).foreach(putGen)
+    run()
+    assert(batchDirs == Set(0L, 1L, 2L), s"no fold expected yet: $batchDirs")
+    val torn = Paths.get(s"$statePath/batch=3")
+    Files.createDirectories(torn)
+    Files.write(torn.resolve("part-00000-torn.parquet"), Array[Byte](1, 2, 3))
+    assert(!llm.StateStores.BatchLog.autoCompact(spark, statePath,
+      current = 3, every = 3), "the fold must skip a crashed current batch")
+    assert(batchDirs == Set(0L, 1L, 2L, 3L) && Files.exists(torn),
+      s"a skipped fold must leave the log untouched: $batchDirs")
+    (3 until 5).foreach(putGen)
+    run()
+    assert(batchDirs == Set(3L, 4L),
+      s"batch 4 must fold {0..3} into batch=3; layout is $batchDirs")
+    val live = llm.CorpusOps.boilerplateCatalogFromStore(spark, statePath,
+      docs.filter(col("text").isNotNull)).collect()
+    val batch = SparkEntry.queries("q388_boilerplate_catalog")(spark, sf01)
+      .collect()
+    assert(live.length == batch.length && live.nonEmpty)
+    live.zip(batch).foreach { case (l, b) =>
+      assert(l == b, s"post-crash live catalog row $l != batch row $b")
     }
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.llm.{PairGraph, StateStores}
+import graft.llm.{DupRunStore, PairGraph, StateStores}
 
 /** The round-10 compaction contract's STRUCTURAL half (the data half
   * is q321/q322's oracles): reads after compaction must touch O(base)
@@ -61,5 +61,43 @@ class StateCompactionSpec extends SparkSuite {
     val a = SparkEntry.queries("q321_pair_store_compact")(spark, sf).collect().toSeq
     val b = SparkEntry.queries("q321_pair_store_compact")(spark, sf).collect().toSeq
     assert(a == b, "compaction lifecycle must be idempotent across reruns")
+  }
+
+  test("a compact below the newest generation throws and leaves every sub-dir unchanged") {
+    import spark.implicits._
+    def tmpStore(name: String) = java.nio.file.Files
+      .createTempDirectory(name).resolve("state").toString
+    // multi-sub store: the run IVM's deltas/postings/docs, gens 0..2
+    val runLog = DupRunStore.RunLog
+    val subs = Seq("deltas", "postings", "docs")
+    val path = tmpStore("graft_guard_run")
+    (0L to 2L).foreach(g =>
+      runLog.step(path, g)(subs.map(_ -> Seq(g).toDF("doc_id")): _*))
+    def layout = subs.map(sub => sub -> genDirs(s"$path/$sub")).toMap
+    val before = layout
+    assert(before.values.forall(_ == Set("gen=0", "gen=1", "gen=2")), s"$before")
+    intercept[IllegalArgumentException](runLog.compact(spark, path, watermark = 1))
+    assert(layout == before, s"a refused compact rewrote the store: $layout")
+    // the guard spans every sub: a generation present in ONE sub only
+    // (a crash between a step's writes) still refuses the fold
+    val partial = tmpStore("graft_guard_partial")
+    (0L to 1L).foreach(g =>
+      runLog.step(partial, g)(subs.map(_ -> Seq(g).toDF("doc_id")): _*))
+    runLog.step(partial, 2L)("docs" -> Seq(2L).toDF("doc_id"))
+    intercept[IllegalArgumentException](runLog.compact(spark, partial, watermark = 1))
+    assert(subs.map(sub => genDirs(s"$partial/$sub")) ==
+      Seq(Set("gen=0", "gen=1"), Set("gen=0", "gen=1"),
+        Set("gen=0", "gen=1", "gen=2")))
+    // single-dir store: the eval-shingle log
+    val evalLog = DupRunStore.EvalLog
+    val evalPath = tmpStore("graft_guard_eval")
+    (0L to 2L).foreach(g =>
+      evalLog.step(evalPath, g)("" -> Seq(g, 10L + g, 20L).toDF("sh")))
+    intercept[IllegalArgumentException](evalLog.compact(spark, evalPath, watermark = 1))
+    assert(genDirs(evalPath) == Set("gen=0", "gen=1", "gen=2"))
+    // at the head the same store folds to one distinct base
+    evalLog.compact(spark, evalPath, watermark = 2)
+    assert(genDirs(evalPath) == Set("gen=2"))
+    assert(DupRunStore.evalShinglesServe(spark, evalPath).count() == 7L)
   }
 }

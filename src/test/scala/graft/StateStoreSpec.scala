@@ -337,8 +337,8 @@ class StateStoreSpec extends SparkSuite {
     // while THIS process appends values 1..12 and compacts the same
     // store concurrently. The only coordination is withStoreLock's
     // FileChannel lock held across each append's list→claim→publish
-    // and each compact's read→swap (appendGeneration /
-    // compactGenerations): without it, two writers claim the same
+    // and each compact's read→swap (GenLog.append /
+    // GenLog.compact): without it, two writers claim the same
     // generation (one overwrites the other) or a compactor swaps away
     // an append that landed after its read. Maintained ≡ rebuilt: the
     // final store's value multiset must be exactly everything both
@@ -381,8 +381,9 @@ class StateStoreSpec extends SparkSuite {
           scala.util.Try(Files.readString(childLog.toPath).takeRight(2000))
             .getOrElse("<unreadable>"))
       (1L to nEach).foreach { i =>
-        StateStores.appendGeneration(spark, path, Seq(i).toDF("x"))
-        if (i % 3L == 0L) StateStores.compactGenerations(spark, path)
+        StateStores.SharedLog.append(path, Seq(i).toDF("x"))
+        if (i % 3L == 0L)
+          StateStores.SharedLog.compact(spark, path, Long.MaxValue)
       }
     } finally {
       proc.waitFor(180, java.util.concurrent.TimeUnit.SECONDS)
