@@ -60,6 +60,12 @@ object One {
           }
         })
     }
+    // generated classes compiled (Janino) so far in this JVM and their
+    // total compile nanoseconds: a warm rep that compiles nothing reused
+    // every class from Spark's JVM-wide cache (GraftSession sizes it)
+    def codegen(): (Long, Long) = (
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+      org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime)
     names.foreach { name =>
       val fn = SparkEntry.queries.getOrElse(name, {
         // a typo'd name should cost seconds, not a round-trip: rank all
@@ -78,9 +84,13 @@ object One {
         sys.error(s"unknown query '$name'; did you mean: ${near.mkString(", ")}?")
       })
       (1 to reps).foreach { i =>
+        val (c0, cNs0) = codegen()
         val t0 = System.nanoTime()
         val n = fn(spark, sfDir).count()
-        println(f"[one] $name rep$i: ${(System.nanoTime() - t0) / 1e9}%.3f s ($n rows)")
+        val secs = (System.nanoTime() - t0) / 1e9
+        val (c1, cNs1) = codegen()
+        println(f"[one] $name rep$i: $secs%.3f s ($n rows, ${c1 - c0} classes " +
+          f"compiled in ${(cNs1 - cNs0) / 1e6}%.0f ms)")
         spark.catalog.clearCache()
       }
       outDir.foreach { d =>

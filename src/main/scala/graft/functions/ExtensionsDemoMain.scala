@@ -1,11 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Proof-of-injection smoke: builds a session configured ONLY with
-  * `spark.sql.extensions=graft.functions.GraftExtensions` (no
-  * programmatic register calls) and exercises every injected surface —
+/** Proof-of-injection smoke: builds the engine's session whose ONLY
+  * graft wiring is `spark.sql.extensions=graft.functions.GraftExtensions`
+  * (no programmatic register calls) and exercises every injected surface —
   * the native cosine_sim function from SQL, the as-of planner
   * strategy, and the as-of filter-pushdown rule. This is exactly how a
   * pure-SQL or third-party application consumes graft.
@@ -18,14 +17,8 @@ import org.apache.spark.sql.functions._
   */
 object ExtensionsDemoMain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-extensions-demo")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local("graft-extensions-demo", "2",
+      Map("spark.sql.extensions" -> "graft.functions.GraftExtensions"))
     import spark.implicits._
 
     val cs = Seq((Array(1f, 0f), Array(1f, 0f)), (Array(1f, 0f), Array(0f, 1f)))

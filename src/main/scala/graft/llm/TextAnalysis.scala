@@ -2593,7 +2593,13 @@ object TextAnalysis {
         |ORDER BY filter NULLS FIRST""".stripMargin,
 
     // the same even/odd split, count>=2 vocabulary, sparse add-1
-    // log-odds factorization, r6-grid argmax with lexical tie-break
+    // log-odds factorization, r6-grid argmax with lexical tie-break.
+    // The sparse term folds differently on the two sides: the engine
+    // sums k·ln(c+1) once per DISTINCT token of a doc (token_counts),
+    // this oracle sums ln(c+1) once per OCCURRENCE (sp.s1). The two are
+    // equal in exact arithmetic; their last-ulp difference is what the
+    // r6 + 1e-12 nudge on `score` absorbs, so a future score divergence
+    // at another scale factor traces here first.
     "q368_source_classifier" ->
       """WITH tok AS (
         |  SELECT doc_id, source, unnest(string_split(text, ' ')) AS t
