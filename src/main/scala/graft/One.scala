@@ -38,27 +38,31 @@ object One {
     }
     sentinel() // untimed codegen warm-up, the Bench stance
     println(f"[sentinel] pre: ${sentinel()}%.3f s")
-    // GRAFT_JOBLOG=1: print per-job wall times (job id, seconds, first
-    // line of the call site) — the orchestration-cost profiler for
-    // multi-job lifecycle queries (q321-class), where the flat cost is
-    // job COUNT, not data volume.
-    if (sys.env.get("GRAFT_JOBLOG").contains("1")) {
-      val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onJobStart(
-              j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-            val site = Option(j.properties)
-              .map(_.getProperty("callSite.short", "?")).getOrElse("?")
-            starts.put(j.jobId, (System.nanoTime(), site))
+    // jobs started per rep; GRAFT_JOBLOG=1 also prints each job's wall
+    // time and first call-site line — the orchestration-cost profiler
+    // for multi-job lifecycle queries (q321-class), where the flat cost
+    // is job COUNT, not data volume.
+    val jobLog = sys.env.get("GRAFT_JOBLOG").contains("1")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
+    spark.sparkContext.addSparkListener(
+      new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          jobs.incrementAndGet()
+          if (jobLog) starts.put(j.jobId, (System.nanoTime(), Option(j.properties)
+            .map(_.getProperty("callSite.short", "?")).getOrElse("?")))
+        }
+        override def onJobEnd(
+            j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
+          Option(starts.remove(j.jobId)).foreach { case (t0, site) =>
+            println(f"[job] ${j.jobId}%3d ${(System.nanoTime() - t0) / 1e9}%7.3f s  $site")
           }
-          override def onJobEnd(
-              j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-            Option(starts.remove(j.jobId)).foreach { case (t0, site) =>
-              println(f"[job] ${j.jobId}%3d ${(System.nanoTime() - t0) / 1e9}%7.3f s  $site")
-            }
-          }
-        })
+        }
+      })
+    def jobsSoFar(): Int = {
+      org.apache.spark.sql.GraftSqlBridge.drainListenerBus(spark.sparkContext)
+      jobs.get
     }
     // generated classes compiled (Janino) so far in this JVM and their
     // total compile nanoseconds: a warm rep that compiles nothing reused
@@ -85,12 +89,13 @@ object One {
       })
       (1 to reps).foreach { i =>
         val (c0, cNs0) = codegen()
+        val j0 = jobsSoFar()
         val t0 = System.nanoTime()
         val n = fn(spark, sfDir).count()
         val secs = (System.nanoTime() - t0) / 1e9
         val (c1, cNs1) = codegen()
-        println(f"[one] $name rep$i: $secs%.3f s ($n rows, ${c1 - c0} classes " +
-          f"compiled in ${(cNs1 - cNs0) / 1e6}%.0f ms)")
+        println(f"[one] $name rep$i: $secs%.3f s ($n rows, ${jobsSoFar() - j0} jobs, " +
+          f"${c1 - c0} classes compiled in ${(cNs1 - cNs0) / 1e6}%.0f ms)")
         spark.catalog.clearCache()
       }
       outDir.foreach { d =>

@@ -20,103 +20,128 @@ import org.apache.spark.sql.types.LongType
   * silently corrupt every rank (a `.cache()` only masks it until
   * eviction). See the round-4 fix in [[Quantiles]] (commit `898b510`).
   *
-  * Here everything is one plan: the counts/offsets branch and the
-  * ranked branch share the SAME range exchange (ReuseExchange dedupes
-  * them — one execution, one layout), and the prefix sum runs as a
-  * window over the per-partition COUNTS table, which has at most one
-  * row per partition — bounded by cluster width, never by data size.
-  * Nothing is collected, and there is no SECOND ACTION anywhere.
+  * Here everything is one plan: the offsets branch and the ranked
+  * branch share the SAME range exchange (ReuseExchange dedupes them —
+  * one execution, one layout), and the prefix sums run as a window
+  * over a table of (range partition, group) CELLS ([[cellSums]]),
+  * which has at most partitions + groups − 1 rows — never one row per
+  * data row. Nothing is collected, and there is no SECOND ACTION
+  * anywhere. One core, [[rangeRanked]], serves both the global row
+  * numbers ([[withRowNumbers]]: one group of all rows) and the exact
+  * quantiles' in-group ranks ([[Quantiles]]).
   *
   * The sorted/numbered intermediate IS cached (`MEMORY_AND_DISK` via
   * `.cache()`), for a different reason than the rejected two-action
   * layout ever had: exchange reuse dedupes only the SHUFFLE — every
-  * consumer branch of the exchange re-runs its own
-  * sortWithinPartitions over the full data, and callers that compose
-  * (quantile bounds + clip passes, rank + group-firsts) fan out to
-  * 4-8 consumer branches, each paying a full-data sort (measured 3×
-  * the whole query cost at sf0.1). Caching the narrow
-  * (sortCols, value, pid, position) projection makes the scan + sort
-  * + shuffle happen once; the branches re-read the cached blocks. If
-  * a block is evicted mid-query, the branch recomputes THROUGH THE
-  * SAME materialized exchange (partition bounds cannot diverge within
-  * one execution; only tie order can shift, and callers' asserts trip
-  * on any rank inconsistency), so this cache is an operational
-  * dedup — correctness never depends on it.
+  * consumer branch of the exchange (the cells aggregate, the ranked
+  * rows, and whatever a composing caller adds) re-runs its own
+  * sortWithinPartitions over the full data, each a full-data sort
+  * (measured 3× the whole query cost at sf0.1 when a composed plan
+  * fanned out to several branches). Caching the narrow sorted
+  * projection makes the scan + sort + shuffle happen once; the
+  * branches re-read the cached blocks. If a block is evicted
+  * mid-query, the branch recomputes THROUGH THE SAME materialized
+  * exchange (partition bounds cannot diverge within one execution;
+  * only tie order can shift, and callers' asserts trip on any rank
+  * inconsistency), so this cache is an operational dedup —
+  * correctness never depends on it.
   */
 object GlobalRank {
 
-  /** All rows of the tiny counts table share this constant partition
-    * key — single-partition ON PURPOSE (≤ one row per DATA partition
-    * flows through the window) without WindowExec's "No Partition
-    * Defined" warning drowning real log anomalies. It must be derived
-    * from a column, not `lit(0)`: Spark 4's EliminateWindowPartitions
-    * strips foldable partition expressions, which would restore the
-    * empty spec and the warning. */
+  /** All rows of a tiny cells table share this constant partition key
+    * when there are no groups — single-partition ON PURPOSE (≤ one row
+    * per DATA partition flows through the window) without WindowExec's
+    * "No Partition Defined" warning drowning real log anomalies. It
+    * must be derived from a column, not `lit(0)`: Spark 4's
+    * EliminateWindowPartitions strips foldable partition expressions,
+    * which would restore the empty spec and the warning. */
   private[ops] def constKey(pidCol: Column): Column = pmod(pidCol, lit(1))
 
-  /** Prefix window over the tiny per-partition counts table. */
-  private def countsWindow: org.apache.spark.sql.expressions.WindowSpec =
-    Window.partitionBy(constKey(col("_gr_pid"))).orderBy(col("_gr_pid"))
-      .rowsBetween(Window.unboundedPreceding, -1)
+  /** Sums of `c` over a table of (range partition `pidCol`, group)
+    * cells — at most partitions + groups − 1 rows, since groups are
+    * contiguous in the range order: per cell, over the group's EARLIER
+    * cells (0 for the first) and over all of them. No groups ⇒ one
+    * group of all cells, partitioned by [[constKey]]. */
+  private[ops] def cellSums(pidCol: String, groupCols: Seq[String], c: Column): (Column, Column) = {
+    val w = (if (groupCols.isEmpty) Window.partitionBy(constKey(col(pidCol)))
+             else Window.partitionBy(groupCols.map(col): _*)).orderBy(col(pidCol))
+    (coalesce(sum(c).over(w.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)),
+      sum(c).over(w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
+  }
 
-  /** The CACHED sorted table `local` — the input rows plus `_gr_pid`
-    * (range partition id) and `_gr_lrn` (1-based position within the
-    * partition) — and the tiny `offsets` table (`_gr_pid`, `_gr_off`
-    * [, totalCol]) whose broadcast join turns local positions into
-    * global ones. Exposed so composing operators (quantiles,
-    * winsorize) can take EXTRA passes over the cached table without
-    * re-running the joins. */
-  private[ops] case class LocalOffsets(local: DataFrame, offsets: DataFrame)
+  /** Inner join on `keys` with NULL-SAFE equality — a plain equi-join
+    * would silently drop any group whose key is NULL (the groupBy
+    * side emits the null group; the join back would not match it).
+    * `broadcastRight` marks the right side for broadcast. */
+  private[ops] def nullSafeJoin(left: DataFrame, right: DataFrame,
+      keys: Seq[String], broadcastRight: Boolean = false): DataFrame = {
+    val renamed = keys.foldLeft(right)((df, k) => df.withColumnRenamed(k, s"_ns_$k"))
+    val r = if (broadcastRight) broadcast(renamed) else renamed
+    val cond = keys.map(k => col(k) <=> col(s"_ns_$k")).reduce(_ && _)
+    left.join(r, cond).drop(keys.map(k => s"_ns_$k"): _*)
+  }
 
-  /** Core of [[withRowNumbers]]: range-sort + local positions via
-    * `monotonically_increasing_id` — it encodes exactly
-    * (partition id << 33) + row-position-in-partition as a narrow
-    * codegen'd projection, where a `Window.partitionBy(pid)` would
-    * re-shuffle and re-sort data the exchange just ordered. Ties in
-    * `sortCols` get arbitrary but CONSISTENT numbers — pass a
-    * tie-breaking column for determinism. */
-  private[ops] def localOffsets(
-      df: DataFrame,
-      sortCols: Seq[Column],
-      totalCol: Option[String] = None): LocalOffsets = {
+  /** [[rangeRanked]]'s result: the cached range-sorted table `local`
+    * (the input's columns and `_gr_mid`) and its rows `withRank`, the
+    * input's columns plus `_gr_n`, the group's size, and `_gr_rank`,
+    * the row's 0-based rank in its group. */
+  private[ops] case class Ranked(local: DataFrame, withRank: DataFrame)
+
+  /** The range-rank core: ranks every row of `df` within its group of
+    * `groupCols` (none ⇒ one group of all rows) over the order of
+    * `sortCols`, which must begin with the group columns so each group
+    * is contiguous in the range order. One range exchange, one local
+    * sort, and `monotonically_increasing_id` over the cached sorted
+    * table: it encodes exactly (partition id << 33) + position as a
+    * narrow codegen'd projection, where a `Window.partitionBy(pid)`
+    * would re-shuffle and re-sort data the exchange just ordered. A
+    * cell's ids are consecutive, so a row's rank is its id minus its
+    * cell's first id plus the group's rows in earlier cells — one
+    * aggregate to the cells table, one window over it, one join back. */
+  private[ops] def rangeRanked(df: DataFrame, groupCols: Seq[String],
+      sortCols: Seq[Column]): Ranked = {
+    val gcols: Seq[Column] = groupCols.map(col)
+    val pid = shiftright(col("_gr_mid"), 33)
+    // the position has 33 bits, and a partition would need 8.5 billion
+    // rows to carry into the partition bits — fail loud rather than
+    // rank wrong if the partitioning is ever that degenerate
     val local = df.repartitionByRange(sortCols: _*)
       .sortWithinPartitions(sortCols: _*)
       .withColumn("_gr_mid", monotonically_increasing_id())
-      .withColumn("_gr_pid", shiftright(col("_gr_mid"), 33).cast("int"))
-      .withColumn("_gr_lrn", col("_gr_mid").bitwiseAND(lit((1L << 33) - 1)) + 1)
-      .drop("_gr_mid")
+      .withColumn("_gr_mid", when(pid =!= spark_partition_id(), raise_error(lit(
+        "global rank: a range partition exceeds 2^33 rows — repartition " +
+          "finer first"))).otherwise(col("_gr_mid")))
       .cache() // see object doc: dedups the per-branch sort, not the exchange
-    // the MID local position is 33 bits; a partition would need 8.5
-    // billion rows to overflow it — fail loud rather than rank wrong if
-    // the partitioning is ever that degenerate
-    val counts = local.groupBy(col("_gr_pid")).agg(count(lit(1)).as("_gr_cnt"))
-      .withColumn("_gr_cnt", when(col("_gr_cnt") >= (1L << 33), raise_error(lit(
-        "global rank: a partition exceeds 2^33 rows — repartition finer first")))
-        .otherwise(col("_gr_cnt")))
-    val base = counts
-      .withColumn("_gr_off", coalesce(sum(col("_gr_cnt")).over(countsWindow), lit(0L)))
-    val offsets = totalCol match {
-      case Some(t) => base
-        .withColumn(t, sum(col("_gr_cnt"))
-          .over(Window.partitionBy(constKey(col("_gr_pid")))))
-        .select(col("_gr_pid"), col("_gr_off"), col(t))
-      case None => base.select(col("_gr_pid"), col("_gr_off"))
-    }
-    LocalOffsets(local, offsets)
+    val cells = local.groupBy(pid.as("_gr_pid") +: gcols: _*)
+      .agg(count(lit(1)).as("_gr_cnt"), min(col("_gr_mid")).as("_gr_m0"))
+    val (earlier, size) = cellSums("_gr_pid", groupCols, col("_gr_cnt"))
+    val offsets = cells.select(col("_gr_pid") +: gcols :+
+      (earlier - col("_gr_m0")).as("_gr_base") :+ size.as("_gr_n"): _*)
+    // ungrouped, the offsets table has one row per partition — broadcast
+    // it. Grouped, it has a row per group, which callers may make huge
+    // (per-user quantiles) — no forced broadcast; AQE picks BHJ when the
+    // runtime size is small and a shuffle join when it is not.
+    val withRank = nullSafeJoin(local.withColumn("_gr_pid", pid), offsets,
+        "_gr_pid" +: groupCols, broadcastRight = groupCols.isEmpty)
+      .withColumn("_gr_rank", col("_gr_mid") + col("_gr_base"))
+      .drop("_gr_mid", "_gr_pid", "_gr_base")
+    Ranked(local, withRank)
   }
 
   /** Adds a 1-based global row number `rnCol` over the total order of
     * `sortCols` (and optionally the total row count `totalCol`, the
-    * same long on every row) to `df` — distributed, one plan. */
+    * same long on every row) to `df` — the ungrouped [[rangeRanked]].
+    * Ties in `sortCols` get arbitrary but CONSISTENT numbers — pass a
+    * tie-breaking column for determinism. */
   def withRowNumbers(
       df: DataFrame,
       sortCols: Seq[Column],
       rnCol: String,
       totalCol: Option[String] = None): DataFrame = {
-    val lo = localOffsets(df, sortCols, totalCol)
-    lo.local.join(broadcast(lo.offsets), "_gr_pid")
-      .withColumn(rnCol, col("_gr_lrn") + col("_gr_off"))
-      .drop("_gr_pid", "_gr_lrn", "_gr_off")
+    val ranked = rangeRanked(df, Nil, sortCols).withRank
+      .withColumn(rnCol, col("_gr_rank") + 1)
+    totalCol.fold(ranked.drop("_gr_n"))(t => ranked.withColumnRenamed("_gr_n", t))
+      .drop("_gr_rank")
   }
 
   /** Adds the global running sum `outCol` of long column `valueCol`
@@ -127,7 +152,7 @@ object GlobalRank {
     * order the range exchange already produced (a
     * `Window.partitionBy(pid)` would re-shuffle and re-sort); the
     * per-partition totals then turn local into global sums through the
-    * same bounded counts-table window as [[withRowNumbers]].
+    * same bounded cells-table window as [[withRowNumbers]].
     * `valueCol` must be a non-null long — filter/coalesce first. A
     * NULL raises in-plan with a readable message (same fail-loud
     * stance as the weighted-quantile negative-weight check) instead
@@ -181,7 +206,7 @@ object GlobalRank {
     val totals = local.groupBy(col("_gr_pid")).agg(totalAggs.head, totalAggs.tail: _*)
     val offsets = valueOuts.indices.foldLeft(totals)((d, i) =>
         d.withColumn(s"_gr_off$i",
-          coalesce(sum(col(s"_gr_t$i")).over(countsWindow), lit(0L))))
+          cellSums("_gr_pid", Nil, col(s"_gr_t$i"))._1))
       .select(col("_gr_pid") +: valueOuts.indices.map(i => col(s"_gr_off$i")): _*)
     val joined = valueOuts.zipWithIndex
       .foldLeft(local.join(broadcast(offsets), "_gr_pid")) {

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Exact linear-interpolation quantiles (the `percentile` /
@@ -11,14 +10,16 @@ import org.apache.spark.sql.functions._
   * Spark's `percentile` is a TypedImperativeAggregate that buffers a
   * value→count map per group — O(distinct values) executor memory, an
   * unbounded agg buffer on mostly-distinct doubles at 100 TB. This
-  * operator instead materializes exact per-group ranks with the
-  * two-phase global-row-number pattern ([[GlobalRank.withRowNumbers]]:
-  * range repartition on (group, value) → local positions → per-partition
-  * prefix offsets computed in the SAME plan) and then picks the two
-  * rank-adjacent values each quantile interpolates between with a plain
-  * conditional aggregation. Every stage is a shuffle Spark already does
-  * well: nothing is buffered per group, nothing is collected per row,
-  * and skewed groups spread over many range partitions instead of one
+  * operator instead ranks rows within their group and picks the two
+  * rank-adjacent values each quantile interpolates between with a
+  * plain conditional aggregation. Ranks come from one range exchange
+  * on (group, value), a local sort and `monotonically_increasing_id`
+  * over the cached sorted table; a window over the small table of
+  * (range partition, group) cells turns those ids into in-group ranks
+  * and group sizes (the range-rank core [[GlobalRank.rangeRanked]],
+  * which also numbers [[GlobalRank.withRowNumbers]]' rows). Nothing
+  * is buffered per group, nothing is collected to the driver, and a
+  * skewed group spreads over many range partitions instead of one
   * window task.
   *
   * Interpolation matches `percentile` exactly: pos = q·(n−1),
@@ -33,63 +34,25 @@ import org.apache.spark.sql.functions._
   * throughout), matching groupBy semantics.
   *
   * Rank integrity is ASSERTED in-plan: the per-group rank span must
-  * tile exactly 0..n−1. Correctness rests on the counts branch and the
-  * ranked branch reading ONE execution of the range exchange
-  * (ReuseExchange); if that ever fails — `spark.sql.exchange.reuse`
-  * disabled, canonicalization divergence — the layouts can differ and
-  * every rank silently shifts. The span check turns that silent
-  * corruption into a loud error for the price of two extra aggregate
-  * columns. */
+  * tile exactly 0..n−1. Correctness rests on the offsets branch and
+  * the ranked branch reading ONE layout of the range exchange; if that
+  * ever fails — `spark.sql.exchange.reuse` disabled, canonicalization
+  * divergence — every rank silently shifts. The span check turns that
+  * silent corruption into a loud error for the price of two extra
+  * aggregate columns. */
 object Quantiles {
+  import GlobalRank.{cellSums, nullSafeJoin, rangeRanked}
 
-  /** Inner join on `keys` with NULL-SAFE equality — a plain equi-join
-    * would silently drop any group whose key is NULL (the groupBy
-    * side emits the null group; the join back would not match it).
-    * `hint` optionally marks the right side (e.g. "broadcast"). */
-  private def nullSafeJoin(left: DataFrame, right: DataFrame,
-      keys: Seq[String], broadcastRight: Boolean = false): DataFrame = {
-    val renamed = keys.foldLeft(right)((df, k) => df.withColumnRenamed(k, s"_ns_$k"))
-    val r = if (broadcastRight) broadcast(renamed) else renamed
-    val cond = keys.map(k => col(k) <=> col(s"_ns_$k")).reduce(_ && _)
-    left.join(r, cond).drop(keys.map(k => s"_ns_$k"): _*)
-  }
-
-  /** Shared core: the cached sorted table plus rows as (groupCols,
-    * _v double, _gr 0-based per-group rank, _n group size) — one plan,
-    * one range exchange, one sort (cached; see GlobalRank's doc). */
-  private case class Ranked(local: DataFrame, withRank: DataFrame)
-
+  /** The rows of `df` with a non-null `valueCol`, as `_v` double,
+    * ranked within their group of `groupCols` by value through the
+    * shared range-rank core ([[GlobalRank.rangeRanked]]): `_gr_rank`
+    * (0-based) and `_gr_n` (group size) — one plan, one range
+    * exchange, one sort (cached; see the object doc). */
   private def groupRanked(
-      df: DataFrame, groupCols: Seq[String], valueCol: String): Ranked = {
+      df: DataFrame, groupCols: Seq[String], valueCol: String): GlobalRank.Ranked = {
     val gcols: Seq[Column] = groupCols.map(col)
-    val v = df.select(gcols :+ col(valueCol).cast("double").as("_v"): _*)
-      .filter(col("_v").isNotNull)
-    val lo = GlobalRank.localOffsets(v, gcols :+ col("_v"))
-    val ranked = lo.local.join(broadcast(lo.offsets), "_gr_pid")
-    // per-group first rank and size from ONE distributed aggregation
-    // over the ranked rows: global ranks are unique and groups are
-    // contiguous in the total order, so min(global rank) IS the
-    // group's first rank. Partial aggregation combines map-side, so
-    // only one row per (group, partition) — and groups are contiguous,
-    // so at most groups + partitions − 1 rows — cross the wire. The
-    // earlier prefix-window formulation funneled the whole group-sizes
-    // table through ONE constant-key WindowExec task: fine for a few
-    // event types, a single-task bottleneck for per-user groups.
-    val grp =
-      if (groupCols.isEmpty)
-        lo.local.agg(count(lit(1)).as("_n")).withColumn("_first", lit(1L))
-      else
-        ranked.groupBy(gcols: _*).agg(count(lit(1)).as("_n"),
-          min(col("_gr_lrn") + col("_gr_off")).as("_first"))
-    // global case: grp is provably ONE row — broadcast it. Grouped
-    // case: grp is one row PER GROUP, which callers may make huge
-    // (per-user quantiles) — no forced broadcast; AQE picks BHJ when
-    // the runtime size is small and a shuffle join when it is not.
-    val withRank =
-      (if (groupCols.isEmpty) ranked.crossJoin(broadcast(grp))
-       else nullSafeJoin(ranked, grp, groupCols))
-        .withColumn("_gr", col("_gr_lrn") + col("_gr_off") - col("_first"))
-    Ranked(lo.local, withRank)
+    rangeRanked(df.select(gcols :+ col(valueCol).cast("double").as("_v"): _*)
+      .filter(col("_v").isNotNull), groupCols, gcols :+ col("_v"))
   }
 
   /** Quantile bounds per group from [[groupRanked]] rows, with the
@@ -106,12 +69,12 @@ object Quantiles {
       qs: Seq[(String, Double)],
       extras: Seq[(String, Column)] = Nil): DataFrame = {
     val gcols: Seq[Column] = groupCols.map(col)
-    def pos(q: Double): Column = lit(q) * (col("_n") - 1).cast("double")
+    def pos(q: Double): Column = lit(q) * (col("_gr_n") - 1).cast("double")
     val picks = qs.flatMap { case (name, q) =>
       Seq(
-        max(when(col("_gr") === floor(pos(q)).cast("long"), col("_v"))).as(s"_${name}_lo"),
-        max(when(col("_gr") === ceil(pos(q)).cast("long"), col("_v"))).as(s"_${name}_hi"))
-    } ++ Seq(max(col("_n")).as("_n_out"), max(col("_gr")).as("_max_gr")) ++
+        max(when(col("_gr_rank") === floor(pos(q)).cast("long"), col("_v"))).as(s"_${name}_lo"),
+        max(when(col("_gr_rank") === ceil(pos(q)).cast("long"), col("_v"))).as(s"_${name}_hi"))
+    } ++ Seq(max(col("_gr_n")).as("_n_out"), max(col("_gr_rank")).as("_max_gr")) ++
       extras.map { case (name, c) => c.as(s"_x_$name") }
     val agged =
       if (groupCols.isEmpty) withRank.agg(picks.head, picks.tail: _*)
@@ -160,7 +123,7 @@ object Quantiles {
     val gr = groupRanked(df, groupCols, valueCol)
     val bounds = boundsOf(gr.withRank, groupCols, qs)
     // the row side needs no ranks — read the cached sorted table
-    // directly, skipping the offsets/group joins entirely
+    // directly, skipping the offsets join
     val rows = gr.local.select(gcols :+ col("_v").as(valueCol): _*)
     if (groupCols.isEmpty) rows.crossJoin(broadcast(bounds))
     else nullSafeJoin(rows, bounds, groupCols, broadcastRight = true)
@@ -182,8 +145,8 @@ object Quantiles {
       valueCol: String,
       k: Int): DataFrame = {
     val gcols: Seq[Column] = groupCols.map(col)
-    val rn = col("_gr") + 1
-    val base = expr(s"_n div $k"); val rem = col("_n") % k
+    val rn = col("_gr_rank") + 1
+    val base = expr(s"_gr_n div $k"); val rem = col("_gr_n") % k
     val bigSpan = rem * (base + lit(1L))
     val bin = (when(rn <= bigSpan,
         floor((rn - 1).cast("double") / (base + lit(1L)).cast("double")))
@@ -254,43 +217,33 @@ object Quantiles {
       }
     }(org.apache.spark.sql.Encoders.row(outSchema))
 
-    // per-(partition, group) totals — ≤ partitions + groups − 1 rows;
-    // the prefix window below runs over THIS table, not the data.
-    // No groups ⇒ partition by a non-foldable constant key:
-    // single-partition by design over the tiny table, without
-    // WindowExec's no-partition warning burying real log anomalies
-    // (lit(0) would be stripped by EliminateWindowPartitions — see
-    // GlobalRank.constKey).
+    // per-(partition, group) totals: their prefix sums turn local into
+    // global running weights, and their whole-group sum is the group's
+    // total weight
     val pg = local.groupBy(col("_pid") +: gcols: _*).agg(max(col("_lcw")).as("_pgw"))
-    val wOff = (if (groupCols.isEmpty) Window.partitionBy(GlobalRank.constKey(col("_pid")))
-                else Window.partitionBy(gcols: _*))
-      .orderBy(col("_pid"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = pg.withColumn("_off", coalesce(sum(col("_pgw")).over(wOff), lit(0L)))
-      .select(col("_pid") +: gcols :+ col("_off"): _*)
+    val (earlier, total) = cellSums("_pid", groupCols, col("_pgw"))
+    val offsets = pg.select(col("_pid") +: gcols :+ earlier.as("_off") :+ total.as("_tw"): _*)
 
-    val grp =
-      if (groupCols.isEmpty) v.agg(sum(col("_w")).as("_tw"))
-      else v.groupBy(gcols: _*).agg(sum(col("_w")).as("_tw"))
-    val ranked = nullSafeJoin(local, broadcast(offsets), "_pid" +: groupCols)
+    val withTotal = nullSafeJoin(local, broadcast(offsets), "_pid" +: groupCols)
       .withColumn("_cw", col("_lcw") + col("_off"))
-    val withTotal =
-      if (groupCols.isEmpty) ranked.crossJoin(broadcast(grp))
-      else nullSafeJoin(ranked, grp, groupCols)
 
     val picks = qs.map { case (name, q) =>
       min(when(col("_cw").cast("double") >= lit(q) * col("_tw").cast("double"),
         col("_v"))).as(name)
-    } :+ max(col("_cw")).as("_max_cw") :+ max(col("_tw")).as("_tw_out")
+    } :+ max(col("_cw")).as("_max_cw") :+ max(col("_tw")).as("_tw_out") :+
+      sum(col("_w")).as("_w_sum")
     val agged =
       if (groupCols.isEmpty) withTotal.agg(picks.head, picks.tail: _*)
       else withTotal.groupBy(gcols: _*).agg(picks.head, picks.tail: _*)
-    // same integrity stance as boundsOf: the final cumulative weight of
-    // each group must equal the group's total weight, or the offsets
-    // branch and the data branch saw different exchange layouts
-    agged.filter(assert_true(col("_max_cw") === col("_tw_out"),
-      lit("weighted quantiles: cumulative weights do not reach the group total " +
-        "— the range exchange executed with divergent layouts")).isNull)
-      .drop("_max_cw", "_tw_out")
+    // same integrity stance as boundsOf: each group's final running
+    // weight must equal its total from the offsets table (else the two
+    // branches saw different exchange layouts), and that total must
+    // equal the group's weights summed directly (else the local running
+    // sum missed a group boundary)
+    agged.filter(assert_true(
+      col("_max_cw") === col("_tw_out") && col("_tw_out") === col("_w_sum"),
+      lit("weighted quantiles: running weights do not reach the group's weight " +
+        "sum — divergent exchange layouts or a missed group boundary")).isNull)
+      .drop("_max_cw", "_tw_out", "_w_sum")
   }
 }

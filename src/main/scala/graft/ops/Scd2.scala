@@ -50,7 +50,7 @@ object Scd2 {
     * `Window.partitionBy` treats a NULL key as an ordinary group, so
     * a plain `===` here would never close a NULL-key open row and the
     * incremental-equals-rebuild contract would silently break for
-    * exactly that key (same reasoning as Quantiles.nullSafeJoin). */
+    * exactly that key (same reasoning as GlobalRank.nullSafeJoin). */
   def merge(history: DataFrame, batch: DataFrame, keyCol: String,
       tsCol: String, tieCol: String): DataFrame = {
     val firstChange = batch.groupBy(col(keyCol).as("_k"))

@@ -7,8 +7,10 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * [[LogicalPlan]] (the custom AsOfJoin node) into a DataFrame, and a
   * hand-built catalyst [[Expression]] (the bloom probe, whose
   * serialized-filter argument cannot travel through SQL text) into a
-  * [[Column]]. Both companions are `private[sql]`, so this object
-  * lives in Spark's package solely to reach them — the standard
+  * [[Column]]; and waiting until the listener bus has delivered every
+  * posted event, so a job count read after an action is complete.
+  * These are `private[sql]` / `private[spark]`, so this object lives
+  * in Spark's package solely to reach them — the standard
   * extension-library technique; nothing else of Spark's internals is
   * touched. */
 object GraftSqlBridge {
@@ -18,4 +20,7 @@ object GraftSqlBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
 
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

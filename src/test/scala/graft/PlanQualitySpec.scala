@@ -1,5 +1,17 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, CaseWhen, Cast,
+  Expression, Literal, MonotonicallyIncreasingID, RaiseError, ShiftRight, SparkPartitionID}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.execution.{FilterExec, InputAdapter, ProjectExec, SortExec,
+  SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AQEShuffleReadExec,
+  QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
+import org.apache.spark.sql.execution.window.WindowExec
+
 /** Regression guards for the physical-plan properties the engine's
   * 100 TB story depends on: pushdown, pruning, broadcast choice, and
   * top-k planning. A code change that silently loses one of these
@@ -351,9 +363,101 @@ class PlanQualitySpec extends SparkSuite {
   private val boundedInputWindows =
     Set("q120_weighted_quantiles", "q101_vocab_encode", "q264_rrf_fusion")
 
+  // A window over an aggregate keyed by EXACTLY one range-partition id
+  // plus the window's own partition keys runs over one row per
+  // (partition, group) cell — at most partitions + groups − 1 rows when
+  // groups are contiguous in the range order, never one per data row.
+  // The range-rank core's offsets (GlobalRank.rangeRanked) have this
+  // shape. The partition id must be `spark_partition_id()` or
+  // `monotonically_increasing_id() >> 33` (the row id may be wrapped in
+  // a guard that raises instead of yielding it); a bare row id, or any
+  // grouping key the window does not partition by, still grows with
+  // the data and is not exempt.
+  private def overPartitionCells(w: WindowExec): Boolean = {
+    def agg(p: SparkPlan): Option[HashAggregateExec] = p match {
+      case a: HashAggregateExec => Some(a)
+      case a: AdaptiveSparkPlanExec => agg(a.executedPlan)
+      case q: QueryStageExec => agg(q.plan)
+      case r: ReusedExchangeExec => agg(r.child)
+      // nodes that pass rows through without adding any
+      case n @ (_: SortExec | _: ProjectExec | _: FilterExec | _: Exchange |
+          _: AQEShuffleReadExec | _: WholeStageCodegenExec | _: InputAdapter) =>
+        agg(n.children.head)
+      case _ => None
+    }
+    // what each attribute below `w` is computed from: a cached table's
+    // columns, which its scan may rename — mapped by position to the
+    // cached plan's output — and aliases (last, so an alias wins where a
+    // scan kept the cached plan's names)
+    val nodes = WindowAudit.deep(w.child)
+    val defs: Map[Long, Expression] =
+      nodes.collect { case c: InMemoryTableScanExec =>
+        c.relation.output.zip(c.relation.cachedPlan.output)
+          .map { case (o, d) => o.exprId.id -> (d: Expression) } }.flatten.toMap ++
+      nodes.flatMap(_.expressions).flatMap(_.collect {
+        case a: Alias => a.exprId.id -> a.child })
+    def inlined(e: Expression, seen: Set[Long] = Set.empty): Expression = e match {
+      case a: Attribute if defs.contains(a.exprId.id) && !seen(a.exprId.id) =>
+        inlined(defs(a.exprId.id), seen + a.exprId.id)
+      case other => other.mapChildren(inlined(_, seen))
+    }
+    def raises(e: Expression): Boolean = e match {
+      case _: RaiseError => true
+      case c: Cast => raises(c.child)
+      case _ => false
+    }
+    def rowId(e: Expression): Boolean = e match {
+      case _: MonotonicallyIncreasingID => true
+      case CaseWhen(branches, Some(id)) => branches.forall(b => raises(b._2)) && rowId(id)
+      case _ => false
+    }
+    def partitionId(e: Expression): Boolean = e match {
+      case _: SparkPartitionID => true
+      case ShiftRight(id, Literal(33, _)) => rowId(id)
+      case _ => false
+    }
+    agg(w.child).exists { a =>
+      val (pids, keys) = a.groupingExpressions.map(inlined(_)).partition(partitionId)
+      val parts = w.partitionSpec.map(inlined(_))
+      pids.size == 1 && keys.size == parts.size &&
+        keys.forall(k => parts.exists(_.semanticEquals(k))) &&
+        parts.forall(p => keys.exists(_.semanticEquals(p)))
+    }
+  }
+
+  test("cells-window exemption: only a partition id plus the window's own keys") {
+    import org.apache.spark.sql.functions._
+    def exempt(df: org.apache.spark.sql.DataFrame): Seq[Boolean] =
+      WindowAudit.deep(df.queryExecution.executedPlan).collect {
+        case w: WindowExec => overPartitionCells(w) }
+    val data = spark.range(0, 2000).select((col("id") % 3).as("g"),
+      (col("id") % 7).as("u"), col("id").cast("double").as("v"))
+    val mid = data.repartitionByRange(col("g"), col("v"))
+      .withColumn("mid", monotonically_increasing_id()).cache()
+    val byG = Window.partitionBy(col("g")).orderBy(col("k"))
+    try {
+      // the exact quantiles' offsets window (grouped by g)
+      assert(exempt(graft.ops.Quantiles.exactQuantiles(data, Seq("g"), "v",
+        Seq("p50" -> 0.5))) == Seq(true))
+      // keyed by the bare row id: one cell per data row
+      assert(exempt(mid.groupBy(col("mid").as("k"), col("g")).count()
+        .withColumn("s", sum(col("count")).over(byG))) == Seq(false))
+      // a key the window does not partition by: grows with u's cardinality
+      assert(exempt(mid.groupBy(shiftright(col("mid"), 33).as("k"), col("g"), col("u"))
+        .count().withColumn("s", sum(col("count")).over(byG))) == Seq(false))
+      // the exempt shape written by hand
+      assert(exempt(mid.groupBy(shiftright(col("mid"), 33).as("k"), col("g"))
+        .count().withColumn("s", sum(col("count")).over(byG))) == Seq(true))
+    } finally mid.unpersist()
+  }
+
   test("suite-wide: no full window partitioned only on constant-cardinality keys") {
     val offenders = allPlans.toSeq.sortBy(_._1).flatMap { case (name, p) =>
-      val wins = WindowAudit.collectWindows(p)
+      val cells = WindowAudit.deep(p).collect {
+        case w: WindowExec if overPartitionCells(w) => ("Window", w.partitionSpec.map(e =>
+          WindowAudit.resolveRefs(e, w.child).toSeq.sorted.mkString("+")))
+      }
+      val wins = WindowAudit.collectWindows(p).diff(cells)
       // a WindowGroupLimit with the same partition spec means the
       // planner capped every map task's contribution at k rows per
       // group BEFORE the window shuffle (q12/q92/q68 rank-filter
