@@ -23,7 +23,8 @@ import org.apache.spark.sql.functions._
   *    base corpus's df histogram — VERBATIM replication would instead
   *    multiply every shingle's df by r and hand each doc r-1 exact
   *    dups, making pair queries quadratic BY CONSTRUCTION (the
-  *    ProbeCrossover boiler stance, generalized);
+  *    df-saturated boilerplate variants of BASELINE.md's
+  *    probe-vs-exact table, generalized);
   *  - embeddings: offset vec_ids with a deterministic per-(replica,
   *    dim) jitter of +-0.005 from xxhash64, so no exact-duplicate
   *    vectors degenerate the ANN/kNN distance profiles;
@@ -44,7 +45,7 @@ import org.apache.spark.sql.functions._
 object ScaleStress {
 
   /** Bump on any synthesis-semantics change — stale scaled dirs under
-    * /tmp must never be reused across versions. */
+    * the scale root must never be reused across versions. */
   private val SynthVersion = 2
 
   /** Key offset per replica — above every id space in the fixtures
@@ -79,8 +80,14 @@ object ScaleStress {
     (0 until r).map(i => if (i == 0) base else variant(base, i))
       .reduce(_ unionAll _)
 
+  /** Scaled fixtures live under `graft_scale` in the JVM's temp dir
+    * (`java.io.tmpdir`, /tmp by default). */
+  private val SynthRoot: String =
+    java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"), "graft_scale")
+      .toString
+
   private def synthDir(baseDir: String, scale: Int): String =
-    s"/tmp/graft_scale/${baseTag(baseDir)}/x$scale"
+    s"$SynthRoot/${baseTag(baseDir)}/x$scale"
 
   /** Synthesize (seed-if-absent) the scaled fixture dir for `scale`. */
   def synthesize(s: SparkSession, baseDir: String, scale: Int): String = {
@@ -214,7 +221,7 @@ object ScaleStress {
     q("q198_spearman"), q("q255_doc_keywords", LifecycleScales),
     // HEAP-PER-CORE protocol probe (round-13, closing the round-12
     // verdict's one `weak`): q244's data term is EXACTLY linear
-    // (graft.VolumeCheck direct counts at x1/10/30/100) but its final
+    // (BASELINE.md's direct counts at x1/10/30/100) but its final
     // (a,b) hash aggregate's heap draw grows with the corpus while the
     // fixed-heap record config holds 12g/core serving x100 the data —
     // a configuration no cluster runs (executors scale OUT: heap per

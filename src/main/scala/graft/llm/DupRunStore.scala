@@ -151,24 +151,6 @@ object DupRunStore {
         count_if(col("gen") < gen).as("dfB")).cache()
     val prior = if (gen == 0) None
       else Some(s.read.schema(DeltaSchema).parquet(s"$statePath/deltas"))
-    val (deltas, done) = runIvmDeltasFrom(
-      post, s.read.parquet(s"$statePath/docs"), prior, dfs, gen)
-    (deltas, () => { dfs.unpersist(); done() })
-  }
-
-  /** [[runIvmDeltas]] with the STATE frames supplied by the caller —
-    * the demo lifecycles pass the one cached corpus derivation (and
-    * the per-gen delta frames they just wrote) instead of re-reading
-    * the parquet they wrote moments earlier; the content is identical
-    * by construction (the writes are deterministic projections of
-    * these very frames), the written bytes stay the store of record,
-    * and the stream/maintenance wrapper above still reads persisted
-    * state only. `dfs` carries (sh, dfA, dfB) for THIS generation —
-    * the wrapper derives it per call, the demos slice one fused
-    * all-generations count pass. */
-  private[graft] def runIvmDeltasFrom(post: DataFrame, docsAll: DataFrame,
-      prior: Option[DataFrame], dfs: DataFrame,
-      gen: Long): (DataFrame, () => Unit) = {
     val crossers = dfs.filter(col("dfB") < 2 && col("dfA") >= 2)
       .select(col("sh"))
     val affectedOld = post.filter(col("gen") < gen)
@@ -191,7 +173,7 @@ object DupRunStore {
         (col("len_sh") + 2).as("run_tokens"))
     // run-text fetch-back against the STORED token arrays, affected-
     // restricted (never the corpus); small run table as build side
-    val docsStore = docsAll
+    val docsStore = s.read.parquet(s"$statePath/docs")
       .filter(col("gen") <= gen)
       .join(affected.hint("shuffle_hash"), Seq("doc_id"), "left_semi")
     val credits = runs.hint("shuffle_hash").join(docsStore, "doc_id")
@@ -201,7 +183,7 @@ object DupRunStore {
           "concat_ws(' ', slice(toks, start_tok, cast(run_tokens AS int)))"),
           256), 1, 16).as("run_fp"),
         lit(1L).as("delta"))
-    val cleanup = () => { affected.unpersist(); () }
+    val cleanup = () => { dfs.unpersist(); affected.unpersist(); () }
     prior match {
       case None => (credits, cleanup)
       case Some(pr) =>
@@ -248,8 +230,8 @@ object DupRunStore {
     *  - credits(g)  = snapshot-g     runs of docs affected at g, +1;
     *  - retracts(g) = snapshot-(g−1) runs of docs affected at g, −1.
     *
-    * The sequential maintenance path ([[runIvmDeltas]], unchanged and
-    * still what the stream twin runs) computes retractions by NETTING
+    * The sequential maintenance path ([[runIvmDeltas]], what the
+    * stream twin runs) computes retractions by NETTING
     * the prior delta log; the two are equal row-for-row by the
     * maintained ≡ rebuilt induction the oracle pins at every
     * generation (a doc not affected at h has an identical run set at
@@ -265,21 +247,17 @@ object DupRunStore {
     * log by construction). */
   private final case class DemoLifecycle(write: (Int, Int) => Unit,
       done: () => Unit, arrGen: DataFrame, posGen: DataFrame,
-      log: () => DataFrame, runsAt: Int => DataFrame) {
-    def arr: DataFrame = arrGen.drop("gen")
-    def pos: DataFrame = posGen.drop("gen")
-  }
+      log: () => DataFrame, runsAt: Int => DataFrame)
 
   private def demoLifecycle(s: SparkSession, docs: DataFrame,
       statePath: String): DemoLifecycle = {
-    graft.functions.ShingleHashes.register(s)
-    val arrAll = docs.filter(col("text").isNotNull)
-      .select(col("doc_id"), col("source"),
-        split(col("text"), " ").as("toks"))
-      .filter(size(col("toks")) >= 3)
-      .withColumn("gen", pmod(col("doc_id"), lit(3)).cast("int")).cache()
-    val posAll = arrAll.select(col("doc_id"), col("gen"),
-      expr("posexplode(shingle_hashes_all(toks, 3))").as(Seq("i", "sh"))).cache()
+    // the stream sink's doc-state derivation; the generation is a pure
+    // function of doc_id, so it is projected on top of the cached frames
+    val (arr, pos) = genState(docs)
+    val arrAll = arr.cache()
+    val genOf = pmod(col("doc_id"), lit(3)).cast("int")
+    val arrGen = arrAll.withColumn("gen", genOf)
+    val posAll = pos.withColumn("gen", genOf).cache()
     // one materialization populates BOTH caches (posAll reads through
     // arrAll's InMemoryRelation) before the parallel writes below —
     // otherwise the writes race the unpopulated arrAll and each re-run
@@ -365,32 +343,13 @@ object DupRunStore {
         .reduce(_.union(_)).cache()
       written += dAll
       RunLog.writeRange(statePath, lo, hi)(
-        "docs" -> arrAll, "postings" -> posAll, "deltas" -> dAll)
+        "docs" -> arrGen, "postings" -> posAll, "deltas" -> dAll)
     }
     val done = () => { arrAll.unpersist(); posAll.unpersist()
       dfAll.unpersist(); affAll.unpersist(); runsFp.unpersist()
       written.foreach(_.unpersist()); () }
-    DemoLifecycle(write, done, arrAll, posAll,
+    DemoLifecycle(write, done, arrGen, posAll,
       () => written.reduce(_.union(_)), runsAt)
-  }
-
-  /** Direct DATA-TERM volumes for the q421 compact (the
-    * graft.VolumeCheck q218/q413 treatment, round-15 verdict Next #3):
-    * seed the first two generations of the demo lifecycle into a
-    * scratch state dir, then count exactly what the watermark-1
-    * compact folds/rewrites — delta-log rows, postings rows, stored
-    * doc-array rows. If these are linear in corpus scale, q421's
-    * residual above 1.0 is a constant class (job-orchestration +
-    * log factors), not a plan term. */
-  private[graft] def compactInputVolumes(s: SparkSession, dir: String)
-      : (Long, Long, Long) = {
-    val path = StateStores.statePath(dir, "dup_run_vol")
-    val lc = demoLifecycle(s, Tables(s, dir, "documents"), path)
-    lc.write(0, 1)
-    lc.done()
-    (s.read.parquet(s"$path/deltas").count(),
-      s.read.parquet(s"$path/postings").count(),
-      s.read.parquet(s"$path/docs").count())
   }
 
   // ---------------------------------------------------------------

@@ -175,7 +175,9 @@ final case class GenLog(partCol: String, subs: GenLog.Sub*) {
 object GenLog {
 
   /** Committed generations a live sink accumulates before it folds
-    * them (the ~10-append cadence `graft.ServeAmp` measured). */
+    * them: the ~10-append cadence read off BASELINE.md's serve
+    * read-amplification table (24 fragmented generations served 1.46×
+    * slower than the compacted store at ×10). */
   val CompactEvery = 10
 
   /** A store sub-dir: its name under the root (empty = the root), the

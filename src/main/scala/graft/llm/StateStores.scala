@@ -65,12 +65,19 @@ object StateStores {
       }
     }
 
-  /** Deterministic per-(fixture, store) state dir under /tmp — reruns
-    * at the same sf reuse (and overwrite-seed) the same location. */
+  /** The one root every persisted store lives under: `graft_state`
+    * in the JVM's temp dir (`java.io.tmpdir`, /tmp by default). */
+  private[graft] val StateRoot: String =
+    java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"), "graft_state")
+      .toString
+
+  /** Deterministic per-(fixture, store) state dir under [[StateRoot]] —
+    * reruns at the same sf reuse (and overwrite-seed) the same
+    * location. */
   private[graft] def statePath(dir: String, name: String): String = {
     val tag = java.lang.Integer.toHexString(
       scala.util.hashing.MurmurHash3.stringHash(dir))
-    s"/tmp/graft_state/$name-$tag"
+    s"$StateRoot/$name-$tag"
   }
 
   /** State dir for SEED-IF-ABSENT stores (the serve-path queries):
@@ -110,7 +117,7 @@ object StateStores {
     // orphans the old content tag, which GC then reclaims)
     val (dirTag, contentTag) = (hex(dir), hex(sig))
     gcStale(name, dirTag, contentTag)
-    s"/tmp/graft_state/$name-$dirTag-$contentTag"
+    s"$StateRoot/$name-$dirTag-$contentTag"
   }
 
   /** GC dead serve-store versions (round-10 verdict: servePath mints a
@@ -131,7 +138,7 @@ object StateStores {
     try {
       def family(n: String) = n.replaceAll("_v\\d+$", "")
       val fam = family(name)
-      val root = java.nio.file.Paths.get("/tmp/graft_state")
+      val root = java.nio.file.Paths.get(StateRoot)
       if (java.nio.file.Files.isDirectory(root)) {
         val st = java.nio.file.Files.list(root)
         val doomed = try {

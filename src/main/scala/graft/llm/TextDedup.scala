@@ -370,133 +370,8 @@ object TextDedup {
           r4n(col("inter") / col("n1")).as("cont_d1"),
           r4n(col("inter") / col("n2")).as("cont_d2"))
         .orderBy(col("d1"), col("d2"))
-    }),
-
-    /** Containment SCALE PATH (q127's q35-analogue): candidates from
-      * SAMPLED-MEMBERSHIP probes, verified with exact containment, so
-      * the output equals q127's full inverted-index join. Each doc
-      * probes the capped index with its BOTTOM-k sketch — the k
-      * smallest shingle hashes, a uniform without-replacement sample
-      * of its shingle set (the 8-byte shingle hash IS the sampling
-      * hash; Broder's containment-sampling estimator): for a true
-      * pair with c = |A∩B|/min ≥ 0.9, each of the smaller doc's
-      * sampled shingles lands in B with probability ≥ c, so the pair
-      * is missed only if every sample falls in the uncovered ≤10% —
-      * P(miss) ≤ 0.1^k = 1e-12 per pair, INDEPENDENT of the size
-      * ratio. That independence is why probes beat jaccard banding
-      * here: minhash band recall decays with |B|/|A| (a c=0.9 pair at
-      * ratio R has jaccard ≈ 0.9/R, and size-partitioned banding à la
-      * LSH Ensemble needs O(R) bands to recover it), while the
-      * short-in-long case is exactly what containment is FOR. The
-      * sketch is a pure projection on the cached array form — an
-      * argmin-of-k-hash-fns variant needed min(struct(..)) per doc,
-      * which falls off codegen into SortAggregate and measured ~2 s
-      * slower at sf0.1. The k probes are the bottom-k of the CAPPED
-      * set (rank-filtered off the capped index — the planner's
-      * WindowGroupLimit keeps ≤ k rows per doc on the map side, so
-      * the rank shuffle is probe-sized), never of the raw set: a
-      * bottom-k of the raw shingles can be mostly df-capped
-      * stop-shingles on boilerplate-heavy docs, which probe nothing
-      * and silently degrade the miss bound with the stop fraction.
-      * Sampling the capped set directly guarantees min(k, |capped|)
-      * live probes, so 0.1^k holds as stated — and a doc whose capped
-      * set is smaller than k probes ALL of it, making recall exact
-      * there. Candidate volume: a shingle with document
-      * frequency df is probed by each holder with probability k/|A|,
-      * so expected pair volume is (k/avg|A|)·Σdf² — the full
-      * inverted-index join's volume scaled by k/|A| (~1/8 here), with
-      * the shared df cap still bounding the worst single key. That is
-      * a constant-factor reduction, not banding — deliberately: any
-      * banded scheme whose recall survives the short-in-long case
-      * needs O(size-ratio) band budgets (LSH Ensemble's per-partition
-      * tuning), while sampled membership keeps recall
-      * ratio-independent at fixed k and hands the rest to exact
-      * verification, which touches candidates only.
-      *
-      * MEASURED VERDICT (rounds 9-10, graft.llm.ProbeCrossover — the
-      * crossover tables in BASELINE.md): round 9's candidate-DOC-
-      * restricted verify lost to the exact join ~2.2-2.5× at every
-      * size, structurally — it re-joined the candidate slice on the
-      * shingle key, so one probe of a near-cap shingle re-derived the
-      * C(df,2) volume the probe had avoided. Round 10 replaced it
-      * with the PAIR-restricted verify in [[probeContainment]] (each
-      * candidate pair intersects its two capped shingle arrays
-      * locally; cost Σ_pairs(|A|+|B|), no shingle-key re-join) and
-      * re-measured: 35-57% cheaper, STILL loses at every size — the
-      * remaining cost is the probe join's own (k/|A|)·Σdf² candidate
-      * stream. Claim retired with both verify shapes measured;
-      * q131 is DEMOTED from the driver registry (round-9 verdict #8):
-      * DedupSkewSpec pins probe ≡ exact as the spec-level
-      * demonstration, BASELINE.md carries the price tag, and the
-      * production containment path is q127 served from the PairGraph
-      * store. (The doc comment stays on the implementation below.) */
+    })
   )
-
-  /** The exact containment join (the pre-store q127 body), kept as the
-    * measured baseline for the probe path — see BASELINE.md's
-    * probe-vs-exact crossover table. */
-  private[graft] def exactContainment(docs: DataFrame): DataFrame = {
-    val (_, sh, sizes) = cappedIndex(docs, DfCap)
-    val inter = sh.as("a")
-      .join(sh.as("b").hint("shuffle_hash"),
-        col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-      .agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.withColumnRenamed("doc_id", "d1").withColumnRenamed("n", "n1"), "d1")
-      .join(sizes.withColumnRenamed("doc_id", "d2").withColumnRenamed("n", "n2"), "d2")
-      .filter(col("inter") / least(col("n1"), col("n2")) >= 0.9)
-      .select(col("d1"), col("d2"),
-        r4n(col("inter") / col("n1")).as("cont_d1"),
-        r4n(col("inter") / col("n2")).as("cont_d2"))
-      .orderBy(col("d1"), col("d2"))
-  }
-
-  /** The q131 probe body, factored so the crossover harness
-    * (ProbeCrossover) can time it against [[exactContainment]] on
-    * synthetic corpus variants. */
-  private[graft] def probeContainment(docs: DataFrame, k: Int = 12): DataFrame = {
-      val (_, sh, sizes) = cappedIndex(docs, DfCap)
-      val wDoc = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("doc_id")).orderBy(col("sh"))
-      val probes = sh
-        .withColumn("rn", row_number().over(wDoc))
-        .filter(col("rn") <= k).drop("rn")
-      val cand = probes.as("p")
-        .join(sh.as("x").hint("shuffle_hash"),
-          col("p.sh") === col("x.sh") && col("p.doc_id") =!= col("x.doc_id"))
-        .select(least(col("p.doc_id"), col("x.doc_id")).as("d1"),
-          greatest(col("p.doc_id"), col("x.doc_id")).as("d2"))
-        .distinct()
-      // PAIR-restricted verification (round 10 — the round-9 measured
-      // loss was structural to the candidate-DOC-restricted verify,
-      // which re-joined the candidate slice on the shingle key: one
-      // probe of a near-cap shingle made all ~df holders candidates
-      // and the self-join re-derived the C(df,2) volume the probe
-      // avoided. Here each candidate PAIR fetches its two capped
-      // shingle arrays and intersects LOCALLY, so verification cost is
-      // Σ_pairs (|A|+|B|) — proportional to the candidate list the
-      // probe join already paid for, with no shingle-key re-join to
-      // blow up. The capped arrays are rebuilt once from the capped
-      // index (one doc-keyed exchange, the same class as the sizes
-      // aggregate it replaces); n1/n2 read off the array sizes.
-      val arrC = sh.groupBy(col("doc_id"))
-        .agg(collect_list(col("sh")).as("cshs"))
-      cand
-        .hint("shuffle_hash") // build on the pair side, not the corpus
-        .join(arrC.select(col("doc_id").as("d1"), col("cshs").as("s1")), "d1")
-        .hint("shuffle_hash")
-        .join(arrC.select(col("doc_id").as("d2"), col("cshs").as("s2")), "d2")
-        .select(col("d1"), col("d2"),
-          size(array_intersect(col("s1"), col("s2"))).cast("long").as("inter"),
-          size(col("s1")).cast("long").as("n1"),
-          size(col("s2")).cast("long").as("n2"))
-        .filter(col("inter") / least(col("n1"), col("n2")) >= 0.9)
-        .select(col("d1"), col("d2"),
-          r4n(col("inter") / col("n1")).as("cont_d1"),
-          r4n(col("inter") / col("n2")).as("cont_d2"))
-        .orderBy(col("d1"), col("d2"))
-  }
 
   private[llm] val queries2: Map[String, Q] = Map(
 
@@ -1782,9 +1657,8 @@ object TextDedup {
        |ORDER BY d1 NULLS FIRST, d2 NULLS FIRST""".stripMargin
   }
 
-  /** Exact capped-universe containment — shared by q127 (full
-    * inverted-index join) and q131 (probe-sampled candidates): the
-    * scale path's contract is that it produces the identical result. */
+  /** Exact capped-universe containment — q127's oracle (the full
+    * inverted-index join over the df-capped shingles). */
   private[llm] lazy val duckContainment =
     s"""WITH ${duckCappedShingles(DfCap)},
        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),

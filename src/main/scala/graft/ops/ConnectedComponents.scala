@@ -77,8 +77,6 @@ object ConnectedComponents {
       cur = next
       curCount = nextCount
       rounds += 1
-      if (sys.env.contains("GRAFT_DEBUG"))
-        System.err.println(s"[cc] round $rounds edges=$nextCount converged=$converged")
     }
     if (!converged) throw new IllegalStateException(
       s"ConnectedComponents: star contraction did not converge in $rounds rounds")

@@ -562,8 +562,9 @@ object Extended {
       * exponent 1.30 — strictly worse constants at every scale AND
       * the same super-linear tail, because the binding resource was
       * never the wedge shuffle but the final (a,b) hash aggregate's
-      * heap draw, which both shapes share (VolumeCheck pins the data
-      * term exactly linear; 96g A/B isolates the residual as heap).
+      * heap draw, which both shapes share (BASELINE.md's direct counts
+      * pin the data term exactly linear; 96g A/B isolates the residual
+      * as heap).
       * The join shape stays; the committed scaling record runs the
       * heap-per-core protocol (SCALING.json, ScaleStress.minHeapG —
       * a cluster scales heap OUT with the data; a fixed 48g heap

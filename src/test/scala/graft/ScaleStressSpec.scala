@@ -29,7 +29,7 @@ class ScaleStressSpec extends AnyFunSuite {
     * — heap scaled with the ×100 per-core data, the configuration a
     * scaled-out cluster actually presents), measured e ≤ 1.25 with the
     * 48g fixed-heap number (1.32, heap-bound residual over an exactly
-    * linear data term per graft.VolumeCheck) kept in BASELINE.md as
+    * linear data term by direct count) kept in BASELINE.md as
     * the annotation. The protocol is mechanized, not narrated:
     * ScaleStress.Probe.minHeapG makes a smaller-heap board run SKIP
     * the probe loudly, and the record row carries "mem_gb":96 (pinned
@@ -63,7 +63,7 @@ class ScaleStressSpec extends AnyFunSuite {
     // Round-15 (verdict Next #6): the three ×100 rows reading 1.09-1.16
     // share one MEASURED residual class, pinned tighter than the
     // generic 1.25 bound so a creep past the explanation fails early.
-    // Evidence (BASELINE.md round 15): VolumeCheck pins their data
+    // Evidence (BASELINE.md round 15): direct counts pin their data
     // terms EXACTLY linear (30.000×/100.000×); the n·log n comparison-
     // sort factor alone predicts ~1.06 of the reading (18M→60M rows:
     // ×3.33 volume × 1.07 log growth); and the scale-out A/B at
@@ -75,7 +75,7 @@ class ScaleStressSpec extends AnyFunSuite {
     // hidden super-linear plan term that would compound.
     // Round-16 adds q421 (round-15 verdict Next #3): the board's most
     // expensive entry and its only ≥1.0 ×100 exponent without a pin
-    // until graft.VolumeCheck direct-counted the compact's inputs —
+    // until the compact's inputs were direct-counted (BASELINE.md) —
     // delta rows 6,096/61,161/183,550/611,811 and postings rows
     // 173,929/…/17,380,393 at ×1/10/30/100 (×100.4 / ×99.9 — exactly
     // linear), so the 1.034 reading's residual is job-orchestration +

@@ -1,14 +1,12 @@
 package graft.llm
 
 import org.apache.spark.sql.functions._
-import graft.{SparkSuite, Tables}
+import graft.SparkSuite
 
 /** The df-cap contract on the shingle inverted-index joins: a
   * stop-shingle shared by every document must NOT generate the
   * quadratic hot-key pair blowup, and the capped measure must equal
-  * hand-computed similarity over the capped universe. Also pins the
-  * q131 probe path: sampled candidates + exact verification equals the
-  * q127 full-join containment on the real fixture. */
+  * hand-computed similarity over the capped universe. */
 class DedupSkewSpec extends SparkSuite {
   import spark.implicits._
 
@@ -50,40 +48,6 @@ class DedupSkewSpec extends SparkSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(pairs == Set((1L, 2L, 0.6)),
       s"expected capped jaccard {(1,2,0.6)}, got $pairs")
-    spark.catalog.clearCache()
-  }
-
-  test("probe-sampled containment equals q127's full inverted-index join " +
-      "(spec-level demonstration — q131 demoted from the registry, round 10)") {
-    val full = TextDedup.queries("q127_containment")(spark, sf)
-      .collect().map(_.toSeq).toSet
-    val probed = TextDedup.probeContainment(Tables(spark, sf, "documents"))
-      .collect().map(_.toSeq).toSet
-    assert(full.nonEmpty, "fixture should contain containment pairs")
-    assert(probed == full,
-      s"probe path missed: ${full.diff(probed)}; extra: ${probed.diff(full)}")
-    spark.catalog.clearCache()
-  }
-
-  test("probe candidates catch a short-in-long pair that jaccard banding misses") {
-    // doc 1 = 12 tokens (10 shingles) fully embedded in doc 2's 200
-    // unique-token body: containment = 1.0, jaccard ≈ 10/198 ≈ 0.05 —
-    // far below any jaccard banding threshold
-    val short = (0 until 12).map(i => s"s$i").mkString(" ")
-    val long = short + " " + (0 until 188).map(i => s"L$i").mkString(" ")
-    val docs = Seq((1L, short), (2L, long)).toDF("doc_id", "text")
-    val got = {
-      // run the probe machinery directly on the in-memory fixture
-      val (arr, sh, _) = TextDedup.cappedIndex(docs, TextDedup.DfCap)
-      val probes = arr.select(col("doc_id"),
-        explode(expr("slice(array_sort(shs), 1, 12)")).as("sh"))
-      probes.as("p")
-        .join(sh.as("x"), col("p.sh") === col("x.sh") && col("p.doc_id") =!= col("x.doc_id"))
-        .select(least(col("p.doc_id"), col("x.doc_id")).as("d1"),
-          greatest(col("p.doc_id"), col("x.doc_id")).as("d2"))
-        .distinct().collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    }
-    assert(got == Set((1L, 2L)), s"short-in-long pair must surface as a candidate: $got")
     spark.catalog.clearCache()
   }
 
