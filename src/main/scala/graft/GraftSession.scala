@@ -12,6 +12,13 @@ import org.apache.spark.sql.SparkSession
   * `spark.conf.set` rejects. So every entry point builds its session
   * here, and a session built any other way first freezes the cache at
   * Spark's default of 100 entries for the whole JVM.
+  *
+  * Every session built here also carries
+  * [[graft.functions.GraftExtensions]]: graft's native functions, the
+  * as-of join strategy and its pushdown rules. Query code never
+  * registers anything itself. `spark.sql.extensions` is static too: a
+  * session that `getOrCreate` returns keeps the extensions it was
+  * built with.
   */
 object GraftSession {
 
@@ -46,6 +53,7 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.adaptive.enabled", sys.env.getOrElse("GRAFT_AQE", "true"))
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
+      .config("spark.sql.extensions", classOf[graft.functions.GraftExtensions].getName)
     extraConfigs.foreach { case (k, v) => builder.config(k, v) }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -48,10 +48,6 @@ final case class PipelineConfig(
   drift: DriftConfig) {
 
   def columnNames: Seq[String] = columns.map(_.name)
-
-  /** The declared contract as a Spark schema. */
-  def structType: StructType = StructType(columns.map(c =>
-    StructField(c.name, c.sparkType.getOrElse(StringType), nullable = true)))
 }
 
 object PipelineConfig {

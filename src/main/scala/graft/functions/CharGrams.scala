@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -69,23 +68,5 @@ object CharGrams {
       i += 1
     }
     new GenericArrayData(out)
-  }
-
-  /** Idempotently register char_grams(text, w) — literal w. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("char_grams")))
-      reg.createOrReplaceTempFunction("char_grams", exprs => {
-        require(exprs.length == 2 && exprs(1).foldable,
-          "char_grams(text, w) needs a literal window width")
-        val w = exprs(1).eval() match {
-          case i: Int => i
-          case l: Long => l.toInt
-          case other => throw new IllegalArgumentException(
-            s"char_grams width must be an integer literal, got $other")
-        }
-        CharGrams(exprs.head, w)
-      }, "scala_udf")
   }
 }

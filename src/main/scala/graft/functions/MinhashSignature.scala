@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -99,25 +98,4 @@ case class MinhashSignature(child: Expression, k: Int) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): MinhashSignature =
     copy(child = newChild)
-}
-
-object MinhashSignature {
-  /** Idempotently register minhash_sig(arr, k) — k must be a foldable
-    * integer literal (it sizes the generated kernel). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("minhash_sig")))
-      reg.createOrReplaceTempFunction("minhash_sig", exprs => {
-        require(exprs.length == 2 && exprs(1).foldable,
-          "minhash_sig(arr, k) needs a literal k")
-        val k = exprs(1).eval() match {
-          case i: Int => i
-          case l: Long => l.toInt
-          case other => throw new IllegalArgumentException(
-            s"minhash_sig k must be an integer literal, got $other")
-        }
-        MinhashSignature(exprs(0), k)
-      }, "scala_udf")
-  }
 }

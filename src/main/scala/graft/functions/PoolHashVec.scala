@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -113,25 +112,4 @@ case class PoolHashVec(child: Expression, k: Int) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): PoolHashVec =
     copy(child = newChild)
-}
-
-object PoolHashVec {
-  /** Idempotently register pool_hash_vec(arr, k) — k must be a
-    * foldable integer literal (it sizes the generated kernel). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("pool_hash_vec")))
-      reg.createOrReplaceTempFunction("pool_hash_vec", exprs => {
-        require(exprs.length == 2 && exprs(1).foldable,
-          "pool_hash_vec(arr, k) needs a literal k")
-        val k = exprs(1).eval() match {
-          case i: Int => i
-          case l: Long => l.toInt
-          case other => throw new IllegalArgumentException(
-            s"pool_hash_vec k must be an integer literal, got $other")
-        }
-        PoolHashVec(exprs(0), k)
-      }, "scala_udf")
-  }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -98,28 +97,5 @@ object ShingleHashes {
       i += 1
     }
     new GenericArrayData(if (k == m) out else java.util.Arrays.copyOf(out, k))
-  }
-
-  /** Idempotently register shingle_hashes / shingle_hashes_all —
-    * the width must be a foldable integer literal (it is baked into
-    * the generated kernel call). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    Seq(("shingle_hashes", true), ("shingle_hashes_all", false)).foreach {
-      case (name, d) =>
-        if (!reg.functionExists(
-            org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
-          reg.createOrReplaceTempFunction(name, exprs => {
-            require(exprs.length == 2 && exprs(1).foldable,
-              s"$name(toks, w) needs a literal window width")
-            val w = exprs(1).eval() match {
-              case i: Int => i
-              case l: Long => l.toInt
-              case other => throw new IllegalArgumentException(
-                s"$name width must be an integer literal, got $other")
-            }
-            ShingleHashes(exprs.head, w, d)
-          }, "scala_udf")
-    }
   }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -87,25 +86,4 @@ case class SimHashFingerprint(child: Expression, bits: Int) extends UnaryExpress
 
   override protected def withNewChildInternal(newChild: Expression): SimHashFingerprint =
     copy(child = newChild)
-}
-
-object SimHashFingerprint {
-  /** Idempotently register simhash_fp(arr, bits) — bits must be a
-    * foldable integer literal (it sizes the generated kernel). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("simhash_fp")))
-      reg.createOrReplaceTempFunction("simhash_fp", exprs => {
-        require(exprs.length == 2 && exprs(1).foldable,
-          "simhash_fp(arr, bits) needs a literal bits")
-        val b = exprs(1).eval() match {
-          case i: Int => i
-          case l: Long => l.toInt
-          case other => throw new IllegalArgumentException(
-            s"simhash_fp bits must be an integer literal, got $other")
-        }
-        SimHashFingerprint(exprs(0), b)
-      }, "scala_udf")
-  }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -111,16 +110,5 @@ object TokenCounts {
       k += 1
     }
     new GenericInternalRow(Array[Any](nAll, nNe, new GenericArrayData(out)))
-  }
-
-  /** Idempotently register token_counts. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("token_counts")))
-      reg.createOrReplaceTempFunction("token_counts", exprs => {
-        require(exprs.length == 1, "token_counts(text) takes one argument")
-        TokenCounts(exprs.head)
-      }, "scala_udf")
   }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -95,17 +94,4 @@ case class TokenRunCount(child: Expression) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): TokenRunCount =
     copy(child = newChild)
-}
-
-object TokenRunCount {
-  /** Idempotently register token_runs(str). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("token_runs")))
-      reg.createOrReplaceTempFunction("token_runs", exprs => {
-        require(exprs.length == 1, "token_runs(str) takes one argument")
-        TokenRunCount(exprs.head)
-      }, "scala_udf")
-  }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -87,19 +86,4 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CosineSimilarity =
     copy(left = newLeft, right = newRight)
-}
-
-object VectorFunctions {
-  /** Idempotently register cosine_sim with a session so queries can use
-    * expr("cosine_sim(a, b)") / SQL. The existence check makes repeat
-    * calls true no-ops — createOrReplaceTempFunction alone logs a
-    * "replaced a previously registered function" warning per call,
-    * which floods stderr in a 100+-query sweep. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("cosine_sim")))
-      reg.createOrReplaceTempFunction(
-        "cosine_sim", exprs => CosineSimilarity(exprs(0), exprs(1)), "scala_udf")
-  }
 }

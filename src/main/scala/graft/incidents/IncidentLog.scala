@@ -31,9 +31,11 @@ object IncidentLog {
     Seq(incident).toDS().coalesce(1).write.mode("append").parquet(path)
   }
 
+  /** Reads with the declared `Incident` schema: no inference job per
+    * dashboard refresh, and a log with no files yet reads as empty. */
   def read(spark: SparkSession, path: String): Dataset[Incident] = {
     import spark.implicits._
-    spark.read.parquet(path).as[Incident]
+    spark.read.schema(spark.emptyDataset[Incident].schema).parquet(path).as[Incident]
   }
 
   /** CSV edge-format export/import (the reference's on-disk format,

@@ -202,7 +202,6 @@ object DupRunStore {
     * positions are the 0-based posexplode index (runs convert to
     * 1-based start_tok, matching [[TextDedup.dupRunSitesOf]]). */
   private[graft] def genState(genDocs: DataFrame): (DataFrame, DataFrame) = {
-    graft.functions.ShingleHashes.register(genDocs.sparkSession)
     val docsArr = genDocs.filter(col("text").isNotNull)
       .select(col("doc_id"), col("source"),
         split(col("text"), " ").as("toks"))
@@ -430,7 +429,6 @@ object DupRunStore {
     * practice, shuffle_hash-pinned for the 100 TB posture); the probe
     * volume is the train corpus's token count, hashes on the wire. */
   private def shinglePositions(d: DataFrame): DataFrame = {
-    graft.functions.ShingleHashes.register(d.sparkSession)
     d.filter(col("text").isNotNull)
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
       .filter(size(col("toks")) >= 3)

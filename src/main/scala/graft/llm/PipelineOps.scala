@@ -185,7 +185,6 @@ object PipelineOps {
       // Round-16: the gram pass runs as the codegen shingle_hashes
       // kernel (width 4) — bit-identical to the interpreted
       // transform+array_distinct nest, ShingleHashesSpec-pinned.
-      graft.functions.ShingleHashes.register(s)
       def grams(docs: org.apache.spark.sql.DataFrame) = docs
         .select(col("doc_id"), split(col("text"), " ").as("toks"))
         .filter(size(col("toks")) >= 4)

@@ -40,9 +40,6 @@ object Similarity {
   private def cosine(a: String, b: String): Column =
     expr(s"cosine_sim($a, $b)")
 
-  private def withCosine(s: SparkSession): Unit =
-    graft.functions.VectorFunctions.register(s)
-
   /** Cosine between an embedding column and a DRIVER-RESIDENT centroid
     * (shipped as an array literal, like q44's hyperplanes): the same
     * sequential-fold op order as [[cosineFold]] / the DuckDB oracle —
@@ -362,7 +359,6 @@ object Similarity {
     /** Exact top-20 cosine neighbors of vec_id=0 — brute force, one
       * streaming scan of the corpus against a broadcast query row. */
     "q42_cosine_topk" -> ((s: SparkSession, dir: String) => {
-      withCosine(s)
       val e = Tables(s, dir, "embeddings")
       val qv = e.filter(col("vec_id") === 0).select(col("embedding").as("q_emb"))
       e.crossJoin(broadcast(qv))
@@ -385,7 +381,6 @@ object Similarity {
       * and the scan is one pass; the banded variant of q44's LSH
       * candidates replaces the product when anchors grow. */
     "q182_hard_negatives" -> ((s: SparkSession, dir: String) => {
-      withCosine(s)
       val e = Tables(s, dir, "embeddings")
       val anchors = e.filter(col("vec_id") < 20)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
@@ -408,7 +403,6 @@ object Similarity {
       * 100 TB the same plan holds with a bucketed candidate join
       * (q44) replacing the broadcast-times-corpus product. */
     "q43_knn_join" -> ((s: SparkSession, dir: String) => {
-      withCosine(s)
       val e = Tables(s, dir, "embeddings")
       val queries = e.filter(col("vec_id") < 50)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
@@ -435,7 +429,6 @@ object Similarity {
       * deterministic, so this IS oracle-checked: the oracle unrolls
       * the same two training iterations plus the final assignment. */
     "q57_ann_ivf" -> ((s: SparkSession, dir: String) => {
-      withCosine(s)
       val e = Tables(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       val cents = servedCentroids(s, dir)
       val assigned = assignCells(e, cents)
@@ -520,7 +513,6 @@ object Similarity {
       * members produce no 5th neighbor and drop out on both
       * engines. */
     "q296_knn_outlier" -> ((s: SparkSession, dir: String) => {
-      withCosine(s)
       val e = Tables(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       val cents = servedCentroids(s, dir)
       val assigned0 = assignCells(e, cents)
@@ -574,7 +566,6 @@ object Similarity {
       * prunes map-side — then one count per NEIGHBOR and a histogram;
       * zero-occurrence vectors are censused via the left join. */
     "q387_hubness" -> ((s: SparkSession, dir: String) => {
-      withCosine(s)
       val e = Tables(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       val cents = servedCentroids(s, dir)
       val assigned0 = assignCells(e, cents)
@@ -666,7 +657,6 @@ object Similarity {
       * against the 0.3 literal use the r6-ROUNDED cosine (the q292
       * bin-key stance). */
     "q389_srp_calibration" -> ((s: SparkSession, dir: String) => {
-      withCosine(s)
       val e = Tables(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       val sigCol = (0 until 16).map { p =>
         val planeSql = (0 until 64).map(d => s"${srpCoef(p, d)}D")
@@ -701,7 +691,6 @@ object Similarity {
     }),
 
     "q86_semdedup" -> ((s: SparkSession, dir: String) => {
-      withCosine(s)
       val e = Tables(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       val cents = servedCentroids(s, dir)
       // cached: both sides of the within-cell pair join read this
@@ -741,7 +730,6 @@ object Similarity {
       * id sets per anchor — never materializing more than k rows per
       * anchor per arm. */
     "q205_ann_recall" -> ((s: SparkSession, dir: String) => {
-      withCosine(s)
       val k = 10
       val bucketed = srpBuckets(Tables(s, dir, "embeddings")).cache()
       val anchors = bucketed.filter(col("vec_id") < 20)
@@ -978,7 +966,6 @@ object Similarity {
       // interpreted higher-order fold — a boxed lambda per
       // (dim, token), 64·|chunk| per chunk; PoolHashVecSpec pins the
       // kernel bit-equal to the declarative form)
-      graft.functions.PoolHashVec.register(s)
       val vecExpr = expr("pool_hash_vec(hs, 64)")
       val toksed = Tables(s, dir, "documents").filter(col("text").isNotNull)
         .select(col("doc_id"), expr("""transform(split(text, ' '),
@@ -1092,7 +1079,6 @@ object Similarity {
       * key is the high-cardinality query id. Accuracy is an integer
       * rational → nudged r6. */
     "q260_knn_label_audit" -> ((s: SparkSession, dir: String) => {
-      withCosine(s)
       val emb = Tables(s, dir, "embeddings")
       val (cents, _) = trainKmeans(
         emb.select(col("vec_id"), col("embedding")), k = 16, iters = 2)
@@ -1147,7 +1133,6 @@ object Similarity {
       * AND the fused cut rank on ROUNDED scores with id tie-breaks;
       * the RRF sum is a small-denominator rational → nudged r6. */
     "q264_rrf_fusion" -> ((s: SparkSession, dir: String) => {
-      withCosine(s)
       val terms = Seq("join", "hash", "scan")
       val k1 = 1.2; val b = 0.75
       val tf = Tables(s, dir, "documents").filter(col("text").isNotNull)
@@ -1209,7 +1194,6 @@ object Similarity {
       * constant to drift. Same bounded plan as q205: 20-anchor
       * broadcast blocks, one bucket-keyed probe join. */
     "q266_ndcg_audit" -> ((s: SparkSession, dir: String) => {
-      withCosine(s)
       val k = 10
       val bucketed = srpBuckets(Tables(s, dir, "embeddings")).cache()
       val anchors = bucketed.filter(col("vec_id") < 20)
@@ -1445,7 +1429,6 @@ object Similarity {
       * integer ranks. Cell order and top-10 both rank on the r6
       * cosine grid with id tiebreaks (cross-engine ranking stance). */
     "q362_ivf_nprobe_curve" -> ((s: SparkSession, dir: String) => {
-      withCosine(s)
       import s.implicits._
       val e = Tables(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       val corpus = e.filter(pmod(col("vec_id"), lit(10)) =!= 0)
@@ -1504,7 +1487,6 @@ object Similarity {
       * IEEE arithmetic over grid-pinned inputs (identical in both
       * engines), nudged-rounded. */
     "q360_mmr_rerank" -> ((s: SparkSession, dir: String) => {
-      withCosine(s)
       val e = Tables(s, dir, "embeddings")
       val qv = e.filter(col("vec_id") === 0).select(col("embedding").as("qe"))
       val cand = e.filter(col("vec_id") =!= 0).crossJoin(broadcast(qv))
@@ -1563,7 +1545,6 @@ object Similarity {
       * establish (or refute) before an index is built with the cheap
       * scorer. */
     "q403_dot_cosine_rank_bias" -> ((s: SparkSession, dir: String) => {
-      withCosine(s)
       def dotF(a: String, b: String) = expr(
         s"aggregate(zip_with($a, $b, (p, q) -> cast(p AS double) * cast(q AS double)), 0D, (acc, v) -> acc + v)")
       val e = Tables(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
@@ -1613,7 +1594,6 @@ object Similarity {
       * static estimate reads "small"; a broadcast plan could not
       * exist at 100 TB). */
     "q404_mutual_knn_rate" -> ((s: SparkSession, dir: String) => {
-      withCosine(s)
       val e = Tables(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       val cents = servedCentroids(s, dir)
       val assigned0 = assignCells(e, cents)
@@ -1693,7 +1673,6 @@ object Similarity {
   }
 
   private[graft] def annLsh(e: DataFrame, queryId: Long, k: Int): DataFrame = {
-    withCosine(e.sparkSession)
       val bucketed = srpBuckets(e)
       val qv = bucketed.filter(col("vec_id") === queryId)
         .select(col("embedding").as("q_emb"), col("bucket").as("q_bucket"))

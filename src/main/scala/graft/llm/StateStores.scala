@@ -329,7 +329,6 @@ object StateStores {
     * probe-side shape, derived ONLY from `docs` (the spec asserts the
     * append path never touches existing state). */
   private[graft] def bandIndexRows(s: SparkSession, docs: DataFrame): DataFrame = {
-    graft.functions.MinhashSignature.register(s)
     TextDedup.bandKeys(TextDedup.shingleArrays(docs), NHashes, Bands)
   }
 
@@ -607,7 +606,6 @@ object StateStores {
     * queries' convenience, where no compactor races the read). */
   private[graft] def bandServe(s: SparkSession, snapshot: DataFrame,
       corpus: DataFrame, idx: DataFrame, threshold: Double): DataFrame = {
-    graft.functions.MinhashSignature.register(s)
     val snapArr = TextDedup.shingleArrays(snapshot).cache()
     // snapshot band keys probe the state table: shuffle_hash — at
     // 100 TB the index is the BIG side; broadcasting it is the plan
@@ -733,7 +731,6 @@ object StateStores {
       * corpus from first principles (2 unrolled Lloyd iterations +
       * final assignment), so stale centroids or assignments go red. */
     "q282_ivf_serve" -> ((s: SparkSession, dir: String) => {
-      graft.functions.VectorFunctions.register(s)
       val e = Tables(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       val path = seedIvf(s, dir)
       val cents = s.read.parquet(s"$path/cents").collect()

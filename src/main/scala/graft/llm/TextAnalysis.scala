@@ -208,7 +208,6 @@ object TextAnalysis {
       *     round, no libm in any output column, so any conforming
       *     SQL engine produces the identical bits. */
     "q202_fertility" -> ((s: SparkSession, dir: String) => {
-      graft.functions.TokenRunCount.register(s)
       Tables(s, dir, "documents")
         .filter(col("text").isNotNull && length(col("text")) > 0)
         .select(col("lang"), length(col("text")).cast("long").as("nc"),
@@ -780,7 +779,6 @@ object TextAnalysis {
       // bigram pass as the codegen char_grams kernel (round-16, guide
       // §4: the transform lambda substrings interpreted per character
       // position; CharGramsSpec pins kernel ≡ declarative)
-      graft.functions.CharGrams.register(s)
       val counts = Tables(s, dir, "documents")
         .filter(col("text").isNotNull && length(col("text")) >= 2)
         .select(col("lang"), explode(expr("char_grams(text, 2)")).as("g"))
@@ -904,7 +902,6 @@ object TextAnalysis {
       * exploded to rows. corr over midranks is a rational fold →
       * nudged r6 (q198 stance). */
     "q258_signal_agreement" -> ((s: SparkSession, dir: String) => {
-      graft.functions.TokenCounts.register(s)
       val sigs = Seq("hap", "len", "mwl", "ttr")
       // every signal reads off ONE token_counts kernel pass
       // (round-17): distinct non-empty tokens = the non-empty tcs
@@ -1478,7 +1475,6 @@ object TextAnalysis {
       * (deterministic, no ranked cutoff). Output: integer confusion
       * counts only. */
     "q368_source_classifier" -> ((s: SparkSession, dir: String) => {
-      graft.functions.TokenCounts.register(s)
       // per-doc (token, k) pairs from the token_counts kernel
       // (round-17, §2.3/§4): the old per-OCCURRENCE explode fed every
       // downstream aggregate and join one row per occurrence; all the
@@ -1554,7 +1550,6 @@ object TextAnalysis {
       * the corpus; a broadcast plan could not exist at 100 TB), then
       * doc- and source-level folds with map-side combine. */
     "q405_rare_token_mass" -> ((s: SparkSession, dir: String) => {
-      graft.functions.TokenCounts.register(s)
       // per-doc (token, k) pairs from the token_counts kernel
       // (round-17, §2.3/§4): df = a plain row count over the per-doc-
       // distinct pairs (each doc contributes exactly one row per

@@ -63,7 +63,6 @@ object TextDedup {
         """transform(split(text, ' '),
           |  t -> cast(conv(substring(sha2(t, 256), 1, 15), 16, 10) AS bigint))"""
           .stripMargin).as("hs"))
-    graft.functions.SimHashFingerprint.register(s)
     hs.select(col("doc_id"), expr("simhash_fp(hs, 60)").as("fp"))
   }
 
@@ -123,7 +122,6 @@ object TextDedup {
     // allocation, an interpreted concat, and an interpreted hash —
     // and it is the base derivation of EVERY dedup-family query.
     // ShingleHashesSpec pins the kernel bit-equal (order included).
-    graft.functions.ShingleHashes.register(docs.sparkSession)
     docs.select(col("doc_id"), split(col("text"), " ").as("toks"))
       .filter(size(col("toks")) >= 3)
       .select(col("doc_id"), expr("shingle_hashes(toks, 3)").as("shs"))
@@ -225,7 +223,6 @@ object TextDedup {
     * generated. */
   private[graft] def incrementalNearDup(s: SparkSession, snapshot: DataFrame,
       corpus: DataFrame, threshold: Double = 0.8): DataFrame = {
-    graft.functions.MinhashSignature.register(s)
     val nHashes = 48
     val bands = 16
     val snapArr = shingleArrays(snapshot).cache()
@@ -406,7 +403,6 @@ object TextDedup {
       // per-function minima correlate (one small (h1,h2) shingle wins
       // many i), which measurably drops LSH band recall (254/256
       // pairs on the sf0.1 fixture) with no speed win.
-      graft.functions.MinhashSignature.register(s)
       val sig = arr.select(col("doc_id"),
         expr(s"minhash_sig(shs, $nHashes)").as("sg"))
       // cached: both sides of the bucket self-join read this — without
@@ -849,7 +845,6 @@ object TextDedup {
       * row_number grouping trick, windows partitioned on the
       * high-cardinality (pair, diagonal) key. Integer-only output. */
     "q319_shared_spans" -> ((s: SparkSession, dir: String) => {
-      graft.functions.ShingleHashes.register(s)
       val pairs = PairGraph.jaccard(s, dir, 0.8)
         .select(col("d1"), col("d2"))
       val pos = Tables(s, dir, "documents")
@@ -1429,7 +1424,6 @@ object TextDedup {
       * shingle has ≥ 1 positional match, so the inner join drops
       * nothing). Per class: pairs, mean Jaccard, mean longest run. */
     "q417_copy_vs_template" -> ((s: SparkSession, dir: String) => {
-      graft.functions.ShingleHashes.register(s)
       val pairs = PairGraph.jaccard(s, dir, 0.5)
         .select(col("d1"), col("d2"), col("jac"))
       val pos = Tables(s, dir, "documents")
@@ -1485,7 +1479,6 @@ object TextDedup {
     * run_tokens). */
   private[graft] def dupRunSitesOf(docsIn: DataFrame, minTokens: Int,
       withFp: Boolean = true): DataFrame = {
-    graft.functions.ShingleHashes.register(docsIn.sparkSession)
     val docs0 = docsIn
       .filter(col("text").isNotNull)
       .select(col("doc_id"), col("source"), split(col("text"), " ").as("toks"))

@@ -74,7 +74,6 @@ object Advanced {
       * count — all shuffles keyed on token or doc_id. Output limited to
       * the top-scored terms of the first 20 docs for a stable result. */
     "q53_tfidf" -> ((s: SparkSession, dir: String) => {
-      graft.functions.TokenCounts.register(s)
       val docs = Tables(s, dir, "documents")
       val nDocs = docs.agg(count(lit(1)).as("n_docs"))
       // tf via the token_counts kernel (round-17, guide §2.3/§4): the
@@ -120,7 +119,6 @@ object Advanced {
       * ln() difference cannot flip the keyword cut (ties are real
       * here: equal-tf equal-df tokens share a score). */
     "q255_doc_keywords" -> ((s: SparkSession, dir: String) => {
-      graft.functions.TokenCounts.register(s)
       val docs = Tables(s, dir, "documents")
       val nDocs = docs.agg(count(lit(1)).as("n_docs"))
       // tf via the token_counts kernel — see q53; here doc_len is the

@@ -1,18 +1,16 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
-import graft.plans.{AsOfDirection, AsOfJoin, AsOfJoinStrategy,
-  PushFilterThroughAsOfJoin, PushLimitThroughAsOfJoin}
+import graft.plans.{AsOfDirection, AsOfJoin}
 
 /** User-facing API for the native as-of join (see
   * [[graft.plans.AsOfJoinExec]] for semantics and scale design).
   *
   * Columns are resolved by NAME against each side's analyzed output,
   * so callers never touch Catalyst expressions. The planner strategy
-  * is injected by `GraftExtensions`
-  * (`spark.sql.extensions=graft.functions.GraftExtensions`); for
-  * sessions built without the config this helper also registers it via
-  * `experimental.extraStrategies`, which takes effect immediately.
+  * and the filter/limit pushdown rules come from
+  * [[graft.functions.GraftExtensions]], which every
+  * `graft.GraftSession` installs; this helper only builds the plan.
   *
   * Directions mirror pandas `merge_asof` / DuckDB's ASOF inequality:
   * backward (right ts ≤ left ts, the default), forward (right ts ≥
@@ -54,22 +52,6 @@ object AsOf {
       direction: AsOfDirection,
       tolerance: Option[Double] = None): DataFrame = {
     val spark = left.sparkSession
-    // check BOTH registration paths: a session built with
-    // spark.sql.extensions=GraftExtensions carries the strategy in
-    // extraPlanningStrategies, which experimental.extraStrategies
-    // cannot see — without this check every call would append a
-    // duplicate strategy (harmless to planning, but unbounded session
-    // mutation)
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy) &&
-        !spark.sessionState.planner.extraPlanningStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
-    if (!spark.experimental.extraOptimizations.contains(PushFilterThroughAsOfJoin))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ PushFilterThroughAsOfJoin
-    if (!spark.experimental.extraOptimizations.contains(PushLimitThroughAsOfJoin))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ PushLimitThroughAsOfJoin
     def attr(df: DataFrame, name: String) =
       df.queryExecution.analyzed.output.find(_.name == name).getOrElse(
         throw new IllegalArgumentException(

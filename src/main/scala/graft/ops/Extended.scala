@@ -918,7 +918,6 @@ object Extended {
       * default 8): raise it with cluster width — fan-out per row is
       * B+1 replicas and task count grows as B(B+1)/2. */
     "q51_embed_neardup" -> ((s: SparkSession, dir: String) => {
-      graft.functions.VectorFunctions.register(s)
       val B = s.conf.getOption("graft.embed.blocks").map(_.toInt).getOrElse(8)
       val e = Tables(s, dir, "embeddings")
       // left role: own block is ka, partner block kb ranges upward

@@ -14,7 +14,7 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 /** AS-OF (backward) join as a first-class Catalyst operator — the
   * whole-operator custom surface from SURVEY §7.3: logical node +
   * planner strategy + physical merge-scan, registered through
-  * `GraftExtensions` (or ad hoc via `experimental.extraStrategies`).
+  * `GraftExtensions`.
   *
   * Semantics: for every left row, append the SINGLE right row with the
   * same key and the greatest right-ts ≤ left-ts; no match → right side

@@ -14,9 +14,8 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * right-side predicates are NOT pushable (the null-extended
   * non-match rows would change).
   *
-  * Registered via `GraftExtensions.injectOptimizerRule` and, for
-  * ad hoc sessions, `experimental.extraOptimizations` (see
-  * [[graft.ops.AsOf]]).
+  * Registered via `GraftExtensions.injectOptimizerRule`, so it runs in
+  * the operator-optimization batch alongside Catalyst's own pushdowns.
   */
 object PushFilterThroughAsOfJoin extends Rule[LogicalPlan] with PredicateHelper {
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -20,6 +20,41 @@ final case class AnomalyCount(event_type: String, n_events: Long, n_anomalies: L
 final case class SprtState(w: Long, n: Long, decN: Long, decW: Long)
 final case class SprtSummary(event_type: String, n_events: Long,
   n_at_decision: Long, w_at_decision: Long, decision: String)
+
+/** Row mechanics the event-time twins share inside their
+  * flatMapGroupsWithState closures — top-level for the same reason as
+  * [[KllOps]]: the closures reference a serializable module instead of
+  * capturing the EventStreams object. */
+private object StreamRows extends Serializable {
+  import EventStreams.{CusumState, Event}
+
+  private val DayUs = 86400000000L
+
+  /** Event time in exact microseconds. */
+  def tsUs(e: Event): Long = e.ts.getTime * 1000L + e.ts.getNanos / 1000 % 1000
+
+  /** Spark's 6-dp `round`: HALF_UP on the shortest decimal repr. */
+  def r6h(v: Double): Double = java.math.BigDecimal.valueOf(v)
+    .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
+
+  /** Adds a micro-batch's per-day event counts to a type's stored
+    * (day, count) state, stores the merge and returns it in day order
+    * — the state [[EventStreams.cusumShift]] and
+    * [[EventStreams.holtTrend]] share. Empty (and nothing stored) when
+    * neither holds a day. */
+  def mergeDayCounts(rows: Iterator[Event],
+      state: GroupState[CusumState]): Array[(Long, Long)] = {
+    val counts = scala.collection.mutable.Map(state.getOption.toSeq
+      .flatMap(s0 => s0.days.zip(s0.cnts)): _*)
+    rows.foreach { e =>
+      val d = tsUs(e) / DayUs
+      counts(d) = counts.getOrElse(d, 0L) + 1L
+    }
+    val arr = counts.toArray.sortBy(_._1)
+    if (arr.nonEmpty) state.update(CusumState(arr.map(_._1), arr.map(_._2)))
+    arr
+  }
+}
 
 /** Sketch mechanics for [[EventStreams.quantileSketch]] — top-level so
   * the flatMapGroupsWithState closure references a serializable module
@@ -93,6 +128,7 @@ private[graft] object KllOps extends Serializable {
   * small struct per active user.
   */
 object EventStreams {
+  import StreamRows.{mergeDayCounts, r6h, tsUs}
 
   final case class Event(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
     event_type: String, value: Double)
@@ -100,6 +136,11 @@ object EventStreams {
   final case class UserSession(user_id: Long, session_start: java.sql.Timestamp,
     session_end: java.sql.Timestamp, n_events: Long, sum_value: Double)
 
+  /** The feed decoded as [[Event]]s with a NULL `value` read as 0.0,
+    * so the primitive-field encoder cannot NPE on a null-bearing feed. */
+  private def valueOrZero(events: DataFrame): Dataset[Event] =
+    events.select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
+      coalesce(col("value"), lit(0.0)).as("value")).as(Encoders.product[Event])
 
   /** readStream sources must be directories; the testdata ships single
     * parquet files — stage one into a temp directory. */
@@ -143,14 +184,6 @@ object EventStreams {
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"))
       .select(col("window.start").as("w_start"), col("event_type"), col("n"))
-
-  /** Sliding 2h/1h windowed counts — twin of batch q27_sliding_window. */
-  def slidingCounts(events: DataFrame): DataFrame =
-    events.withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "2 hours", "1 hour"))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
-      .select(col("window.start").as("w_start"), col("window.end").as("w_end"),
-        col("n"), col("sum_value"))
 
   /** Native session windows (30-minute gap) — twin of batch
     * q31_sessionize. */
@@ -504,7 +537,6 @@ object EventStreams {
       horizonUs: Long = 3600000000L, minN: Int = 30, zThresh: Double = 3.0)
       : Dataset[AnomalyCount] = {
     import spark.implicits._
-    def tsUs(e: Event): Long = e.ts.getTime * 1000L + e.ts.getNanos / 1000 % 1000
     // batch q143 filters value IS NOT NULL — mirror it ahead of
     // groupByKey so a null-bearing feed matches the batch report
     // instead of NPE-ing in the Event deserializer
@@ -552,10 +584,7 @@ object EventStreams {
   def sprtDecisions(spark: SparkSession, events: DataFrame,
       bound: Long = 8L): Dataset[SprtSummary] = {
     import spark.implicits._
-    def tsUs(e: Event): Long = e.ts.getTime * 1000L + e.ts.getNanos / 1000 % 1000
-    events.select(col("event_id"), col("ts"), col("user_id"),
-        col("event_type"), coalesce(col("value"), lit(0.0)).as("value"))
-      .as[Event]
+    valueOrZero(events)
       .groupByKey(_.event_type)
       .flatMapGroupsWithState[SprtState, SprtSummary](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
@@ -613,7 +642,6 @@ object EventStreams {
   def nearDupPairs(spark: SparkSession, docs: DataFrame,
       threshold: Double = 0.8, maxBucket: Int = 128): Dataset[NearDupPair] = {
     import spark.implicits._
-    graft.functions.MinhashSignature.register(spark)
     val arr = graft.llm.TextDedup.shingleArrays(docs.filter(col("text").isNotNull))
     val banded = arr
       .select(col("doc_id"), col("shs"), expr("minhash_sig(shs, 48)").as("sg"))
@@ -1017,27 +1045,15 @@ object EventStreams {
   def cusumShift(spark: SparkSession, events: DataFrame,
       k: Double = 0.25, alarm: Double = 3.0): Dataset[CusumSummary] = {
     import spark.implicits._
-    val dayUs = 86400000000L
-    def tsUs(e: Event): Long = e.ts.getTime * 1000L + e.ts.getNanos / 1000 % 1000
-    def r6h(v: Double): Double = java.math.BigDecimal.valueOf(v)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
-    events.select(col("event_id"), col("ts"), col("user_id"),
-        col("event_type"), coalesce(col("value"), lit(0.0)).as("value"))
-      .as[Event]
+    valueOrZero(events)
       .groupByKey(_.event_type)
       .flatMapGroupsWithState[CusumState, CusumSummary](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (etype: String, rows: Iterator[Event], state: GroupState[CusumState]) =>
-          val add = rows.toSeq.groupBy(e => tsUs(e) / dayUs)
-            .map { case (d, es) => d -> es.size.toLong }
-          val s0 = state.getOption.getOrElse(
-            CusumState(Array.empty, Array.empty))
-          val counts = scala.collection.mutable.Map(s0.days.zip(s0.cnts).toSeq: _*)
-          add.foreach { case (d, n) => counts(d) = counts.getOrElse(d, 0L) + n }
-          if (counts.isEmpty) Iterator.empty
+          val arr = mergeDayCounts(rows, state)
+          if (arr.isEmpty) Iterator.empty
           else {
-            val arr = counts.toArray.sortBy(_._1)
-            state.update(CusumState(arr.map(_._1), arr.map(_._2)))
+            val counts = arr.toMap
             val d0 = arr.head._1
             val d1 = arr.last._1
             val n = d1 - d0 + 1
@@ -1091,27 +1107,15 @@ object EventStreams {
     * across a micro-batch boundary). */
   def holtTrend(spark: SparkSession, events: DataFrame): Dataset[HoltSummary] = {
     import spark.implicits._
-    val dayUs = 86400000000L
-    def tsUs(e: Event): Long = e.ts.getTime * 1000L + e.ts.getNanos / 1000 % 1000
-    def r6h(v: Double): Double = java.math.BigDecimal.valueOf(v)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
-    events.select(col("event_id"), col("ts"), col("user_id"),
-        col("event_type"), coalesce(col("value"), lit(0.0)).as("value"))
-      .as[Event]
+    valueOrZero(events)
       .groupByKey(_.event_type)
       .flatMapGroupsWithState[CusumState, HoltSummary](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (etype: String, rows: Iterator[Event], state: GroupState[CusumState]) =>
-          val add = rows.toSeq.groupBy(e => tsUs(e) / dayUs)
-            .map { case (d, es) => d -> es.size.toLong }
-          val s0 = state.getOption.getOrElse(
-            CusumState(Array.empty, Array.empty))
-          val counts = scala.collection.mutable.Map(s0.days.zip(s0.cnts).toSeq: _*)
-          add.foreach { case (d, n) => counts(d) = counts.getOrElse(d, 0L) + n }
-          if (counts.isEmpty) Iterator.empty
+          val arr = mergeDayCounts(rows, state)
+          if (arr.isEmpty) Iterator.empty
           else {
-            val arr = counts.toArray.sortBy(_._1)
-            state.update(CusumState(arr.map(_._1), arr.map(_._2)))
+            val counts = arr.toMap
             val d0 = arr.head._1
             val d1 = arr.last._1
             if (d1 - d0 + 1 < 2) Iterator.empty
@@ -1162,10 +1166,7 @@ object EventStreams {
       lambda: Double = 0.3, horizon: Int = 48): Dataset[EwmaPoint] = {
     import spark.implicits._
     val hourUs = 3600000000L
-    def tsUs(e: Event): Long = e.ts.getTime * 1000L + e.ts.getNanos / 1000 % 1000
-    events.select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-        coalesce(col("value"), lit(0.0)).as("value"))
-      .as[Event]
+    valueOrZero(events)
       .groupByKey(_.event_type)
       .flatMapGroupsWithState[EwmaState, EwmaPoint](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
@@ -1234,9 +1235,7 @@ object EventStreams {
     * reads value) instead of dying in the Event deserializer. */
   def markovTransitions(spark: SparkSession, events: DataFrame): Dataset[Transition] = {
     import spark.implicits._
-    def tsUs(e: Event): Long = e.ts.getTime * 1000L + e.ts.getNanos / 1000 % 1000
-    events.select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-        coalesce(col("value"), lit(0.0)).as("value")).as[Event]
+    valueOrZero(events)
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[LastType, Transition](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {

@@ -270,9 +270,14 @@ class AsOfJoinSpec extends SparkSuite {
   }
 
   test("limit pushes through the as-of join to the left child") {
-    import spark.implicits._
-    val l = (1 to 5000).map(i => ((i % 20).toLong, i.toLong, i)).toDF("k", "ts", "v")
-    val r = (1 to 5000).map(i => ((i % 20).toLong, (i - 1).toLong, i)).toDF("rk", "rts", "w")
+    // spark.range, not a local Seq: the injected rule runs before
+    // ConvertToLocalRelation, which would fold the pushed LocalLimit
+    // into a LocalRelation child and hide it from the plan check
+    val ids = spark.range(1, 5001)
+    val l = ids.select((col("id") % 20).as("k"), col("id").as("ts"),
+      col("id").cast("int").as("v"))
+    val r = ids.select((col("id") % 20).as("rk"), (col("id") - 1).as("rts"),
+      col("id").cast("int").as("w"))
     val limited = AsOf.joinBackward(l, r, "k", "rk", "ts", "rts").limit(7)
     // optimized plan must carry a limit BELOW the join on the left side
     val opt = limited.queryExecution.optimizedPlan

@@ -13,7 +13,6 @@ class CharGramsSpec extends SparkSuite {
     s"transform(sequence(1, length(text) - ${w - 1}), i -> substring(text, i, $w))"
 
   test("char_grams equals the declarative form, multibyte included") {
-    graft.functions.CharGrams.register(spark)
     val fixture = Seq("hello world", "ab", "ααβγ δ", "xy", "a b c d")
       .toDF("text")
     Seq(2, 3).foreach { w =>
@@ -28,7 +27,6 @@ class CharGramsSpec extends SparkSuite {
   }
 
   test("kernel equals declarative on the corpus fixture") {
-    graft.functions.CharGrams.register(spark)
     val diff = Tables(spark, "/root/testdata/sf0.001", "documents")
       .filter(col("text").isNotNull && length(col("text")) >= 2)
       .select(expr("char_grams(text, 2)").as("a"),
@@ -40,7 +38,6 @@ class CharGramsSpec extends SparkSuite {
   }
 
   test("below-window input yields an empty array; null stays null") {
-    graft.functions.CharGrams.register(spark)
     val out = Seq(Some("a"), None).toDF("text")
       .select(expr("char_grams(text, 2)").as("v")).collect()
     assert(out(0).getSeq[String](0).isEmpty && out(1).isNullAt(0))

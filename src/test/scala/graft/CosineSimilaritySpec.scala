@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.VectorFunctions
 
 /** The native codegen'd cosine expression must be bit-identical to the
   * declarative zip_with/aggregate fold (both interpreted and codegen
@@ -9,7 +8,6 @@ import graft.functions.VectorFunctions
 class CosineSimilaritySpec extends SparkSuite {
 
   test("native cosine_sim is bit-identical to the declarative fold") {
-    VectorFunctions.register(spark)
     val e = Tables(spark, sf, "embeddings")
     val qv = e.filter(col("vec_id") === 0).select(col("embedding").as("q_emb"))
     val both = e.crossJoin(broadcast(qv))
@@ -27,7 +25,6 @@ class CosineSimilaritySpec extends SparkSuite {
   }
 
   test("cosine_sim works from SQL and survives self-similarity = 1") {
-    VectorFunctions.register(spark)
     Tables(spark, sf, "embeddings").createOrReplaceTempView("emb")
     val selfSim = spark.sql(
       "SELECT vec_id, cosine_sim(embedding, embedding) AS cs FROM emb").collect()

@@ -27,4 +27,11 @@ class IncidentCsvSpec extends SparkSuite {
     val back = IncidentLog.importCsv(spark, dir).collect().sortBy(_.run_id)
     assert(back.toSeq == hostile.sortBy(_.run_id))
   }
+
+  test("an incident log directory with no files yet reads as empty") {
+    val dir = Files.createTempDirectory("graft_inc_empty").toString
+    val log = IncidentLog.read(spark, dir)
+    assert(log.collect().isEmpty)
+    assert(IncidentLog.metrics(log) == IncidentLog.Metrics(0, 0, 0, 0))
+  }
 }

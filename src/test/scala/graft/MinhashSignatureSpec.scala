@@ -11,7 +11,6 @@ class MinhashSignatureSpec extends SparkSuite {
   import spark.implicits._
 
   test("minhash_sig equals the declarative array_min(transform) form bit-for-bit") {
-    graft.functions.MinhashSignature.register(spark)
     val k = 8
     val docs = Seq(
       (1L, Seq(42L, -7L, 123456789L, Long.MaxValue, Long.MinValue)),
@@ -29,14 +28,12 @@ class MinhashSignatureSpec extends SparkSuite {
   }
 
   test("minhash_sig of an empty array is null (array_min's empty semantics)") {
-    graft.functions.MinhashSignature.register(spark)
     val out = Seq((1L, Seq.empty[Long])).toDF("id", "shs")
       .select(expr("minhash_sig(shs, 4)")).collect()(0)
     assert(out.isNullAt(0))
   }
 
   test("the kernel stays inside whole-stage codegen") {
-    graft.functions.MinhashSignature.register(spark)
     // a range source, not a local Seq (ConvertToLocalRelation would
     // constant-fold a local fixture into a LocalTableScan), and a
     // non-HOF array constructor (transform's lambda has no codegen

@@ -16,7 +16,6 @@ class PoolHashVecSpec extends SparkSuite {
       / CAST(size(hs) AS DOUBLE))"""
 
   test("pool_hash_vec equals the declarative transform×aggregate form bit-for-bit") {
-    graft.functions.PoolHashVec.register(spark)
     val k = 64
     // pre-reduced hashes (< 100003), the q231 projection's contract —
     // including 0, the max reduced value, and a long 1-token chunk
@@ -35,7 +34,6 @@ class PoolHashVecSpec extends SparkSuite {
   }
 
   test("pool_hash_vec equals the declarative form on the corpus fixture") {
-    graft.functions.PoolHashVec.register(spark)
     // the real q231 derivation at sf0.001: token hashes reduced once
     // per doc, then pooled — kernel vs declarative on identical input
     val hms = Tables(spark, "/root/testdata/sf0.001", "documents")
@@ -52,14 +50,12 @@ class PoolHashVecSpec extends SparkSuite {
   }
 
   test("pool_hash_vec of an empty array is null") {
-    graft.functions.PoolHashVec.register(spark)
     val out = Seq((1L, Seq.empty[Long])).toDF("id", "hs")
       .select(expr("pool_hash_vec(hs, 4)")).collect()(0)
     assert(out.isNullAt(0))
   }
 
   test("the kernel stays inside whole-stage codegen") {
-    graft.functions.PoolHashVec.register(spark)
     val df = spark.range(10)
       .select(array(col("id") % 100003L, col("id") * 7 % 100003L).as("hs"))
       .select(expr("pool_hash_vec(hs, 8)").as("v"))

@@ -72,7 +72,6 @@ class Round10WaveSpec extends SparkSuite {
   }
 
   test("q360: MMR picks are more diverse than plain top-5 relevance") {
-    functions.VectorFunctions.register(spark)
     val e = Tables(spark, sf01, "embeddings")
     val qv = e.filter(col("vec_id") === 0).select(col("embedding").as("qe"))
     def meanPairSim(ids: Seq[Long]): Double = {

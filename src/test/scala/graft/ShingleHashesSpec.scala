@@ -24,7 +24,6 @@ class ShingleHashesSpec extends SparkSuite {
     .select(col("doc_id"), split(col("text"), " ").as("toks"))
 
   test("shingle_hashes equals the declarative distinct form, order included") {
-    graft.functions.ShingleHashes.register(spark)
     Seq(3, 4).foreach { w =>
       // the declarative form is undefined below the window (sequence
       // descends, slice(…, 0, w) errors) — callers always filter
@@ -42,7 +41,6 @@ class ShingleHashesSpec extends SparkSuite {
   }
 
   test("shingle_hashes_all equals the declarative positional form") {
-    graft.functions.ShingleHashes.register(spark)
     val n = fixture.select(col("doc_id"),
         expr("shingle_hashes_all(toks, 3)").as("v"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
@@ -53,7 +51,6 @@ class ShingleHashesSpec extends SparkSuite {
   }
 
   test("kernel equals declarative on the corpus fixture (both forms)") {
-    graft.functions.ShingleHashes.register(spark)
     val toks = Tables(spark, "/root/testdata/sf0.001", "documents")
       .filter(col("text").isNotNull)
       .select(split(col("text"), " ").as("toks"))
@@ -70,7 +67,6 @@ class ShingleHashesSpec extends SparkSuite {
   }
 
   test("inputs shorter than the window yield an empty array") {
-    graft.functions.ShingleHashes.register(spark)
     val out = Seq(Tuple1(Seq("a", "b"))).toDF("toks")
       .select(expr("shingle_hashes(toks, 3)").as("v"),
         expr("shingle_hashes_all(toks, 3)").as("va")).collect()(0)
@@ -78,7 +74,6 @@ class ShingleHashesSpec extends SparkSuite {
   }
 
   test("the kernel stays inside whole-stage codegen") {
-    graft.functions.ShingleHashes.register(spark)
     val df = spark.range(10)
       .select(array(col("id").cast("string"), lit("x"), lit("y"), lit("z"))
         .as("toks"))

@@ -9,7 +9,6 @@ class SimHashFingerprintSpec extends SparkSuite {
   import spark.implicits._
 
   test("simhash_fp equals the declarative aggregate-fold form bit-for-bit") {
-    graft.functions.SimHashFingerprint.register(spark)
     val bits = 60
     val docs = Seq(
       (1L, Seq(0L, -1L, 0x7FFFFFFFFFFFFFFFL, Long.MinValue)),
@@ -29,7 +28,6 @@ class SimHashFingerprintSpec extends SparkSuite {
   }
 
   test("the simhash kernel stays inside whole-stage codegen") {
-    graft.functions.SimHashFingerprint.register(spark)
     val df = spark.range(10)
       .select(array(col("id"), col("id") * 31, col("id") + 5).as("hs"))
       .select(expr("simhash_fp(hs, 60)").as("fp"))

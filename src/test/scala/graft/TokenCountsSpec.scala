@@ -24,7 +24,6 @@ class TokenCountsSpec extends SparkSuite {
     (7L, "a a a a a a a a")).toDF("doc_id", "text")
 
   private def kernelTf = {
-    graft.functions.TokenCounts.register(spark)
     fixture.select(col("doc_id"), expr("token_counts(text)").as("s"))
       .select(col("doc_id"), col("s.n_all"), col("s.n_ne"),
         explode(col("s.tcs")).as("t"))
@@ -52,7 +51,6 @@ class TokenCountsSpec extends SparkSuite {
   }
 
   test("tcs entries are in first-occurrence order") {
-    graft.functions.TokenCounts.register(spark)
     val row = fixture.filter(col("doc_id") === 1L)
       .select(expr("transform(token_counts(text).tcs, x -> x.token)").as("ts"))
       .head().getSeq[String](0)
@@ -60,7 +58,6 @@ class TokenCountsSpec extends SparkSuite {
   }
 
   test("NULL text yields a NULL struct (downstream explode drops the doc)") {
-    graft.functions.TokenCounts.register(spark)
     val n = Seq((1L, Option.empty[String]), (2L, Some("a b"))).toDF("doc_id", "text")
       .select(col("doc_id"), expr("token_counts(text)").as("s"))
       .select(col("doc_id"), explode(col("s.tcs")).as("t"))
@@ -69,7 +66,6 @@ class TokenCountsSpec extends SparkSuite {
   }
 
   test("kernel equals declarative on the corpus fixture") {
-    graft.functions.TokenCounts.register(spark)
     val docs = Tables(spark, "/root/testdata/sf0.001", "documents")
     val k = docs.select(col("doc_id"), expr("token_counts(text)").as("s"))
       .select(col("doc_id"), explode(col("s.tcs")).as("t"))
@@ -80,7 +76,6 @@ class TokenCountsSpec extends SparkSuite {
   }
 
   test("kernel runs inside a whole-stage-codegen stage") {
-    graft.functions.TokenCounts.register(spark)
     // a parquet-backed scan: a LocalTableScan constant-folds the
     // projection away before codegen ever runs
     val plan = Tables(spark, "/root/testdata/sf0.001", "documents")

@@ -25,7 +25,6 @@ class TokenRunCountSpec extends SparkSuite {
     (13L, "x" * 5000 + " " + "42" * 100))
 
   test("token_runs equals the declarative class-fold form exactly") {
-    graft.functions.TokenRunCount.register(spark)
     val docs = fixtures.toDF("id", "text")
     val native = docs.select(col("id"), expr("token_runs(text)").as("nt"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -40,7 +39,6 @@ class TokenRunCountSpec extends SparkSuite {
   }
 
   test("non-BMP input counts one token per codepoint, like the oracle") {
-    graft.functions.TokenRunCount.register(spark)
     // U+1F600 (4-byte UTF-8, surrogate pair in UTF-16): the byte walk
     // must count it ONCE, matching DuckDB codepoint semantics — the
     // declarative split('') fold would see two surrogate halves, which
@@ -51,7 +49,6 @@ class TokenRunCountSpec extends SparkSuite {
   }
 
   test("the token_runs kernel stays inside whole-stage codegen") {
-    graft.functions.TokenRunCount.register(spark)
     val plan = spark.range(10).select(concat(lit("doc "), col("id")).as("text"))
       .select(expr("token_runs(text)").as("nt"))
       .queryExecution.executedPlan.toString

@@ -47,7 +47,6 @@ class IncrementalNearDupSpec extends SparkSuite {
     val snapshot = (0 until 3)
       .map(i => (1000L + i, (0 until 12).map(j => s"s${i}t$j").mkString(" ")))
       .toDF("doc_id", "text")
-    graft.functions.MinhashSignature.register(spark)
     val corpArr = TextDedup.shingleArrays(corpus).cache()
     val corpBands = TextDedup.bandKeys(corpArr, 48, 16).cache()
     assert(corpBands.count() == 4800L)
