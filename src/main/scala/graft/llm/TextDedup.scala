@@ -221,7 +221,7 @@ object TextDedup {
     * production), every downstream join is driven by snapshot-sized
     * or candidate-sized inputs, and no corpus-vs-corpus pair is ever
     * generated. */
-  private[graft] def incrementalNearDup(s: SparkSession, snapshot: DataFrame,
+  private[graft] def incrementalNearDup(snapshot: DataFrame,
       corpus: DataFrame, threshold: Double = 0.8): DataFrame = {
     val nHashes = 48
     val bands = 16
@@ -441,7 +441,7 @@ object TextDedup {
       * size. */
     "q151_incremental_neardup" -> ((s: SparkSession, dir: String) => {
       val docs = Tables(s, dir, "documents")
-      incrementalNearDup(s,
+      incrementalNearDup(
         docs.filter(col("doc_id") % 10 === 0),
         docs.filter(col("doc_id") % 10 =!= 0))
     }),

@@ -1,7 +1,7 @@
 package graft.runner
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{AnalysisException, SparkSession}
 import graft.config.PipelineConfig
 import graft.etl.Etl
 import graft.quality.DataQuality
@@ -66,6 +66,23 @@ final class PipelineRunner(
     incident
   }
 
+  /** The path of a source the CSV reader found missing. */
+  private object MissingSource {
+    def unapply(e: Throwable): Option[String] = e match {
+      case a: AnalysisException if a.getCondition == "PATH_NOT_FOUND" =>
+        Some(a.getMessageParameters.getOrDefault("path", ""))
+      case _ => None
+    }
+  }
+
+  /** The `failed` incident that ends the demo when a stage's source
+    * path does not exist (ROADMAP D2: an incident, not a stack trace). */
+  private def sourceMissing(stage: String, path: String,
+      healingActions: String = "{}"): Incident =
+    log(Incident(s"${stage.replace('_', '-')}-${clock()}", pipelineName,
+      "Source data not found", stage, "failed", "SourceNotFoundError",
+      s"Source path does not exist: $path", "{}", healingActions))
+
   /** One pipeline run: ETL → DQ verdict → drift detect/update
     * (`pipeline_runner.py:48-61`). The warehouse write is the run's only
     * data pass; the DQ report and the drift profile are read off the
@@ -85,19 +102,30 @@ final class PipelineRunner(
     (report, drift)
   }
 
-  /** The full demo; returns the incident sequence. */
+  /** The full demo; returns the incident sequence. A missing source
+    * path logs a `failed` incident with error type `SourceNotFoundError`
+    * and ends the demo there. */
   def runDemo(cleanSource: String, brokenSource: String): Seq[Incident] = {
     val incidents = Seq.newBuilder[Incident]
 
     // stage 1: baseline with clean data (:74-93)
-    val (baseReport, _) = runSinglePipeline(cleanSource)
-    incidents += log(Incident(s"baseline-${clock()}", pipelineName,
-      "Baseline run with clean data (v1)", "baseline", "success", "", "",
-      issuesJson(baseReport), "{}"))
+    val baselineRan =
+      try {
+        val (baseReport, _) = runSinglePipeline(cleanSource)
+        incidents += log(Incident(s"baseline-${clock()}", pipelineName,
+          "Baseline run with clean data (v1)", "baseline", "success", "", "",
+          issuesJson(baseReport), "{}"))
+        true
+      } catch {
+        case MissingSource(path) =>
+          incidents += sourceMissing("baseline", path)
+          false
+      }
 
     // stage 2: broken data — DQ failure expected (:110-149)
     val issueReport: Option[DqReport] =
-      try {
+      if (!baselineRan) None
+      else try {
         val (r, _) = runSinglePipeline(brokenSource)
         incidents += log(Incident(s"drifted-${clock()}", pipelineName,
           "Unexpected: v2 data passed quality checks", "drifted", "success", "", "",
@@ -110,6 +138,9 @@ final class PipelineRunner(
             "DataQualityError", "Data quality checks failed",
             issuesJson(e.report), "{}"))
           Some(e.report)
+        case MissingSource(path) =>
+          incidents += sourceMissing("drifted", path)
+          None
       }
 
     issueReport.foreach { report =>
@@ -139,6 +170,8 @@ final class PipelineRunner(
             "Pipeline still failing after healing", "post_healing",
             "failed_after_healing", "DataQualityError", "Data quality checks failed",
             issuesJson(e.report), healingJson(healed.changes)))
+        case MissingSource(path) =>
+          incidents += sourceMissing("post_healing", path, healingJson(healed.changes))
       }
     }
     incidents.result()

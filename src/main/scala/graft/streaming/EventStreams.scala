@@ -709,7 +709,7 @@ object EventStreams {
       // same batch=<id> subdir idempotently
       graft.llm.StateStores.readCommitted(batch.sparkSession, idxPath) { idx =>
         graft.llm.StateStores
-          .bandServe(batch.sparkSession, batch, corpus, idx, threshold)
+          .bandServe(batch, corpus, idx, threshold)
           .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
       }
     }.start()

@@ -8,11 +8,11 @@ import graft.incidents.IncidentLog
 import graft.incidents.IncidentLog.Incident
 import graft.quality.DataQuality
 import graft.quality.DataQuality.DataQualityException
-import graft.runner.PipelineRunner
+import graft.runner.{DemoFixtures, PipelineRunner}
 
 /** Edge paths of the pipeline modules not covered by the golden demo:
   * missing declared columns, unknown declared types, the row-count
-  * floor, and the dashboard lookup helpers. */
+  * floor, a missing source path, and the dashboard lookup helpers. */
 class PipelineEdgeSpec extends SparkSuite {
 
   private def cfg(columns: Seq[ColumnSpec], rowMin: Long = 1): PipelineConfig =
@@ -103,6 +103,34 @@ class PipelineEdgeSpec extends SparkSuite {
     val e = intercept[DataQualityException](runner.runSinglePipeline(dir.resolve("d.csv").toString))
     assert(e.report.rowCount == 0)
     assert(e.report.failedChecks.map(_.checkType) == Seq("row_count_below_min"))
+  }
+
+  test("a missing source path ends the demo in a failed incident, not a stack trace") {
+    val dir = Files.createTempDirectory("graft_nosrc")
+    val ghost = dir.resolve("no_such_batch.csv").toString
+    // each demo gets its own contract, warehouse, profile and log
+    def demo(name: String)(sources: DemoFixtures.Staged => (String, String)): Seq[Incident] = {
+      val staged = DemoFixtures.stage(dir.resolve(name))
+      val incidentsPath = dir.resolve(name).resolve("incidents").toString
+      val (clean, broken) = sources(staged)
+      val got = new PipelineRunner(spark, staged.configPath,
+        dir.resolve(name).resolve("warehouse").toString, incidentsPath, () => "t")
+        .runDemo(clean, broken)
+      assert(IncidentLog.read(spark, incidentsPath).collect().toSet == got.toSet)
+      got
+    }
+    // the broken batch is missing: baseline runs, the drifted run fails
+    // on the source and nothing is healed
+    val drifted = demo("broken")(st => (st.v1, ghost))
+    assert(drifted.map(i => (i.stage, i.status)) ==
+      Seq("baseline" -> "success", "drifted" -> "failed"))
+    assert(drifted(1).error_type == "SourceNotFoundError")
+    assert(drifted(1).error_message.contains("no_such_batch.csv"))
+    // the clean batch is missing: the demo stops at the baseline
+    val baseline = demo("clean")(st => (ghost, st.v2))
+    assert(baseline.map(i => (i.stage, i.status, i.error_type)) ==
+      Seq(("baseline", "failed", "SourceNotFoundError")))
+    assert(baseline.head.error_message.contains("no_such_batch.csv"))
   }
 
   test("dashboard lookups: filterOptions sorted, byRunId finds and misses") {

@@ -40,8 +40,8 @@ class StateCompactionSpec extends SparkSuite {
     val path = StateStores.statePath(sf, "band_index_spec")
     import org.apache.spark.sql.functions._
     def gen(g: Int) = docs.filter(pmod(col("doc_id"), lit(3)) === g)
-    StateStores.bandIndexRows(spark, gen(0)).write.mode("overwrite").parquet(path)
-    StateStores.bandIndexRows(spark, gen(1)).write.mode("append").parquet(path)
+    StateStores.bandIndexRows(gen(0)).write.mode("overwrite").parquet(path)
+    StateStores.bandIndexRows(gen(1)).write.mode("append").parquet(path)
     val before = partFiles(path)
     StateStores.rewriteSwap(spark.read.parquet(path), path)
     val after = partFiles(path)
@@ -49,8 +49,7 @@ class StateCompactionSpec extends SparkSuite {
       s"compaction should shrink the fragment count: $before -> $after")
     // and the rewrite must not lose or duplicate a row
     val n = spark.read.parquet(path).count()
-    val expect = StateStores.bandIndexRows(spark,
-      docs.filter(pmod(col("doc_id"), lit(3)) < 2)).count()
+    val expect = StateStores.bandIndexRows(docs.filter(pmod(col("doc_id"), lit(3)) < 2)).count()
     assert(n == expect, s"compacted rows $n != rebuilt $expect")
   }
 

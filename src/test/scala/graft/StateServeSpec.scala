@@ -18,7 +18,7 @@ class StateServeSpec extends SparkSuite {
   private lazy val bandPath: String = {
     val p = StateStores.servePath(sf, "band_serve_v1", "documents")
     StateStores.seedOnce(p) {
-      StateStores.bandIndexRows(spark, corpus).write.mode("overwrite").parquet(p)
+      StateStores.bandIndexRows(corpus).write.mode("overwrite").parquet(p)
     }
     p
   }
@@ -42,7 +42,7 @@ class StateServeSpec extends SparkSuite {
 
   test("q281: serve path ≡ in-plan rebuild (q151), row for row") {
     val served = StateStores.bandServe(spark, snap, corpus, bandPath).collect()
-    val rebuilt = TextDedup.incrementalNearDup(spark, snap, corpus).collect()
+    val rebuilt = TextDedup.incrementalNearDup(snap, corpus).collect()
     assert(served.toSeq == rebuilt.toSeq,
       "reading the persisted band index must not change the result")
   }

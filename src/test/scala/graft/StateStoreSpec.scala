@@ -26,8 +26,8 @@ class StateStoreSpec extends SparkSuite {
     // stops scaling with the snapshot and this goes loud
     val snap = Tables(spark, sf, "documents")
       .filter(pmod(col("doc_id"), lit(3)) === 1)
-    val plan = StateStores.bandIndexRows(spark, snap)
-      .queryExecution.analyzed.toString + StateStores.bandIndexRows(spark, snap)
+    val plan = StateStores.bandIndexRows(snap)
+      .queryExecution.analyzed.toString + StateStores.bandIndexRows(snap)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("graft_state"),
       s"append derivation must not touch persisted state:\n$plan")
@@ -53,7 +53,7 @@ class StateStoreSpec extends SparkSuite {
     // the sink writes one batch=N partition dir per micro-batch (its
     // replay-idempotence mechanism) — drop the synthetic column
     val state = spark.read.parquet(statePath).drop("batch")
-    val rebuilt = StateStores.bandIndexRows(spark, docs)
+    val rebuilt = StateStores.bandIndexRows(docs)
     assert(state.count() == rebuilt.count())
     assert(state.except(rebuilt).isEmpty && rebuilt.except(state).isEmpty,
       "streamed state table must equal the batch-rebuilt band index")
@@ -64,8 +64,7 @@ class StateStoreSpec extends SparkSuite {
     // from the source docs, and replay it.
     val gen0 = spark.read.parquet(s"$statePath/batch=0")
       .select(pmod(col("doc_id"), lit(3))).head.getLong(0)
-    StateStores.bandIndexRows(spark,
-        docs.filter(pmod(col("doc_id"), lit(3)) === gen0))
+    StateStores.bandIndexRows(docs.filter(pmod(col("doc_id"), lit(3)) === gen0))
       .write.mode("overwrite").parquet(s"$statePath/batch=0")
     val replayed = spark.read.parquet(statePath).drop("batch")
     assert(replayed.count() == rebuilt.count(),

@@ -63,7 +63,7 @@ class StreamingRecoverySpec extends SparkSuite {
     // phase 4: maintained ≡ one-shot batch rebuild, as a multiset
     val state = spark.read.parquet(statePath).drop("batch")
       .groupBy(col("doc_id"), col("bk")).agg(count(lit(1)).as("cm"))
-    val rebuilt = StateStores.bandIndexRows(spark, docs)
+    val rebuilt = StateStores.bandIndexRows(docs)
       .groupBy(col("doc_id"), col("bk")).agg(count(lit(1)).as("cr"))
     val bad = state.join(rebuilt, Seq("doc_id", "bk"), "full_outer")
       .filter(coalesce(col("cm"), lit(0L)) =!= coalesce(col("cr"), lit(0L)))

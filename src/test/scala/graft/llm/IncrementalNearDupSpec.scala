@@ -30,7 +30,7 @@ class IncrementalNearDupSpec extends SparkSuite {
       // disjoint tokens -> kept
       doc(30L, (0 until 10).map(i => s"n$i"))).toDF("doc_id", "text")
     val corpus2 = corpus.union(Seq(doc(2L, (0 until 30).map(i => s"c$i"))).toDF("doc_id", "text"))
-    val kept = TextDedup.incrementalNearDup(spark, snapshot, corpus2)
+    val kept = TextDedup.incrementalNearDup(snapshot, corpus2)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(kept == Set((30L, 8L)),
       s"expected only the novel doc 30 (8 shingles) to survive, got $kept")
@@ -57,7 +57,7 @@ class IncrementalNearDupSpec extends SparkSuite {
     assert(survivors <= 5L,
       s"novel snapshot should be almost fully bloom-rejected, $survivors/48 band rows passed")
     // and the end-to-end result keeps the whole novel snapshot
-    val kept = TextDedup.incrementalNearDup(spark, snapshot, corpus).count()
+    val kept = TextDedup.incrementalNearDup(snapshot, corpus).count()
     assert(kept == 3L)
     spark.catalog.clearCache()
   }
