@@ -57,7 +57,21 @@ object PipelineConfig {
   def load(path: String): PipelineConfig =
     fromYaml(Files.readString(Paths.get(path)))
 
-  def fromYaml(yaml: String): PipelineConfig = {
+  /** A config file that does not parse into a contract: bad YAML, a
+    * missing `columns`/`quality`/`drift` section, or a malformed
+    * value. */
+  final class ConfigError(message: String) extends RuntimeException(message)
+
+  def fromYaml(yaml: String): PipelineConfig =
+    try parse(yaml) catch {
+      case e: com.fasterxml.jackson.core.JsonProcessingException =>
+        throw new ConfigError(s"unparseable YAML: ${e.getOriginalMessage}")
+      case e @ (_: NoSuchElementException | _: ClassCastException |
+          _: NumberFormatException | _: NullPointerException) =>
+        throw new ConfigError(s"malformed config: ${e.getMessage}")
+    }
+
+  private def parse(yaml: String): PipelineConfig = {
     val root = mapper.readValue(yaml, classOf[java.util.Map[String, Object]]).asScala
     val cols = root("columns").asInstanceOf[java.util.Map[String, Object]].asScala.toSeq
       .map { case (name, specObj) =>

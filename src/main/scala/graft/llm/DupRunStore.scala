@@ -95,110 +95,141 @@ object DupRunStore {
   /** EXPLICIT delta-log read schema: a generation with ZERO
     * qualifying runs leaves an empty partition set (bare _SUCCESS, or
     * a part-less gen= dir from the stream sink) — schema inference
-    * would fail on it, while nothing-to-retract is the correct
-    * reading; the declared schema reads the empty log as an empty
-    * frame (DupRunStoreSpec pins the empty-seed lifecycle). */
+    * would fail on it when a compaction folds the log, while
+    * nothing-to-fold is the correct reading; the declared schema reads
+    * the empty log as an empty frame (DupRunStoreSpec pins the
+    * empty-seed lifecycle). */
   private val DeltaSchema = "doc_id BIGINT, source STRING, start_tok INT, " +
     "run_tokens BIGINT, run_fp STRING, delta BIGINT, gen INT"
 
   /** The run-IVM generation log: signed `deltas` (compaction nets
     * them per run site), positional shingle `postings` and the stored
-    * token arrays (`docs`), all `gen=`-partitioned. Compaction is
-    * semantics-preserving for [[runIvmDeltas]]: it reads state only
-    * through `gen <= g` / `gen < g` / `gen === g`, df is a plain row
-    * count relabeling cannot change, and the affected-doc recompute
-    * reads token arrays by doc_id, not by generation. */
+    * token arrays (`docs`), all `gen=`-partitioned. Maintenance
+    * ([[deltaRange]]) reads only `postings` and `docs`, through
+    * `gen <= w` predicates and by doc_id, and df is a plain row count —
+    * so a compaction, which relabels rows to the committed head (below
+    * any later generation), changes nothing it reads. The `deltas` sub
+    * is written, folded and served, never read back by maintenance. */
   private[graft] val RunLog = GenLog("gen",
     GenLog.Sub("deltas", Some(DeltaSchema), GenLog.net(RunKey)),
     GenLog.Sub("postings"), GenLog.Sub("docs"))
 
-  /** Signed run-catalog deltas for generation `gen`, derived from the
-    * persisted STATE alone (positional postings + the stored token
-    * arrays of affected docs — the spec pins that no document text
-    * outside the state store is scanned):
+  /** [[deltaRange]]'s result: the signed deltas (tagged `gen`), the
+    * per-watermark run sites of the docs its window saw (tagged `wm`),
+    * and the release of its cached intermediates, run after the
+    * deltas' write — a live sink derives once per micro-batch, so
+    * un-released cached relations would pile up until LRU pressure. */
+  private[graft] final case class RunDeltas(deltas: DataFrame,
+      runs: DataFrame, done: () => Unit)
+
+  /** The run-catalog maintenance derivation, ONE function for the
+    * demo lifecycles (q418/q421: generations 0..2 over cached corpus
+    * frames) and the live sink (g..g over the persisted state). From
+    * gen-tagged token arrays `arr` (doc_id, source, toks, gen) and
+    * positional postings `pos` (doc_id, i, sh, gen), the signed deltas
+    * of generations lo..hi — the rule the q418 oracle's pc/rc CTEs
+    * state:
     *
-    *  - AFFECTED docs = the new generation's docs ∪ every OLD doc
+    *  - AFFECTED(g) = the docs of generation g ∪ every older doc
     *    holding a position whose shingle's cumulative df crosses
-    *    1 → ≥ 2 at this generation (the only event that can change an
-    *    old doc's duplicated-position set — df never decreases, and a
-    *    shingle already at df ≥ 2 stays there);
-    *  - CREDITS: +1 per run site of an affected doc, recomputed from
-    *    the duplicated-position streaks under the cumulative df;
-    *  - RETRACTIONS: −1 per previously-catalogued site of an affected
-    *    doc (the net of the delta log) — a crosser can EXTEND or MERGE
-    *    an old doc's runs, so its old rows must be debited before the
-    *    recomputed rows land (drop this and the maintained catalog
-    *    permanently disagrees with a rebuild on every doc whose run
-    *    grew after it was first catalogued).
+    *    1 → ≥ 2 at g (the only event that can change an old doc's
+    *    duplicated-position set: df never decreases, and a shingle at
+    *    df ≥ 2 stays there);
+    *  - credits(g)  = the watermark-g runs of AFFECTED(g), delta +1;
+    *  - retracts(g) = the watermark-(g−1) runs of AFFECTED(g), delta
+    *    −1 — a crosser can EXTEND or MERGE an old doc's runs, so its
+    *    old sites are debited as the recomputed ones land. Runs at
+    *    watermark −1 are empty, so generation 0 needs no special case.
     *
-    * Unaffected docs are never touched: their duplicated-position set
-    * is provably invariant, which is what bounds maintenance work at
-    * snapshot volume instead of corpus volume.
+    * Retractions need no read of the delta log: a doc not affected at
+    * h has the same runs at h and h−1, so the net of its log rows
+    * below g IS its watermark-(g−1) run set (the maintained ≡ rebuilt
+    * induction the oracle pins at every generation). A compaction
+    * keeps that true: it relabels rows to the committed head ≤ g−1,
+    * and every watermark ≥ the head counts them unchanged.
     *
-    * Returns the delta frame plus an unpersist thunk for the two
-    * cached intermediates (df state, affected-doc set) — the caller
-    * runs it after the deltas' write action (round-15 ADVICE: the
-    * stream sink calls this once per micro-batch for the stream's
-    * lifetime, so un-released cached relations accumulate until LRU
-    * pressure). */
-  private[graft] def runIvmDeltas(s: SparkSession, statePath: String,
-      gen: Long): (DataFrame, () => Unit) = {
-    val post = s.read.parquet(s"$statePath/postings")
-    // BOTH df states (before/after this generation) from ONE pass
-    // (the q283 round-11 lesson: a second df groupBy re-scans state)
-    val dfs = post.filter(col("gen") <= gen)
-      .groupBy(col("sh")).agg(count(lit(1)).as("dfA"),
-        count_if(col("gen") < gen).as("dfB")).cache()
-    val prior = if (gen == 0) None
-      else Some(s.read.schema(DeltaSchema).parquet(s"$statePath/deltas"))
-    val crossers = dfs.filter(col("dfB") < 2 && col("dfA") >= 2)
-      .select(col("sh"))
-    val affectedOld = post.filter(col("gen") < gen)
-      .join(crossers.hint("shuffle_hash"), Seq("sh"), "left_semi")
-      .select(col("doc_id"))
-    val affected = post.filter(col("gen") === gen).select(col("doc_id"))
-      .union(affectedOld).distinct().cache()
-    // recompute affected docs' runs from the updated duplicated flags
-    val dupPos = post.filter(col("gen") <= gen)
-      .join(affected.hint("shuffle_hash"), Seq("doc_id"), "left_semi")
-      .join(dfs.filter(col("dfA") >= 2).select(col("sh"))
-        .hint("shuffle_hash"), Seq("sh"), "left_semi")
+    * ONE window pass serves every watermark lo−1..hi: the
+    * duplicated-position sets are NESTED (gen ≤ w grows with w and df
+    * is monotone), so one sort per doc over the hi set carries one
+    * running count per watermark, each equal to the row_number a
+    * per-watermark window would give over its own subset. The window
+    * sees only docs affected somewhere in lo..hi — every doc for the
+    * demos' 0..2, the new docs plus the retro-affected old ones for a
+    * live step, never the corpus — and that restriction rides the
+    * window's own doc_id exchange. One fetch-back join against the
+    * token arrays computes every run_fp. Unaffected docs are never
+    * touched: their duplicated-position set is provably invariant,
+    * which bounds a live step at snapshot volume. */
+  private[graft] def deltaRange(arr: DataFrame, pos: DataFrame,
+      lo: Int, hi: Int): RunDeltas = {
+    import GenLog.dfAt
+    val post = pos.filter(col("gen") <= hi)
+    val df = GenLog.cumulativeDf(post, lo, hi).cache()
+    // the generation at which a shingle's df first reaches 2 (at most
+    // one: df is monotone); a crossing at 0 has no older holder
+    val crossAt = ((lo max 1) to hi).foldRight(lit(null).cast("int")) {
+      (g, later) => when(dfAt(g - 1) < 2 && dfAt(g) >= 2, g).otherwise(later) }
+    val crossers = df.select(col("sh"), crossAt.as("g"))
+      .filter(col("g").isNotNull)
+    val affected = post.filter(col("gen") >= lo)
+      .select(col("doc_id"), col("gen").as("g"))
+      .union(post.join(crossers.hint("shuffle_hash"), Seq("sh"))
+        .filter(col("gen") < col("g")).select(col("doc_id"), col("g")))
+      .distinct().cache()
+    // one materialization of both caches before the deltas' action, in
+    // which affected has two consumers that would otherwise race it
+    affected.count()
+    val wms = (lo - 1).max(0) to hi
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc_id")).orderBy(col("i"))
-    val runs = dupPos.withColumn("rk", row_number().over(w))
-      .groupBy(col("doc_id"), (col("i") - col("rk")).as("grp"))
+    val marked = post
+      .join(df.filter(dfAt(hi) >= 2).hint("shuffle_hash"), Seq("sh"))
+      .select(col("doc_id") +: col("i") +: wms.map(wm =>
+        (col("gen") <= wm && dfAt(wm) >= 2).as(s"in$wm")): _*)
+      .join(affected.select(col("doc_id")).hint("shuffle_hash"),
+        Seq("doc_id"), "left_semi")
+    val ranked = marked.select(col("doc_id") +: col("i") +: wms.flatMap(wm =>
+      Seq(col(s"in$wm"), sum(when(col(s"in$wm"), 1L)).over(w).as(s"rk$wm"))): _*)
+    val runs = ranked.select(col("doc_id"), col("i"), explode(array(
+        wms.map(wm => when(col(s"in$wm"), struct(lit(wm).as("wm"),
+          (col("i") - col(s"rk$wm")).as("grp")))): _*)).as("e"))
+      .filter(col("e").isNotNull)
+      .groupBy(col("doc_id"), col("e.wm").as("wm"), col("e.grp").as("grp"))
       .agg(min(col("i")).as("i0"), count(lit(1)).as("len_sh"))
       .filter(col("len_sh") + 2 >= DupRunMinTokens)
-      .select(col("doc_id"), (col("i0") + 1).as("start_tok"),
+      .select(col("doc_id"), col("wm"), (col("i0") + 1).as("start_tok"),
         (col("len_sh") + 2).as("run_tokens"))
-    // run-text fetch-back against the STORED token arrays, affected-
-    // restricted (never the corpus); small run table as build side
-    val docsStore = s.read.parquet(s"$statePath/docs")
-      .filter(col("gen") <= gen)
-      .join(affected.hint("shuffle_hash"), Seq("doc_id"), "left_semi")
-    val credits = runs.hint("shuffle_hash").join(docsStore, "doc_id")
-      .select(col("doc_id"), col("source"), col("start_tok"),
+    // run-text fetch-back against the token arrays; small run table as
+    // build side, so only the runs' docs are read back
+    val sites = runs.hint("shuffle_hash")
+      .join(arr.filter(col("gen") <= hi).drop("gen"), "doc_id")
+      .select(col("doc_id"), col("wm"), col("source"), col("start_tok"),
         col("run_tokens"),
         substring(sha2(expr(
           "concat_ws(' ', slice(toks, start_tok, cast(run_tokens AS int)))"),
-          256), 1, 16).as("run_fp"),
-        lit(1L).as("delta"))
-    val cleanup = () => { dfs.unpersist(); affected.unpersist(); () }
-    prior match {
-      case None => (credits, cleanup)
-      case Some(pr) =>
-        val retracts = pr
-          .filter(col("gen") < gen)
-          .join(affected.hint("shuffle_hash"), Seq("doc_id"), "left_semi")
-          .groupBy(RunKey.map(col): _*)
-          .agg(sum(col("delta")).as("net")).filter(col("net") > 0)
-          .select(RunKey.map(col) :+ lit(-1L).as("delta"): _*)
-        (credits.union(retracts), cleanup)
-    }
+          256), 1, 16).as("run_fp")).cache()
+    val deltas = sites.join(affected.hint("shuffle_hash"), Seq("doc_id"))
+      .filter(col("wm") === col("g") || col("wm") === col("g") - 1)
+      .select(RunKey.map(col) :+
+        when(col("wm") === col("g"), 1L).otherwise(-1L).as("delta") :+
+        col("g").as("gen"): _*)
+    RunDeltas(deltas, sites,
+      () => { df.unpersist(); affected.unpersist(); sites.unpersist(); () })
+  }
+
+  /** Generation `gen`'s live maintenance step: [[deltaRange]] over
+    * gen..gen on the PERSISTED state, reading only the `docs` and
+    * `postings` sub-dirs (the spec pins that neither the delta log nor
+    * document text outside the store is scanned). */
+  private[graft] def persistedDeltas(s: SparkSession, statePath: String,
+      gen: Long): RunDeltas = {
+    val g = Math.toIntExact(gen)
+    deltaRange(s.read.parquet(s"$statePath/docs"),
+      s.read.parquet(s"$statePath/postings"), g, g)
   }
 
   /** The per-generation doc state: token arrays + positional shingle
-    * postings, the inputs [[runIvmDeltas]] maintains from. Postings
+    * postings, the inputs [[deltaRange]] maintains from. Postings
     * positions are the 0-based posexplode index (runs convert to
     * 1-based start_tok, matching [[TextDedup.dupRunSitesOf]]). */
   private[graft] def genState(genDocs: DataFrame): (DataFrame, DataFrame) = {
@@ -211,47 +242,26 @@ object DupRunStore {
     (docsArr, postings)
   }
 
-  /** ONE cached corpus-wide derivation feeding every demo lifecycle
-    * phase (the q283 round-11 lesson, measured there at 2× the whole
-    * query's cost: per-step re-derivation re-scans and re-explodes
-    * identical text once per generation), plus the round-17
-    * orchestration cut: these queries' cost was ~70 serialized
-    * ~0.15 s stage-jobs, pure job-count, so the demo now derives and
-    * writes a RANGE of generations as ONE action per store instead of
-    * one action chain per generation. Identical bytes land on disk
-    * (one `partitionBy("gen")` write of the same per-gen rows), and
-    * every stage inside the single action schedules concurrently.
-    *
-    * The per-generation rows are computed exactly as the ORACLE
-    * defines them (duckRunIvm's pc/rc CTEs — the from-first-principles
-    * statement of the maintenance contract):
-    *
-    *  - credits(g)  = snapshot-g     runs of docs affected at g, +1;
-    *  - retracts(g) = snapshot-(g−1) runs of docs affected at g, −1.
-    *
-    * The sequential maintenance path ([[runIvmDeltas]], what the
-    * stream twin runs) computes retractions by NETTING
-    * the prior delta log; the two are equal row-for-row by the
-    * maintained ≡ rebuilt induction the oracle pins at every
-    * generation (a doc not affected at h has an identical run set at
-    * h and h−1, so the net of a doc's log rows below g IS its
-    * snapshot-(g−1) run set) — which is why the oracle's own rc CTE
-    * counts retractions this way. Freeing retractions from the log
-    * read makes every generation's deltas derivable in parallel from
-    * the cached corpus frames.
-    *
-    * `write(lo, hi)` persists generations lo..hi (docs ‖ postings ‖
-    * deltas through [[GenLog.writeRange]]); `log()` is the
-    * union of the written delta frames (identical rows to the on-disk
-    * log by construction). */
+  /** The demo lifecycles' corpus state: ONE cached derivation of the
+    * doc arrays and postings (generation = doc_id % 3, a pure function
+    * of doc_id projected on top of the caches) feeding every phase —
+    * the q283 round-11 lesson, measured there at 2× the whole query's
+    * cost: per-step re-derivation re-scans and re-explodes identical
+    * text once per generation — and ONE [[deltaRange]] call over
+    * generations 0..2, whose cached deltas every `write(lo, hi)` slices
+    * (docs ‖ postings ‖ deltas through [[GenLog.writeRange]], one
+    * action per store: round-17 measured these queries' cost as ~70
+    * serialized ~0.15 s stage-jobs, pure job count). `deltas` holds
+    * the very rows written; `runsAt(w)` is the watermark-w catalog of
+    * every doc (at 0..2 every doc is affected at its own generation),
+    * so `runsAt(2)` is the from-scratch rebuild. */
   private final case class DemoLifecycle(write: (Int, Int) => Unit,
-      done: () => Unit, arrGen: DataFrame, posGen: DataFrame,
-      log: () => DataFrame, runsAt: Int => DataFrame)
+      arrGen: DataFrame, posGen: DataFrame, deltas: DataFrame,
+      runsAt: Int => DataFrame)
 
   private def demoLifecycle(s: SparkSession, docs: DataFrame,
       statePath: String): DemoLifecycle = {
-    // the stream sink's doc-state derivation; the generation is a pure
-    // function of doc_id, so it is projected on top of the cached frames
+    // the stream sink's doc-state derivation
     val (arr, pos) = genState(docs)
     val arrAll = arr.cache()
     val genOf = pmod(col("doc_id"), lit(3)).cast("int")
@@ -263,92 +273,13 @@ object DupRunStore {
     // the corpus scan+split, which on a CPU-saturated config costs the
     // full derivation per racer (the q413 x100 finding)
     posAll.count()
-    // ONE corpus-wide df pass covering every generation watermark (the
-    // old per-step dfs groupBy re-aggregated the same cached postings
-    // once per generation): watermark G's df is c_G
-    val dfAll = posAll.groupBy(col("sh")).agg(
-      count_if(col("gen") <= 0).as("c0"),
-      count_if(col("gen") <= 1).as("c1"),
-      count(lit(1)).as("c2")).cache()
-    // affected docs for EVERY generation in one pass: own-gen docs
-    // plus, for g ≥ 1, docs holding a position (gen < g) of a shingle
-    // whose df crosses 1 → ≥ 2 at g. A shingle crosses at most once
-    // (df is monotone), so the two whens are exclusive.
-    val crossSh = dfAll.select(col("sh"), explode(array(
-        when(col("c0") < 2 && col("c1") >= 2, 1),
-        when(col("c1") < 2 && col("c2") >= 2, 2))).as("g"))
-      .filter(col("g").isNotNull)
-    val affAll = posAll.select(col("doc_id"), col("gen").as("g"))
-      .union(posAll.join(crossSh.hint("shuffle_hash"), Seq("sh"))
-        .filter(col("gen") < col("g")).select(col("doc_id"), col("g")))
-      .distinct().cache()
-    affAll.count() // materializes dfAll too (single consumer, no race)
-    def aff(g: Int): DataFrame =
-      affAll.filter(col("g") === g).select(col("doc_id"))
-    // ALL THREE watermarks' run catalogs from ONE window pass: the
-    // duplicated-position sets are NESTED (gen ≤ wm grows with wm and
-    // df is monotone, so S0 ⊆ S1 ⊆ S2) — one sort per doc over S2
-    // carries three running counts, each equal to the row_number a
-    // per-watermark window would produce over its own subset, so the
-    // per-watermark streak keys (i − rk_wm) fall out of the same
-    // WindowExec. Restricting docs before or after the streak pass is
-    // equivalent (streaks are per-doc), so the credit/retract doc-set
-    // restriction moves AFTER this shared derivation. One fetch-back
-    // join computes every run_fp. Five window passes (credits ×3,
-    // retracts ×2, plus the rebuild's own) collapse into this one.
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("doc_id")).orderBy(col("i"))
-    val marked = posAll
-      .join(dfAll.filter(col("c2") >= 2).hint("shuffle_hash"), Seq("sh"))
-      .select(col("doc_id"), col("i"),
-        (col("gen") <= 0 && col("c0") >= 2).as("in0"),
-        (col("gen") <= 1 && col("c1") >= 2).as("in1"))
-    val rked = marked.select(col("doc_id"), col("i"), col("in0"), col("in1"),
-      sum(when(col("in0"), 1L)).over(w).as("rk0"),
-      sum(when(col("in1"), 1L)).over(w).as("rk1"),
-      sum(lit(1L)).over(w).as("rk2"))
-    val runsAll = rked.select(col("doc_id"), col("i"), explode(array(
-        when(col("in0"), struct(lit(0).as("wm"), (col("i") - col("rk0")).as("grp"))),
-        when(col("in1"), struct(lit(1).as("wm"), (col("i") - col("rk1")).as("grp"))),
-        struct(lit(2).as("wm"), (col("i") - col("rk2")).as("grp")))).as("e"))
-      .filter(col("e").isNotNull)
-      .groupBy(col("doc_id"), col("e.wm").as("wm"), col("e.grp").as("grp"))
-      .agg(min(col("i")).as("i0"), count(lit(1)).as("len_sh"))
-      .filter(col("len_sh") + 2 >= DupRunMinTokens)
-      .select(col("doc_id"), col("wm"), (col("i0") + 1).as("start_tok"),
-        (col("len_sh") + 2).as("run_tokens"))
-    // run-text fetch-back against the stored token arrays — once for
-    // every watermark's catalog; small run table as build side
-    val runsFp = runsAll.hint("shuffle_hash").join(arrAll, "doc_id")
-      .select(col("doc_id"), col("wm"), col("source"), col("start_tok"),
-        col("run_tokens"),
-        substring(sha2(expr(
-          "concat_ws(' ', slice(toks, start_tok, cast(run_tokens AS int)))"),
-          256), 1, 16).as("run_fp")).cache()
-    runsFp.count()
-    def runsAt(wm: Int): DataFrame =
-      runsFp.filter(col("wm") === wm).drop("wm")
-    def sites(wm: Int, g: Int, delta: Long): DataFrame =
-      runsAt(wm).join(aff(g).hint("shuffle_hash"), Seq("doc_id"), "left_semi")
-        .select(col("doc_id"), col("source"), col("start_tok"),
-          col("run_tokens"), col("run_fp"), lit(delta).as("delta"))
-    def deltasFor(g: Int): DataFrame = {
-      val credits = sites(g, g, 1L)
-      if (g == 0) credits else credits.union(sites(g - 1, g, -1L))
-    }
-    val written = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val write = (lo: Int, hi: Int) => {
-      val dAll = (lo to hi).map(g => deltasFor(g).withColumn("gen", lit(g)))
-        .reduce(_.union(_)).cache()
-      written += dAll
+    val d = deltaRange(arrGen, posAll, 0, 2)
+    val deltas = d.deltas.cache()
+    val write = (lo: Int, hi: Int) =>
       RunLog.writeRange(statePath, lo, hi)(
-        "docs" -> arrGen, "postings" -> posAll, "deltas" -> dAll)
-    }
-    val done = () => { arrAll.unpersist(); posAll.unpersist()
-      dfAll.unpersist(); affAll.unpersist(); runsFp.unpersist()
-      written.foreach(_.unpersist()); () }
-    DemoLifecycle(write, done, arrGen, posAll,
-      () => written.reduce(_.union(_)), runsAt)
+        "docs" -> arrGen, "postings" -> posAll, "deltas" -> deltas)
+    DemoLifecycle(write, arrGen, posAll, deltas,
+      wm => d.runs.filter(col("wm") === wm).drop("wm"))
   }
 
   // ---------------------------------------------------------------
@@ -564,7 +495,7 @@ object DupRunStore {
       * spans make the hard path fire for real: a gen-1 doc sharing a
       * span with a gen-0 doc flips the span's shingles from df 1 to 2,
       * retroactively creating runs in the OLD doc — drop the
-      * affected-doc recompute or the retraction netting and
+      * affected-doc recompute or the retractions and
       * n_mismatch goes red. */
     "q418_dup_run_store_ivm" -> ((s: SparkSession, dir: String) => {
       val docs = Tables(s, dir, "documents")
@@ -572,7 +503,7 @@ object DupRunStore {
       val lc = demoLifecycle(s, docs, path)
       lc.write(0, 2)
       // the final contract READS THE STORE (one tiny runs-sized scan):
-      // lc.log()'s cached frames carry the whole derivation lineage,
+      // lc.deltas' cached frame carries the whole derivation lineage,
       // and analyzing that ~20k-line plan costs more driver time than
       // the parquet read costs executors (guide §7.3)
       val deltas = s.read.parquet(s"$path/deltas")
@@ -665,7 +596,7 @@ object DupRunStore {
       // fold/collapse inputs from the lifecycle's cached frames (this
       // invocation wrote them moments ago); the swaps still rewrite
       // the store on disk
-      RunLog.compact(s, path, watermark = 1, Map("deltas" -> lc.log(),
+      RunLog.compact(s, path, watermark = 1, Map("deltas" -> lc.deltas,
         "postings" -> lc.posGen, "docs" -> lc.arrGen))
       // temporal by necessity: the folded-base size must be read
       // BETWEEN the compact and the gen-2 append — its own tiny action

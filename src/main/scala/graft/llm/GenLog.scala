@@ -1,7 +1,7 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, lit, sum}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, count, count_if, lit, sum}
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** One GENERATION-LOG store lifecycle — the partition layout and the
@@ -196,4 +196,21 @@ object GenLog {
   def net(keys: Seq[String]): DataFrame => DataFrame =
     _.groupBy(keys.map(col): _*).agg(sum(col("delta")).as("delta"))
       .filter(col("delta") > 0)
+
+  /** The per-shingle cumulative df table of a `gen`-tagged postings
+    * frame at every watermark lo−1..hi, from ONE aggregation pass:
+    * column `df<w>` counts the `sh` rows with gen ≤ w. Read a
+    * watermark through [[dfAt]]; below generation 0 it is 0, so no
+    * column is emitted for it. Postings relabeled by a compaction fold
+    * keep their count at every watermark ≥ the fold's head. */
+  def cumulativeDf(post: DataFrame, lo: Int, hi: Int): DataFrame = {
+    val wms = (lo - 1).max(0) to hi
+    val counts = wms.map(w =>
+      (if (w == hi) count(lit(1)) else count_if(col("gen") <= w)).as(s"df$w"))
+    post.filter(col("gen") <= hi).groupBy(col("sh"))
+      .agg(counts.head, counts.tail: _*)
+  }
+
+  /** Watermark `w`'s df column of a [[cumulativeDf]] table. */
+  def dfAt(w: Int): Column = if (w < 0) lit(0L) else col(s"df$w")
 }

@@ -131,72 +131,6 @@ object PairGraph {
     * uses DfCap = 512; the mechanism is cap-independent). */
   private[graft] val IvmCap = 4
 
-  /** Signed pair-graph deltas for generation `gen`, derived from the
-    * POSTINGS STATE ALONE (cumulative df is a count over the per-doc-
-    * distinct postings — the spec pins that no document text is
-    * scanned here):
-    *
-    *  - CREDITS: +1 per (pair, shingle) whose later endpoint arrives
-    *    in `gen`, provided the shingle's cumulative df (after this
-    *    generation) is still ≤ cap;
-    *  - RETRACTIONS: when a shingle's cumulative df CROSSES the cap
-    *    at this generation, every previously-credited pair among its
-    *    prior holders gets −1 — without this, the maintained graph
-    *    permanently disagrees with a from-scratch rebuild on every
-    *    boilerplate shingle that saturates later than it was first
-    *    seen. Bounded work: a crosser has ≤ cap prior holders, so
-    *    ≤ C(cap, 2) debit rows each.
-    */
-  private[graft] def ivmDeltas(s: SparkSession, statePath: String,
-      gen: Long, cap: Int): DataFrame = {
-    val post = s.read.parquet(s"$statePath/postings")
-    // cumulative df derives from the postings state itself (postings
-    // are per-doc-distinct, so count ≡ df) — a separate df-increment
-    // table was redundant state and three extra write jobs per run.
-    // BOTH df states (before/after this generation) come from ONE
-    // aggregation pass — count_if(gen < g) rides the same groupBy as
-    // the total, and the live/crosser branches reuse its exchange
-    // (round-11: the old separate dfBefore groupBy re-scanned the
-    // state and added two AQE stage-jobs per maintenance step; on a
-    // lifecycle query whose cost IS job count, that was 20% of q283)
-    val dfs = post.filter(col("gen") <= gen)
-      .groupBy(col("sh")).agg(count(lit(1)).as("dfA"),
-        count_if(col("gen") < gen).as("dfB"))
-    ivmDeltasFrom(post, dfs, gen, cap)
-  }
-
-  /** [[ivmDeltas]] with the postings state and the (sh, dfA, dfB) df
-    * table supplied by the caller — the q283/q321 demos pass their one
-    * cached corpus derivation (and slices of one fused all-watermarks
-    * df pass) instead of re-reading the parquet this same invocation
-    * just wrote; content identical by construction, and the stream /
-    * spec wrapper above still reads persisted state only. */
-  private[graft] def ivmDeltasFrom(post: DataFrame, dfs: DataFrame,
-      gen: Long, cap: Int): DataFrame = {
-    val live = dfs.filter(col("dfA") <= cap).select(col("sh"))
-    val pg = post.filter(col("gen") === gen)
-      .join(live.hint("shuffle_hash"), Seq("sh"), "left_semi")
-    val credits = pg.as("a")
-      .join(post.filter(col("gen") <= gen).as("b").hint("shuffle_hash"),
-        col("a.sh") === col("b.sh") &&
-          (col("b.gen") < gen ||
-            (col("b.gen") === gen && col("a.doc_id") < col("b.doc_id"))))
-      .select(least(col("a.doc_id"), col("b.doc_id")).as("d1"),
-        greatest(col("a.doc_id"), col("b.doc_id")).as("d2"),
-        lit(1L).as("delta"))
-    val crossers = dfs
-      .filter(col("dfB") >= 2 && col("dfB") <= cap && col("dfA") > cap)
-      .select(col("sh"))
-    val prior = post.filter(col("gen") < gen)
-      .join(crossers.hint("shuffle_hash"), Seq("sh"), "left_semi")
-    val retracts = prior.as("a")
-      .join(prior.as("b").hint("shuffle_hash"),
-        col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"),
-        lit(-1L).as("delta"))
-    credits.union(retracts)
-  }
-
   /** The pair-IVM generation log: signed `deltas` (compaction nets
     * them per pair) and per-doc-distinct shingle `postings`, both
     * `gen=`-partitioned. Compaction is semantics-preserving because
@@ -209,36 +143,78 @@ object PairGraph {
     GenLog.Sub("deltas", fold = GenLog.net(Seq("d1", "d2"))),
     GenLog.Sub("postings"))
 
-  /** The demo lifecycles' signed deltas for generations lo..hi, each
-    * tagged with its `gen` — every generation's deltas derive from the
-    * cached postings mirror alone, so the whole range is independent
-    * given the fused df table and lands in ONE write
-    * ([[GenLog.writeRange]], round-17: the per-generation action chain
-    * was the queries' cost — job count, not data). `dfAll` carries
-    * (sh, c0, c1, c2) cumulative counts; watermark g's df slice is
-    * (c_g, c_{g-1}). */
-  private def ivmDeltaRange(pgAll: DataFrame, dfAll: DataFrame,
+  /** Signed pair-graph deltas of generations lo..hi, each row tagged
+    * with its `gen`, from the gen-tagged per-doc-distinct postings
+    * `post` alone (cumulative df is a count over them — the spec pins
+    * that no document text is scanned) and their
+    * [[GenLog.cumulativeDf]] table `df`:
+    *
+    *  - CREDITS: +1 per (pair, shingle) whose later endpoint arrives
+    *    in g, provided the shingle's cumulative df at g is still
+    *    ≤ cap;
+    *  - RETRACTIONS: when a shingle's cumulative df CROSSES the cap
+    *    at g, every previously-credited pair among its prior holders
+    *    gets −1 — without this, the maintained graph permanently
+    *    disagrees with a from-scratch rebuild on every boilerplate
+    *    shingle that saturates later than it was first seen. Bounded
+    *    work: a crosser has ≤ cap prior holders, so ≤ C(cap, 2) debit
+    *    rows each.
+    *
+    * Every generation derives from the same inputs, so the demos
+    * write a whole range in ONE action per sub ([[GenLog.writeRange]],
+    * round-17: the per-generation action chain was the queries' cost —
+    * job count, not data) and the live sink runs the range g..g. */
+  private def ivmDeltaRange(post: DataFrame, df: DataFrame,
       lo: Int, hi: Int, cap: Int): DataFrame = {
-    def dfsAt(g: Int) = dfAll.select(col("sh"), col(s"c$g").as("dfA"),
-      (if (g == 0) lit(0L) else col(s"c${g - 1}")).as("dfB"))
-    (lo to hi).map(g =>
-        ivmDeltasFrom(pgAll, dfsAt(g), g, cap).withColumn("gen", lit(g)))
-      .reduce(_.union(_))
+    import GenLog.dfAt
+    (lo to hi).map { g =>
+      val live = df.filter(dfAt(g) <= cap).select(col("sh"))
+      val pg = post.filter(col("gen") === g)
+        .join(live.hint("shuffle_hash"), Seq("sh"), "left_semi")
+      val credits = pg.as("a")
+        .join(post.filter(col("gen") <= g).as("b").hint("shuffle_hash"),
+          col("a.sh") === col("b.sh") &&
+            (col("b.gen") < g ||
+              (col("b.gen") === g && col("a.doc_id") < col("b.doc_id"))))
+        .select(least(col("a.doc_id"), col("b.doc_id")).as("d1"),
+          greatest(col("a.doc_id"), col("b.doc_id")).as("d2"),
+          lit(1L).as("delta"))
+      val crossers = df.filter(dfAt(g - 1) >= 2 && dfAt(g - 1) <= cap &&
+          dfAt(g) > cap)
+        .select(col("sh"))
+      val prior = post.filter(col("gen") < g)
+        .join(crossers.hint("shuffle_hash"), Seq("sh"), "left_semi")
+      val retracts = prior.as("a")
+        .join(prior.as("b").hint("shuffle_hash"),
+          col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
+        .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"),
+          lit(-1L).as("delta"))
+      credits.union(retracts).withColumn("gen", lit(g))
+    }.reduce(_.union(_))
+  }
+
+  /** Generation `gen`'s signed deltas (no `gen` column — the live sink
+    * writes them into their own `gen=` dir) from the PERSISTED
+    * postings state alone: [[ivmDeltaRange]] over gen..gen, the df
+    * table derived from the same read. */
+  private[graft] def ivmDeltas(s: SparkSession, statePath: String,
+      gen: Long, cap: Int): DataFrame = {
+    val post = s.read.parquet(s"$statePath/postings")
+    val g = Math.toIntExact(gen)
+    ivmDeltaRange(post, GenLog.cumulativeDf(post, g, g), g, g, cap).drop("gen")
   }
 
   /** The demo lifecycles' cached corpus derivation: per-doc-distinct
-    * shingle postings with the generation column, plus the fused
-    * all-watermarks df table — both cached and MATERIALIZED (the two
-    * parallel [[GenLog.writeRange]] writes would otherwise race the
-    * unpopulated cache and each re-run the corpus scan). */
+    * shingle postings with the generation column, plus their
+    * watermark 0..2 [[GenLog.cumulativeDf]] table — both cached and
+    * MATERIALIZED (the two parallel [[GenLog.writeRange]] writes would
+    * otherwise race the unpopulated cache and each re-run the corpus
+    * scan). */
   private def demoState(docs: DataFrame, genCol: org.apache.spark.sql.Column)
       : (DataFrame, DataFrame) = {
     val pgAll = TextDedup.explodeShingles(TextDedup.shingleArrays(docs))
       .withColumn("gen", genCol.cast("int")).cache()
-    val dfAll = pgAll.groupBy(col("sh")).agg(
-      count_if(col("gen") <= 0).as("c0"),
-      count_if(col("gen") <= 1).as("c1"),
-      count(lit(1)).as("c2")).cache()
+    val dfAll = GenLog.cumulativeDf(pgAll, 0, 2).cache()
     dfAll.count() // materializes pgAll too (single consumer, no race)
     (pgAll, dfAll)
   }
@@ -337,10 +313,10 @@ object PairGraph {
       val maintained = deltas.groupBy(col("d1"), col("d2"))
         .agg(sum(col("delta")).as("im")).filter(col("im") > 0)
       // from-scratch rebuild over the FINAL cap-4 universe; the df
-      // filter reuses the fused df pass (c2 = final-watermark df)
+      // filter reuses the fused df pass (df2 = final-watermark df)
       // cached: both sides of the rebuild self-join read this slice
       val cappedF = pgAll.drop("gen").join(
-        dfAll.filter(col("c2") <= IvmCap).select(col("sh"))
+        dfAll.filter(GenLog.dfAt(2) <= IvmCap).select(col("sh"))
           .hint("shuffle_hash"),
         Seq("sh"), "left_semi").cache()
       // materialize once: AQE submits the self-join's two shuffle
@@ -419,7 +395,7 @@ object PairGraph {
       val maintained = deltas.groupBy(col("d1"), col("d2"))
         .agg(sum(col("delta")).as("im")).filter(col("im") > 0)
       val cappedF = pgAll.drop("gen").join(
-        dfAll.filter(col("c2") <= IvmCap).select(col("sh"))
+        dfAll.filter(GenLog.dfAt(2) <= IvmCap).select(col("sh"))
           .hint("shuffle_hash"),
         Seq("sh"), "left_semi").cache()
       cappedF.count() // single materialization — see q283

@@ -505,6 +505,31 @@ object StateStores {
     }
   }
 
+  /** One versioned-fold step: read the newest committed version
+    * strictly below `id` ([[latestVersionBelow]]), publish
+    * `update(prev)` as version `id` ([[writeVersion]]) and prune to the
+    * newest `keep` ([[pruneVersions]]). A replay of `id` reads the same
+    * intact predecessor and swaps identical bytes in again. */
+  private[graft] def foldVersion(s: SparkSession, path: String, id: Long,
+      keep: Int)(update: DataFrame => DataFrame): Unit = {
+    val prev = latestVersionBelow(path, id)
+    writeVersion(update(s.read.parquet(s"$path/v=$prev")), path, id)
+    pruneVersions(path, keep)
+  }
+
+  /** A live versioned-fold sink: each micro-batch is one [[foldVersion]]
+    * step, `update(prev, batch)` folding the batch into its
+    * predecessor. */
+  private[graft] def foldVersionSink(rows: DataFrame, path: String,
+      checkpoint: Option[String], keep: Int)
+      (update: (DataFrame, DataFrame) => DataFrame)
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    val w = rows.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
+      foldVersion(batch.sparkSession, path, id, keep)(update(_, batch))
+    }
+    checkpoint.fold(w)(c => w.option("checkpointLocation", c)).start()
+  }
+
   /** Serve read of a versioned store's NEWEST committed snapshot,
     * hardened against the cross-process GC race: a reader lists the
     * versions, picks the max, and a concurrent [[pruneVersions]] in

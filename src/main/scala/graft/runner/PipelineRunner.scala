@@ -1,7 +1,7 @@
 package graft.runner
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.spark.sql.{AnalysisException, SparkSession}
+import org.apache.spark.sql.SparkSession
 import graft.config.PipelineConfig
 import graft.etl.Etl
 import graft.quality.DataQuality
@@ -66,22 +66,15 @@ final class PipelineRunner(
     incident
   }
 
-  /** The path of a source the CSV reader found missing. */
-  private object MissingSource {
-    def unapply(e: Throwable): Option[String] = e match {
-      case a: AnalysisException if a.getCondition == "PATH_NOT_FOUND" =>
-        Some(a.getMessageParameters.getOrDefault("path", ""))
-      case _ => None
-    }
+  /** Whether a source path (or glob) matches nothing — checked on the
+    * driver before the stage runs, so a missing batch never reaches a
+    * failing Spark read (or the error logs of the session's query
+    * listeners). */
+  private def sourceAbsent(path: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    Option(p.getFileSystem(spark.sparkContext.hadoopConfiguration).globStatus(p))
+      .forall(_.isEmpty)
   }
-
-  /** The `failed` incident that ends the demo when a stage's source
-    * path does not exist (ROADMAP D2: an incident, not a stack trace). */
-  private def sourceMissing(stage: String, path: String,
-      healingActions: String = "{}"): Incident =
-    log(Incident(s"${stage.replace('_', '-')}-${clock()}", pipelineName,
-      "Source data not found", stage, "failed", "SourceNotFoundError",
-      s"Source path does not exist: $path", "{}", healingActions))
 
   /** One pipeline run: ETL → DQ verdict → drift detect/update
     * (`pipeline_runner.py:48-61`). The warehouse write is the run's only
@@ -102,46 +95,56 @@ final class PipelineRunner(
     (report, drift)
   }
 
-  /** The full demo; returns the incident sequence. A missing source
-    * path logs a `failed` incident with error type `SourceNotFoundError`
-    * and ends the demo there. */
+  /** The full demo; returns the incident sequence. A stage that
+    * cannot start — its source path matches nothing, or the contract
+    * does not parse — logs a `failed` incident with error type
+    * `SourceNotFoundError` or `ConfigError` and ends the demo there
+    * (ROADMAP D2: an incident, not a stack trace). */
   def runDemo(cleanSource: String, brokenSource: String): Seq[Incident] = {
     val incidents = Seq.newBuilder[Incident]
+    def guarded[T](stage: String, source: String, healingActions: String = "{}")
+        (run: => T): Option[T] = {
+      def fail(description: String, errorType: String, message: String) = {
+        incidents += log(Incident(s"${stage.replace('_', '-')}-${clock()}", pipelineName,
+          description, stage, "failed", errorType, message, "{}", healingActions))
+        None
+      }
+      if (sourceAbsent(source))
+        fail("Source data not found", "SourceNotFoundError",
+          s"Source path does not exist: $source")
+      else try Some(run) catch {
+        case e: PipelineConfig.ConfigError =>
+          fail("Pipeline config could not be parsed", "ConfigError", e.getMessage)
+      }
+    }
 
     // stage 1: baseline with clean data (:74-93)
-    val baselineRan =
-      try {
-        val (baseReport, _) = runSinglePipeline(cleanSource)
-        incidents += log(Incident(s"baseline-${clock()}", pipelineName,
-          "Baseline run with clean data (v1)", "baseline", "success", "", "",
-          issuesJson(baseReport), "{}"))
-        true
-      } catch {
-        case MissingSource(path) =>
-          incidents += sourceMissing("baseline", path)
-          false
-      }
+    val baselineRan = guarded("baseline", cleanSource) {
+      val (baseReport, _) = runSinglePipeline(cleanSource)
+      incidents += log(Incident(s"baseline-${clock()}", pipelineName,
+        "Baseline run with clean data (v1)", "baseline", "success", "", "",
+        issuesJson(baseReport), "{}"))
+    }.isDefined
 
     // stage 2: broken data — DQ failure expected (:110-149)
     val issueReport: Option[DqReport] =
       if (!baselineRan) None
-      else try {
-        val (r, _) = runSinglePipeline(brokenSource)
-        incidents += log(Incident(s"drifted-${clock()}", pipelineName,
-          "Unexpected: v2 data passed quality checks", "drifted", "success", "", "",
-          issuesJson(r), "{}"))
-        None
-      } catch {
-        case e: DataQualityException =>
+      else guarded("drifted", brokenSource) {
+        try {
+          val (r, _) = runSinglePipeline(brokenSource)
           incidents += log(Incident(s"drifted-${clock()}", pipelineName,
-            "Run with drifted/broken data (v2)", "drifted", "failed",
-            "DataQualityError", "Data quality checks failed",
-            issuesJson(e.report), "{}"))
-          Some(e.report)
-        case MissingSource(path) =>
-          incidents += sourceMissing("drifted", path)
+            "Unexpected: v2 data passed quality checks", "drifted", "success", "", "",
+            issuesJson(r), "{}"))
           None
-      }
+        } catch {
+          case e: DataQualityException =>
+            incidents += log(Incident(s"drifted-${clock()}", pipelineName,
+              "Run with drifted/broken data (v2)", "drifted", "failed",
+              "DataQualityError", "Data quality checks failed",
+              issuesJson(e.report), "{}"))
+            Some(e.report)
+        }
+      }.flatten
 
     issueReport.foreach { report =>
       // stage 3: healing (:172-189)
@@ -159,19 +162,19 @@ final class PipelineRunner(
       }
 
       // stage 4: post-healing re-run (:191-223)
-      try {
-        val (r, _) = runSinglePipeline(brokenSource)
-        incidents += log(Incident(s"post-healing-${clock()}", pipelineName,
-          "Pipeline recovered after self-healing", "post_healing", "healed_success",
-          "", "", issuesJson(r), healingJson(healed.changes)))
-      } catch {
-        case e: DataQualityException =>
+      guarded("post_healing", brokenSource, healingJson(healed.changes)) {
+        try {
+          val (r, _) = runSinglePipeline(brokenSource)
           incidents += log(Incident(s"post-healing-${clock()}", pipelineName,
-            "Pipeline still failing after healing", "post_healing",
-            "failed_after_healing", "DataQualityError", "Data quality checks failed",
-            issuesJson(e.report), healingJson(healed.changes)))
-        case MissingSource(path) =>
-          incidents += sourceMissing("post_healing", path, healingJson(healed.changes))
+            "Pipeline recovered after self-healing", "post_healing", "healed_success",
+            "", "", issuesJson(r), healingJson(healed.changes)))
+        } catch {
+          case e: DataQualityException =>
+            incidents += log(Incident(s"post-healing-${clock()}", pipelineName,
+              "Pipeline still failing after healing", "post_healing",
+              "failed_after_healing", "DataQualityError", "Data quality checks failed",
+              issuesJson(e.report), healingJson(healed.changes)))
+        }
       }
     }
     incidents.result()

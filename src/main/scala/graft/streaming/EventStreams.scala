@@ -746,16 +746,21 @@ object EventStreams {
   }
 
   /** LIVE duplicated-run catalog maintenance — the streaming twin of
-    * q418's batch [[graft.llm.DupRunStore.runIvmDeltas]] (the round-14
-    * verdict's last store-parity gap): each micro-batch of documents
-    * (doc_id, source, text) lands its doc/posting state and signed
-    * run-catalog deltas replay-idempotently into `gen=<batchId>`
-    * partition dirs. Retroactive run creation — a streamed doc
-    * flipping a shingle's df from 1 to ≥ 2 creates runs in documents
-    * from EARLIER micro-batches — rides the same state-only delta
-    * derivation as batch maintenance (DupRunStreamSpec pins
-    * maintained ≡ rebuilt, the retro path actually firing, and
-    * commit-window replay idempotence). */
+    * q418 (the round-14 verdict's last store-parity gap): each
+    * micro-batch of documents (doc_id, source, text) lands its
+    * doc/posting state, then its signed run-catalog deltas,
+    * replay-idempotently into `gen=<batchId>` partition dirs. The
+    * deltas come from the ONE derivation the q418/q421 demos run
+    * ([[graft.llm.DupRunStore.deltaRange]], here over batchId..batchId
+    * on the persisted `docs`/`postings`): credits are the batch's and
+    * the retro-affected old docs' runs at this watermark, retractions
+    * the same docs' runs at the previous one — the delta log is never
+    * read back. Retroactive run creation — a streamed doc flipping a
+    * shingle's df from 1 to ≥ 2 creates runs in documents from EARLIER
+    * micro-batches — is thereby the demo's code path
+    * (DupRunStreamSpec pins maintained ≡ rebuilt, the retro path
+    * actually firing, mid-stream compaction and commit-window replay
+    * idempotence). */
   def dupRunIvmSink(docs: DataFrame, statePath: String,
       checkpoint: Option[String] = None,
       autoCompactEvery: Int = graft.llm.GenLog.CompactEvery)
@@ -765,9 +770,10 @@ object EventStreams {
       val (docsArr, postings) = graft.llm.DupRunStore.genState(batch)
       log.step(statePath, id)("docs" -> docsArr, "postings" -> postings)
       // the deltas read this generation's just-written state
-      val (deltas, done) =
-        graft.llm.DupRunStore.runIvmDeltas(batch.sparkSession, statePath, id)
-      try log.step(statePath, id)("deltas" -> deltas) finally done()
+      val d = graft.llm.DupRunStore
+        .persistedDeltas(batch.sparkSession, statePath, id)
+      try log.step(statePath, id)("deltas" -> d.deltas.drop("gen"))
+      finally d.done()
     }
   }
 
@@ -817,23 +823,15 @@ object EventStreams {
       checkpoint: Option[String] = None,
       retainVersions: Int = 4)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val w = vecs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val s = batch.sparkSession
-      val prev = graft.llm.StateStores.latestVersionBelow(statePath, batchId)
-      val st = s.read.parquet(s"$statePath/v=$prev")
-      // atomic version publish (round-12 ADVICE): temp dir + rename,
-      // so a reader serving "the max version" can never see a
-      // partially-written dir — writeVersion also re-swaps identical
-      // bytes on an at-least-once replay
-      graft.llm.StateStores.writeVersion(
-        graft.llm.StateStores.centroidUpdateRaw(s, st, batch)
-          .select(col("cent_id"), col("pos"), col("coord_raw").as("coord"),
-            (col("n_before") + col("n_added")).as("n")),
-        statePath, batchId)
-      graft.llm.StateStores.pruneVersions(statePath, retainVersions)
-      ()
+    // the atomic publish (temp dir + rename) means a reader serving
+    // "the max version" never sees a partially-written dir, and an
+    // at-least-once replay re-swaps identical bytes
+    graft.llm.StateStores.foldVersionSink(vecs, statePath, checkpoint,
+        retainVersions) { (st, batch) =>
+      graft.llm.StateStores.centroidUpdateRaw(batch.sparkSession, st, batch)
+        .select(col("cent_id"), col("pos"), col("coord_raw").as("coord"),
+          (col("n_before") + col("n_added")).as("n"))
     }
-    checkpoint.fold(w)(c => w.option("checkpointLocation", c)).start()
   }
 
   /** LIVE PQ-codebook maintenance — the round-12 verdict's Missing #2
@@ -854,20 +852,13 @@ object EventStreams {
       checkpoint: Option[String] = None,
       retainVersions: Int = 4)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val w = vecs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val s = batch.sparkSession
-      val prev = graft.llm.StateStores.latestVersionBelow(statePath, batchId)
-      val st = s.read.parquet(s"$statePath/v=$prev")
-      graft.llm.StateStores.writeVersion(
-        graft.llm.StateStores.pqBookUpdateRaw(s, st, batch)
-          .select(col("sub"), col("code"), col("pos"),
-            col("coord_raw").as("coord"),
-            (col("n_before") + col("n_added")).as("n")),
-        statePath, batchId)
-      graft.llm.StateStores.pruneVersions(statePath, retainVersions)
-      ()
+    graft.llm.StateStores.foldVersionSink(vecs, statePath, checkpoint,
+        retainVersions) { (st, batch) =>
+      graft.llm.StateStores.pqBookUpdateRaw(batch.sparkSession, st, batch)
+        .select(col("sub"), col("code"), col("pos"),
+          col("coord_raw").as("coord"),
+          (col("n_before") + col("n_added")).as("n"))
     }
-    checkpoint.fold(w)(c => w.option("checkpointLocation", c)).start()
   }
 
   /** LIVE BPE merge-table maintenance — the last persisted model
@@ -923,17 +914,12 @@ object EventStreams {
       val s = batch.sparkSession
       import org.apache.spark.sql.functions._
       // 1) word-count fold, versioned
-      val prev = graft.llm.StateStores.latestVersionBelow(wfPath, batchId)
-      val st = s.read.parquet(s"$wfPath/v=$prev")
       val batchCounts = batch.filter(col("text").isNotNull)
         .select(explode(split(col("text"), " ")).as("w"))
         .filter(length(col("w")) > 0)
         .groupBy(col("w")).agg(count(lit(1)).as("f"))
-      graft.llm.StateStores.writeVersion(
-        st.unionByName(batchCounts)
-          .groupBy(col("w")).agg(sum(col("f")).as("f")),
-        wfPath, batchId)
-      graft.llm.StateStores.pruneVersions(wfPath, retainVersions)
+      graft.llm.StateStores.foldVersion(s, wfPath, batchId, retainVersions)(
+        _.unionByName(batchCounts).groupBy(col("w")).agg(sum(col("f")).as("f")))
       // 2) head-vocab drift check against the STANDING merge version
       val mPrev = graft.llm.StateStores.latestVersionBelow(mPath, batchId)
       val trainedHead = s.read.parquet(s"$mPath/v=$mPrev")

@@ -12,7 +12,8 @@ import graft.runner.{DemoFixtures, PipelineRunner}
 
 /** Edge paths of the pipeline modules not covered by the golden demo:
   * missing declared columns, unknown declared types, the row-count
-  * floor, a missing source path, and the dashboard lookup helpers. */
+  * floor, a missing source path, a config that does not parse, and
+  * the dashboard lookup helpers. */
 class PipelineEdgeSpec extends SparkSuite {
 
   private def cfg(columns: Seq[ColumnSpec], rowMin: Long = 1): PipelineConfig =
@@ -108,6 +109,17 @@ class PipelineEdgeSpec extends SparkSuite {
   test("a missing source path ends the demo in a failed incident, not a stack trace") {
     val dir = Files.createTempDirectory("graft_nosrc")
     val ghost = dir.resolve("no_such_batch.csv").toString
+    // a failed read would reach every query listener of the session
+    // (and its ERROR log); the driver-side check must end the run first
+    val failures = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit = ()
+      def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit =
+        failures.incrementAndGet()
+    }
+    spark.listenerManager.register(listener)
     // each demo gets its own contract, warehouse, profile and log
     def demo(name: String)(sources: DemoFixtures.Staged => (String, String)): Seq[Incident] = {
       val staged = DemoFixtures.stage(dir.resolve(name))
@@ -131,6 +143,29 @@ class PipelineEdgeSpec extends SparkSuite {
     assert(baseline.map(i => (i.stage, i.status, i.error_type)) ==
       Seq(("baseline", "failed", "SourceNotFoundError")))
     assert(baseline.head.error_message.contains("no_such_batch.csv"))
+    org.apache.spark.sql.GraftSqlBridge.drainListenerBus(spark.sparkContext)
+    spark.listenerManager.unregister(listener)
+    assert(failures.get == 0, "a query failed on the missing source")
+  }
+
+  test("a config that does not parse ends the demo in a ConfigError incident") {
+    val dir = Files.createTempDirectory("graft_badcfg")
+    Seq(
+      "bad_yaml" -> "columns: {id: {type: int\nquality: [",
+      "no_drift" -> "columns: {id: {type: int}}\nquality: {row_count_min: 1}\n",
+      "no_columns" -> "quality: {row_count_min: 1}\ndrift: {profile_path: ''}\n"
+    ).foreach { case (name, yaml) =>
+      val staged = DemoFixtures.stage(dir.resolve(name))
+      Files.writeString(java.nio.file.Paths.get(staged.configPath), yaml)
+      val incidentsPath = dir.resolve(name).resolve("incidents").toString
+      val got = new PipelineRunner(spark, staged.configPath,
+        dir.resolve(name).resolve("warehouse").toString, incidentsPath, () => "t")
+        .runDemo(staged.v1, staged.v2)
+      assert(got.map(i => (i.stage, i.status, i.error_type)) ==
+        Seq(("baseline", "failed", "ConfigError")), s"$name: $got")
+      assert(got.head.error_message.nonEmpty, name)
+      assert(IncidentLog.read(spark, incidentsPath).collect().toSeq == got, name)
+    }
   }
 
   test("dashboard lookups: filterOptions sorted, byRunId finds and misses") {

@@ -109,22 +109,7 @@ class DupRunStoreSpec extends SparkSuite {
     // ending inside the SECOND P occurrence), so after the watermark-1
     // compaction the gen-2 maintenance must retract doc 0's sites out
     // of the FOLDED BASE and credit the leftward-extended second run.
-    val dir = java.nio.file.Files.createTempDirectory("graft_retro3").toString
-    val p = (1 to 25).map(j => s"P$j")
-    val u = (1 to 10).map(j => s"u$j")
-    val v = (1 to 12).map(j => s"v$j")
-    val doc0 = u ++ p ++ v ++ p ++ (1 to 10).map(j => s"w$j")
-    val doc1 = (1 to 5).map(j => s"z$j") ++ u.drop(2) ++ p.take(12) ++
-      (6 to 15).map(j => s"z$j")
-    val doc2 = (1 to 5).map(j => s"x$j") ++ v.drop(8) ++ p.take(16) ++
-      (6 to 15).map(j => s"x$j")
-    import spark.implicits._
-    Seq((0L, doc0.mkString(" "), "en", "web"),
-        (1L, doc1.mkString(" "), "en", "web"),
-        (2L, doc2.mkString(" "), "en", "web"))
-      .toDF("doc_id", "text", "lang", "source")
-      .withColumn("n_chars", length(col("text")).cast("long"))
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val dir = retro3Dir("graft_retro3")
     val rows = SparkEntry.queries("q421_dup_run_store_compact")(spark, dir)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(rows("mismatch") == 0L, s"maintained != rebuilt: $rows")
@@ -158,14 +143,10 @@ class DupRunStoreSpec extends SparkSuite {
     assert(gens == Set("gen=1", "gen=2"), s"log not truncated: $gens")
   }
 
-  test("demo-written deltas equal runIvmDeltas recomputed from the persisted state") {
-    // Two formulations write the same run log: the demo lifecycle
-    // derives every generation in one batched pass (retractions = the
-    // previous snapshot's runs of affected docs), the live sink nets
-    // the persisted log (runIvmDeltas). On the three-generation retro
-    // fixture (retractions at gens 1 AND 2) each generation's written
-    // deltas must equal the sequential recompute as a multiset.
-    val dir = java.nio.file.Files.createTempDirectory("graft_pin3").toString
+  /** The three-generation retro fixture (retractions at gens 1 AND
+    * 2): doc 1 extends doc 0's first P run, doc 2 its second. */
+  private def retro3Dir(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
     val p = (1 to 25).map(j => s"P$j")
     val u = (1 to 10).map(j => s"u$j")
     val v = (1 to 12).map(j => s"v$j")
@@ -181,6 +162,16 @@ class DupRunStoreSpec extends SparkSuite {
       .toDF("doc_id", "text", "lang", "source")
       .withColumn("n_chars", length(col("text")).cast("long"))
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    dir
+  }
+
+  test("demo-written deltas equal the live step recomputed from the persisted state") {
+    // One derivation writes the run log: the demo runs it over its
+    // cached corpus frames for generations 0..2, the live sink over the
+    // persisted docs/postings for one generation at a time. On the
+    // three-generation retro fixture each generation's written deltas
+    // must equal the live step's as a multiset.
+    val dir = retro3Dir("graft_pin3")
     SparkEntry.queries("q418_dup_run_store_ivm")(spark, dir).collect()
     val path = StateStores.statePath(dir, "dup_run_ivm")
     val cols = Seq("doc_id", "source", "start_tok", "run_tokens", "run_fp",
@@ -188,17 +179,41 @@ class DupRunStoreSpec extends SparkSuite {
     val written = spark.read.parquet(s"$path/deltas")
     val retracts = (0L to 2L).map { g =>
       val demo = written.filter(col("gen") === g).select(cols: _*)
-      val (recomputed, done) = DupRunStore.runIvmDeltas(spark, path, g)
+      val d = DupRunStore.persistedDeltas(spark, path, g)
       try {
-        val seq = recomputed.select(cols: _*)
-        assert(demo.exceptAll(seq).isEmpty && seq.exceptAll(demo).isEmpty,
+        val live = d.deltas.select(cols: _*)
+        assert(demo.exceptAll(live).isEmpty && live.exceptAll(demo).isEmpty,
           s"gen $g: demo deltas ${demo.collect().toSeq} != " +
-            s"sequential ${seq.collect().toSeq}")
-      } finally done()
+            s"live step ${live.collect().toSeq}")
+      } finally d.done()
       demo.filter(col("delta") === -1L).count()
     }
     assert(retracts(1) > 0L && retracts(2) > 0L,
       s"the pin must cover retractions at gens 1 and 2: $retracts")
+  }
+
+  test("the live maintenance step reads the docs and postings state only") {
+    // analogous to PairGraphSpec's ivmDeltas pin: a live step derives
+    // retractions from the previous watermark's runs, so it scans
+    // neither the delta log nor document text outside the store
+    val dir = retro3Dir("graft_scan")
+    SparkEntry.queries("q418_dup_run_store_ivm")(spark, dir).collect()
+    val path = StateStores.statePath(dir, "dup_run_ivm")
+    Seq(1L, 2L).foreach { g =>
+      val d = DupRunStore.persistedDeltas(spark, path, g)
+      try {
+        import org.apache.spark.sql.execution.datasources.{
+          HadoopFsRelation, LogicalRelation}
+        val scanned = d.deltas.queryExecution.analyzed.collect {
+          case LogicalRelation(h: HadoopFsRelation, _, _, _, _) =>
+            h.location.rootPaths.map(_.toUri.getPath)
+        }.flatten.toSet
+        assert(scanned == Set(s"$path/docs", s"$path/postings"),
+          s"gen $g: the live step must scan docs and postings only: $scanned")
+        assert(d.deltas.filter(col("delta") === -1L).count() > 0L,
+          s"gen $g: the step must retract without reading the log")
+      } finally d.done()
+    }
   }
 
   test("cut/census identity: covered == removed + keep-only positions") {
