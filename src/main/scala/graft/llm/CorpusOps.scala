@@ -617,16 +617,18 @@ object CorpusOps {
         .orderBy(col("user_id"), col("purchase_id"))
     }),
 
-    /** Batch twin of the streaming purchase-click attribution
-      * (EventStreams.purchaseClickAttribution): every (purchase, click)
-      * pair of the same user with the click inside the preceding hour.
-      * The streaming version is the bounded-state stream-stream join;
-      * this is its oracle-checkable batch shape (an interval join —
-      * equi on user_id + range on ts, so Spark plans a hash join with
-      * the range as a post-probe filter, never a cartesian). */
+    /** The streaming purchase-click attribution
+      * (EventStreams.purchaseClickAttribution) run on the static events
+      * table: every (purchase, click) pair of the same user with the
+      * click inside the preceding hour. On a stream it is the
+      * bounded-state stream-stream join; on a batch frame its
+      * watermarks are dropped and it is this oracle-checkable shape
+      * (an interval join — equi on user_id + range on ts, so Spark
+      * plans a hash join with the range as a post-probe filter, never
+      * a cartesian). */
     "q100_click_attribution" -> ((s: SparkSession, dir: String) => {
       graft.streaming.EventStreams
-        .purchaseClickAttributionBatch(Tables(s, dir, "events"))
+        .purchaseClickAttribution(Tables(s, dir, "events"))
         .select(col("purchase_id"), col("user_id"), col("click_id"),
           graft.r6n(col("p_ts").cast("double") - col("c_ts").cast("double"))
             .as("gap_sec"))
@@ -648,7 +650,7 @@ object CorpusOps {
       * integer-lexicographically, engine-stable. */
     "q273_linear_attribution" -> ((s: SparkSession, dir: String) => {
       val pairs = graft.streaming.EventStreams
-        .purchaseClickAttributionBatch(Tables(s, dir, "events"))
+        .purchaseClickAttribution(Tables(s, dir, "events"))
         .select(col("purchase_id"), col("click_id"), col("c_ts"))
         .cache()
       val k = pairs.groupBy(col("purchase_id"))
@@ -678,7 +680,7 @@ object CorpusOps {
       * are small-denominator rationals → nudged r6 sums. */
     "q310_position_attribution" -> ((s: SparkSession, dir: String) => {
       val pairs = graft.streaming.EventStreams
-        .purchaseClickAttributionBatch(Tables(s, dir, "events"))
+        .purchaseClickAttribution(Tables(s, dir, "events"))
         .select(col("purchase_id"), col("click_id"), col("c_ts"))
         .cache()
       val k = pairs.groupBy(col("purchase_id"))

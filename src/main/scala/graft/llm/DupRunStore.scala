@@ -510,20 +510,15 @@ object DupRunStore {
       val perGen = deltas.groupBy(col("gen").cast("long").as("gen"))
         .agg(count_if(col("delta") === 1L).as("n_credit"),
           count_if(col("delta") === -1L).as("n_retract"))
-      val maintained = deltas.groupBy(RunKey.map(col): _*)
-        .agg(sum(col("delta")).as("im")).filter(col("im") > 0)
       // rebuild = the final-watermark catalog from the lifecycle's ONE
       // shared streak pass (expression-pinned by the oracle; round-16
       // re-derived it with its own window over the cached frames, a
       // second corpus-wide sort)
-      val rebuilt = lc.runsAt(2)
-        .groupBy(RunKey.map(col): _*).agg(count(lit(1)).as("ir"))
       val genOf = pmod(col("doc_id"), lit(3)).cast("long")
-      val cmp = maintained.join(rebuilt, RunKey, "full_outer")
+      val cmp = GenLog.compare(GenLog.net(RunKey)(deltas), lc.runsAt(2), RunKey)
         .groupBy(genOf.as("gen"))
-        .agg(count_if(col("ir").isNotNull).as("n_final_sites"),
-          count_if(coalesce(col("im"), lit(0L)) =!=
-            coalesce(col("ir"), lit(0L))).as("n_mismatch"))
+        .agg(count_if(col("rebuilt") > 0).as("n_final_sites"),
+          count_if(col("maintained") =!= col("rebuilt")).as("n_mismatch"))
       import s.implicits._
       Seq(0L, 1L, 2L).toDF("gen")
         .join(perGen, Seq("gen"), "left")
@@ -613,14 +608,9 @@ object DupRunStore {
         countDistinct(col("gen")).as("log_gens_after"),
         count_if(col("gen") === 2 && col("delta") === -1L)
           .as("gen2_retracts"))
-      val maintained = deltas.groupBy(RunKey.map(col): _*)
-        .agg(sum(col("delta")).as("im")).filter(col("im") > 0)
-      val rebuilt = lc.runsAt(2)
-        .groupBy(RunKey.map(col): _*).agg(count(lit(1)).as("ir"))
-      val cmpM = maintained.join(rebuilt, RunKey, "full_outer")
-        .agg(count_if(col("ir").isNotNull).as("final_sites"),
-          count_if(coalesce(col("im"), lit(0L)) =!=
-            coalesce(col("ir"), lit(0L))).as("mismatch"))
+      val cmpM = GenLog.compare(GenLog.net(RunKey)(deltas), lc.runsAt(2), RunKey)
+        .agg(count_if(col("rebuilt") > 0).as("final_sites"),
+          count_if(col("maintained") =!= col("rebuilt")).as("mismatch"))
       logM.crossJoin(broadcast(cmpM))
         .selectExpr(s"""stack(5,
           'base_sites', ${baseSites}L, 'final_sites', final_sites,

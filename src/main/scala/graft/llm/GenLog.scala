@@ -1,7 +1,7 @@
 package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, count, count_if, lit, sum}
+import org.apache.spark.sql.functions.{coalesce, col, count, count_if, lit, sum}
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** One GENERATION-LOG store lifecycle — the partition layout and the
@@ -25,7 +25,11 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *    one, per sub through the crash-ordered [[StateStores.rewriteSwap]];
   *  - [[autoCompact]]: the live sinks' compaction cadence;
   *  - [[append]]: the cross-process generation claim;
-  *  - [[sink]]: the foreachBatch body every live log sink shares.
+  *  - [[sink]]: the foreachBatch body every live log sink shares;
+  *  - [[seed]]: a demo lifecycle's truncating generation 0.
+  *
+  * A store's query reads the log back through [[GenLog.net]] and
+  * checks it against a from-scratch rebuild with [[GenLog.compare]].
   */
 final case class GenLog(partCol: String, subs: GenLog.Sub*) {
 
@@ -125,6 +129,15 @@ final case class GenLog(partCol: String, subs: GenLog.Sub*) {
       rows.write.mode("overwrite").parquet(s"${dir(root, sub)}/$partCol=$id")
     }: _*)
 
+  /** Generation 0 of a rerun-idempotent demo lifecycle: truncate the
+    * whole store under its lock — every sub, and any older layout left
+    * at the root — then [[step]] 0. */
+  def seed(root: String)(writes: (String, DataFrame)*): Unit = {
+    StateStores.withStoreLock(root)(
+      StateStores.rmTree(java.nio.file.Paths.get(root)))
+    step(root, 0)(writes: _*)
+  }
+
   /** Generations lo..hi of each `sub -> rows` (rows carry `partCol`)
     * as ONE `partitionBy` write per sub, the subs concurrently. A
     * range starting at 0 overwrites, truncating any stale state (the
@@ -196,6 +209,22 @@ object GenLog {
   def net(keys: Seq[String]): DataFrame => DataFrame =
     _.groupBy(keys.map(col): _*).agg(sum(col("delta")).as("delta"))
       .filter(col("delta") > 0)
+
+  /** The maintained ≡ rebuilt contract of a store, per key — the one
+    * comparison every store query reports. `maintained` holds one row
+    * per key with its maintained count in `delta` (a [[net]] read of a
+    * delta log, or a plain multiset count); `rebuilt` holds one row per
+    * occurrence in a from-scratch rebuild. Every key of either side
+    * comes back with both counts, columns `maintained` and `rebuilt`,
+    * 0 where that side lacks the key: a key whose counts differ is a
+    * mismatch, and a key retracted to net 0 matches its absence. */
+  def compare(maintained: DataFrame, rebuilt: DataFrame,
+      keys: Seq[String]): DataFrame =
+    maintained.withColumnRenamed("delta", "maintained")
+      .join(rebuilt.groupBy(keys.map(col): _*).agg(count(lit(1)).as("rebuilt")),
+        keys, "full_outer")
+      .select(keys.map(col) ++ Seq("maintained", "rebuilt")
+        .map(c => coalesce(col(c), lit(0L)).as(c)): _*)
 
   /** The per-shingle cumulative df table of a `gen`-tagged postings
     * frame at every watermark lo−1..hi, from ONE aggregation pass:

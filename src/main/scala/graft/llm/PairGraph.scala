@@ -131,6 +131,9 @@ object PairGraph {
     * uses DfCap = 512; the mechanism is cap-independent). */
   private[graft] val IvmCap = 4
 
+  /** The pair graph's key: one row per unordered pair d1 < d2. */
+  private val PairKey = Seq("d1", "d2")
+
   /** The pair-IVM generation log: signed `deltas` (compaction nets
     * them per pair) and per-doc-distinct shingle `postings`, both
     * `gen=`-partitioned. Compaction is semantics-preserving because
@@ -140,7 +143,7 @@ object PairGraph {
     * the serve read pays one partition per generation forever (the
     * round-9 verdict's Missing #2). */
   private[graft] val IvmLog = GenLog("gen",
-    GenLog.Sub("deltas", fold = GenLog.net(Seq("d1", "d2"))),
+    GenLog.Sub("deltas", fold = GenLog.net(PairKey)),
     GenLog.Sub("postings"))
 
   /** Signed pair-graph deltas of generations lo..hi, each row tagged
@@ -219,6 +222,26 @@ object PairGraph {
     (pgAll, dfAll)
   }
 
+  /** The from-scratch rebuild the q283/q321 contracts compare against:
+    * one (d1, d2) row per shingle two docs share in the FINAL cap-4
+    * universe. The df filter reuses the fused df pass (df2 = the
+    * final-watermark df); the capped slice is cached because both sides
+    * of the self-join read it, and materialized once — AQE submits the
+    * self-join's two shuffle stages concurrently, and both sides racing
+    * the unpopulated cache each re-ran the df groupBy + semi join
+    * (round-16). */
+  private def rebuiltPairs(pgAll: DataFrame, dfAll: DataFrame): DataFrame = {
+    val cappedF = pgAll.drop("gen").join(
+      dfAll.filter(GenLog.dfAt(2) <= IvmCap).select(col("sh"))
+        .hint("shuffle_hash"),
+      Seq("sh"), "left_semi").cache()
+    cappedF.count()
+    cappedF.as("a")
+      .join(cappedF.as("b").hint("shuffle_hash"),
+        col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
+  }
+
   /** q361's sensitivity curve from the STREAM-maintained IVM store —
     * the serve-side read of the state
     * [[graft.streaming.EventStreams.pairGraphIvmSink]] maintains: pair
@@ -245,9 +268,7 @@ object PairGraph {
             .filter(col("df") <= cap).select(col("sh")).hint("shuffle_hash"),
           Seq("sh"), "left_semi")
         val sizes = capped.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-        val inter = deltas
-          .groupBy(col("d1"), col("d2")).agg(sum(col("delta")).as("inter"))
-          .filter(col("inter") > 0)
+        val inter = GenLog.net(PairKey)(deltas).withColumnRenamed("delta", "inter")
         val pj = inter
           .join(sizes.select(col("doc_id").as("d1"), col("n").as("n1")), "d1")
           .join(sizes.select(col("doc_id").as("d2"), col("n").as("n2")), "d2")
@@ -310,31 +331,13 @@ object PairGraph {
       val perGen = deltas.groupBy(col("gen").cast("long").as("gen"))
         .agg(count_if(col("delta") === 1L).as("n_credit"),
           count_if(col("delta") === -1L).as("n_retract"))
-      val maintained = deltas.groupBy(col("d1"), col("d2"))
-        .agg(sum(col("delta")).as("im")).filter(col("im") > 0)
-      // from-scratch rebuild over the FINAL cap-4 universe; the df
-      // filter reuses the fused df pass (df2 = final-watermark df)
-      // cached: both sides of the rebuild self-join read this slice
-      val cappedF = pgAll.drop("gen").join(
-        dfAll.filter(GenLog.dfAt(2) <= IvmCap).select(col("sh"))
-          .hint("shuffle_hash"),
-        Seq("sh"), "left_semi").cache()
-      // materialize once: AQE submits the self-join's two shuffle
-      // stages concurrently, and both sides racing the unpopulated
-      // cache each re-ran the df groupBy + semi join (round-16)
-      cappedF.count()
-      val rebuilt = cappedF.as("a")
-        .join(cappedF.as("b").hint("shuffle_hash"),
-          col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-        .agg(count(lit(1)).as("ir"))
       val genOf = greatest(pmod(col("d1"), lit(3)), pmod(col("d2"), lit(3)))
         .cast("long")
-      val cmp = maintained.join(rebuilt, Seq("d1", "d2"), "full_outer")
+      val cmp = GenLog.compare(GenLog.net(PairKey)(deltas),
+          rebuiltPairs(pgAll, dfAll), PairKey)
         .groupBy(genOf.as("gen"))
-        .agg(count_if(col("ir").isNotNull).as("n_final_pairs"),
-          count_if(coalesce(col("im"), lit(0L)) =!= coalesce(col("ir"), lit(0L)))
-            .as("n_mismatch"))
+        .agg(count_if(col("rebuilt") > 0).as("n_final_pairs"),
+          count_if(col("maintained") =!= col("rebuilt")).as("n_mismatch"))
       import s.implicits._
       Seq(0L, 1L, 2L).toDF("gen")
         .join(perGen, Seq("gen"), "left")
@@ -392,18 +395,6 @@ object PairGraph {
       IvmLog.writeRange(path, 2, 2)("postings" -> pgAll,
         "deltas" -> ivmDeltaRange(pgAll, dfAll, 2, 2, IvmCap))
       val deltas = s.read.parquet(s"$path/deltas").cache()
-      val maintained = deltas.groupBy(col("d1"), col("d2"))
-        .agg(sum(col("delta")).as("im")).filter(col("im") > 0)
-      val cappedF = pgAll.drop("gen").join(
-        dfAll.filter(GenLog.dfAt(2) <= IvmCap).select(col("sh"))
-          .hint("shuffle_hash"),
-        Seq("sh"), "left_semi").cache()
-      cappedF.count() // single materialization — see q283
-      val rebuilt = cappedF.as("a")
-        .join(cappedF.as("b").hint("shuffle_hash"),
-          col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-        .agg(count(lit(1)).as("ir"))
       // ONE pass over the cached log for the three log metrics, ONE
       // pass over the compare join for the two graph metrics; the two
       // 1-row frames cross broadcast and stack() unpivots to the
@@ -412,10 +403,10 @@ object PairGraph {
         count_if(col("gen") === 1).as("base_pairs"),
         countDistinct(col("gen")).as("log_gens"),
         count_if(col("gen") === 2 && col("delta") === -1L).as("gen2_retracts"))
-      val cmpM = maintained.join(rebuilt, Seq("d1", "d2"), "full_outer")
-        .agg(count_if(col("im").isNotNull).as("final_pairs"),
-          count_if(coalesce(col("im"), lit(0L)) =!= coalesce(col("ir"), lit(0L)))
-            .as("mismatch"))
+      val cmpM = GenLog.compare(GenLog.net(PairKey)(deltas),
+          rebuiltPairs(pgAll, dfAll), PairKey)
+        .agg(count_if(col("maintained") > 0).as("final_pairs"),
+          count_if(col("maintained") =!= col("rebuilt")).as("mismatch"))
       logM.crossJoin(broadcast(cmpM))
         .selectExpr("""stack(5,
           'base_pairs', base_pairs, 'final_pairs', final_pairs,

@@ -77,7 +77,24 @@ object StateStores {
   private[graft] def statePath(dir: String, name: String): String = {
     val tag = java.lang.Integer.toHexString(
       scala.util.hashing.MurmurHash3.stringHash(dir))
-    s"$StateRoot/$name-$tag"
+    markFixture(s"$StateRoot/$name-$tag", dir)
+  }
+
+  /** The `<store>.fixture` sidecar naming the fixture dir a store was
+    * minted for: the dir tag is a hash, so without it no later run can
+    * tell that a store's fixture is gone ([[gcStale]] reclaims such
+    * stores). Written once per store; a fixture given as a URI (a
+    * `scheme:` prefix) gets none — its existence is not a local
+    * check. Best-effort like GC itself. Returns `store`. */
+  private def markFixture(store: String, dir: String): String = {
+    val marker = java.nio.file.Paths.get(store + ".fixture")
+    if (!dir.contains(":") && !java.nio.file.Files.exists(marker))
+      try {
+        java.nio.file.Files.createDirectories(marker.getParent)
+        java.nio.file.Files.writeString(marker,
+          java.nio.file.Paths.get(dir).toAbsolutePath.toString)
+      } catch { case _: java.io.IOException => () }
+    store
   }
 
   /** State dir for SEED-IF-ABSENT stores (the serve-path queries):
@@ -117,7 +134,7 @@ object StateStores {
     // orphans the old content tag, which GC then reclaims)
     val (dirTag, contentTag) = (hex(dir), hex(sig))
     gcStale(name, dirTag, contentTag)
-    s"$StateRoot/$name-$dirTag-$contentTag"
+    markFixture(s"$StateRoot/$name-$dirTag-$contentTag", dir)
   }
 
   /** GC dead serve-store versions (round-10 verdict: servePath mints a
@@ -132,8 +149,13 @@ object StateStores {
     * (version suffix stripped), so `band_serve` can never claim
     * `band_serve_x`'s dirs; legacy single-tag entries of the same
     * family are reclaimed too (pre-round-11 layout — superseded by
-    * this path scheme). Sidecar .lock/.old entries go with their dir;
-    * failures are swallowed — GC is best-effort hygiene. */
+    * this path scheme). Sidecar .lock/.old/.fixture entries go with
+    * their dir; failures are swallowed — GC is best-effort hygiene.
+    *
+    * The same sweep reclaims ORPHANS of any family: a store whose
+    * `.fixture` marker ([[markFixture]]) names a dir that no longer
+    * exists — a spec's deleted temp fixture — through [[reclaimOrphan]].
+    * Stores minted before the marker existed carry none and stay. */
   private def gcStale(name: String, dirTag: String, contentTag: String): Unit =
     try {
       def family(n: String) = n.replaceAll("_v\\d+$", "")
@@ -141,23 +163,62 @@ object StateStores {
       val root = java.nio.file.Paths.get(StateRoot)
       if (java.nio.file.Files.isDirectory(root)) {
         val st = java.nio.file.Files.list(root)
-        val doomed = try {
+        val names = try {
           import scala.jdk.CollectionConverters._
-          st.iterator().asScala.map(_.getFileName.toString).filter { b =>
-            val base = b.stripSuffix(".lock").stripSuffix(".old")
-            base.split('-') match {
-              case Array(n2, d2, t2) =>
-                family(n2) == fam && d2 == dirTag &&
-                  !(n2 == name && t2 == contentTag)
-              case Array(n2, _) => family(n2) == fam // legacy layout
-              case _ => false
-            }
-          }.toList
+          st.iterator().asScala.map(_.getFileName.toString).toList
         } finally st.close()
+        names.filter(_.endsWith(".fixture")).foreach { m =>
+          val fixture = try java.nio.file.Files.readString(root.resolve(m))
+            catch { case _: java.io.IOException => "" }
+          if (fixture.nonEmpty &&
+              !java.nio.file.Files.exists(java.nio.file.Paths.get(fixture)))
+            try reclaimOrphan(root.resolve(m.stripSuffix(".fixture")).toString)
+            catch { case _: java.io.IOException => () }
+        }
+        val doomed = names.filter { b =>
+          val base = b.stripSuffix(".lock").stripSuffix(".old")
+            .stripSuffix(".fixture")
+          base.split('-') match {
+            case Array(n2, d2, t2) =>
+              family(n2) == fam && d2 == dirTag &&
+                !(n2 == name && t2 == contentTag)
+            case Array(n2, _) => family(n2) == fam // legacy layout
+            case _ => false
+          }
+        }
         doomed.foreach(b => try rmTree(root.resolve(b)) catch {
           case _: java.io.IOException => () })
       }
     } catch { case _: java.io.IOException => () }
+
+  /** Delete an orphaned store — its dir, its `.old`/`.compact`
+    * leftovers, its marker and its `.lock` — but only when its store
+    * lock is free right now: the intra-JVM write lock and the OS-level
+    * FileChannel lock are both TRIED, never waited on, so a store a
+    * writer in this or another process still holds survives until a
+    * later sweep. */
+  private def reclaimOrphan(store: String): Unit = {
+    val w = rwLock(store).writeLock()
+    if (w.tryLock()) try {
+      if (!channelHeld.contains(store)) {
+        val lockPath = java.nio.file.Paths.get(store + ".lock")
+        val ch = java.nio.channels.FileChannel.open(lockPath,
+          java.nio.file.StandardOpenOption.CREATE,
+          java.nio.file.StandardOpenOption.WRITE)
+        val free = try {
+          val lock = try ch.tryLock() catch {
+            case _: java.nio.channels.OverlappingFileLockException => null }
+          if (lock != null) try {
+            Seq("", ".old", ".compact", ".fixture").foreach(sfx =>
+              rmTree(java.nio.file.Paths.get(store + sfx)))
+            true
+          } finally lock.release()
+          else false
+        } finally ch.close()
+        if (free) java.nio.file.Files.deleteIfExists(lockPath)
+      }
+    } finally w.unlock()
+  }
 
   /** Run `write` only when `path` has no completed parquet commit yet
     * (seed-if-absent). Two layers of exclusion: a JVM-global monitor
@@ -333,36 +394,42 @@ object StateStores {
   }
 
   /** Seed + two snapshot appends + contract check — the q229 body,
-    * factored for the spec. Returns the per-generation summary. */
+    * factored for the spec. The demo runs the live sink's lifecycle,
+    * [[BatchLog]]: generation g (doc_id % 3 = g) is one [[GenLog.step]]
+    * into `batch=<g>`, derived from that generation's docs alone. The
+    * seed ([[GenLog.seed]]) truncates the store first, so a rerun — or
+    * an older flat layout at the same path — never leaks into the
+    * contract. Returns the per-generation summary. */
   private[graft] def bandIndexMaintain(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables(s, dir, "documents")
     val path = statePath(dir, "band_index")
-    def gen(g: Int) = docs.filter(pmod(col("doc_id"), lit(3)) === g)
-    // seed = generation 0 (the standing corpus); each later generation
-    // is "today's crawl" appended by itself. Overwrite on the seed
-    // makes the whole sequence idempotent across reruns.
-    bandIndexRows(gen(0)).write.mode("overwrite").parquet(path)
-    bandIndexRows(gen(1)).write.mode("append").parquet(path)
-    bandIndexRows(gen(2)).write.mode("append").parquet(path)
+    BatchLog.seed(path)("" -> bandIndexRows(bandGen(docs, 0)))
+    BatchLog.step(path, 1)("" -> bandIndexRows(bandGen(docs, 1)))
+    BatchLog.step(path, 2)("" -> bandIndexRows(bandGen(docs, 2)))
     bandContract(s, docs, path)
   }
 
-  /** Maintained-vs-rebuilt multiset contract over a band-index state
-    * dir — the q229 tail, factored so the compaction flow (q322)
-    * emits the identical falsifiable summary. */
+  /** The band demos' snapshot g of the corpus: doc_id % 3 = g. */
+  private def bandGen(docs: DataFrame, g: Int): DataFrame =
+    docs.filter(pmod(col("doc_id"), lit(3)) === g)
+
+  /** Maintained-vs-rebuilt multiset contract over a band-index
+    * [[BatchLog]] — the q229 tail, factored so the compaction flow
+    * (q322) emits the identical falsifiable summary. The maintained
+    * side is a plain multiset count per (doc, band key) over every
+    * `batch=` generation, checked by the stores' one comparison,
+    * [[GenLog.compare]]. */
   private[llm] def bandContract(s: SparkSession, docs: DataFrame,
       path: String): DataFrame = {
+    val keys = Seq("doc_id", "bk")
     val maintained = s.read.parquet(path)
-      .groupBy(col("doc_id"), col("bk")).agg(count(lit(1)).as("cm"))
-    val rebuilt = bandIndexRows(docs)
-      .groupBy(col("doc_id"), col("bk")).agg(count(lit(1)).as("cr"))
+      .groupBy(keys.map(col): _*).agg(count(lit(1)).as("delta"))
     // multiset equality per (doc, band key): any divergence — a doc
     // dropped by an append, a double-append duplicate, a key drift —
     // lands in n_mismatch, which the oracle pins to ZERO
-    maintained.join(rebuilt, Seq("doc_id", "bk"), "full_outer")
+    GenLog.compare(maintained, bandIndexRows(docs), keys)
       .select(col("doc_id"),
-        when(coalesce(col("cm"), lit(0L)) =!= coalesce(col("cr"), lit(0L)), 1L)
-          .otherwise(0L).as("bad"))
+        (col("maintained") =!= col("rebuilt")).cast("long").as("bad"))
       .groupBy(pmod(col("doc_id"), lit(3)).as("gen"))
       .agg(countDistinct(col("doc_id")).as("n_docs"),
         count(lit(1)).as("n_index_rows"),
@@ -704,22 +771,24 @@ object StateStores {
 
     /** Band-store COMPACTION — q229's appends accumulate one file set
       * per generation forever; here the store is compacted mid-
-      * lifecycle (one streaming read of the fragmented dir, AQE-sized
-      * rewrite, temp-dir swap) and a FURTHER generation appends onto
-      * the compacted store. The output is the same maintained-vs-
-      * rebuilt multiset contract as q229 — a compaction that loses,
-      * duplicates, or mangles index rows goes red against the
-      * documents-only oracle — and StateCompactionSpec additionally
+      * lifecycle through the live sink's own [[BatchLog]] fold
+      * (`compact` at watermark 1: one read of the fragmented `batch=`
+      * dirs, relabeled into `batch=1`, AQE-sized rewrite, crash-ordered
+      * swap) and a FURTHER generation steps onto the compacted store.
+      * Every write is a [[GenLog.step]] of one generation's docs, the
+      * first a truncating [[GenLog.seed]]. The output is the same
+      * maintained-vs-rebuilt multiset contract as q229 — a compaction
+      * that loses, duplicates, or mangles index rows goes red against
+      * the documents-only oracle — and StateCompactionSpec additionally
       * pins that the compacted dir holds fewer part files than the
       * fragment sum it replaced. */
     "q322_band_store_compact" -> ((s: SparkSession, dir: String) => {
       val docs = Tables(s, dir, "documents")
       val path = statePath(dir, "band_index_c")
-      def gen(g: Int) = docs.filter(pmod(col("doc_id"), lit(3)) === g)
-      bandIndexRows(gen(0)).write.mode("overwrite").parquet(path)
-      bandIndexRows(gen(1)).write.mode("append").parquet(path)
-      rewriteSwap(s.read.parquet(path), path)
-      bandIndexRows(gen(2)).write.mode("append").parquet(path)
+      BatchLog.seed(path)("" -> bandIndexRows(bandGen(docs, 0)))
+      BatchLog.step(path, 1)("" -> bandIndexRows(bandGen(docs, 1)))
+      BatchLog.compact(s, path, 1)
+      BatchLog.step(path, 2)("" -> bandIndexRows(bandGen(docs, 2)))
       bandContract(s, docs, path)
     }),
 

@@ -263,7 +263,10 @@ object EventStreams {
     * watermarks advance — the canonical bounded-state shape for
     * joining two unbounded feeds (attribution, funnel stitching).
     * Scale: state is keyed and shuffled on user_id; skewed users cost
-    * state proportional to their in-window event rate only. */
+    * state proportional to their in-window event rate only. On a
+    * static frame the same code is the batch interval join (q100,
+    * q273, q310): the analyzer rule `EliminateEventTimeWatermark`
+    * drops both watermarks from a batch plan. */
   def purchaseClickAttribution(events: DataFrame): DataFrame = {
     val purchases = events.filter(col("event_type") === "purchase")
       .select(col("event_id").as("purchase_id"), col("user_id"),
@@ -273,23 +276,6 @@ object EventStreams {
       .select(col("event_id").as("click_id"), col("user_id").as("c_user"),
         col("ts").as("c_ts"))
       .withWatermark("c_ts", "1 hour")
-    purchases.join(clicks,
-      col("user_id") === col("c_user") &&
-      col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
-      col("c_ts") <= col("p_ts"))
-      .select(col("purchase_id"), col("user_id"), col("p_ts"),
-        col("purchase_value"), col("click_id"), col("c_ts"))
-  }
-
-  /** Batch twin of [[purchaseClickAttribution]] for equivalence tests:
-    * the same join over a static frame. */
-  def purchaseClickAttributionBatch(events: DataFrame): DataFrame = {
-    val purchases = events.filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("user_id"),
-        col("ts").as("p_ts"), col("value").as("purchase_value"))
-    val clicks = events.filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id").as("c_user"),
-        col("ts").as("c_ts"))
     purchases.join(clicks,
       col("user_id") === col("c_user") &&
       col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&

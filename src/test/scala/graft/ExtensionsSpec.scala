@@ -85,7 +85,8 @@ class ExtensionsSpec extends SparkSuite {
     val forbidden = Seq(
       "createOrReplaceTempFunction".r,
       """experimental\s*\.\s*extra""".r,
-      """\bdef\s+register\s*\(""".r)
+      """\bdef\s+register\s*\(""".r,
+      """\budf\s*\.\s*register\b""".r)
     val injection = """\.inject(Function|PlannerStrategy|OptimizerRule)\s*\(""".r
     val st = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
     val files = try st.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
@@ -95,9 +96,7 @@ class ExtensionsSpec extends SparkSuite {
     val hits = files.flatMap { f =>
       val name = f.getFileName.toString
       val text = java.nio.file.Files.readString(f)
-      val routes =
-        if (name == "ProfileAggregator.scala") Nil
-        else forbidden.filter(_.findFirstIn(text).nonEmpty).map(_.regex)
+      val routes = forbidden.filter(_.findFirstIn(text).nonEmpty).map(_.regex)
       val injects =
         if (name == "GraftExtensions.scala") Nil
         else injection.findFirstIn(text).toList

@@ -1,26 +1,9 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.functions._
-import graft.ops.Partitioning
 
-/** Partition pruning + multi-format source/sink round-trips. */
+/** Multi-format source/sink round-trips. */
 class PartitioningFormatsSpec extends SparkSuite {
-
-  test("year-partitioned write prunes the scan to one partition") {
-    val dir = Files.createTempDirectory("graft_part").toString
-    val orders = Tables(spark, sf, "orders")
-    Partitioning.writePartitionedByYear(orders, "o_orderdate", dir)
-
-    val one = Partitioning.readYear(spark, dir, 1997)
-    assert(Partitioning.hasPartitionPruning(one), "scan must carry PartitionFilters")
-
-    val expected = orders.filter(year(col("o_orderdate")) === 1997).count()
-    assert(one.count() == expected)
-    // the pruned read must actually skip the other years' files
-    val files = one.select(input_file_name()).distinct().collect().map(_.getString(0))
-    assert(files.nonEmpty && files.forall(_.contains("part_year=1997")))
-  }
 
   test("csv, json, and orc sinks round-trip the customer table") {
     val base = Files.createTempDirectory("graft_fmt").toString

@@ -40,10 +40,11 @@ class StateCompactionSpec extends SparkSuite {
     val path = StateStores.statePath(sf, "band_index_spec")
     import org.apache.spark.sql.functions._
     def gen(g: Int) = docs.filter(pmod(col("doc_id"), lit(3)) === g)
-    StateStores.bandIndexRows(gen(0)).write.mode("overwrite").parquet(path)
-    StateStores.bandIndexRows(gen(1)).write.mode("append").parquet(path)
+    // the q322 lifecycle: truncating seed, one step, the BatchLog fold
+    StateStores.BatchLog.seed(path)("" -> StateStores.bandIndexRows(gen(0)))
+    StateStores.BatchLog.step(path, 1)("" -> StateStores.bandIndexRows(gen(1)))
     val before = partFiles(path)
-    StateStores.rewriteSwap(spark.read.parquet(path), path)
+    StateStores.BatchLog.compact(spark, path, 1)
     val after = partFiles(path)
     assert(after < before,
       s"compaction should shrink the fragment count: $before -> $after")

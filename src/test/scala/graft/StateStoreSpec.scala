@@ -71,6 +71,58 @@ class StateStoreSpec extends SparkSuite {
       "a replayed micro-batch must overwrite, not double-append")
   }
 
+  test("GC reclaims a store whose fixture dir is gone, unless its lock is held") {
+    import java.nio.file.{Files, Paths}
+    val root = Paths.get(StateStores.StateRoot)
+    // the stores whose marker names a fixture dir that exists now
+    def liveStores(): Set[String] = {
+      val st = Files.list(root)
+      try {
+        import scala.jdk.CollectionConverters._
+        st.iterator().asScala.map(_.getFileName.toString)
+          .filter(_.endsWith(".fixture")).filter(m =>
+            Files.exists(Paths.get(Files.readString(root.resolve(m)))))
+          .map(_.stripSuffix(".fixture"))
+          .filter(b => Files.exists(root.resolve(b))).toSet
+      } finally st.close()
+    }
+    def fixtureStore(name: String): (java.nio.file.Path, String) = {
+      val fixture = Files.createTempDirectory("graft_gc_fixture")
+      val store = StateStores.statePath(fixture.toString, name)
+      Files.createDirectories(Paths.get(store, "batch=0"))
+      Files.writeString(Paths.get(store, "batch=0", "part-0"), "x")
+      (fixture, store)
+    }
+    val (goneFixture, orphan) = fixtureStore("gc_orphan_probe")
+    val (heldFixture, held) = fixtureStore("gc_held_probe")
+    val live = StateStores.statePath(sf, "gc_live_probe")
+    Files.createDirectories(Paths.get(live))
+    StateStores.rmTree(goneFixture)
+    StateStores.rmTree(heldFixture)
+    val before = liveStores()
+    assert(before.contains(Paths.get(live).getFileName.toString))
+    // the sweep runs inside servePath; the sf store it names is live
+    def sweep(): Unit = StateStores.servePath(sf, "pair_graph_v1", "documents")
+    // another thread holds the held store's lock across the first sweep
+    val locked = new java.util.concurrent.CountDownLatch(1)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val holder = new Thread(() => StateStores.withStoreLock(held) {
+      locked.countDown(); release.await() })
+    holder.start()
+    locked.await()
+    try sweep() finally { release.countDown(); holder.join() }
+    assert(!Files.exists(Paths.get(orphan)), "an orphaned store must be reclaimed")
+    assert(!Files.exists(Paths.get(orphan + ".fixture")) &&
+      !Files.exists(Paths.get(orphan + ".lock")), "its sidecars go with it")
+    assert(Files.exists(Paths.get(held, "batch=0", "part-0")),
+      "a store whose lock is held must survive the sweep")
+    assert(before.subsetOf(liveStores()),
+      "stores of existing fixture dirs must be untouched")
+    sweep() // released: the next sweep takes it
+    assert(!Files.exists(Paths.get(held)))
+    StateStores.rmTree(Paths.get(live))
+  }
+
   test("q230: centroid maintenance scans ONLY the snapshot, never the corpus") {
     val e = Tables(spark, sf, "embeddings").select(col("vec_id"), col("embedding"))
     val corpus = e.filter(pmod(col("vec_id"), lit(10)) =!= 0)

@@ -182,7 +182,7 @@ class StreamingSpec extends SparkSuite {
       .select("purchase_id", "click_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val batch = EventStreams
-      .purchaseClickAttributionBatch(Tables(spark, sf, "events"))
+      .purchaseClickAttribution(Tables(spark, sf, "events"))
       .select("purchase_id", "click_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(batch.nonEmpty, "fixture must contain in-window purchase-click pairs")
