@@ -89,10 +89,9 @@ object CorpusOps {
       * score-normalization step before a GLOBAL quality threshold
       * (raw cutoffs over-prune verbose languages; percentiles within
       * language compare like with like). Tie-robust and distributed:
-      * distinct (lang, n_chars) rows get ONE global running sum over
-      * the (lang, value) range order ([[graft.ops.GlobalRank]]), each
-      * language's base and size come from a per-lang aggregate of
-      * those same rows, and pct_below = (cum − cnt − base)/n — no
+      * distinct (lang, n_chars) rows get their in-language running
+      * sum and language total over the (lang, value) range order
+      * ([[graft.ops.GlobalRank]]), and pct_below = (cum − cnt)/n — no
       * per-language WindowExec funnel (a partitionBy(lang) window
       * puts a fifth of the corpus in ONE task; the range exchange
       * spreads all languages across the cluster). Report: per-lang
@@ -102,14 +101,11 @@ object CorpusOps {
         .filter(col("n_chars").isNotNull)
         .groupBy(col("lang"), col("n_chars").cast("double").as("v"))
         .agg(count(lit(1)).as("cnt"))
-      val cum = graft.ops.GlobalRank.withRunningSum(
-        g, Seq(col("lang"), col("v")), "cnt", "cum")
-      val base = cum.groupBy(col("lang"))
-        .agg(min(col("cum") - col("cnt")).as("base"), sum(col("cnt")).as("n"))
-      val pct = cum.join(base, Seq("lang"))
+      val pct = graft.ops.GlobalRank.withRunningSum(
+          g, Seq(col("v")), "cnt", "cum", Seq("lang"))
         .select(col("lang"), col("cnt"),
-          ((col("cum") - col("cnt") - col("base")).cast("double") /
-            col("n").cast("double")).as("pct_below"))
+          ((col("cum") - col("cnt")).cast("double") /
+            col("cum_total").cast("double")).as("pct_below"))
       pct.groupBy(col("lang"),
           least(floor(col("pct_below") * 10), lit(9L)).cast("long").as("decile"))
         .agg(sum(col("cnt")).as("n_docs"))
@@ -226,22 +222,17 @@ object CorpusOps {
       * that never reshuffles on re-run. A plain
       * Window.partitionBy(lang) would funnel each language into ONE
       * task (5 languages = 5 tasks over the whole corpus), so the
-      * per-language rank rides a GLOBAL row number over the
-      * (lang, skey, doc_id) total order
+      * per-language rank is an in-language row number over the
+      * (lang, skey, doc_id) range order
       * ([[graft.ops.GlobalRank.withRowNumbers]] — one plan, one range
-      * exchange, no driver collect): languages are contiguous in that
-      * order, so rank-within-language = rn − the language's first rn
-      * + 1, with the tiny per-language firsts table broadcast back. */
+      * exchange, no driver collect). */
     "q96_stratified_sample" -> ((s: SparkSession, dir: String) => {
       val skey = substring(
         sha2(concat(col("doc_id").cast("string"), col("text")), 256), 1, 16)
-      val ranked = graft.ops.GlobalRank.withRowNumbers(
-        Tables(s, dir, "documents")
-          .select(col("doc_id"), col("lang"), skey.as("skey")),
-        Seq(col("lang"), col("skey"), col("doc_id")), "_rn")
-      val firsts = ranked.groupBy(col("lang")).agg(min(col("_rn")).as("_first"))
-      ranked.join(broadcast(firsts), Seq("lang"))
-        .withColumn("rk", col("_rn") - col("_first") + 1)
+      graft.ops.GlobalRank.withRowNumbers(
+          Tables(s, dir, "documents")
+            .select(col("doc_id"), col("lang"), skey.as("skey")),
+          Seq(col("skey"), col("doc_id")), "rk", groupCols = Seq("lang"))
         .filter(col("rk") <= 20)
         .select(col("lang"), col("rk"), col("doc_id"), col("skey"))
         .orderBy(col("lang"), col("rk"))
@@ -456,21 +447,16 @@ object CorpusOps {
       * cardinality key — one task per source at any scale, the exact
       * shape WindowAudit rejects): ONE [[graft.ops.GlobalRank]]
       * range exchange over (source, bytes desc, id) carries the
-      * global sum, the per-source start offset falls out of the SAME
-      * table as min(cum − bytes) per source (the q198 offset trick),
-      * and the offsets join back broadcast (bounded by the source
-      * domain). Everything integer until the nudged fill ratio. */
+      * in-source running sum. Everything integer until the nudged
+      * fill ratio. */
     "q247_compaction_plan" -> ((s: SparkSession, dir: String) => {
-      val cum = graft.ops.GlobalRank.withRunningSum(
-        Tables(s, dir, "documents")
-          .select(col("doc_id"), col("source"), col("n_chars")),
-        Seq(col("source"), col("n_chars").desc, col("doc_id")),
-        "n_chars", "cum")
-      val off = cum.groupBy(col("source"))
-        .agg(min(col("cum") - col("n_chars")).as("off"))
-      cum.join(broadcast(off), "source")
+      graft.ops.GlobalRank.withRunningSum(
+          Tables(s, dir, "documents")
+            .select(col("doc_id"), col("source"), col("n_chars")),
+          Seq(col("n_chars").desc, col("doc_id")), "n_chars", "cum",
+          Seq("source"))
         .withColumn("file_id",
-          expr("CAST((cum - off - n_chars) DIV 65536 AS BIGINT)"))
+          expr("CAST((cum - n_chars) DIV 65536 AS BIGINT)"))
         .groupBy(col("source"), col("file_id"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("bytes"))
         .select(col("source"), col("file_id"), col("n_docs"), col("bytes"),
@@ -921,15 +907,13 @@ object CorpusOps {
       * waterfill allocates for: each source gets a 30% token quota
       * (integer arithmetic, `tot*3 DIV 10`) and fills it greedily by
       * the q39 composite quality score (ties to the lowest doc_id).
-      * The per-source cumulative token sum is the q145/q94 segmented
-      * scan — ONE [[graft.ops.GlobalRank.withRunningSum]] over the
-      * (source, quality desc, doc_id) range order minus each source's
-      * earlier-sources prefix — NEVER a `Window.partitionBy(source)`
-      * (a handful of schema-bounded partitions funnels the corpus
-      * through a handful of tasks; WindowAudit rejects the shape
-      * suite-wide). The prefix itself is a theta-join over the
-      * per-SOURCE totals table (schema-bounded domain, q344 class).
-      * Output per source: quota, docs/tokens kept, fill rate. */
+      * The per-source cumulative token sum and the source's token total
+      * come from ONE in-source [[graft.ops.GlobalRank.withRunningSum]]
+      * over the (source, quality desc, doc_id) range order — NEVER a
+      * `Window.partitionBy(source)` (a handful of schema-bounded
+      * partitions funnels the corpus through a handful of tasks;
+      * WindowAudit rejects the shape suite-wide). Output per source:
+      * quota, docs/tokens kept, fill rate. */
     "q365_quota_select" -> ((s: SparkSession, dir: String) => {
       val sp = split(col("text"), " ")
       val ntD = size(sp).cast("double")
@@ -941,23 +925,13 @@ object CorpusOps {
             lit(0.3) * (lit(1.0) -
               size(expr("filter(split(text, ' '), t -> t IN ('the', 'a'))")) / ntD) +
             lit(0.2) * least(ntD / 100.0, lit(1.0))).as("q"))
-      val cum = graft.ops.GlobalRank.withRunningSum(
-        d, Seq(col("source"), col("q").desc, col("doc_id")), "nt", "cum")
-      val t = d.groupBy(col("source"))
-        .agg(sum(col("nt")).as("tot"))
-        .withColumn("quota", expr("tot * 3 DIV 10"))
-        .cache() // both sides of the prefix theta-join read it
-      val prefix = t
-        .join(t.select(col("source").as("s2"), col("tot").as("t2")),
-          col("s2") < col("source"), "left")
+      graft.ops.GlobalRank.withRunningSum(
+          d, Seq(col("q").desc, col("doc_id")), "nt", "cum", Seq("source"))
+        .withColumn("quota", expr("cum_total * 3 DIV 10"))
         .groupBy(col("source"), col("quota"))
-        .agg(coalesce(sum(col("t2")), lit(0L)).as("prefix"))
-      cum.join(prefix, "source")
-        .groupBy(col("source"), col("quota"))
-        .agg(count_if(col("cum") - col("prefix") <= col("quota"))
-            .as("n_docs_kept"),
-          coalesce(sum(when(col("cum") - col("prefix") <= col("quota"),
-            col("nt"))), lit(0L)).as("tokens_kept"))
+        .agg(count_if(col("cum") <= col("quota")).as("n_docs_kept"),
+          coalesce(sum(when(col("cum") <= col("quota"), col("nt"))), lit(0L))
+            .as("tokens_kept"))
         .select(col("source"), col("quota").as("quota_tokens"),
           col("n_docs_kept"), col("tokens_kept"),
           // a source with < 4 tokens has quota 0 (tot*3 DIV 10); an
@@ -974,12 +948,11 @@ object CorpusOps {
       * quality-ordered fill keeps, the realized fill rate, and the
       * QUALITY FLOOR (minimum q39 composite among kept docs) — the
       * curve a curation owner reads to pick a budget, instead of
-      * re-running the selection five times. ONE GlobalRank segmented
-      * scan (the q365 shape) carries the per-source cumsum; the
-      * 5-point fraction grid is a literal generator joined per
+      * re-running the selection five times. ONE in-source GlobalRank
+      * running sum (the q365 shape) carries the per-source cumsum;
+      * the 5-point fraction grid is a literal generator joined per
       * source; the 5-row quota-denominator fold crosses back via an
-      * equi-join on the grid key. Prefix theta-join over the bounded
-      * per-source totals (q344 class). */
+      * equi-join on the grid key. */
     "q371_budget_fill_curve" -> ((s: SparkSession, dir: String) => {
       val sp = split(col("text"), " ")
       val ntD = size(sp).cast("double")
@@ -992,21 +965,16 @@ object CorpusOps {
               size(expr("filter(split(text, ' '), t -> t IN ('the', 'a'))")) / ntD) +
             lit(0.2) * least(ntD / 100.0, lit(1.0))).as("q"))
       val cum = graft.ops.GlobalRank.withRunningSum(
-        d, Seq(col("source"), col("q").desc, col("doc_id")), "nt", "cum")
-      val t = d.groupBy(col("source")).agg(sum(col("nt")).as("tot"))
-        .cache() // both sides of the prefix theta-join and the grid read it
-      val prefix = t
-        .join(t.select(col("source").as("s2"), col("tot").as("t2")),
-          col("s2") < col("source"), "left")
-        .groupBy(col("source")).agg(coalesce(sum(col("t2")), lit(0L)).as("prefix"))
-      val grid = t.select(col("source"), col("tot"),
+        d, Seq(col("q").desc, col("doc_id")), "nt", "cum", Seq("source"))
+      val grid = d.groupBy(col("source")).agg(sum(col("nt")).as("tot"))
+        .select(col("source"), col("tot"),
           explode(expr("sequence(1L, 5L)")).as("k"))
         .select(col("source"), col("k"), expr("tot * k DIV 10").as("quota"))
         .cache() // per-doc keep flags and the denominator fold read it
       val qsum = grid.groupBy(col("k")).agg(sum(col("quota")).as("qsum"))
-      cum.join(prefix, "source").join(grid, "source")
+      cum.join(grid, "source")
         .select(col("k"), col("nt"), col("q"),
-          (col("cum") - col("prefix") <= col("quota")).as("keep"))
+          (col("cum") <= col("quota")).as("keep"))
         .groupBy(col("k"))
         .agg(count_if(col("keep")).as("n_docs_kept"),
           coalesce(sum(when(col("keep"), col("nt"))), lit(0L)).as("tokens_kept"),
@@ -1028,27 +996,19 @@ object CorpusOps {
       * split across two rows, which doc-level dedup can never see
       * (the halves are not similar, they are CONTIGUOUS). Per-source
       * sequencing NEVER uses a `Window.partitionBy(source)` (the
-      * schema-bounded funnel WindowAudit rejects): one
+      * schema-bounded funnel WindowAudit rejects): one in-source
       * [[graft.ops.GlobalRank.withRowNumbers]] pass over the
-      * (source, doc_id) range order minus the per-source prefix (the
-      * q365 theta-join over the bounded totals table) yields each
-      * doc's in-source position; adjacency is then an equi-join on
+      * (source, doc_id) range order yields each doc's in-source
+      * position; adjacency is then an equi-join on
       * (source, position+1). The overlap probe is a per-pair 8-step
       * literal generator over array slices. Per source: pair volume,
       * stitched pairs (overlap ≥ 4), mean/max overlap. */
     "q369_boundary_stitch" -> ((s: SparkSession, dir: String) => {
       val d = Tables(s, dir, "documents")
         .select(col("doc_id"), col("source"), split(col("text"), " ").as("toks"))
-      val rn = graft.ops.GlobalRank.withRowNumbers(
-        d, Seq(col("source"), col("doc_id")), "rn")
-      val cnt = d.groupBy(col("source")).agg(count(lit(1)).as("nsrc"))
-        .cache() // both sides of the prefix theta-join read it
-      val prefix = cnt
-        .join(cnt.select(col("source").as("s2"), col("nsrc").as("n2")),
-          col("s2") < col("source"), "left")
-        .groupBy(col("source")).agg(coalesce(sum(col("n2")), lit(0L)).as("prefix"))
-      val rk = rn.join(prefix, "source")
-        .select(col("source"), col("toks"), (col("rn") - col("prefix")).as("rk"))
+      val rk = graft.ops.GlobalRank.withRowNumbers(
+          d, Seq(col("doc_id")), "rk", groupCols = Seq("source"))
+        .select(col("source"), col("toks"), col("rk"))
       val pairs = rk.select(col("source"), (col("rk") + 1).as("rk"),
           col("toks").as("ptoks"))
         .join(rk, Seq("source", "rk"))
@@ -1089,25 +1049,16 @@ object CorpusOps {
       * absolute gap. A gap far off zero means the cheap eyeball
       * sample misrepresents the stratum and per-source decisions made
       * from it inherit the bias. Per-source ranking NEVER uses a
-      * Window.partitionBy(source) funnel: one
-      * [[graft.ops.GlobalRank.withRowNumbers]] range order over
-      * (source, hash, doc_id) minus the bounded prefix theta-join
-      * (the q369 shape). */
+      * Window.partitionBy(source) funnel: one in-source
+      * [[graft.ops.GlobalRank.withRowNumbers]] over the
+      * (source, hash, doc_id) range order (the q369 shape). */
     "q391_sample_audit" -> ((s: SparkSession, dir: String) => {
       val d = Tables(s, dir, "documents")
         .select(col("doc_id"), col("source"), col("n_chars"),
           sha2(col("doc_id").cast("string"), 256).as("h"))
-      val rn = graft.ops.GlobalRank.withRowNumbers(
-        d, Seq(col("source"), col("h"), col("doc_id")), "rn")
-      val cnt = d.groupBy(col("source")).agg(count(lit(1)).as("nsrc"))
-        .cache() // both sides of the prefix theta-join read it
-      val prefix = cnt
-        .join(cnt.select(col("source").as("s2"), col("nsrc").as("n2")),
-          col("s2") < col("source"), "left")
-        .groupBy(col("source")).agg(coalesce(sum(col("n2")), lit(0L)).as("prefix"))
-      rn.join(prefix, "source")
-        .select(col("source"), col("n_chars"),
-          (col("rn") - col("prefix") <= 50).as("samp"))
+      graft.ops.GlobalRank.withRowNumbers(
+          d, Seq(col("h"), col("doc_id")), "rn", groupCols = Seq("source"))
+        .select(col("source"), col("n_chars"), (col("rn") <= 50).as("samp"))
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_docs"),
           count_if(col("samp")).as("n_sample"),

@@ -895,9 +895,8 @@ object TextAnalysis {
       * themselves). Every signal is an INTEGER per-row projection
       * (ppm/milli fixed-point — no float join keys, no engine
       * disagreement in the tie structure); midranks per signal ride
-      * the q198 machinery — distinct-value counts, ONE
-      * [[graft.ops.GlobalRank]] running-sum exchange each (global
-      * order ⇒ the per-group offset term vanishes), value-keyed join
+      * the q198 machinery — distinct-value counts, ONE in-signal
+      * [[graft.ops.GlobalRank]] running count, value-keyed join
       * back — and all six correlations fold in a SINGLE aggregate,
       * exploded to rows. corr over midranks is a rational fold →
       * nudged r6 (q198 stance). */
@@ -926,23 +925,19 @@ object TextAnalysis {
       // ALL FOUR signals' midranks from ONE GlobalRank exchange (the
       // q198/q241 tagged-union stance; the old shape paid one range
       // exchange + sorted cache per signal and four reassembly joins):
-      // per-(signal, value) counts union under a tag, the running
-      // count rides one exchange, the per-tag offset restores each
-      // signal's global rank, and ONE pivot groupBy re-attaches all
-      // four midranks per doc.
+      // per-(signal, value) counts union under a tag, the in-tag
+      // running count rides one exchange, and ONE pivot groupBy
+      // re-attaches all four midranks per doc.
       val unpiv = (d: org.apache.spark.sql.DataFrame) => d.select(
         col("doc_id"), explode(array(sigs.map(sg =>
           struct(lit(sg).as("sg"), col(sg).as("v"))): _*)).as("e"))
         .select(col("doc_id"), col("e.sg").as("sg"), col("e.v").as("v"))
       val cnts = unpiv(base).groupBy(col("sg"), col("v"))
         .agg(count(lit(1)).as("cnt"))
-      val mr = graft.ops.GlobalRank
-        .withRunningSum(cnts, Seq(col("sg"), col("v")), "cnt", "ccum")
-      val offs = mr.groupBy(col("sg"))
-        .agg(min(col("ccum") - col("cnt")).as("off"))
-      val mids = mr.join(broadcast(offs), "sg")
+      val mids = graft.ops.GlobalRank
+        .withRunningSum(cnts, Seq(col("v")), "cnt", "ccum", Seq("sg"))
         .select(col("sg"), col("v"),
-          ((col("ccum") - col("off") - col("cnt")).cast("double") +
+          ((col("ccum") - col("cnt")).cast("double") +
             (col("cnt").cast("double") + 1.0) / 2.0).as("mr"))
       val ranked = unpiv(base).join(mids, Seq("sg", "v"))
         .groupBy(col("doc_id"))

@@ -177,33 +177,18 @@ object Inference {
       * INTEGER WALK W = 2S−n with decision at the first |W| ≥ 8
       * (⌈ln19/ln1.5⌉) — no float anywhere, engine-proof by
       * construction. Per-type cumulative sums over (ts, event_id)
-      * order ride ONE global [[GlobalRank.withRunningSums]] exchange
-      * with per-type offsets subtracted (the q163 grouped-cumsum
-      * pattern — never a per-type WindowExec funnel, which would put
-      * a fifth of a 100 TB stream in one task). */
+      * order ride ONE in-type [[GlobalRank.withRunningSums]] exchange
+      * — never a per-type WindowExec funnel, which would put a fifth
+      * of a 100 TB stream in one task. */
     "q291_sprt_sequential" -> ((s: SparkSession, dir: String) => {
       val ev = Tables(s, dir, "events")
         .select(col("event_type").as("t"), col("ts"), col("event_id"),
           when(col("value") > 50.0, 1L).otherwise(-1L).as("step"),
           lit(1L).as("one"))
-      val c = GlobalRank.withRunningSums(ev,
-        Seq(col("t"), col("ts"), col("event_id")),
-        Seq("step" -> "cw", "one" -> "crn"))
-      // per-type offsets: totals of all PRECEDING types (bounded by
-      // the type domain; the offsets window partitions on a
-      // non-foldable constant key, the q67 counts-table stance)
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(pmod(length(col("t")), lit(1)))
-        .orderBy(col("t"))
-        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-      val offs = c.groupBy(col("t"))
-        .agg(sum(col("step")).as("tw"), count(lit(1)).as("tn"))
-        .select(col("t"),
-          coalesce(sum(col("tw")).over(w), lit(0L)).as("ow"),
-          coalesce(sum(col("tn")).over(w), lit(0L)).as("on"))
-      val walk = c.join(broadcast(offs), "t")
-        .select(col("t"), (col("cw") - col("ow")).as("w"),
-          (col("crn") - col("on")).as("n"))
+      val walk = GlobalRank.withRunningSums(ev,
+          Seq(col("ts"), col("event_id")), Seq("step" -> "w", "one" -> "n"),
+          Seq("t"))
+        .select(col("t"), col("w"), col("n"))
       val hit = walk.filter(abs(col("w")) >= 8)
         .groupBy(col("t"))
         .agg(min(struct(col("n"), col("w"))).as("first"))
@@ -325,25 +310,19 @@ object Inference {
       * arrival process (capacity planning reads assume CV ≈ 1;
       * CV ≫ 1 means bursts, CV ≪ 1 a scheduler): per-type
       * microsecond gaps between consecutive events. Per-type
-      * consecutive pairing WITHOUT a per-type window funnel: the
-      * q291 machinery gives each event its within-type index from
-      * ONE global running-sum exchange, and gaps come from the
+      * consecutive pairing WITHOUT a per-type window funnel: each
+      * event's within-type index is an in-type row number from ONE
+      * [[GlobalRank.withRowNumbers]] exchange, and gaps come from the
       * (type, i) ⋈ (type, i+1) equi-join. Gap moments are integer
       * micros (mean gap an exact rational, nudged); CV passes
       * through one sqrt — off-grid, plain r6. */
     "q300_interarrival_burstiness" -> ((s: SparkSession, dir: String) => {
       val ev = Tables(s, dir, "events")
         .select(col("event_type").as("t"), col("ts"), col("event_id"),
-          unix_micros(col("ts")).as("us"), lit(1L).as("one"))
-      val c = GlobalRank.withRunningSums(ev,
-        Seq(col("t"), col("ts"), col("event_id")), Seq("one" -> "crn"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(pmod(length(col("t")), lit(1))).orderBy(col("t"))
-        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-      val offs = c.groupBy(col("t")).agg(count(lit(1)).as("tn"))
-        .select(col("t"), coalesce(sum(col("tn")).over(w), lit(0L)).as("on"))
-      val idx = c.join(broadcast(offs), "t")
-        .select(col("t"), (col("crn") - col("on")).as("i"), col("us"))
+          unix_micros(col("ts")).as("us"))
+      val idx = GlobalRank.withRowNumbers(ev,
+          Seq(col("ts"), col("event_id")), "i", groupCols = Seq("t"))
+        .select(col("t"), col("i"), col("us"))
       val gaps = idx.as("a")
         .join(idx.as("b"), col("a.t") === col("b.t") &&
           col("a.i") + 1 === col("b.i"))
@@ -369,26 +348,15 @@ object Inference {
       * A DISCRETE rank convention (value at rank ⌊p(n−1)⌋+1) keeps
       * every output an integer — no interpolation float, no
       * cross-engine quantile_cont op-order dependency, FloatAudit
-      * clean. Per-half ranks from ONE global range exchange
-      * ([[GlobalRank.withRowNumbers]] over (half, value, id)) with
-      * the 2-row per-half offset/count table joined back (the q291
-      * offset stance, never a per-half WindowExec funnel). */
+      * clean. Per-half ranks and sizes from ONE range exchange
+      * ([[GlobalRank.withRowNumbers]] within each half over
+      * (half, value, id) — never a per-half WindowExec funnel). */
     "q301_qq_shift" -> ((s: SparkSession, dir: String) => {
       val d = Tables(s, dir, "documents")
         .select(pmod(col("doc_id"), lit(2)).as("h"), col("n_chars"),
           col("doc_id"))
-      val ranked = GlobalRank.withRowNumbers(d,
-        Seq(col("h"), col("n_chars"), col("doc_id")), "rn")
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(pmod(col("h"), lit(1))).orderBy(col("h"))
-        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-      val offs = ranked.groupBy(col("h")).agg(count(lit(1)).as("nh"))
-        .select(col("h"), col("nh"),
-          coalesce(sum(col("nh")).over(w), lit(0L)).as("oh"))
-      val local = ranked.join(broadcast(offs), "h")
-        .select(col("h"), col("n_chars"), col("nh"),
-          (col("rn") - col("oh")).as("r"))
-      val picks = local
+      val picks = GlobalRank.withRowNumbers(d,
+          Seq(col("n_chars"), col("doc_id")), "r", Some("nh"), Seq("h"))
         .select(col("h"), col("n_chars"),
           explode(expr("sequence(1, 9)")).as("p"),
           col("r"), col("nh"))
@@ -692,10 +660,10 @@ object Inference {
       * length tail, Mann-Whitney (q200) answers a stochastic-
       * dominance question, not "how far apart are the typical
       * lengths". Trimming is by RANK over a (value, doc_id) total
-      * order — deterministic under ties — and ranks come from ONE
-      * GlobalRank range exchange with per-group offsets (the q198
-      * midrank stance; a window partitioned on the handful of
-      * sources would funnel each group through one task). The
+      * order — deterministic under ties — and in-group ranks and
+      * sizes come from ONE GlobalRank range exchange (a window
+      * partitioned on the handful of sources would funnel each group
+      * through one task). The
       * winsorized variance folds as Σw/Σw² over CLAMPED INTEGER
       * lengths, so every input to the t and df formulas is an
       * integer-derived IEEE-exact double: the only float work is the
@@ -706,18 +674,10 @@ object Inference {
       val d0 = Tables(s, dir, "documents")
         .filter(col("source").isin("src0", "src1"))
         .select(col("source").as("g"), col("n_chars").as("v"), col("doc_id"))
-        .withColumn("one", lit(1L))
-      val ranked = GlobalRank.withRunningSum(d0,
-        Seq(col("g"), col("v"), col("doc_id")), "one", "ccum")
-      // per-group offset and size from the SAME ranked table — rank
-      // within g = global running count minus the group's start
-      val offs = ranked.groupBy(col("g"))
-        .agg(min(col("ccum")).as("cmin"), count(lit(1)).as("n"))
-        .select(col("g"), (col("cmin") - lit(1L)).as("off"), col("n"),
+      val r = GlobalRank.withRowNumbers(d0,
+          Seq(col("v"), col("doc_id")), "r", Some("n"), Seq("g"))
+        .select(col("g"), col("v"), col("r"), col("n"),
           floor(col("n") / lit(5)).cast("long").as("k"))
-      val r = ranked.join(broadcast(offs), "g")
-        .select(col("g"), col("v"), (col("ccum") - col("off")).as("r"),
-          col("n"), col("k"))
       // clamp boundaries: the order statistics at rank k+1 and n-k
       val lo = r.filter(col("r") === col("k") + lit(1L))
         .select(col("g"), col("v").as("lov"))
@@ -899,10 +859,9 @@ object Inference {
       * empirical coverage of |v − m| ≤ q̂. The order statistic is
       * EXACT at scale: residuals round to the r6 grid (the
       * cross-engine float-ranking stance — everything after is
-      * integer counting), the distinct-score grid gets ONE global
+      * integer counting), the distinct-score grid gets ONE in-type
       * running sum over the (type, score) range order
-      * ([[graft.ops.GlobalRank]]), per-type ranks subtract the q145
-      * min(cum − cnt) base — no per-type WindowExec funnel, no
+      * ([[graft.ops.GlobalRank]]) — no per-type WindowExec funnel, no
       * O(distinct)-per-group percentile buffer. The conformal rank
       * ⌈0.9(n+1)⌉ is pure integer arithmetic in both engines. */
     "q356_conformal_coverage" -> ((s: SparkSession, dir: String) => {
@@ -1195,9 +1154,9 @@ object Inference {
     * k_rank, q̂) — the batch-calibrated artifact q356 evaluates and
     * [[graft.streaming.EventStreams.conformalCoverage]] serves live:
     * per-type location fit on the fit slice, the ⌈0.9(n+1)⌉-th
-    * smallest r6-rounded calibration residual via ONE GlobalRank
-    * running sum over the (type, score) grid (the q145 base
-    * subtraction — no per-type window funnel). */
+    * smallest r6-rounded calibration residual via ONE in-type
+    * GlobalRank running sum over the (type, score) grid, whose type
+    * total is n_cal (no per-type window funnel). */
   private[graft] def conformalModel(s: SparkSession, dir: String)
       : org.apache.spark.sql.DataFrame = {
     val e = Tables(s, dir, "events")
@@ -1212,14 +1171,11 @@ object Inference {
         .as("sc"))
     val g = cal.groupBy(col("event_type"), col("sc"))
       .agg(count(lit(1)).as("cnt"))
-    val cum = graft.ops.GlobalRank.withRunningSum(
-      g, Seq(col("event_type"), col("sc")), "cnt", "cum")
-    val base = cum.groupBy(col("event_type"))
-      .agg(min(col("cum") - col("cnt")).as("base"),
-        sum(col("cnt")).as("n_cal"))
-    val qhat = cum.join(base, "event_type")
+    val qhat = graft.ops.GlobalRank.withRunningSum(
+        g, Seq(col("sc")), "cnt", "cum", Seq("event_type"))
+      .withColumnRenamed("cum_total", "n_cal")
       .withColumn("k", expr("(9 * (n_cal + 1) + 9) div 10"))
-      .filter(col("cum") - col("base") >= col("k"))
+      .filter(col("cum") >= col("k"))
       .groupBy(col("event_type"))
       .agg(min(col("sc")).as("qhat"), max(col("n_cal")).as("n_cal"),
         max(col("k")).as("k_rank"))

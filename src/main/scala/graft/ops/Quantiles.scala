@@ -17,7 +17,8 @@ import org.apache.spark.sql.functions._
   * over the cached sorted table; a window over the small table of
   * (range partition, group) cells turns those ids into in-group ranks
   * and group sizes (the range-rank core [[GlobalRank.rangeRanked]],
-  * which also numbers [[GlobalRank.withRowNumbers]]' rows). Nothing
+  * which also numbers and sums the rows of [[GlobalRank.withRowNumbers]]
+  * and [[GlobalRank.withRunningSums]]). Nothing
   * is buffered per group, nothing is collected to the driver, and a
   * skewed group spreads over many range partitions instead of one
   * window task.
@@ -41,7 +42,7 @@ import org.apache.spark.sql.functions._
   * silent corruption into a loud error for the price of two extra
   * aggregate columns. */
 object Quantiles {
-  import GlobalRank.{cellSums, nullSafeJoin, rangeRanked}
+  import GlobalRank.{nullSafeJoin, rangeRanked}
 
   /** The rows of `df` with a non-null `valueCol`, as `_v` double,
     * ranked within their group of `groupCols` by value through the
@@ -52,7 +53,7 @@ object Quantiles {
       df: DataFrame, groupCols: Seq[String], valueCol: String): GlobalRank.Ranked = {
     val gcols: Seq[Column] = groupCols.map(col)
     rangeRanked(df.select(gcols :+ col(valueCol).cast("double").as("_v"): _*)
-      .filter(col("_v").isNotNull), groupCols, gcols :+ col("_v"))
+      .filter(col("_v").isNotNull), groupCols, Seq(col("_v")))
   }
 
   /** Quantile bounds per group from [[groupRanked]] rows, with the
@@ -166,22 +167,17 @@ object Quantiles {
     * need.
     *
     * Same bounded-state design as [[exactQuantiles]], with weighted
-    * ranks instead of row ranks: range-partition on (group, value),
-    * local weight cumsum per (partition, group) computed in PARTITION
-    * ORDER by a narrow mapPartitions (a Window.partitionBy(pid) here
-    * would re-shuffle and re-sort the whole dataset the range
-    * exchange just ordered), then per-(partition, group) offsets turn
-    * local into global running weights. Groups are CONTIGUOUS under
-    * the range partitioning, so the offset table has at most
-    * partitions + groups − 1 rows — the prefix window runs over that
-    * small table, never the data. Weights must be integral (exact
-    * cumulative sums; a double running weight would make the q·W
-    * threshold crossing float-order-dependent and engine-divergent)
-    * and NON-NEGATIVE — a negative weight breaks the monotonicity of
-    * the running weight and would silently mis-pick the threshold
-    * crossing, so it raises instead (same fail-loud stance as the
-    * 2^33 partition-size check). NULL group keys are retained
-    * (null-safe joins), matching groupBy semantics. */
+    * ranks instead of row ranks: the range-rank core
+    * ([[GlobalRank.rangeRanked]]) sums the weights within each group
+    * over the (group, value) order, giving every row its running
+    * weight and its group's total weight. Weights must be integral
+    * (exact cumulative sums; a double running weight would make the
+    * q·W threshold crossing float-order-dependent and
+    * engine-divergent) and NON-NEGATIVE — a negative weight breaks the
+    * monotonicity of the running weight and would silently mis-pick
+    * the threshold crossing, so it raises instead (same fail-loud
+    * stance as the 2^33 partition-size check). NULL group keys are
+    * retained, matching groupBy semantics. */
   def weightedQuantiles(
       df: DataFrame,
       groupCols: Seq[String],
@@ -196,50 +192,22 @@ object Quantiles {
         lit("weighted quantiles: negative weight "), col("_w").cast("string"),
         lit(" — running cumulative weight must be monotone"))))
         .otherwise(col("_w")))
-    val sortCols = gcols :+ col("_v")
-
-    val parted = v.repartitionByRange(sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-      .withColumn("_pid", spark_partition_id())
-    // group columns sit at positions 0..n-1 of `parted` by
-    // construction; the running sum resets at each group boundary and
-    // rides the sort order the exchange already produced — no shuffle
-    val nGroup = groupCols.length
-    val outSchema = parted.schema.add("_lcw", org.apache.spark.sql.types.LongType, false)
-    val local = parted.mapPartitions { it =>
-      var acc = 0L
-      var cur: Seq[Any] = null
-      it.map { r =>
-        val key = (0 until nGroup).map(r.get)
-        if (cur == null || key != cur) { acc = 0L; cur = key }
-        acc += r.getAs[Long]("_w")
-        org.apache.spark.sql.Row.fromSeq(r.toSeq :+ acc)
-      }
-    }(org.apache.spark.sql.Encoders.row(outSchema))
-
-    // per-(partition, group) totals: their prefix sums turn local into
-    // global running weights, and their whole-group sum is the group's
-    // total weight
-    val pg = local.groupBy(col("_pid") +: gcols: _*).agg(max(col("_lcw")).as("_pgw"))
-    val (earlier, total) = cellSums("_pid", groupCols, col("_pgw"))
-    val offsets = pg.select(col("_pid") +: gcols :+ earlier.as("_off") :+ total.as("_tw"): _*)
-
-    val withTotal = nullSafeJoin(local, broadcast(offsets), "_pid" +: groupCols)
-      .withColumn("_cw", col("_lcw") + col("_off"))
-
+    // `_gr_sum0` is a row's running weight in its group, `_gr_tot0` the
+    // group's total weight
+    val weighted = rangeRanked(v, groupCols, Seq(col("_v")), Seq("_w")).withRank
     val picks = qs.map { case (name, q) =>
-      min(when(col("_cw").cast("double") >= lit(q) * col("_tw").cast("double"),
+      min(when(col("_gr_sum0").cast("double") >= lit(q) * col("_gr_tot0").cast("double"),
         col("_v"))).as(name)
-    } :+ max(col("_cw")).as("_max_cw") :+ max(col("_tw")).as("_tw_out") :+
+    } :+ max(col("_gr_sum0")).as("_max_cw") :+ max(col("_gr_tot0")).as("_tw_out") :+
       sum(col("_w")).as("_w_sum")
     val agged =
-      if (groupCols.isEmpty) withTotal.agg(picks.head, picks.tail: _*)
-      else withTotal.groupBy(gcols: _*).agg(picks.head, picks.tail: _*)
+      if (groupCols.isEmpty) weighted.agg(picks.head, picks.tail: _*)
+      else weighted.groupBy(gcols: _*).agg(picks.head, picks.tail: _*)
     // same integrity stance as boundsOf: each group's final running
-    // weight must equal its total from the offsets table (else the two
-    // branches saw different exchange layouts), and that total must
-    // equal the group's weights summed directly (else the local running
-    // sum missed a group boundary)
+    // weight must equal its total from the offsets table (else the local
+    // running sum missed a group boundary, or the two branches saw
+    // different exchange layouts), and that total must equal the group's
+    // weights summed directly over its rows
     agged.filter(assert_true(
       col("_max_cw") === col("_tw_out") && col("_tw_out") === col("_w_sum"),
       lit("weighted quantiles: running weights do not reach the group's weight " +

@@ -829,37 +829,28 @@ object Statistics {
     /** Spearman rank correlation between quantity and price per return
       * flag — the monotone-association screen Pearson (q63) misses on
       * nonlinear-but-monotone drift. Midranks are derived WITHOUT any
-      * low-cardinality window: per-(flag, value) counts get ONE global
-      * running sum over (flag, value) order ([[GlobalRank]] — one
-      * range exchange), the per-flag rank offset falls out of the SAME
-      * table as min(cum - cnt) per flag (the group's first cumulative
-      * position — no second pass, no triangular join), and rows pick
-      * up their midranks through two value-keyed equi-joins. Spearman
+      * low-cardinality window: per-(flag, value) counts get ONE
+      * in-flag running sum over (flag, value) order ([[GlobalRank]] —
+      * one range exchange), and rows pick up their midranks through
+      * two value-keyed equi-joins. Spearman
       * is then plain corr over the midrank pairs. Midranks are exact
       * .0/.5 doubles, so the only cross-engine float is the final
       * correlation — r6 on both sides. */
     "q198_spearman" -> ((s: SparkSession, dir: String) => {
       // BOTH variables' midranks from ONE GlobalRank exchange
       // (round-17, guide §2.4): the per-(flag, value) count tables are
-      // tagged and unioned, the running count rides one range
-      // exchange over (tag, flag, value) — within a tag that order ≡
-      // the old per-variable (flag, value) order, and the per-(tag,
-      // flag) offset subtracts the group's start exactly as before,
-      // so every midrank is the identical exact .0/.5 double. The old
-      // shape paid two range exchanges, two sorted caches, and two
-      // offset passes.
+      // tagged and unioned, and the running count rides one range
+      // exchange over (tag, flag, value), restarting at each (tag,
+      // flag) group — every midrank is an exact .0/.5 double.
       def cnts(valueCol: String, tag: String) = Tables(s, dir, "lineitem")
         .groupBy(col("l_returnflag").as("g"), col(valueCol).as("v"))
         .agg(count(lit(1)).as("cnt"))
         .select(lit(tag).as("w"), col("g"), col("v"), col("cnt"))
-      val cum = GlobalRank.withRunningSum(
-        cnts("l_quantity", "q").unionByName(cnts("l_extendedprice", "p")),
-        Seq(col("w"), col("g"), col("v")), "cnt", "ccum")
-      val offs = cum.groupBy(col("w"), col("g"))
-        .agg(min(col("ccum") - col("cnt")).as("off"))
-      val mr = cum.join(offs, Seq("w", "g"))
+      val mr = GlobalRank.withRunningSum(
+          cnts("l_quantity", "q").unionByName(cnts("l_extendedprice", "p")),
+          Seq(col("v")), "cnt", "ccum", Seq("w", "g"))
         .select(col("w"), col("g"), col("v"),
-          ((col("ccum") - col("off") - col("cnt")).cast("double") +
+          ((col("ccum") - col("cnt")).cast("double") +
             (col("cnt").cast("double") + 1.0) / 2.0).as("mr"))
       val mrQ = mr.filter(col("w") === "q")
         .select(col("g"), col("v"), col("mr").as("mr_qty"))
@@ -1669,8 +1660,7 @@ object Statistics {
       * ordered by (metric, custkey) so both engines agree on every
       * boundary. Ranking on last-active day ascending makes the
       * recency score need NO corpus max-date subtraction. Monetary
-      * sums ride exact integer cents (the q222 stance). The one-row
-      * customer-count fold joins broadcast (allowlisted class). */
+      * sums ride exact integer cents (the q222 stance). */
     "q241_rfm_segments" -> ((s: SparkSession, dir: String) => {
       val rfm = Tables(s, dir, "orders")
         .select(col("o_custkey"),
@@ -1680,32 +1670,22 @@ object Statistics {
         .groupBy(col("o_custkey"))
         .agg(max(col("day")).as("last_day"), count(lit(1)).as("freq"),
           sum(col("cents")).as("cents"))
-        // three rank passes consume this — cache the narrow
-        // per-customer aggregate once (customers ≪ orders)
-        .cache()
       // ALL THREE dimensions' ranks from ONE GlobalRank exchange
       // (round-17, the q198 tagged-union stance): the per-customer
       // triple unpivots to (w, v) rows, one range exchange over
-      // (w, v, custkey) ranks every dimension — within a tag that
-      // order ≡ the old per-dimension (value, custkey) order, and the
-      // per-tag offset (min rank − 1) restores the 1-based dimension
-      // rank exactly. One pivot groupBy on custkey replaces the two
-      // reassembly joins; all arithmetic stays exact integers. The
-      // old shape paid three rank machineries (three range exchanges,
-      // three sorted caches) plus two shuffled joins — 30 stage-jobs
-      // for a per-customer table.
+      // (w, v, custkey) numbers every dimension's rows within their
+      // tag, and the tag's size is the customer count. One pivot
+      // groupBy on custkey reassembles the three scores; all
+      // arithmetic stays exact integers.
       val u = rfm.select(col("o_custkey"), explode(array(
           struct(lit("r").as("w"), col("last_day").as("v")),
           struct(lit("f").as("w"), col("freq").as("v")),
           struct(lit("m").as("w"), col("cents").as("v")))).as("e"))
         .select(col("o_custkey"), col("e.w").as("w"), col("e.v").as("v"))
-      val ranked = GlobalRank.withRowNumbers(u,
-        Seq(col("w"), col("v"), col("o_custkey")), "rn")
-      val offs = ranked.groupBy(col("w"))
-        .agg((min(col("rn")) - 1).as("off"), count(lit(1)).as("n"))
-      val scored = ranked.join(broadcast(offs), "w")
+      val scored = GlobalRank.withRowNumbers(u,
+          Seq(col("v"), col("o_custkey")), "rn", Some("n"), Seq("w"))
         .select(col("o_custkey"), col("w"), col("v"),
-          expr("CAST((rn - off - 1) * 5 DIV n AS BIGINT) + 1").as("q"))
+          expr("CAST((rn - 1) * 5 DIV n AS BIGINT) + 1").as("q"))
         .groupBy(col("o_custkey"))
         .agg(max(when(col("w") === "r", col("q"))).as("r_q"),
           max(when(col("w") === "f", col("q"))).as("f_q"),
@@ -2158,10 +2138,8 @@ object Statistics {
       val second = tagged.filter(col("h2"))
         .select(col("user_id")).distinct()
         .withColumn("alive", lit(1L))
-      val nUsers = firstHalf.agg(count(lit(1)).as("nu"))
       val ranked = graft.ops.GlobalRank.withRowNumbers(
-        firstHalf, Seq(col("acts"), col("user_id")), "rn")
-        .join(broadcast(nUsers))
+          firstHalf, Seq(col("acts"), col("user_id")), "rn", Some("nu"))
         .withColumn("decile",
           expr("CAST((rn - 1) * 10 DIV nu AS BIGINT) + 1"))
       ranked.join(second, Seq("user_id"), "left")

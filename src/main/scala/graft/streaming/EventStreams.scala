@@ -976,19 +976,25 @@ object EventStreams {
     * type-bounded model; state is two sum-mergeable longs per type
     * (Complete mode re-emits the running totals each micro-batch).
     * Residuals round to the same r6 grid as the batch cutoff, so the
-    * covered/uncovered decision is bit-identical to q356's. */
+    * covered/uncovered decision is bit-identical to q356's. The model
+    * rows are collected into a local table first: a streaming plan may
+    * not carry the batch plan's row ids (`monotonically_increasing_id`
+    * of its rank core), even on its static side. */
   def conformalCoverage(spark: SparkSession, events: DataFrame,
-      model: DataFrame): DataFrame =
+      model: DataFrame): DataFrame = {
+    val m = model.select(col("event_type"), col("mfit"), col("qhat"))
+    val pinned = spark.createDataFrame(
+      java.util.Arrays.asList(m.collect(): _*), m.schema)
     events
       .filter(col("value").isNotNull &&
         pmod(col("event_id"), lit(5)) === 0)
-      .join(broadcast(model.select(col("event_type"), col("mfit"),
-        col("qhat"))), "event_type")
+      .join(broadcast(pinned), "event_type")
       .select(col("event_type"),
         (round(abs(col("value") - col("mfit")) + lit(1e-12), 6) <=
           col("qhat")).cast("long").as("cov"))
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_test"), sum(col("cov")).as("n_covered"))
+  }
 
   final case class CusumState(days: Array[Long], cnts: Array[Long])
   final case class CusumSummary(event_type: String, n_events: Long,

@@ -75,7 +75,7 @@ class CurationSpec extends SparkSuite {
     // text itself is never modified (it is excluded from train by
     // construction). Every doc is the same 50 fixed-width tokens so
     // the percentile length band keeps all of them.
-    val dir = java.nio.file.Files.createTempDirectory("graft_cur_plant").toString
+    val dir = tempFixture("graft_cur_plant")
     val span = (1 to 30).map(i => f"leak$i%02d")
     def filler(d: Int, from: Int, n: Int) =
       (from until from + n).map(i => f"d$d%02dt$i%02d")
@@ -118,7 +118,7 @@ class CurationSpec extends SparkSuite {
     // state would destroy it. The stage must re-extract over the
     // curated subset; swap `exactSubstrCut` for a `catalogSites` read
     // and this fails.
-    val dir = java.nio.file.Files.createTempDirectory("graft_cur_fresh").toString
+    val dir = tempFixture("graft_cur_fresh")
     // 6-char span tokens match the filler width, so doc 9's
     // n_chars stays inside the percentile band like its neighbors
     val span = (1 to 25).map(i => f"fre$i%03d")

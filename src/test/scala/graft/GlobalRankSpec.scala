@@ -97,4 +97,59 @@ class GlobalRankSpec extends SparkSuite {
       s"withRunningSum leaked internals: ${rs.columns.mkString(",")}")
     spark.catalog.clearCache()
   }
+
+  test("grouped withRowNumbers and withRunningSums equal partitionBy(g) windows at any shuffle width") {
+    import org.apache.spark.sql.expressions.Window
+    val rnd = new scala.util.Random(97L)
+    // one 3,000-row group with ties on v that spans many range
+    // partitions, 1-row groups, a mid-size group, and a NULL key that
+    // must stay a group
+    val keys: Seq[Option[String]] = Seq.fill(3000)(Some("big")) ++
+      (1 to 6).map(i => Some(s"one$i")) ++ Seq.fill(40)(Some("mid")) ++
+      Seq.fill(50)(None)
+    val df = rnd.shuffle(keys).zipWithIndex.map { case (g, id) =>
+        (g, rnd.nextInt(300).toLong, id.toLong,
+          rnd.nextInt(21).toLong - 10, rnd.nextInt(1001).toLong - 500) }
+      .toDF("g", "v", "id", "a", "b").repartition(5)
+    val order = Seq(col("v"), col("id"))
+    val w = Window.partitionBy(col("g")).orderBy(order: _*)
+    val upTo = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val all = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    def byId(d: org.apache.spark.sql.DataFrame): Map[Long, Seq[Long]] =
+      d.collect().map(r => r.getLong(0) -> (1 until r.length).map(r.getLong)).toMap
+    val want = byId(df.select(col("id"), row_number().over(w).cast("long"),
+      count(lit(1)).over(all), sum(col("a")).over(upTo), sum(col("b")).over(upTo),
+      sum(col("a")).over(all), sum(col("b")).over(all)))
+
+    val conf = spark.conf
+    val saved = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.adaptive.coalescePartitions.enabled").map(key => key -> conf.get(key))
+    try {
+      // AQE would coalesce these few rows into one range partition
+      conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+      for (parts <- Seq(1, 3, 32)) {
+        conf.set("spark.sql.shuffle.partitions", parts.toString)
+        if (parts == 32) {
+          val span = df.repartitionByRange(col("g") +: order: _*)
+            .withColumn("p", spark_partition_id()).filter(col("g") === "big")
+            .select(countDistinct(col("p"))).head().getLong(0)
+          assert(span >= 16, s"the big group spans only $span range partitions")
+        }
+        val numbered = GlobalRank.withRowNumbers(df, order, "rn", Some("n"), Seq("g"))
+        val summed = GlobalRank.withRunningSums(df, order,
+          Seq("a" -> "ca", "b" -> "cb"), Seq("g"))
+        assert(summed.columns.toSet ==
+          Set("g", "v", "id", "a", "b", "ca", "cb", "ca_total", "cb_total"))
+        val got = byId(numbered.select("id", "rn", "n"))
+        val sums = byId(summed.select("id", "ca", "cb", "ca_total", "cb_total"))
+        assert(got.keySet == want.keySet && sums.keySet == want.keySet,
+          s"$parts partitions: rows lost or added")
+        for ((id, ws) <- want) {
+          assert(got(id) ++ sums(id) == ws,
+            s"$parts partitions, id $id: ${got(id) ++ sums(id)} vs $ws")
+        }
+        spark.catalog.clearCache()
+      }
+    } finally saved.foreach { case (key, v) => conf.set(key, v) }
+  }
 }

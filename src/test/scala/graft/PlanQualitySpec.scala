@@ -159,9 +159,6 @@ class PlanQualitySpec extends SparkSuite {
     "q216_km_survival",
     // q225: the broadcast side is the ONE-ROW total-revenue fold
     "q225_basket_economics",
-    // q241: the broadcast side is the ONE-ROW customer-count fold
-    // feeding the integer quintile bucket formula — provably 1 row
-    "q241_rfm_segments",
     // q234: the broadcast side is the ONE-ROW (N, tie-sum) totals
     // fold over the distinct-value table — provably 1 row at any sf
     "q234_kruskal_wallis",
@@ -251,10 +248,6 @@ class PlanQualitySpec extends SparkSuite {
     // (q282 class) and the k=8-row cell-rank table (q122 control-
     // plane class) — both driver-bounded at any corpus size
     "q362_ivf_nprobe_curve",
-    // q365: the prefix theta-join is over the per-SOURCE totals table
-    // (schema-bounded domain, ~20 rows at any corpus size — the
-    // q344 dim-cross class)
-    "q365_quota_select",
     // q366: the broadcast side is the ONE-ROW corpus pre/post totals
     // fold (q361/q136 class) — provably 1 row at any corpus size
     "q366_dedup_mix_shift",
@@ -263,12 +256,6 @@ class PlanQualitySpec extends SparkSuite {
     // train-doc-count folds (q136 class) — all bounded at any
     // corpus size
     "q368_source_classifier",
-    // q369: the prefix theta-join is over the per-SOURCE counts table
-    // (schema-bounded domain — the q365/q344 dim-cross class)
-    "q369_boundary_stitch",
-    // q371: the prefix theta-join is over the per-SOURCE totals table
-    // (q365 class — schema-bounded domain at any corpus size)
-    "q371_budget_fill_curve",
     // q376: the broadcast side is the ONE-ROW corpus max-id fold
     // (q136 class) — provably 1 row at any corpus size
     "q376_vocab_growth_curve",
@@ -281,9 +268,6 @@ class PlanQualitySpec extends SparkSuite {
     // q390: the broadcast side is the ONE-ROW corpus max-id fold
     // (q136/q376 class) — provably 1 row at any corpus size
     "q390_dup_decile_trend",
-    // q391: the prefix theta-join is over the per-SOURCE counts table
-    // (schema-bounded domain — the q365/q369 dim-cross class)
-    "q391_sample_audit",
     // q392: the RBO pair grid is the SOURCE x SOURCE domain cross
     // (schema-bounded, q344 class — ~20x20 at any corpus size, each
     // side carrying one 50-token array)
@@ -354,14 +338,12 @@ class PlanQualitySpec extends SparkSuite {
 
   // Windows whose INPUT row count is provably bounded independent of
   // data volume, so a constant-cardinality partition key is harmless:
-  //   q120: prefix window over the per-(range-partition, group) totals
-  //         table — ≤ tasks x groups rows by construction
   //   q101: vocab id assignment — row_number over the LIMIT-1000 top-k
   //         output, ≤ 1000 rows in one task at any corpus scale
   //   q264: rank assignment over each retrieval arm's LIMIT-20
   //         output — ≤ 20 rows in one task at any corpus scale
   private val boundedInputWindows =
-    Set("q120_weighted_quantiles", "q101_vocab_encode", "q264_rrf_fusion")
+    Set("q101_vocab_encode", "q264_rrf_fusion")
 
   // A window over an aggregate keyed by EXACTLY one range-partition id
   // plus the window's own partition keys runs over one row per

@@ -161,6 +161,17 @@ class QuantilesSpec extends SparkSuite {
     val df = rnd.shuffle(rows).toDF("g", "v").repartition(5)
     val groups = rows.filter(_._2.isDefined).groupBy(_._1)
       .map { case (g, rs) => g -> rs.flatMap(_._2).sorted }
+    // weightedQuantiles reads an integral weight derived from the value
+    // (every v·4 is an integer; weight 0 included)
+    def weight(v: Double): Long = Math.floorMod((v * 4).toLong, 7L)
+    val wdf = df.withColumn("w", pmod((col("v") * 4).cast("long"), lit(7L)))
+    val wantWeighted: Map[Option[String], Seq[Double]] = groups.map { case (g, vs) =>
+      val total = vs.map(weight).sum
+      g -> qs.map { case (_, q) =>
+        vs.scanLeft(0L)(_ + weight(_)).tail.zip(vs)
+          .collectFirst { case (cw, v) if cw.toDouble >= q * total.toDouble => v }.get
+      }
+    }
 
     val k = 4
     // SQL NTILE(k) over each group's sorted values, then count/lo/hi/mean
@@ -220,6 +231,10 @@ class QuantilesSpec extends SparkSuite {
           .groupBy(r => Option(r.getString(0)))
           .map { case (g, rs) => g -> rs.map(_.getDouble(1)).sorted.toSeq }
         assert(rowValues == groups, s"$parts partitions: annotated rows differ from the input")
+
+        val weighted = quantilesOf(Quantiles.weightedQuantiles(wdf, Seq("g"), "v", "w", qs))
+        assert(weighted.length == wantWeighted.size && weighted.toMap == wantWeighted,
+          s"$parts partitions: weighted quantiles ${weighted.toMap} vs $wantWeighted")
 
         val bins = Quantiles.equiDepthBins(df, Seq("g"), "v", k).collect()
           .map(r => (Option(r.getString(0)), r.getLong(1)) ->

@@ -159,8 +159,8 @@ class StateStoreSpec extends SparkSuite {
     def dirExists(p: String) = java.nio.file.Files.isDirectory(
       java.nio.file.Paths.get(p))
     // two independent "fixture dirs", each with a documents.parquet
-    val fixA = java.nio.file.Files.createTempDirectory("graft_gc_a").toString
-    val fixB = java.nio.file.Files.createTempDirectory("graft_gc_b").toString
+    val fixA = tempFixture("graft_gc_a")
+    val fixB = tempFixture("graft_gc_b")
     Seq((1L, "alpha")).toDF("doc_id", "text").coalesce(1)
       .write.mode("overwrite").parquet(s"$fixA/documents.parquet")
     Seq((2L, "beta")).toDF("doc_id", "text").coalesce(1)

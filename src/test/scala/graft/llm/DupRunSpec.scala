@@ -44,7 +44,7 @@ class DupRunSpec extends SparkSuite {
   }
 
   private lazy val fixtureDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_duprun").toString
+    val dir = tempFixture("graft_duprun")
     val tA = lowTriple("ua") // doc 0, window 1-64
     val tB = lowTriple("ub") // doc 1, window 1-64
     val tB2 = lowTriple("uc") // doc 1, window 49-100
@@ -105,7 +105,7 @@ class DupRunSpec extends SparkSuite {
   test("q414: the shifted span is cross-source contamination when sources differ") {
     // same two-doc fixture, but the docs in different sources: the
     // span must surface as exactly one shared run for that source pair
-    val dir = java.nio.file.Files.createTempDirectory("graft_duprun4").toString
+    val dir = tempFixture("graft_duprun4")
     val tA = lowTriple("va"); val tB = lowTriple("vb"); val tB2 = lowTriple("vc")
     def uniq(p: String, n: Int): Seq[String] = (1 to n).map(i => s"$p$i")
     val doc0 = tA ++ uniq("ha", 5) ++ span ++ uniq("hb", 52)
@@ -193,7 +193,7 @@ class DupRunSpec extends SparkSuite {
     // one doc, one 25-token phrase occurring twice: both sites are
     // duplicated (df >= 2 within a single doc), so the catalog has one
     // entry with n_sites = 2 and n_docs = 1
-    val dir = java.nio.file.Files.createTempDirectory("graft_duprun2").toString
+    val dir = tempFixture("graft_duprun2")
     val phrase = (1 to 25).map(j => s"ph$j")
     val doc = (1 to 10).map(i => s"ga$i") ++ phrase ++
       (1 to 12).map(i => s"gb$i") ++ phrase ++ (1 to 10).map(i => s"gc$i")

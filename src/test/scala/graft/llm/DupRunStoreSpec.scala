@@ -35,7 +35,7 @@ class DupRunStoreSpec extends SparkSuite {
     * verbatim (a 20-token block), making doc 0's u3..u10 flank
     * duplicated and extending its FIRST P run leftward. */
   private lazy val retroDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_retro").toString
+    val dir = tempFixture("graft_retro")
     val p = (1 to 25).map(j => s"P$j")
     val u = (1 to 10).map(j => s"u$j")
     val doc0 = u ++ p ++ (1 to 12).map(j => s"v$j") ++ p ++
@@ -83,7 +83,7 @@ class DupRunStoreSpec extends SparkSuite {
     // sharing a 25-token block — the retraction read of the empty log
     // must parse as empty (declared schema), not fail inference, and
     // the retro credit must land in the OLD doc.
-    val dir = java.nio.file.Files.createTempDirectory("graft_emptyseed").toString
+    val dir = tempFixture("graft_emptyseed")
     val block = (1 to 25).map(j => s"B$j")
     val doc0 = (1 to 15).map(j => s"ea$j") ++ block ++ (1 to 20).map(j => s"eb$j")
     val doc1 = (1 to 10).map(j => s"ec$j") ++ block ++ (1 to 10).map(j => s"ed$j")
@@ -146,7 +146,7 @@ class DupRunStoreSpec extends SparkSuite {
   /** The three-generation retro fixture (retractions at gens 1 AND
     * 2): doc 1 extends doc 0's first P run, doc 2 its second. */
   private def retro3Dir(prefix: String): String = {
-    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    val dir = tempFixture(prefix)
     val p = (1 to 25).map(j => s"P$j")
     val u = (1 to 10).map(j => s"u$j")
     val v = (1 to 12).map(j => s"v$j")
@@ -251,7 +251,7 @@ class DupRunStoreSpec extends SparkSuite {
   test("keep-one semantics: the first site survives verbatim, the second is cut") {
     // the DupRunSpec two-doc construction: one 40-token span shared at
     // shifted offsets; doc 0 holds the first site
-    val dir = java.nio.file.Files.createTempDirectory("graft_cutkeep").toString
+    val dir = tempFixture("graft_cutkeep")
     val span = (1 to 40).map(j => s"spantok$j")
     val doc0 = (1 to 8).map(i => s"fa$i") ++ span ++ (1 to 52).map(i => s"fb$i")
     val doc1 = (1 to 25).map(i => s"fc$i") ++ span ++ (1 to 35).map(i => s"fd$i")
@@ -286,7 +286,7 @@ class DupRunStoreSpec extends SparkSuite {
     // boilerplate-heavy doc the ExactSubstr cut exists for. The
     // interval fold does |toks| + |intervals| work: one slice per
     // surviving gap.
-    val dir = java.nio.file.Files.createTempDirectory("graft_longdup").toString
+    val dir = tempFixture("graft_longdup")
     val block = (1 to 2900).map(i => s"blk$i")
     val ga = (1 to 50).map(i => s"ga$i")
     val gb = (1 to 50).map(i => s"gb$i")
@@ -342,7 +342,7 @@ class DupRunStoreSpec extends SparkSuite {
     // higher cut (30) only the 40-token one is. The serve store is
     // threshold-keyed, so the second threshold can never be served
     // the first's catalog.
-    val dir = java.nio.file.Files.createTempDirectory("graft_thresh").toString
+    val dir = tempFixture("graft_thresh")
     val spanA = (1 to 40).map(i => s"A$i")
     val spanB = (1 to 25).map(i => s"B$i")
     def fill(p: String, n: Int) = (1 to n).map(i => s"$p$i")
@@ -430,7 +430,7 @@ class DupRunStoreSpec extends SparkSuite {
     // 35-token F+S — its run_fp differs from bench's standalone S and
     // fp-equality screens (q414) see NOTHING. Bench-membership streaks
     // still find S's exact extent.
-    val dir = java.nio.file.Files.createTempDirectory("graft_embed").toString
+    val dir = tempFixture("graft_embed")
     val sSpan = (1 to 25).map(i => s"S$i")
     val f = (1 to 10).map(i => s"F$i")
     val bench0 = (1 to 5).map(i => s"ba$i") ++ sSpan ++ (1 to 20).map(i => s"bb$i")
