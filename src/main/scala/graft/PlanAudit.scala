@@ -63,8 +63,12 @@ object PlanAudit {
           }
         }
         closeBlock()
-        val plan = main.toString
-        val cachedOnce = blocks.values.mkString("\n")
+        // a subquery's expression id (`ScalarSubquery#<id>` in a pushed
+        // filter) changes on every run: masked before any line is
+        // emitted; data literals such as TPC-H's `Brand#23` are kept
+        def masked(t: String): String = t.replaceAll("(Subquery)#\\d+", "$1#")
+        val plan = masked(main.toString)
+        val cachedOnce = masked(blocks.values.mkString("\n"))
         // keep duplicates but annotate with a count — two identical
         // scans collapsing to one line would hide a regression that
         // strips pruning/pushdown from only one of them

@@ -62,15 +62,35 @@ object Similarity {
     * over (csim, −cent_id) structs. This replaces the former
     * crossJoin(broadcast(cents)) + row_number-window shape, which
     * hash-exchanged and sorted the k×-replicated corpus — the exact
-    * opposite of what an assignment pass should cost at 100 TB. */
+    * opposite of what an assignment pass should cost at 100 TB.
+    * Returns `e`'s columns plus `cent_id`, so per-vector payload
+    * (a label, a signature) rides along. */
   private[graft] def assignCells(e: DataFrame, cents: Seq[(Long, Array[Double])]): DataFrame = {
     require(cents.size >= 2, "assignCells needs at least 2 centroids")
     val scored = cents.map { case (cid, c) =>
       struct(cosLit(col("embedding"), c).as("csim"), lit(-cid).as("nid"))
     }
-    e.select(col("vec_id"), col("embedding"),
-      (greatest(scored: _*).getField("nid") * lit(-1L)).as("cent_id"))
+    e.select(col("*"), (greatest(scored: _*).getField("nid") * lit(-1L)).as("cent_id"))
   }
+
+  /** The centroid model table's one codec: (cent_id, pos, coord) rows,
+    * one per coordinate, at full double precision — parquet
+    * round-trips doubles exactly, so a model read back through
+    * [[centroidsOf]] is bit-identical to the one written. */
+  private[graft] def centroidRows(s: SparkSession, cents: Seq[(Long, Array[Double])]): DataFrame = {
+    import s.implicits._
+    cents.flatMap { case (cid, c) =>
+        c.iterator.zipWithIndex.map { case (v, i) => (cid, i.toLong, v) } }
+      .toDF("cent_id", "pos", "coord")
+  }
+
+  /** The centroids held by a (cent_id, pos, coord, …) model table,
+    * ordered by cent_id — the read side of [[centroidRows]]. */
+  private[graft] def centroidsOf(rows: DataFrame): Seq[(Long, Array[Double])] =
+    rows.select(col("cent_id"), col("pos"), col("coord")).collect()
+      .groupBy(_.getLong(0))
+      .map { case (cid, rs) => (cid, rs.sortBy(_.getLong(1)).map(_.getDouble(2)).toArray) }
+      .toSeq.sortBy(_._1)
 
   /** Lloyd's k-means with driver-resident centroids — the stance
     * spark.ml takes, and the fix for the former plan's per-iteration
@@ -117,6 +137,49 @@ object Similarity {
     * SCALING.json round 10). 64 keeps the blocked path EXERCISED at
     * sf0.1 (~125-member cells → 2 blocks) under the DuckDB oracle. */
   private[llm] val KnnBlock = 64
+
+  /** The within-block pair domain of the served k=16 cells
+    * ([[servedCentroids]]), shared by q296/q387/q389/q404: every
+    * vector of `e` meets the other members of its block, `pair(a, b)`
+    * on the two vec_ids choosing which ordered pairs. A cell of `cnt`
+    * members splits into ceil(cnt/[[KnnBlock]]) blocks by
+    * blk = vec_id mod that count (a deterministic, engine-mirrorable
+    * hash split), so per-vector candidate work is bounded by the block
+    * size and the pair volume is O(n·B) at any corpus size. The
+    * 16-row cell-size table is broadcast back; the assigned frame is
+    * cached because both join sides read it. Columns: `a.*` and `b.*`,
+    * each `e`'s columns plus cent_id and blk. */
+  private def blockPairs(s: SparkSession, dir: String, e: DataFrame,
+      pair: (Column, Column) => Column): DataFrame = {
+    val assigned0 = assignCells(e, servedCentroids(s, dir))
+    val cellN = assigned0.groupBy(col("cent_id")).agg(count(lit(1)).as("cnt"))
+    val assigned = assigned0
+      .join(broadcast(cellN), "cent_id")
+      .withColumn("blk",
+        pmod(col("vec_id"), expr(s"(cnt + ${KnnBlock - 1}) div $KnnBlock")))
+      .drop("cnt").cache()
+    assigned.as("a").join(assigned.as("b"),
+      col("a.cent_id") === col("b.cent_id") && col("a.blk") === col("b.blk") &&
+        pair(col("a.vec_id"), col("b.vec_id")))
+  }
+
+  /** Each vector's `k` nearest block neighbours ([[blockPairs]]) as
+    * (cent_id, vec_id, nb, d6), d6 the r6-ROUNDED cosine distance —
+    * rounded BEFORE ranking so a last-ulp cosine difference cannot
+    * reorder neighbours; ties go to the lower nb. `rn <= k` (not
+    * `== k`) lets WindowGroupLimit keep at most k rows per vector on
+    * the MAP side of the rank exchange. A block with ≤ k members
+    * gives its vectors fewer than k rows. */
+  private def blockKnn(s: SparkSession, dir: String, e: DataFrame, k: Int): DataFrame = {
+    val wV = Window.partitionBy(col("vec_id")).orderBy(col("d6"), col("nb"))
+    blockPairs(s, dir, e, _ =!= _)
+      .select(col("a.cent_id").as("cent_id"), col("a.vec_id").as("vec_id"),
+        col("b.vec_id").as("nb"),
+        r6(lit(1.0) - expr("cosine_sim(a.embedding, b.embedding)")).as("d6"))
+      .withColumn("rn", row_number().over(wV))
+      .filter(col("rn") <= k)
+      .drop("rn")
+  }
 
   private[graft] val PqM = 8 // subspaces
   private[graft] val PqSub = 8 // dims per subspace (m · sub = 64)
@@ -187,8 +250,8 @@ object Similarity {
     * trained models are read, not retrained). Seed-if-absent under
     * servePath (content-tagged — fixture regeneration orphans stale
     * state); every consumer of the k=16/iters=2 full-table model —
-    * the screens q57/q86/q296 and the audits q387/q389/q399 — reads
-    * THIS store, so the audits audit exactly the binning the screens
+    * the screens q57/q86/q296 and the audits q260/q387/q389/q399/q404
+    * — reads THIS store (and trains it nowhere else), so the audits audit exactly the binning the screens
     * serve. The store holds what [[trainKmeans]] deterministically
     * produces, so each consumer's from-first-principles oracle doubles
     * as the staleness guard (the q281/q282 stance: a stale or torn
@@ -201,19 +264,11 @@ object Similarity {
     StateStores.seedOnce(path) {
       val e = Tables(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"))
-      val (cents, _) = trainKmeans(e, k = 16, iters = 2)
-      import s.implicits._
-      cents.flatMap { case (cid, c) =>
-          c.iterator.zipWithIndex.map { case (v, i) => (cid, i.toLong, v) } }
-        .toSeq.toDF("cent_id", "pos", "coord")
+      centroidRows(s, trainKmeans(e, k = 16, iters = 2)._1)
         .coalesce(1) // k·d model rows
         .write.mode("overwrite").parquet(path)
     }
-    s.read.parquet(path).collect()
-      .groupBy(_.getLong(0))
-      .map { case (cid, rows) =>
-        (cid, rows.sortBy(_.getLong(1)).map(_.getDouble(2)).toArray) }
-      .toSeq.sortBy(_._1)
+    centroidsOf(s.read.parquet(path))
   }
 
   /** Top-`nprobe` trained cells for the probe vector `queryId` — a
@@ -494,10 +549,8 @@ object Similarity {
       * linearly with the corpus, making within-cell all-pairs
       * quadratic (measured: wall-time exponent 2.28 at 10×/30×,
       * SCALING.json round 10) — each cell is SUB-SPLIT into blocks of
-      * ≤ ~[[KnnBlock]] members (blk = vec_id mod ceil(cellsize/B), a
-      * deterministic engine-mirrorable hash split) and distances are
-      * computed only WITHIN a block: per-vector candidate work is
-      * bounded by B, total pair volume O(n·B) — linear. The 5th-NN
+      * ≤ ~[[KnnBlock]] members and distances are computed only WITHIN
+      * a block ([[blockKnn]]): total pair volume O(n·B). The 5th-NN
       * distance within a random B-block is a SAMPLED k-NN density
       * estimate — biased upward, but identically so for every vector
       * in the cell, and the screen ranks the RATIO to the cell
@@ -508,36 +561,14 @@ object Similarity {
       * from a per-vector rank window (n-vector partitions, never a
       * funnel), one bounded per-cell average, top-10 by the
       * r6n-ROUNDED ratio with id tiebreak (cross-engine ranking
-      * rule). Distances are rounded BEFORE ranking so a last-ulp
-      * cosine difference cannot reorder neighbors. Blocks with < 6
+      * rule). Blocks with < 6
       * members produce no 5th neighbor and drop out on both
       * engines. */
     "q296_knn_outlier" -> ((s: SparkSession, dir: String) => {
       val e = Tables(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-      val cents = servedCentroids(s, dir)
-      val assigned0 = assignCells(e, cents)
-      // 16-row cell-size table (bounded by the constant k) broadcast
-      // back to derive the per-cell block count
-      val cellN = assigned0.groupBy(col("cent_id")).agg(count(lit(1)).as("cnt"))
-      val assigned = assigned0
-        .join(broadcast(cellN), "cent_id")
-        .withColumn("blk",
-          pmod(col("vec_id"), expr(s"(cnt + ${KnnBlock - 1}) div $KnnBlock")))
-        .drop("cnt").cache()
-      val dists = assigned.as("a").join(assigned.as("b"),
-          col("a.cent_id") === col("b.cent_id") &&
-            col("a.blk") === col("b.blk") &&
-            col("a.vec_id") =!= col("b.vec_id"))
-        .select(col("a.cent_id").as("cent_id"), col("a.vec_id").as("vec_id"),
-          col("b.vec_id").as("nb"),
-          r6(lit(1.0) - expr("cosine_sim(a.embedding, b.embedding)")).as("d6"))
-      // rn <= 5 (not == 5) so WindowGroupLimit keeps at most 5 rows
-      // per vector on the MAP side of the rank exchange; the 5th
-      // distance is then the max of the kept rows, and vectors with
+      // the 5th distance is the max of the kept rows; vectors with
       // fewer than 5 neighbors drop via the exact-count filter
-      val wV = Window.partitionBy(col("vec_id")).orderBy(col("d6"), col("nb"))
-      val dk = dists.withColumn("rn", row_number().over(wV))
-        .filter(col("rn") <= 5)
+      val dk = blockKnn(s, dir, e, 5)
         .groupBy(col("cent_id"), col("vec_id"))
         .agg(count(lit(1)).as("nn"), max(col("d6")).as("dk"))
         .filter(col("nn") === 5)
@@ -560,30 +591,13 @@ object Similarity {
       * the query side. The cells come from the PERSISTED quantizer
       * store ([[servedCentroids]]) — the audit audits the same binning
       * the screens serve, and trains nothing itself (round-12
-      * What's-wrong #3). Same bounded machinery as q296 — Lloyd
-      * cells sub-split into ~64-member blocks, within-block distances
-      * only (O(n·B) at any corpus size), rn ≤ 10 so WindowGroupLimit
-      * prunes map-side — then one count per NEIGHBOR and a histogram;
+      * What's-wrong #3). Same bounded machinery as q296 — the 10
+      * nearest block neighbours ([[blockKnn]]) — then one count per
+      * NEIGHBOR and a histogram;
       * zero-occurrence vectors are censused via the left join. */
     "q387_hubness" -> ((s: SparkSession, dir: String) => {
       val e = Tables(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-      val cents = servedCentroids(s, dir)
-      val assigned0 = assignCells(e, cents)
-      val cellN = assigned0.groupBy(col("cent_id")).agg(count(lit(1)).as("cnt"))
-      val assigned = assigned0
-        .join(broadcast(cellN), "cent_id")
-        .withColumn("blk",
-          pmod(col("vec_id"), expr(s"(cnt + ${KnnBlock - 1}) div $KnnBlock")))
-        .drop("cnt").cache()
-      val dists = assigned.as("a").join(assigned.as("b"),
-          col("a.cent_id") === col("b.cent_id") &&
-            col("a.blk") === col("b.blk") &&
-            col("a.vec_id") =!= col("b.vec_id"))
-        .select(col("a.vec_id").as("vec_id"), col("b.vec_id").as("nb"),
-          r6(lit(1.0) - expr("cosine_sim(a.embedding, b.embedding)")).as("d6"))
-      val wV = Window.partitionBy(col("vec_id")).orderBy(col("d6"), col("nb"))
-      val occ = dists.withColumn("rn", row_number().over(wV))
-        .filter(col("rn") <= 10)
+      val occ = blockKnn(s, dir, e, 10)
         .groupBy(col("nb")).agg(count(lit(1)).as("occ"))
       e.select(col("vec_id"))
         .join(occ, col("vec_id") === col("nb"), "left")
@@ -650,8 +664,9 @@ object Similarity {
       * cosine range/mean plus the ≥ 0.3 share — the measured meaning
       * of "h bits differ" for THIS corpus, which is what turns q44's
       * multi-probe radius from a default into a decision. Pair domain
-      * is the q296 bounded block grid (O(n·B), mirrored in the
-      * oracle); signatures are pure projections against the same
+      * is the q296 bounded block grid ([[blockPairs]], each unordered
+      * pair once; mirrored in the oracle); signatures ride the
+      * assignment as one column and are pure projections against the same
       * srpCoef hyperplane family as q44 (planes 8-15 extend the
       * family — same splitmix stream, distinct indices); comparisons
       * against the 0.3 literal use the r6-ROUNDED cosine (the q292
@@ -665,19 +680,7 @@ object Similarity {
           "(x, c) -> cast(x AS double) * c), 0D, (acc, v) -> acc + v)")
         when(proj >= 0, lit(1L << p)).otherwise(lit(0L))
       }.reduce((a, b) => a.bitwiseOR(b))
-      val cents = servedCentroids(s, dir)
-      val cellN = assignCells(e, cents).groupBy(col("cent_id"))
-        .agg(count(lit(1)).as("cnt"))
-      val assigned = assignCells(e, cents)
-        .join(broadcast(cellN), "cent_id")
-        .withColumn("blk",
-          pmod(col("vec_id"), expr(s"(cnt + ${KnnBlock - 1}) div $KnnBlock")))
-        .withColumn("sig", sigCol)
-        .drop("cnt").cache()
-      assigned.as("a").join(assigned.as("b"),
-          col("a.cent_id") === col("b.cent_id") &&
-            col("a.blk") === col("b.blk") &&
-            col("a.vec_id") < col("b.vec_id"))
+      blockPairs(s, dir, e.withColumn("sig", sigCol), _ < _)
         .select(expr("bit_count(a.sig ^ b.sig)").cast("long").as("hamming"),
           r6(expr("cosine_sim(a.embedding, b.embedding)")).as("cs6"))
         .groupBy(col("hamming"))
@@ -924,10 +927,7 @@ object Similarity {
       val e = Tables(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       val (cents, assigned) = trainKmeans(e, k = 8, iters = 2)
       val sizes = assigned.groupBy(col("cent_id")).agg(count(lit(1)).as("n"))
-      import s.implicits._
-      val centRows = cents.flatMap { case (cid, c) =>
-        c.iterator.zipWithIndex.map { case (v, i) => (cid, i.toLong, v) } }
-      centRows.toDF("cent_id", "pos", "coord")
+      centroidRows(s, cents)
         .join(broadcast(sizes), Seq("cent_id"))
         .select(col("cent_id"), col("pos"), r6(col("coord")).as("coord"), col("n"))
         .orderBy(col("cent_id"), col("pos"))
@@ -1068,9 +1068,9 @@ object Similarity {
       * this asks the retrieval question directly): hold out every
       * 10th vector, predict its label by 10-NN majority vote over
       * SAME-CELL neighbors, report per-label accuracy. Composes the
-      * suite's own scale path end-to-end: trained Lloyd cells
-      * ([[trainKmeans]] — driver-resident centroids), a zero-shuffle
-      * cell-assignment projection carrying the label, and an
+      * suite's own scale path end-to-end: the served k=16 cells
+      * ([[servedCentroids]] — read, not retrained), the zero-shuffle
+      * assignment projection ([[assignCells]]) carrying the label, and an
       * eval × train join keyed on the CELL (per-key blowup bounded by
       * cell sizes, the q86 stance — never all-pairs, shuffle_hash
       * pinned). Both rank cuts (neighbor top-10, majority vote) run
@@ -1080,15 +1080,8 @@ object Similarity {
       * rational → nudged r6. */
     "q260_knn_label_audit" -> ((s: SparkSession, dir: String) => {
       val emb = Tables(s, dir, "embeddings")
-      val (cents, _) = trainKmeans(
-        emb.select(col("vec_id"), col("embedding")), k = 16, iters = 2)
-      val scored = cents.map { case (cid, c) =>
-        struct(cosLit(col("embedding"), c).as("csim"), lit(-cid).as("nid"))
-      }
-      val assigned = emb
-        .select(col("vec_id"), col("embedding"), col("label"),
-          (greatest(scored: _*).getField("nid") * lit(-1L)).as("cent_id"))
-        .cache()
+        .select(col("vec_id"), col("embedding"), col("label"))
+      val assigned = assignCells(emb, servedCentroids(s, dir)).cache()
       val eval = assigned.filter(col("vec_id") % 10 === 0)
       val train = assigned.filter(col("vec_id") % 10 =!= 0)
       val cand = eval.as("q")
@@ -1422,8 +1415,9 @@ object Similarity {
       * candidate scorer IS the exact scorer, so any exact-top-10
       * member among the candidates survives the candidate top-10
       * cut) — recall needs NO per-nprobe re-ranking, just one join
-      * of the 10-row exact set against cell ranks. Scale shape: one
-      * assignment projection (zero shuffle), one corpus scan for the
+      * of the 10-row exact set against cell ranks. Scale shape: the
+      * q282 IVF store's centroids and cell assignments, read, not
+      * retrained ([[StateStores.seedIvf]]), one corpus scan for the
       * exact baseline (already the q42 cost), a k-bounded cell-rank
       * table broadcast back, and 4× literal-generator explodes on
       * integer ranks. Cell order and top-10 both rank on the r6
@@ -1431,10 +1425,7 @@ object Similarity {
     "q362_ivf_nprobe_curve" -> ((s: SparkSession, dir: String) => {
       import s.implicits._
       val e = Tables(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-      val corpus = e.filter(pmod(col("vec_id"), lit(10)) =!= 0)
-      val (cents, _) = trainKmeans(corpus, k = 8, iters = 2,
-        initPred = Some(col("vec_id").between(1, 8)))
-      val assigned = assignCells(corpus, cents)
+      val (cents, assign) = StateStores.seedIvf(s, dir)
       val qv = e.filter(col("vec_id") === 0).select(col("embedding").as("q_emb"))
       // probe order over the k cells: rounded query→centroid cosine,
       // cent_id tiebreak; ranks 1..k via a k-bounded collect (the
@@ -1449,7 +1440,7 @@ object Similarity {
         .sortBy { case (cid, cs) => (-cs, cid) }
         .zipWithIndex.map { case ((cid, _), i) => (cid, (i + 1).toLong) }
         .toSeq.toDF("cent_id", "cell_rank")
-      val scored = assigned.select(col("vec_id"), col("embedding"), col("cent_id"))
+      val scored = assign.join(e, "vec_id")
         .crossJoin(broadcast(qv))
         .join(broadcast(rankDf), "cent_id")
         .select(col("vec_id"), col("cell_rank"),
@@ -1586,33 +1577,15 @@ object Similarity {
       * for them back), which degrades every mutual-kNN-based
       * clustering and the kNN label audit (q260). Cells come from the
       * PERSISTED quantizer ([[servedCentroids]] — the audit audits the
-      * binning the screens serve, training nothing); same bounded
-      * cell/block machinery as q296/q387 (≤64-member blocks, O(n·B)
-      * pair volume, rn ≤ 10 pruned map-side by WindowGroupLimit); the
+      * binning the screens serve, training nothing); the same 10
+      * nearest block neighbours as q387 ([[blockKnn]]); the
       * reciprocity probe is ONE self equi-join of the ≤10n edge list
       * on the reversed key, hinted shuffle_hash (the edge list's
       * static estimate reads "small"; a broadcast plan could not
       * exist at 100 TB). */
     "q404_mutual_knn_rate" -> ((s: SparkSession, dir: String) => {
       val e = Tables(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-      val cents = servedCentroids(s, dir)
-      val assigned0 = assignCells(e, cents)
-      val cellN = assigned0.groupBy(col("cent_id")).agg(count(lit(1)).as("cnt"))
-      val assigned = assigned0
-        .join(broadcast(cellN), "cent_id")
-        .withColumn("blk",
-          pmod(col("vec_id"), expr(s"(cnt + ${KnnBlock - 1}) div $KnnBlock")))
-        .drop("cnt").cache()
-      val dists = assigned.as("a").join(assigned.as("b"),
-          col("a.cent_id") === col("b.cent_id") &&
-            col("a.blk") === col("b.blk") &&
-            col("a.vec_id") =!= col("b.vec_id"))
-        .select(col("a.cent_id").as("cent_id"),
-          col("a.vec_id").as("vec_id"), col("b.vec_id").as("nb"),
-          r6(lit(1.0) - expr("cosine_sim(a.embedding, b.embedding)")).as("d6"))
-      val wV = Window.partitionBy(col("vec_id")).orderBy(col("d6"), col("nb"))
-      val t = dists.withColumn("rn", row_number().over(wV))
-        .filter(col("rn") <= 10)
+      val t = blockKnn(s, dir, e, 10)
         .select(col("cent_id"), col("vec_id"), col("nb"))
         .cache() // the base census and both sides of the reverse probe
       val mut = t.as("x").join(t.as("y").hint("shuffle_hash"),
@@ -1742,6 +1715,63 @@ object Similarity {
          |  GROUP BY cent_id)""".stripMargin
     }
   }
+
+  /** The served k=16 audit model ([[servedCentroids]]) from first
+    * principles: init = vectors 0..15, two unrolled Lloyd iterations
+    * and the final assignment pass. CTEs: `kc2` the trained centroids,
+    * `ks3` the final pass's (vector, cell) cosines, and `assign`
+    * (vec_id, embedding, cent_id). */
+  private def duckAuditCells(assign: String): String =
+    s"""c16 AS (
+       |  SELECT vec_id AS cent_id,
+       |  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cent
+       |  FROM embeddings WHERE vec_id < 16),
+       |${duckKmeansIter("c16", "ks1", "ka1", Some("kc1"))},
+       |${duckKmeansIter("kc1", "ks2", "ka2", Some("kc2"))},
+       |${duckKmeansIter("kc2", "ks3", assign, None)}""".stripMargin
+
+  /** [[blockPairs]]' block split over the audit cells: CTEs `cn` (cell
+    * sizes) and `assigned`, the final assignment plus `blk`. */
+  private val duckBlocks: String =
+    s"""${duckAuditCells("assigned0")},
+       |cn AS (SELECT cent_id, count(*) AS cnt FROM assigned0 GROUP BY 1),
+       |assigned AS (
+       |  SELECT a.*, a.vec_id % ((cn.cnt + ${KnnBlock - 1}) // ${KnnBlock})
+       |    AS blk
+       |  FROM assigned0 a JOIN cn USING (cent_id))""".stripMargin
+
+  /** [[blockKnn]]: [[duckBlocks]] plus `knn` (cent_id, vec_id, nb, d6,
+    * rn), each vector's `k` nearest distinct block members by the
+    * r6-rounded cosine distance, ties to the lower nb. */
+  private def duckBlockKnn(k: Int): String =
+    s"""$duckBlocks,
+       |knn AS (
+       |  SELECT * FROM (
+       |    SELECT *,
+       |    row_number() OVER (PARTITION BY vec_id ORDER BY d6, nb) AS rn
+       |    FROM (
+       |      SELECT a.cent_id, a.vec_id, b.vec_id AS nb,
+       |      round(1.0 - ${duckCos("a.embedding", "b.embedding")}, 6) AS d6
+       |      FROM assigned a JOIN assigned b
+       |        ON a.cent_id = b.cent_id AND a.blk = b.blk
+       |        AND a.vec_id <> b.vec_id))
+       |  WHERE rn <= $k)""".stripMargin
+
+  /** The served IVF model ([[StateStores.seedIvf]]) from first
+    * principles: corpus = vec_id % 10 ≠ 0, init = corpus ids 1..8, two
+    * unrolled Lloyd iterations and the final assignment. CTEs:
+    * `corpus`, `c2` the trained centroids and `a3` (vec_id, embedding,
+    * cent_id). */
+  private[llm] val duckIvfCells: String =
+    s"""corpus AS (
+       |  SELECT vec_id, embedding FROM embeddings WHERE vec_id % 10 <> 0),
+       |c0 AS (
+       |  SELECT vec_id AS cent_id,
+       |  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cent
+       |  FROM corpus WHERE vec_id BETWEEN 1 AND 8),
+       |${duckKmeansIter("c0", "s1", "a1", Some("c1"), "corpus")},
+       |${duckKmeansIter("c1", "s2", "a2", Some("c2"), "corpus")},
+       |${duckKmeansIter("c2", "s3", "a3", None, "corpus")}""".stripMargin
 
   /** Sequential squared-L2 fold between two sub-dim lists — the
     * oracle twin of [[pqDist]] (prepend-0 left fold ≡ aggregate()). */
@@ -2037,13 +2067,7 @@ object Similarity {
         |ORDER BY dim NULLS FIRST""".stripMargin,
 
     "q260_knn_label_audit" ->
-      s"""WITH c16 AS (
-         |  SELECT vec_id AS cent_id,
-         |  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cent
-         |  FROM embeddings WHERE vec_id < 16),
-         |${duckKmeansIter("c16", "ks1", "ka1", Some("kc1"))},
-         |${duckKmeansIter("kc1", "ks2", "ka2", Some("kc2"))},
-         |${duckKmeansIter("kc2", "ks3", "assigned", None)},
+      s"""WITH ${duckAuditCells("assigned")},
          |lab AS (
          |  SELECT a.vec_id, a.embedding, a.cent_id, e.label
          |  FROM assigned a JOIN embeddings e ON e.vec_id = a.vec_id),
@@ -2263,35 +2287,11 @@ object Similarity {
         |JOIN norms y ON y.label = l2
         |ORDER BY l1 NULLS FIRST, l2 NULLS FIRST""".stripMargin,
 
-    // same 2-iteration k=16 Lloyd unroll as q86, the same bounded
-    // block split (blk = vec_id mod ceil(cellsize/64)), within-block
-    // rounded distances, 5th-neighbor rank, cell average, ratio rank
+    // the audit cells' 5 nearest block neighbours (duckBlockKnn), the
+    // 5th-neighbor distance, cell average, ratio rank
     "q296_knn_outlier" ->
-      s"""WITH c16 AS (
-         |  SELECT vec_id AS cent_id,
-         |  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cent
-         |  FROM embeddings WHERE vec_id < 16),
-         |${duckKmeansIter("c16", "os1", "oa1", Some("oc1"))},
-         |${duckKmeansIter("oc1", "os2", "oa2", Some("oc2"))},
-         |${duckKmeansIter("oc2", "os3", "assigned0", None)},
-         |cn AS (SELECT cent_id, count(*) AS cnt FROM assigned0 GROUP BY 1),
-         |assigned AS (
-         |  SELECT a.*, a.vec_id % ((cn.cnt + ${KnnBlock - 1}) // ${KnnBlock})
-         |    AS blk
-         |  FROM assigned0 a JOIN cn USING (cent_id)),
-         |dists AS (
-         |  SELECT a.cent_id, a.vec_id, b.vec_id AS nb,
-         |  round(1.0 - ${duckCos("a.embedding", "b.embedding")}, 6) AS d6
-         |  FROM assigned a JOIN assigned b
-         |    ON a.cent_id = b.cent_id AND a.blk = b.blk
-         |    AND a.vec_id <> b.vec_id),
-         |dk AS (
-         |  SELECT cent_id, vec_id, d6 AS dk FROM (
-         |    SELECT cent_id, vec_id, d6,
-         |    row_number() OVER (PARTITION BY vec_id
-         |      ORDER BY d6, nb) AS rn
-         |    FROM dists)
-         |  WHERE rn = 5),
+      s"""WITH ${duckBlockKnn(5)},
+         |dk AS (SELECT cent_id, vec_id, d6 AS dk FROM knn WHERE rn = 5),
          |ca AS (SELECT cent_id, avg(dk) AS avg_dk FROM dk GROUP BY 1)
          |SELECT vec_id, dk.cent_id AS cent_id, dk,
          |round(dk / avg_dk + 1e-12, 6) AS outlier_ratio
@@ -2299,16 +2299,10 @@ object Similarity {
          |ORDER BY outlier_ratio DESC NULLS LAST, vec_id NULLS FIRST
          |LIMIT 10""".stripMargin,
 
-    // the same 2-iteration k=16 Lloyd unroll, the same k-bounded
-    // census fold; imbalance = max * cells / vectors, left-assoc
+    // the audit cells, the same k-bounded census fold;
+    // imbalance = max * cells / vectors, left-assoc
     "q399_ivf_balance" ->
-      s"""WITH c16 AS (
-         |  SELECT vec_id AS cent_id,
-         |  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cent
-         |  FROM embeddings WHERE vec_id < 16),
-         |${duckKmeansIter("c16", "bs1", "ba1", Some("bc1"))},
-         |${duckKmeansIter("bc1", "bs2", "ba2", Some("bc2"))},
-         |${duckKmeansIter("bc2", "bs3", "assigned", None)},
+      s"""WITH ${duckAuditCells("assigned")},
          |cs AS (SELECT cent_id, count(*) AS n FROM assigned GROUP BY 1)
          |SELECT CAST(count(*) AS BIGINT) AS n_cells,
          |CAST(sum(n) AS BIGINT) AS n_vectors,
@@ -2340,34 +2334,11 @@ object Similarity {
          |ORDER BY label NULLS FIRST""".stripMargin
     },
 
-    // the q296 cell/block chain with rn <= 10, one count per NEIGHBOR,
+    // the 10 nearest block neighbours, one count per NEIGHBOR,
     // zero-occurrence vectors censused via the left join
     "q387_hubness" ->
-      s"""WITH c16 AS (
-         |  SELECT vec_id AS cent_id,
-         |  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cent
-         |  FROM embeddings WHERE vec_id < 16),
-         |${duckKmeansIter("c16", "hs1", "ha1", Some("hc1"))},
-         |${duckKmeansIter("hc1", "hs2", "ha2", Some("hc2"))},
-         |${duckKmeansIter("hc2", "hs3", "assigned0", None)},
-         |cn AS (SELECT cent_id, count(*) AS cnt FROM assigned0 GROUP BY 1),
-         |assigned AS (
-         |  SELECT a.*, a.vec_id % ((cn.cnt + ${KnnBlock - 1}) // ${KnnBlock})
-         |    AS blk
-         |  FROM assigned0 a JOIN cn USING (cent_id)),
-         |dists AS (
-         |  SELECT a.vec_id, b.vec_id AS nb,
-         |  round(1.0 - ${duckCos("a.embedding", "b.embedding")}, 6) AS d6
-         |  FROM assigned a JOIN assigned b
-         |    ON a.cent_id = b.cent_id AND a.blk = b.blk
-         |    AND a.vec_id <> b.vec_id),
-         |t AS (
-         |  SELECT nb FROM (
-         |    SELECT nb,
-         |    row_number() OVER (PARTITION BY vec_id ORDER BY d6, nb) AS rn
-         |    FROM dists)
-         |  WHERE rn <= 10),
-         |o AS (SELECT nb, count(*) AS occ FROM t GROUP BY 1)
+      s"""WITH ${duckBlockKnn(10)},
+         |o AS (SELECT nb, count(*) AS occ FROM knn GROUP BY 1)
          |SELECT CAST(coalesce(o.occ, 0) AS BIGINT) AS k_occurrence,
          |CAST(count(*) AS BIGINT) AS n_vectors
          |FROM embeddings e LEFT JOIN o ON o.nb = e.vec_id
@@ -2386,18 +2357,7 @@ object Similarity {
       val sig = (0 until 16).map(p =>
         s"(CASE WHEN ${proj(p, "embedding")} >= 0 THEN ${1L << p} ELSE 0 END)")
         .mkString(" + ")
-      s"""WITH c16 AS (
-         |  SELECT vec_id AS cent_id,
-         |  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cent
-         |  FROM embeddings WHERE vec_id < 16),
-         |${duckKmeansIter("c16", "gs1", "ga1", Some("gc1"))},
-         |${duckKmeansIter("gc1", "gs2", "ga2", Some("gc2"))},
-         |${duckKmeansIter("gc2", "gs3", "assigned0", None)},
-         |cn AS (SELECT cent_id, count(*) AS cnt FROM assigned0 GROUP BY 1),
-         |assigned AS (
-         |  SELECT a.*, a.vec_id % ((cn.cnt + ${KnnBlock - 1}) // ${KnnBlock})
-         |    AS blk
-         |  FROM assigned0 a JOIN cn USING (cent_id)),
+      s"""WITH $duckBlocks,
          |sg AS (
          |  SELECT vec_id, CAST($sig AS BIGINT) AS sig FROM embeddings),
          |pairs AS (
@@ -2419,16 +2379,9 @@ object Similarity {
          |ORDER BY hamming NULLS FIRST""".stripMargin
     },
 
-    // trained cells: the same 2-iteration k=16 Lloyd unroll as q122's
-    // oracle, plus a third assignment pass over the trained centroids
+    // the audit cells trained from first principles (duckAuditCells)
     "q86_semdedup" ->
-      s"""WITH c16 AS (
-         |  SELECT vec_id AS cent_id,
-         |  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cent
-         |  FROM embeddings WHERE vec_id < 16),
-         |${duckKmeansIter("c16", "ks1", "ka1", Some("kc1"))},
-         |${duckKmeansIter("kc1", "ks2", "ka2", Some("kc2"))},
-         |${duckKmeansIter("kc2", "ks3", "assigned", None)}
+      s"""WITH ${duckAuditCells("assigned")}
          |SELECT d1, d2, round(cs, 6) AS cos_sim FROM (
          |  SELECT a.vec_id AS d1, b.vec_id AS d2,
          |  ${duckCos("a.embedding", "b.embedding")} AS cs
@@ -2438,13 +2391,7 @@ object Similarity {
          |ORDER BY d1 NULLS FIRST, d2 NULLS FIRST""".stripMargin,
 
     "q57_ann_ivf" ->
-      s"""WITH c16 AS (
-         |  SELECT vec_id AS cent_id,
-         |  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cent
-         |  FROM embeddings WHERE vec_id < 16),
-         |${duckKmeansIter("c16", "ks1", "ka1", Some("kc1"))},
-         |${duckKmeansIter("kc1", "ks2", "ka2", Some("kc2"))},
-         |${duckKmeansIter("kc2", "ks3", "assigned", None)},
+      s"""WITH ${duckAuditCells("assigned")},
          |qcells AS (
          |  SELECT cent_id FROM ks3 WHERE vec_id = 0
          |  ORDER BY csim DESC NULLS LAST, cent_id NULLS FIRST LIMIT 2),
@@ -2676,18 +2623,11 @@ object Similarity {
         |  / sum(w * cij * cij) + 1e-12, 6) AS effective_rank
         |FROM c""".stripMargin,
 
-    // corpus-only retraining (the q282 CTE chain), then the identical
-    // r6-grid cell ranking, exact-top-10 cut, and per-nprobe folds
+    // the IVF model trained from first principles (duckIvfCells), then
+    // the identical r6-grid cell ranking, exact-top-10 cut and
+    // per-nprobe folds
     "q362_ivf_nprobe_curve" ->
-      s"""WITH corpus AS (
-         |  SELECT vec_id, embedding FROM embeddings WHERE vec_id % 10 <> 0),
-         |c0 AS (
-         |  SELECT vec_id AS cent_id,
-         |  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cent
-         |  FROM corpus WHERE vec_id BETWEEN 1 AND 8),
-         |${duckKmeansIter("c0", "s1", "a1", Some("c1"), "corpus")},
-         |${duckKmeansIter("c1", "s2", "a2", Some("c2"), "corpus")},
-         |${duckKmeansIter("c2", "s3", "a3", None, "corpus")},
+      s"""WITH $duckIvfCells,
          |q AS (SELECT embedding AS q_emb FROM embeddings WHERE vec_id = 0),
          |cr AS (
          |  SELECT c.cent_id,
@@ -2794,40 +2734,16 @@ object Similarity {
          |ORDER BY q_id NULLS FIRST""".stripMargin
     },
 
-    // the q387 scaffolding (same trained cells from first principles,
-    // same blocks, same rounded distances) plus the reversed-key probe
+    // the q387 neighbour lists plus the reversed-key probe
     "q404_mutual_knn_rate" ->
-      s"""WITH c16 AS (
-         |  SELECT vec_id AS cent_id,
-         |  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cent
-         |  FROM embeddings WHERE vec_id < 16),
-         |${duckKmeansIter("c16", "ms1", "ma1", Some("mc1"))},
-         |${duckKmeansIter("mc1", "ms2", "ma2", Some("mc2"))},
-         |${duckKmeansIter("mc2", "ms3", "assigned0", None)},
-         |cn AS (SELECT cent_id, count(*) AS cnt FROM assigned0 GROUP BY 1),
-         |assigned AS (
-         |  SELECT a.*, a.vec_id % ((cn.cnt + ${KnnBlock - 1}) // ${KnnBlock})
-         |    AS blk
-         |  FROM assigned0 a JOIN cn USING (cent_id)),
-         |dists AS (
-         |  SELECT a.cent_id, a.vec_id, b.vec_id AS nb,
-         |  round(1.0 - ${duckCos("a.embedding", "b.embedding")}, 6) AS d6
-         |  FROM assigned a JOIN assigned b
-         |    ON a.cent_id = b.cent_id AND a.blk = b.blk
-         |    AND a.vec_id <> b.vec_id),
-         |t AS (
-         |  SELECT cent_id, vec_id, nb FROM (
-         |    SELECT cent_id, vec_id, nb,
-         |    row_number() OVER (PARTITION BY vec_id ORDER BY d6, nb) AS rn
-         |    FROM dists)
-         |  WHERE rn <= 10),
+      s"""WITH ${duckBlockKnn(10)},
          |mut AS (
          |  SELECT x.cent_id, count(*) AS nm
-         |  FROM t x JOIN t y ON x.vec_id = y.nb AND x.nb = y.vec_id
+         |  FROM knn x JOIN knn y ON x.vec_id = y.nb AND x.nb = y.vec_id
          |  GROUP BY 1),
          |base AS (
          |  SELECT cent_id, count(DISTINCT vec_id) AS nv, count(*) AS ne
-         |  FROM t GROUP BY 1)
+         |  FROM knn GROUP BY 1)
          |SELECT CAST(b.cent_id AS BIGINT) AS cent_id,
          |CAST(nv AS BIGINT) AS n_vectors, CAST(ne AS BIGINT) AS n_edges,
          |CAST(coalesce(m.nm, 0) AS BIGINT) AS n_mutual_directed,

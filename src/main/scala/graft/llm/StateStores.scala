@@ -489,13 +489,7 @@ object StateStores {
     * without accumulating a rounding drift per micro-batch. */
   private[graft] def centroidUpdateRaw(s: SparkSession, state: DataFrame,
       snap: DataFrame): DataFrame = {
-    val cents = state.select(col("cent_id"), col("pos"), col("coord"))
-      .collect()
-      .groupBy(_.getLong(0))
-      .map { case (cid, rows) =>
-        (cid, rows.sortBy(_.getLong(1)).map(_.getDouble(2)).toArray) }
-      .toSeq.sortBy(_._1)
-    val upd = Similarity.assignCells(snap, cents)
+    val upd = Similarity.assignCells(snap, Similarity.centroidsOf(state))
       .select(col("cent_id"), posexplode(col("embedding")).as(Seq("pos", "x")))
       .groupBy(col("cent_id"), col("pos").cast("long").as("pos"))
       .agg(sum(col("x").cast("double")).as("sx"), count(lit(1)).as("m"))
@@ -711,28 +705,18 @@ object StateStores {
     val candCorp = TextDedup.shingleArrays(
       corpus.join(cand.select(col("cid").as("doc_id")),
         Seq("doc_id"), "left_semi")).cache()
-    val inter = cand
-      .join(TextDedup.explodeShingles(snapArr).as("a"), col("sid") === col("a.doc_id"))
-      .join(TextDedup.explodeShingles(candCorp).as("b"),
-        col("cid") === col("b.doc_id") && col("a.sh") === col("b.sh"))
-      .groupBy(col("sid"), col("cid")).agg(count(lit(1)).as("inter"))
-    val matched = inter
-      .join(TextDedup.shingleSizes(snapArr).withColumnRenamed("doc_id", "sid")
-        .withColumnRenamed("n", "n1"), "sid")
-      .join(TextDedup.shingleSizes(candCorp).withColumnRenamed("doc_id", "cid")
-        .withColumnRenamed("n", "n2"), "cid")
-      .filter(col("inter") / (col("n1") + col("n2") - col("inter")) >= threshold)
-      .select(col("sid").as("doc_id")).distinct()
-    snapArr.select(col("doc_id"), size(col("shs")).cast("long").as("n_shingles"))
-      .join(matched, Seq("doc_id"), "left_anti")
-      .orderBy(col("doc_id"))
+    TextDedup.verifiedNovel(cand, snapArr, candCorp, threshold)
   }
 
-  /** Seed-if-absent IVF state for the q282 serve path: centroids
-    * trained on the standing corpus (the q230 recipe — k = 8, 2 Lloyd
-    * iterations, init ids 1..8) plus the corpus's FINAL-cell
-    * assignments, both as parquet. Returns the base path. */
-  private[graft] def seedIvf(s: SparkSession, dir: String): String = {
+  /** The IVF model served to q282 and q362, seeded once per corpus:
+    * centroids trained on the standing corpus (the q230 recipe — k = 8,
+    * 2 Lloyd iterations, init ids 1..8) plus the corpus's FINAL-cell
+    * assignments, both as parquet under `cents` and `assign`. Every
+    * consumer of this model reads it here; nothing else trains it.
+    * Returns the centroids and the (vec_id, cent_id) assignment
+    * frame. */
+  private[graft] def seedIvf(s: SparkSession, dir: String)
+      : (Seq[(Long, Array[Double])], DataFrame) = {
     val path = servePath(dir, "ivf_serve_v1", "embeddings")
     seedOnce(s"$path/cents") {
       val corpus = Tables(s, dir, "embeddings")
@@ -745,13 +729,11 @@ object StateStores {
       Similarity.assignCells(corpus, cents)
         .select(col("vec_id"), col("cent_id"))
         .write.mode("overwrite").parquet(s"$path/assign")
-      import s.implicits._
-      cents.flatMap { case (cid, c) =>
-        c.iterator.zipWithIndex.map { case (v, i) => (cid, i.toLong, v) } }
-        .toDF("cent_id", "pos", "coord")
+      Similarity.centroidRows(s, cents)
         .write.mode("overwrite").parquet(s"$path/cents")
     }
-    path
+    (Similarity.centroidsOf(s.read.parquet(s"$path/cents")),
+      s.read.parquet(s"$path/assign"))
   }
 
   val queries: Map[String, Q] = Map(
@@ -826,15 +808,10 @@ object StateStores {
       * final assignment), so stale centroids or assignments go red. */
     "q282_ivf_serve" -> ((s: SparkSession, dir: String) => {
       val e = Tables(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-      val path = seedIvf(s, dir)
-      val cents = s.read.parquet(s"$path/cents").collect()
-        .groupBy(_.getLong(0))
-        .map { case (cid, rows) =>
-          (cid, rows.sortBy(_.getLong(1)).map(_.getDouble(2)).toArray) }
-        .toSeq.sortBy(_._1)
+      val (cents, assign) = seedIvf(s, dir)
       val qCells = Similarity.probeCells(e, cents, queryId = 0L, nprobe = 2)
       val qv = e.filter(col("vec_id") === 0).select(col("embedding").as("q_emb"))
-      s.read.parquet(s"$path/assign")
+      assign
         .join(broadcast(qCells), "cent_id")
         .join(e, "vec_id")
         .crossJoin(broadcast(qv))
@@ -911,10 +888,7 @@ object StateStores {
       val (cents, assigned) = Similarity.trainKmeans(corpus, k = 8, iters = 2,
         initPred = Some(col("vec_id").between(1, 8)))
       val sizes = assigned.groupBy(col("cent_id")).agg(count(lit(1)).as("n"))
-      import s.implicits._
-      val centRows = cents.flatMap { case (cid, c) =>
-        c.iterator.zipWithIndex.map { case (v, i) => (cid, i.toLong, v) } }
-      centRows.toDF("cent_id", "pos", "coord")
+      Similarity.centroidRows(s, cents)
         .join(broadcast(sizes), Seq("cent_id"))
         .write.mode("overwrite").parquet(path)
       centroidUpdate(s, s.read.parquet(path), snap)
@@ -986,20 +960,11 @@ object StateStores {
     // store-reading q281 (a stale/torn band index goes red here)
     "q281_band_index_serve" -> TextDedup.duckIncrementalNeardup,
 
-    // corpus-only retraining from first principles: 2 unrolled Lloyd
-    // iterations (k = 8, init ids 1..8), final assignment to the final
-    // centroids, top-2 probe cells for snapshot query vec 0, exact
+    // the IVF model retrained from first principles (duckIvfCells),
+    // top-2 probe cells for snapshot query vec 0, exact
     // cosine within the probed cells
     "q282_ivf_serve" -> {
-      s"""WITH corpus AS (
-         |  SELECT vec_id, embedding FROM embeddings WHERE vec_id % 10 <> 0),
-         |c0 AS (
-         |  SELECT vec_id AS cent_id,
-         |  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cent
-         |  FROM corpus WHERE vec_id BETWEEN 1 AND 8),
-         |${Similarity.duckKmeansIter("c0", "s1", "a1", Some("c1"), "corpus")},
-         |${Similarity.duckKmeansIter("c1", "s2", "a2", Some("c2"), "corpus")},
-         |${Similarity.duckKmeansIter("c2", "s3", "a3", None, "corpus")},
+      s"""WITH ${Similarity.duckIvfCells},
          |qcells AS (
          |  SELECT cent_id FROM (
          |    SELECT c.cent_id, ${Similarity.duckCos("q.embedding", "c.cent")} AS csim

@@ -238,12 +238,21 @@ object TextDedup {
       .join(corpBands.as("c").hint("shuffle_hash"), col("p.bk") === col("c.bk"))
       .select(col("p.doc_id").as("sid"), col("c.doc_id").as("cid"))
       .distinct()
-    // exact verification touches candidate pairs only
-    val snapSh = explodeShingles(snapArr)
-    val corpSh = explodeShingles(corpArr)
+    verifiedNovel(cand, snapArr, corpArr, threshold)
+  }
+
+  /** The exact-verification tail of [[incrementalNearDup]] and
+    * StateStores.bandServe: the candidate (sid, cid) pairs' shared
+    * shingles count to `inter` (candidate pairs only — never a
+    * corpus-wide shingle join), every pair at Jaccard ≥ `threshold`
+    * marks its snapshot doc matched, and the unmatched snapshot docs
+    * come back as (doc_id, n_shingles) in doc_id order. */
+  private[llm] def verifiedNovel(cand: DataFrame, snapArr: DataFrame,
+      corpArr: DataFrame, threshold: Double): DataFrame = {
     val inter = cand
-      .join(snapSh.as("a"), col("sid") === col("a.doc_id"))
-      .join(corpSh.as("b"), col("cid") === col("b.doc_id") && col("a.sh") === col("b.sh"))
+      .join(explodeShingles(snapArr).as("a"), col("sid") === col("a.doc_id"))
+      .join(explodeShingles(corpArr).as("b"),
+        col("cid") === col("b.doc_id") && col("a.sh") === col("b.sh"))
       .groupBy(col("sid"), col("cid")).agg(count(lit(1)).as("inter"))
     val matched = inter
       .join(shingleSizes(snapArr).withColumnRenamed("doc_id", "sid")

@@ -219,8 +219,10 @@ object GlobalRank {
     * sort and one narrow cumulative pass ([[rangeRanked]]) — callers
     * needing several cumulative columns on the same order (the KS
     * statistic's two sample counts, debit/credit balances) pay one
-    * exchange. With `groupCols`, each sum runs within its group and
-    * the group's total rides along as `<outCol>_total`. */
+    * exchange. With `groupCols`, each sum runs within its group. The
+    * sum's total — the group's, or with no groups the whole input's —
+    * rides along as `<outCol>_total`, from the same cells window, so
+    * a caller never folds the input a second time for it. */
   def withRunningSums(
       df: DataFrame,
       sortCols: Seq[Column],
@@ -229,9 +231,8 @@ object GlobalRank {
     require(valueOuts.nonEmpty, "withRunningSums needs at least one (value, out) pair")
     val ranked = rangeRanked(df, groupCols, sortCols, valueOuts.map(_._1)).withRank
     valueOuts.zipWithIndex.foldLeft(ranked) { case (d, ((_, out), i)) =>
-      val summed = d.withColumn(out, col(s"_gr_sum$i"))
-      if (groupCols.isEmpty) summed
-      else summed.withColumn(s"${out}_total", col(s"_gr_tot$i"))
+      d.withColumn(out, col(s"_gr_sum$i"))
+        .withColumn(s"${out}_total", col(s"_gr_tot$i"))
     }.drop(Seq("_gr_n", "_gr_rank") ++ valueOuts.indices.flatMap(i =>
       Seq(s"_gr_sum$i", s"_gr_tot$i")): _*)
   }

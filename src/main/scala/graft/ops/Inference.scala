@@ -727,7 +727,7 @@ object Inference {
       * (gap·N₁·N₂ per term; at larger scales the same identity holds
       * in the oracle, so the gate would catch an overflow). KS rides
       * along from the same terms for one-query contrast. The totals
-      * fold is the q136 1-row bounded-BNLJ class. */
+      * N_a, N_b ride the same exchange as the running sums. */
     "q346_wasserstein_lengths" -> ((s: SparkSession, dir: String) => {
       val g = Tables(s, dir, "documents")
         .filter(col("source").isin("src0", "src1"))
@@ -738,13 +738,12 @@ object Inference {
       val c = GlobalRank.withRunningSums(g, Seq(col("v")),
         Seq("na" -> "ca", "nb" -> "cb", "one" -> "rn"))
       val nxt = c.select(col("v").as("vn"), (col("rn") - lit(1L)).as("rn"))
-      val tot = g.agg(sum(col("na")).as("tna"), sum(col("nb")).as("tnb"))
       val dint = abs(col("ca").cast("double") * col("tnb") -
         col("cb").cast("double") * col("tna"))
-      val terms = c.select(col("v"), col("ca"), col("cb"), col("rn"))
+      val terms = c.select(col("v"), col("ca"), col("cb"), col("rn"),
+          col("ca_total").as("tna"), col("cb_total").as("tnb"))
         .join(nxt, "rn") // the max value has no successor row; its
         // |F1-F2| is identically 0, so dropping it changes nothing
-        .crossJoin(broadcast(tot))
         .select(((col("vn") - col("v")).cast("double") * dint).as("term"),
           dint.as("dint"), col("tna"), col("tnb"))
       terms.agg(max(col("tna")).as("tna"), max(col("tnb")).as("tnb"),

@@ -63,7 +63,7 @@ object Statistics {
       * groupBy distinct value (map-side combined) → BOTH cumulative
       * sample counts from one multi-column global running sum
       * ([[GlobalRank.withRunningSums]]: one range exchange, never an
-      * unpartitioned window) → one-row broadcast of the totals → max
+      * unpartitioned window), whose totals n₁, n₂ ride along → max
       * of |c₁/n₁ − c₂/n₂|. */
     "q136_ks_test" -> ((s: SparkSession, dir: String) => {
       val ev = Tables(s, dir, "events")
@@ -72,13 +72,11 @@ object Statistics {
           when(col("event_type") === "click", 1L).otherwise(0L).as("i1"),
           when(col("event_type") === "purchase", 1L).otherwise(0L).as("i2"))
       val g = ev.groupBy(col("v")).agg(sum(col("i1")).as("n1v"), sum(col("i2")).as("n2v"))
-      val c = GlobalRank.withRunningSums(g, Seq(col("v")),
-        Seq("n1v" -> "c1", "n2v" -> "c2"))
-      val tot = c.agg(max(col("c1")).as("n1"), max(col("c2")).as("n2"))
-      c.crossJoin(broadcast(tot))
-        .agg(r6n(max(abs(col("c1").cast("double") / col("n1") -
-          col("c2").cast("double") / col("n2")))).as("ks_d"),
-          max(col("n1")).as("n1"), max(col("n2")).as("n2"))
+      GlobalRank.withRunningSums(g, Seq(col("v")),
+          Seq("n1v" -> "c1", "n2v" -> "c2"))
+        .agg(r6n(max(abs(col("c1").cast("double") / col("c1_total") -
+          col("c2").cast("double") / col("c2_total")))).as("ks_d"),
+          max(col("c1_total")).as("n1"), max(col("c2_total")).as("n2"))
     }),
 
     /** Exact rank-based ROC-AUC (Mann-Whitney U with MIDRANKS for
@@ -86,8 +84,8 @@ object Statistics {
       * model-quality / feature-screening aggregate, fully distributed:
       * per distinct value one combined count row, ONE global running
       * sum ([[GlobalRank.withRunningSum]]) turns it into midranks, and
-      * a single final aggregate folds U, n⁺, n⁻ together — unlike
-      * q136 there is no totals broadcast at all (the identity
+      * a single final aggregate folds U, n⁺, n⁻ together — no
+      * totals are needed at all (the identity
       * AUC = (Σ n⁺_v·midrank_v − n⁺(n⁺+1)/2)/(n⁺n⁻) needs only sums).
       * Midranks are dyadic rationals, so every sum is EXACT in
       * doubles — bit-identical across engines and summation orders. */
@@ -2290,11 +2288,11 @@ object Statistics {
       * [[GlobalRank.withRunningSums]] range exchange over the
       * distinct-value table carries ALL per-source cumulative counts
       * plus the corpus's — source count is domain-bounded (collected
-      * once, control-plane, the k-means-init stance) — and D_s is one
-      * max fold of |cum_s/n_s − cum/n|. The decision flag compares
-      * the NUDGED rounded D against the 1.36·√((n+n_s)/(n·n_s))
-      * large-sample critical value rounded the same way, so the
-      * boundary is grid-stable in both engines. */
+      * once, control-plane, the k-means-init stance) — and their
+      * totals, and D_s is one max fold of |cum_s/n_s − cum/n|. The
+      * decision flag compares the NUDGED rounded D against the
+      * 1.36·√((n+n_s)/(n·n_s)) large-sample critical value rounded the
+      * same way, so the boundary is grid-stable in both engines. */
     "q277_source_ks_profile" -> ((s: SparkSession, dir: String) => {
       val docs = Tables(s, dir, "documents")
       // source list: domain-bounded, collected once (the k-means-init
@@ -2306,19 +2304,14 @@ object Statistics {
         idx.map(i => count_if(col("source") === sources(i)).as(s"n$i"))
       val g = docs.select(col("source"), col("n_chars").as("v"))
         .groupBy(col("v")).agg(nAggs.head, nAggs.tail: _*)
-        .cache() // the running-sum exchange AND the totals fold read it
       val c = GlobalRank.withRunningSums(g, Seq(col("v")),
         ("nv" -> "cv") +: idx.map(i => s"n$i" -> s"c$i"))
-      val totAggs = sum(col("nv")).as("nn") +:
-        idx.map(i => sum(col(s"n$i")).as(s"t$i"))
-      val totals = g.agg(totAggs.head, totAggs.tail: _*)
       val dAggs: Seq[org.apache.spark.sql.Column] = idx.map(i =>
-        max(abs(col(s"c$i").cast("double") / col(s"t$i") -
-          col("cv").cast("double") / col("nn"))).as(s"d$i")) ++
-        Seq(max(col("nn")).as("nn")) ++
-        idx.map(i => max(col(s"t$i")).as(s"tt$i"))
-      val one = c.crossJoin(broadcast(totals))
-        .agg(dAggs.head, dAggs.tail: _*)
+        max(abs(col(s"c$i").cast("double") / col(s"c${i}_total") -
+          col("cv").cast("double") / col("cv_total"))).as(s"d$i")) ++
+        Seq(max(col("cv_total")).as("nn")) ++
+        idx.map(i => max(col(s"c${i}_total")).as(s"tt$i"))
+      val one = c.agg(dAggs.head, dAggs.tail: _*)
       one.select(explode(array(idx.map { i =>
           struct(lit(sources(i)).as("source"), col(s"tt$i").as("n_docs"),
             r6n(col(s"d$i")).as("d_stat"),

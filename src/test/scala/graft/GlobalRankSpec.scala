@@ -82,8 +82,13 @@ class GlobalRankSpec extends SparkSuite {
     }
     assert(multi.toSeq == single.toSeq, s"multi ${multi.toSeq} vs single ${single.toSeq}")
     assert(multi.toSeq == Seq((1L, 3L, -5L), (2L, 4L, -3L), (3L, 0L, 4L), (4L, 10L, 3L)))
-    assert(GlobalRank.withRunningSums(df, Seq(col("id")),
-      Seq("a" -> "ca", "b" -> "cb")).columns.toSet == Set("a", "b", "id", "ca", "cb"))
+    // ungrouped, each sum's total is the whole input's, on every row
+    val summed = GlobalRank.withRunningSums(df, Seq(col("id")),
+      Seq("a" -> "ca", "b" -> "cb"))
+    assert(summed.columns.toSet ==
+      Set("a", "b", "id", "ca", "cb", "ca_total", "cb_total"))
+    assert(summed.select(col("ca_total"), col("cb_total")).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet == Set((10L, 3L)))
     spark.catalog.clearCache()
   }
 
@@ -93,7 +98,7 @@ class GlobalRankSpec extends SparkSuite {
     assert(rn.columns.toSet == Set("v", "id", "rn"),
       s"withRowNumbers leaked internals: ${rn.columns.mkString(",")}")
     val rs = GlobalRank.withRunningSum(df, Seq(col("id")), "v", "run")
-    assert(rs.columns.toSet == Set("v", "id", "run"),
+    assert(rs.columns.toSet == Set("v", "id", "run", "run_total"),
       s"withRunningSum leaked internals: ${rs.columns.mkString(",")}")
     spark.catalog.clearCache()
   }

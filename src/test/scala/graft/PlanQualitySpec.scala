@@ -115,8 +115,6 @@ class PlanQualitySpec extends SparkSuite {
     // q133: the broadcast side is the ONE-ROW corpus-stats fold
     // (N, avgdl, per-term df) — provably 1 row regardless of sf
     "q133_bm25",
-    // q136: the broadcast side is the ONE-ROW (n1, n2) totals fold
-    "q136_ks_test",
     // q137: the broadcast side is the ONE-ROW vocab-size fold
     // (V = countDistinct over model-table-sized input) — provably
     // 1 row at any sf; it meets the model table, not the bigram stream
@@ -178,9 +176,6 @@ class PlanQualitySpec extends SparkSuite {
     // q255: the broadcast side is the ONE-ROW corpus doc-count fold
     // (q53's IDF denominator, same class) — provably 1 row at any sf
     "q255_doc_keywords",
-    // q277: the broadcast side is the ONE-ROW totals fold (corpus
-    // count + per-source counts — q136 class), provably 1 row
-    "q277_source_ks_profile",
     // q272: the broadcast side is the ONE-ROW match-rate fold
     // (q30 class) — provably 1 row at any sf
     "q272_feature_staleness",
@@ -212,9 +207,6 @@ class PlanQualitySpec extends SparkSuite {
     // q345: the final combine crosses the ONE-ROW group-a feature
     // means with the ONE-ROW group-b means (q338 class)
     "q345_mmd_embedding",
-    // q346: the broadcast side is the ONE-ROW (N_a, N_b) totals fold
-    // (q136 KS class) — provably 1 row at any corpus size
-    "q346_wasserstein_lengths",
     // q348: the broadcast side is the ONE-ROW pooled-slope fold
     // (q136 class) — provably 1 row at any corpus size
     "q348_simpson_audit",

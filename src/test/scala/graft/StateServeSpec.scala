@@ -24,20 +24,31 @@ class StateServeSpec extends SparkSuite {
   }
 
   test("servedCentroids read back bit-identical to direct training") {
-    // the round-12 What's-wrong #3 fix: q57/q86/q296/q387/q389/q399
-    // all read the persisted k=16 quantizer instead of retraining —
-    // sound only if parquet round-trips the model exactly
-    import org.apache.spark.sql.functions.col
-    val direct = llm.Similarity.trainKmeans(
-      Tables(spark, sf, "embeddings").select(col("vec_id"), col("embedding")),
-      k = 16, iters = 2)._1
-    val served = llm.Similarity.servedCentroids(spark, sf)
-    assert(served.map(_._1) == direct.map(_._1),
-      "store-served centroid ids differ from direct training")
-    served.zip(direct).foreach { case ((ci, ca), (_, da)) =>
-      assert(ca.sameElements(da),
-        s"centroid $ci coords differ between store and direct training")
+    // q57/q86/q260/q296/q387/q389/q399/q404 read the persisted k=16
+    // quantizer and q282/q362 the persisted IVF model instead of
+    // retraining — sound only if parquet round-trips each model exactly
+    def sameModel(served: Seq[(Long, Array[Double])],
+        direct: Seq[(Long, Array[Double])], model: String): Unit = {
+      assert(served.map(_._1) == direct.map(_._1),
+        s"$model: store-served centroid ids differ from direct training")
+      served.zip(direct).foreach { case ((ci, ca), (_, da)) =>
+        assert(ca.sameElements(da),
+          s"$model: centroid $ci coords differ between store and direct training")
+      }
     }
+    val e = Tables(spark, sf, "embeddings").select(col("vec_id"), col("embedding"))
+    sameModel(Similarity.servedCentroids(spark, sf),
+      Similarity.trainKmeans(e, k = 16, iters = 2)._1, "audit cells")
+    val corpus = e.filter(pmod(col("vec_id"), lit(10)) =!= 0)
+    val ivf = Similarity.trainKmeans(corpus, k = 8, iters = 2,
+      initPred = Some(col("vec_id").between(1, 8)))._1
+    val (cents, assign) = StateStores.seedIvf(spark, sf)
+    sameModel(cents, ivf, "IVF")
+    def cells(df: org.apache.spark.sql.DataFrame) = df.select(col("vec_id"), col("cent_id"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    val want = cells(Similarity.assignCells(corpus, ivf))
+    assert(want.nonEmpty && cells(assign) == want,
+      "IVF: store-served assignments differ from assignCells over the final centroids")
   }
 
   test("q281: serve path ≡ in-plan rebuild (q151), row for row") {
